@@ -20,6 +20,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
 
 # Contention-demotion bounds (round-11 ADVICE: hoisted from inline
@@ -711,15 +712,35 @@ def main() -> int:
     # VERDICT task 1b): the r18 c8 scaling run's line was pushed out of
     # the driver's 2,000-char tail capture by a Spark shutdown stack spew
     # (RpcEnvStoppedException traceback) that landed AFTER the print.
-    # Stopping the session here puts any shutdown noise BEFORE the line;
-    # the brief drain sleep lets the JVM's async stderr flush first.
-    try:
-        spark.stop()
-    except Exception:  # noqa: BLE001 — the measurement is already done
-        pass
+    # Stopping the session here puts any shutdown noise BEFORE the line.
+    stop_then_print(spark, result)
+    return 0
+
+
+# Bound on the shutdown wait before the result line is printed anyway.
+STOP_TIMEOUT_S = 60.0
+
+
+def stop_then_print(spark, result: dict) -> None:
+    """Stop the session, then print ``result`` as the JSON line.
+
+    The stop runs in a daemon thread joined with ``STOP_TIMEOUT_S``, so a
+    hung ``spark.stop()`` cannot lose the line; the brief drain sleep
+    lets the JVM's async stderr flush first."""
+
+    def stop() -> None:
+        try:
+            spark.stop()
+        except Exception:  # noqa: BLE001 — the measurement is already done
+            pass
+
+    stopper = threading.Thread(target=stop, daemon=True)
+    stopper.start()
+    stopper.join(STOP_TIMEOUT_S)
+    if stopper.is_alive():
+        print(f"spark.stop() still running after {STOP_TIMEOUT_S:g} s", file=sys.stderr)
     time.sleep(1.0)
     print(json.dumps(result), flush=True)
-    return 0
 
 
 if __name__ == "__main__":

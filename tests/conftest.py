@@ -13,6 +13,7 @@ pytest` before relying on green).
 from __future__ import annotations
 
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -43,3 +44,26 @@ def oracle():
         )
     yield con
     con.close()
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> (fn's result, number of Spark jobs it started).
+
+    The jobs are tagged with a fresh job group; the listener bus is
+    drained before the status tracker is read, so a job that started
+    inside ``fn`` is never missed."""
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -1,0 +1,29 @@
+"""Construction-job budget for the TPC-H keys.
+
+Building a TPC-H query's DataFrame must start no Spark job once the
+session is warm: every base-table schema is already resolved, and no
+query function runs an eager action.  A future eager read, or a scan
+whose schema is inferred on every call, fails here instead of quietly
+adding jobs to every pass.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+import yc_data_proc_metadata_import_spark as engine
+
+QUERIES = engine.queries()
+
+TPCH_KEYS = sorted(k for k in QUERIES if k == "flagship_pricing_summary" or k.startswith("tpch_q"))
+
+
+def test_tpch_key_set():
+    assert len(TPCH_KEYS) == 22
+
+
+@pytest.mark.parametrize("key", TPCH_KEYS)
+def test_warm_build_starts_no_job(key, spark, sf_dir, count_jobs):
+    QUERIES[key](spark, sf_dir)
+    _, jobs = count_jobs(lambda: QUERIES[key](spark, sf_dir))
+    assert jobs == 0, f"{key}: a warm build started {jobs} Spark job(s)"

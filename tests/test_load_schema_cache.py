@@ -1,0 +1,147 @@
+"""``sources.io.load`` resolves each base table's Parquet schema once per
+session and table-file version, then scans with that schema.
+
+Inference starts one footer-reading Spark job per read; these tests pin
+that the cached schema is the one inference gives, that a repeated load
+starts no job, that a rewritten table file or a replaced staged directory
+re-infers (a stale schema is never served), and that
+``clear_session_caches`` drops the entries.
+"""
+
+from __future__ import annotations
+
+import os
+import shutil
+import sys
+import threading
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from yc_data_proc_metadata_import_spark.sources import io
+from yc_data_proc_metadata_import_spark.sources.io import TABLES, load, load_documents_wide, table_path
+from yc_data_proc_metadata_import_spark.utils import clear_session_caches, session_cached
+
+
+def _events_ts_converted(df):
+    """The logical ``events.ts`` that ``load`` documents, applied to a
+    plain read."""
+    ts_type = df.schema["ts"].dataType.simpleString()
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp":
+        return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    return df
+
+
+def test_cached_schema_equals_inferred_schema(spark, sf_dir):
+    for name in TABLES:
+        got = load(spark, sf_dir, name).schema
+        plain = spark.read.parquet(table_path(sf_dir, name))
+        if name == "events":
+            plain = _events_ts_converted(plain)
+        assert got == plain.schema, name
+
+
+def test_documents_wide_schema_matches_its_files(spark, sf_dir):
+    """The staged ``docs_wide`` layout is read with the ``documents``
+    schema; inferring it from the staged files gives the same one."""
+    if spark.sparkContext.defaultParallelism <= 1:
+        pytest.skip("a one-core session reads documents unstaged")
+    wide = load_documents_wide(spark, sf_dir)
+    staged = os.path.dirname(wide.inputFiles()[0])
+    assert spark.read.parquet(staged).schema == wide.schema
+
+
+def test_second_load_starts_no_job(spark, sf_dir, count_jobs):
+    for name in TABLES:
+        load(spark, sf_dir, name)
+        # Resolving the given schema (events' ts dispatch does) starts none either.
+        _, jobs = count_jobs(lambda: load(spark, sf_dir, name).schema)
+        assert jobs == 0, f"{name}: second load started {jobs} job(s)"
+
+
+def test_rewritten_table_reinfers(spark, sf_dir, tmp_path, count_jobs):
+    src = table_path(sf_dir, "region")
+    path = table_path(str(tmp_path), "region")
+    shutil.copyfile(src, path)
+    before = load(spark, str(tmp_path), "region").schema
+
+    # Different schema: the new column must show, never the stale schema.
+    table = pq.read_table(src)
+    pq.write_table(table.append_column("r_extra", pa.array(range(table.num_rows))), path)
+    df, jobs = count_jobs(lambda: load(spark, str(tmp_path), "region"))
+    assert jobs >= 1
+    assert df.columns == before.names + ["r_extra"]
+    assert df.agg(F.sum("r_extra")).first()[0] == sum(range(table.num_rows))
+
+    # Same schema, different size: re-inferred as well.
+    pq.write_table(pa.concat_tables([table, table]), path)
+    df, jobs = count_jobs(lambda: load(spark, str(tmp_path), "region"))
+    assert jobs >= 1
+    assert df.schema == before
+    assert df.count() == 2 * table.num_rows
+
+
+def test_replaced_directory_reinfers(spark, tmp_path):
+    """Staged stream sources are directories swapped for rebuilt ones."""
+    table = pa.table({"k": [1, 2, 3]})
+    staged = tmp_path / "staged"
+    staged.mkdir()
+    pq.write_table(table, staged / "part-0.parquet")
+    assert io.parquet_schema(spark, str(staged)).names == ["k"]
+
+    rebuilt = tmp_path / "rebuilt"
+    rebuilt.mkdir()
+    pq.write_table(table.append_column("v", pa.array(["a", "b", "c"])), rebuilt / "part-0.parquet")
+    shutil.rmtree(staged)
+    os.rename(rebuilt, staged)
+    assert io.parquet_schema(spark, str(staged)).names == ["k", "v"]
+
+
+def test_clear_session_caches_drops_schemas(spark, sf_dir, count_jobs):
+    load(spark, sf_dir, "nation")
+    key = os.path.realpath(table_path(sf_dir, "nation"))
+    assert any(k[1][0] == key for k in io._SCHEMA_CACHE)
+    clear_session_caches()
+    assert not io._SCHEMA_CACHE
+    _, jobs = count_jobs(lambda: load(spark, sf_dir, "nation"))
+    assert jobs >= 1
+
+
+def test_session_cached_is_thread_safe():
+    """Harnesses build keys from several threads, and every ``load()`` now
+    goes through ``session_cached``: concurrent inserts must neither raise
+    nor lose entries."""
+
+    class _Spark:
+        class sparkContext:
+            applicationId = "app"
+
+    cache: dict = {}
+    errors: list = []
+
+    def insert(t):
+        try:
+            for i in range(500):
+                session_cached(cache, _Spark, (t, i), lambda: i)
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=insert, args=(t,)) for t in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(cache) == 16 * 500
+    clear_session_caches()
+    assert not cache

@@ -402,6 +402,30 @@ def test_bench_idle_guard_drains_loadavg_residue():
     assert waited == 0.0
 
 
+def test_bench_result_line_survives_hung_stop(monkeypatch, capsys):
+    """A ``spark.stop()`` that never returns must not lose bench's JSON
+    result line: the stop is waited on for a bounded time only."""
+    import json
+    import threading
+
+    import bench
+
+    release = threading.Event()
+
+    class _HungSpark:
+        def stop(self):
+            release.wait()
+
+    monkeypatch.setattr(bench, "STOP_TIMEOUT_S", 0.1)
+    try:
+        bench.stop_then_print(_HungSpark(), {"metric": "full_suite_wall", "value": 1.0})
+    finally:
+        release.set()
+    out = capsys.readouterr()
+    assert json.loads(out.out.strip().splitlines()[-1]) == {"metric": "full_suite_wall", "value": 1.0}
+    assert "spark.stop() still running" in out.err
+
+
 def test_stream_state_partitions_sizing():
     """_state_partitions (r19): JVM stateful operators take the
     commit-cost floor max(8, cores/4) plus a source-volume term

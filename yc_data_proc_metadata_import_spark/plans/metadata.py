@@ -806,7 +806,7 @@ def meta_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches drop that to one pass with bounded memory."""
     from pyspark.sql import functions as F
 
-    o = spark.read.parquet(table_path(sf_dir, "orders"))
+    o = load(spark, sf_dir, "orders")
     aggs = []
     for c in _PROFILE_COLS:
         aggs += [

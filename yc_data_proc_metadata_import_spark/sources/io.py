@@ -11,7 +11,11 @@ metastore-import.tf:200).
 Scale notes: ``spark.read.parquet`` is the vectorized columnar reader with
 predicate pushdown + column pruning; never collect-and-redistribute.  CSV
 and JSON scans always pass an explicit schema — schema inference is a full
-extra pass over 100 TB.
+extra pass over 100 TB.  Base-table Parquet scans pass a schema too: it is
+inferred once per session and table-file version, then reused, so each
+table costs one footer-reading Spark job per session instead of one per
+``load()`` call (the reference's readers likewise take table schemas from
+the metastore, never from the bucket files).
 """
 
 from __future__ import annotations
@@ -20,8 +24,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..registry import query
+from ..utils import session_cached
 
 TABLES = (
     "region",
@@ -84,8 +90,35 @@ def sf_tag(sf_dir: str) -> str:
     return f"{base}_{_sf_fingerprint(sf_dir)}"
 
 
+# Parquet schemas per (session, file version); see parquet_schema().
+_SCHEMA_CACHE: dict = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Schema of the Parquet file or directory at ``path``, inferred once
+    per session and file version.
+
+    Inference starts one footer-reading Spark job per read, so readers
+    pass this schema instead of letting Spark infer it on every call.  The
+    key is the path's (realpath, size, mtime_ns): a rewritten table file,
+    or a staged directory replaced by a rebuilt one, re-infers, so a stale
+    schema is never served.  ``clear_session_caches()`` drops the entries.
+    """
+    st = os.stat(path)
+    return session_cached(
+        _SCHEMA_CACHE,
+        spark,
+        (os.path.realpath(path), st.st_size, st.st_mtime_ns),
+        lambda: spark.read.parquet(path).schema,
+    )
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar Parquet scan — the engine's universal source.
+
+    The scan passes the table's schema from ``parquet_schema``: inferred
+    once per session and table-file version, so a table costs one
+    footer-reading Spark job per session, not one per ``load()`` call.
 
     ``events.ts`` has shipped in two physical encodings across testdata
     generations: nanosecond-precision INT64 (which Spark 4 refuses to map
@@ -96,16 +129,17 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     generation loads to the same logical column: TIMESTAMP_NTZ in UTC.
     """
     _reap_scratch_orphans()  # once per process; every key passes through here
+    path = table_path(sf_dir, name)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    if name == "events":
         ts_type = df.schema["ts"].dataType.simpleString()
         if ts_type == "bigint":
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         if ts_type == "timestamp":  # LTZ -> NTZ, session tz is UTC
             return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-        return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return df
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -129,19 +163,19 @@ def load_documents_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
     if par <= 1:
         return load(spark, sf_dir, "documents")
+    # Same rows and columns as ``documents``, so the staged layout is read
+    # with its schema instead of inferring one.
+    docs = load(spark, sf_dir, "documents")
     # Width baked into the dir name (the streaming-source rule): a layout
     # built by a narrower session must rebuild, not be silently reused —
     # _SUCCESS alone can't tell an 8-file stage from a 32-file one.
     # Routed through _fixture_dir (same name shape) so stale-fingerprint
     # siblings from a testdata regeneration get reaped (round-8 ADVICE).
     out = _materialize(
-        lambda p: load(spark, sf_dir, "documents")
-        .repartition(par)
-        .write.mode("overwrite")
-        .parquet(p),
+        lambda p: docs.repartition(par).write.mode("overwrite").parquet(p),
         _fixture_dir("docs_wide", sf_dir, width=par),
     )
-    return spark.read.parquet(out)
+    return spark.read.schema(docs.schema).parquet(out)
 
 
 @query(
@@ -796,7 +830,7 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fixture tables are single parquet files, so the oracle states the
     expected profile relationally (row_index is 0..count-1 by the parquet
     spec's row ordering; the basename is the table file itself)."""
-    df = spark.read.parquet(table_path(sf_dir, "orders"))
+    df = load(spark, sf_dir, "orders")
     return (
         df.groupBy(F.col("_metadata.file_name").alias("file_name"))
         .agg(

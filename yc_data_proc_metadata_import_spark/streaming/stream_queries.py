@@ -41,6 +41,7 @@ from ..sources.io import (
     _fixture_dir,
     _materialize,
     load,
+    parquet_schema,
     sf_tag,
 )
 from ..utils import dsum, sql_dsum
@@ -160,23 +161,13 @@ def _stream_three_batch_src(spark: SparkSession, sf_dir: str) -> str:
     return out
 
 
-_SCHEMA_CACHE: dict[tuple, object] = {}
-
-
 def _read_stream(spark: SparkSession, path: str, **options) -> DataFrame:
-    # File-stream sources REQUIRE an explicit schema; inferring it costs a
-    # footer-read job per key (~0.15 s x 19 streaming keys). Staged source
-    # dirs are replaced atomically (os.replace of a fully-built tmp dir),
-    # so the directory mtime in the cache key turns the "immutable within
-    # a process" convention into an enforced invariant: a regenerated
-    # source dir gets a fresh inference instead of a silently stale
-    # schema (round-7 ADVICE).
-    cache_key = (path, os.path.getmtime(path))
-    schema = _SCHEMA_CACHE.get(cache_key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[cache_key] = schema
-    reader = spark.readStream.schema(schema)
+    # File-stream sources REQUIRE an explicit schema. Staged source dirs
+    # are replaced atomically (os.replace of a fully-built tmp dir), so a
+    # regenerated source dir changes the directory mtime that
+    # parquet_schema keys on and gets a fresh inference instead of a
+    # silently stale schema (round-7 ADVICE).
+    reader = spark.readStream.schema(parquet_schema(spark, path))
     for k, v in options.items():
         reader = reader.option(k, v)
     df = reader.parquet(path)

@@ -13,6 +13,8 @@ sums instead of the engines' (order-sensitive) streaming implementations.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -80,6 +82,11 @@ def sql_dsum_prod(a: str, b: str) -> str:
 # 117 s as the rung's 37th key, then an invariance-pass OOM two entries
 # later).
 _ALL_CACHES: list[dict] = []
+# Guards the cache dicts' mutations: harnesses build keys from several
+# threads, and evicting (which iterates a dict) while another thread
+# inserts raises "dictionary changed size during iteration".  Builds run
+# outside it, so one slow build never blocks another thread's.
+_CACHES_LOCK = threading.Lock()
 
 
 def session_cached(cache: dict, spark, suffix, build):
@@ -93,16 +100,18 @@ def session_cached(cache: dict, spark, suffix, build):
     otherwise leak. Shared by the token, shingle, and k-means caches so
     the hazard fix lives in exactly one place.
     """
-    if not any(c is cache for c in _ALL_CACHES):
-        _ALL_CACHES.append(cache)
+    with _CACHES_LOCK:
+        if not any(c is cache for c in _ALL_CACHES):
+            _ALL_CACHES.append(cache)
     app_id = spark.sparkContext.applicationId
     key = (app_id, suffix)
     cached = cache.get(key)
     if cached is None:
         cached = build()
-        for k in [k for k in cache if k[0] != app_id]:
-            del cache[k]
-        cache[key] = cached
+        with _CACHES_LOCK:
+            for k in [k for k in cache if k[0] != app_id]:
+                del cache[k]
+            cache[key] = cached
     return cached
 
 
@@ -110,7 +119,8 @@ def clear_session_caches() -> int:
     """Drop every session-cached artifact; returns the entry count
     dropped. The caller should follow with gc.collect() (and a JVM GC)
     so the ContextCleaner actually releases the pinned blocks."""
-    n = sum(len(c) for c in _ALL_CACHES)
-    for c in _ALL_CACHES:
-        c.clear()
+    with _CACHES_LOCK:
+        n = sum(len(c) for c in _ALL_CACHES)
+        for c in _ALL_CACHES:
+            c.clear()
     return n

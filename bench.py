@@ -360,9 +360,14 @@ def main() -> int:
     # read 1.55x and the suite ran 2-3x slow). Wait for the sustained-
     # parallel ratio to re-enter the healthy band; a still-hot exit is
     # demoted below. The guard's own fresh single-thread probe replaces
-    # cal_start so the recorded start pair is contemporaneous.
+    # cal_start so the recorded start pair is contemporaneous. It gets
+    # only the budget the idle guard left, so the worst-case stall before
+    # a run is the one IDLE_WAIT_MAX_S.
     cal_mt_start, _cal_st_recheck, allcore_waited = allcore_guard(
-        _calibrate, calibrate_allcore, time.sleep
+        _calibrate,
+        calibrate_allcore,
+        time.sleep,
+        max_wait_s=max(0.0, IDLE_WAIT_MAX_S - idle_waited),
     )
     if _cal_st_recheck["med"] > 0:
         cal_start = _cal_st_recheck
@@ -421,7 +426,7 @@ def main() -> int:
 
     _n_warm = _count_warm_fixtures()
 
-    from yc_data_proc_metadata_import_spark.session import get_spark
+    from yc_data_proc_metadata_import_spark.session import codegen_compiles, get_spark
 
     spark = get_spark(
         app_name="engine-bench", master=f"local[{cpus}]", shuffle_partitions=cpus
@@ -571,6 +576,7 @@ def main() -> int:
 
     times: dict[str, float] = {}
     errors: dict[str, str] = {}
+    compiles_start = codegen_compiles(spark)
     for key in sorted(queries):
         t0 = time.perf_counter()
         try:
@@ -580,6 +586,8 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001 — record, keep benching
             errors[key] = f"{type(e).__name__}: {e}"[:200]
             print(f"[bench] {key}: ERROR {errors[key]}", file=sys.stderr, flush=True)
+    # Janino compiles in the timed loop: generated-class cache misses.
+    compiles = codegen_compiles(spark) - compiles_start
 
     # (The rounds-5..8 decimal-representation diagnostic dump lived here;
     # retired with the typed_probe_* keys once CORRECTNESS_r08 recorded
@@ -702,6 +710,7 @@ def main() -> int:
                         "load_end": round(load_end, 2),
                         "all_queries": times,
                         "errors": errors,
+                        "codegen_compiles": compiles,
                     }
                 )
                 + "\n"

@@ -253,6 +253,17 @@ def test_bench_allcore_guard_waits_for_ratio_band():
     )
     assert waited == 0.0
 
+    # No budget left after the idle guard: returns without sleeping.
+    cal_mt, cal, waited = bench.allcore_guard(
+        lambda: {"best": 100.0, "med": 100.0},
+        lambda: {"med": 160.0, "max": 200.0, "n": 2},
+        lambda s: (_ for _ in ()).throw(AssertionError("must not sleep")),
+        ratio_max=1.3,
+        max_wait_s=0.0,
+        poll_s=60.0,
+    )
+    assert (cal_mt["med"], waited) == (160.0, 0.0)
+
 
 def test_bench_scratch_state_is_tri_state():
     """Scratch provenance must distinguish a PARTIAL scratch (aborted
@@ -449,6 +460,8 @@ def test_stream_state_partitions_sizing():
     assert _state_partitions(sp, 200 * 1024**2) == 8
     # volume term takes over beyond the rung tiers on any core count.
     assert _state_partitions(sp, 10 * 1024**3) == 10 * 1024**3 // _STATE_TARGET_BYTES == 40
+    # ... up to 4x parallelism, the python-state branch's cap.
+    assert _state_partitions(sp, 100 * 1024**4) == 128
     # python-state keys (compute-bound): ~1 partition/MB, floor for
     # tiny inputs (sf0.1 events 2 MB -> 8, no local regression), capped
     # at 4x parallelism so scale doesn't fragment worker batches.

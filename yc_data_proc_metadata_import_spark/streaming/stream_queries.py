@@ -225,7 +225,9 @@ def _state_partitions(
     partitioning should track expected UPDATE RATE, not scan width. The
     count is max(cores/4 floor 8, source bytes / _STATE_TARGET_BYTES):
     the floor keeps the per-batch fixed cost low, and the volume term
-    scales the state layout with the data on any cluster size. Measured
+    scales the state layout with the data on any cluster size, up to the
+    same 4x-parallelism cap as the Python-state branch below (a huge
+    staged source must not fan out into thousands of state stores). Measured
     at sf0.1 AND the sf1 rung (same-session sweeps over {4,8,16,32},
     OPTIMIZATION_r19.md): windowed aggs degrade ~2x at 32 partitions at
     BOTH tiers (stream_tumbling 1.28 vs 2.0 s at sf1, stream_watermark
@@ -246,9 +248,8 @@ def _state_partitions(
     """
     cores = spark.sparkContext.defaultParallelism
     floor = max(8, cores // 4)
-    if python_state:
-        return max(floor, min(src_bytes // _PY_STATE_TARGET_BYTES, 4 * cores))
-    return max(floor, src_bytes // _STATE_TARGET_BYTES)
+    target = _PY_STATE_TARGET_BYTES if python_state else _STATE_TARGET_BYTES
+    return max(floor, min(src_bytes // target, 4 * cores))
 
 
 def _run_to_memory(

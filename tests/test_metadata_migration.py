@@ -15,13 +15,16 @@ import subprocess
 import sys
 
 import duckdb
+import pytest
 
 from yc_data_proc_metadata_import_spark.plans.metadata import (
     _SRC_DB,
     _build_source,
+    _requalify_view_text,
     export_manifest,
+    import_manifest,
 )
-from yc_data_proc_metadata_import_spark.sources.io import SCRATCH, table_path
+from yc_data_proc_metadata_import_spark.sources.io import SCRATCH, TABLES, table_path
 
 _IMPORTER = """
 import json, sys
@@ -251,3 +254,97 @@ def test_manifest_location_validation():
     assert not _manifest_locations_exist(
         [{"location": "file:/nonexistent/reaped_fixture_dir"}]
     )
+
+
+# A namespace holding what Spark's human-readable catalog output cannot
+# carry: every base table (``embeddings`` has an ``array<float>``
+# column), a table of nested types, property values containing the list
+# separators ", " and "]", and a view whose text spans several lines.
+_RT_SRC, _RT_DST = "eng_meta_rt_src", "eng_meta_rt_dst"
+_RT_PROPS = {"note": "a, b", "tag": "x]"}
+_RT_VIEW = """SELECT n_regionkey,
+       COUNT(*) AS n_nations
+FROM {db}.nation
+GROUP BY n_regionkey"""
+_NESTED_COLS = {
+    "amount": "CAST(1.5 AS DECIMAL(28,4))",
+    "counts": "map('a', 1)",
+    "s": "named_struct('x', 1, 'y', array('p', 'q'))",
+}
+
+
+@pytest.fixture(scope="module")
+def roundtrip(spark, sf_dir, tmp_path_factory):
+    """(source manifest, {table: expected column types}) after exporting
+    the namespace above and importing it into ``_RT_DST``."""
+    nested = str(tmp_path_factory.mktemp("nested") / "nested")
+    spark.sql(
+        "SELECT " + ", ".join(f"{v} AS {k}" for k, v in _NESTED_COLS.items())
+    ).write.parquet(nested)
+    locations = {t: table_path(sf_dir, t) for t in TABLES} | {"nested": nested}
+    spark.sql(f"DROP DATABASE IF EXISTS {_RT_SRC} CASCADE")
+    spark.sql(f"CREATE DATABASE {_RT_SRC}")
+    props = ", ".join(f"'{k}'='{v}'" for k, v in _RT_PROPS.items())
+    for t, loc in locations.items():
+        clause = f" TBLPROPERTIES ({props})" if t == "nation" else ""
+        spark.sql(
+            f"CREATE TABLE {_RT_SRC}.{t} USING parquet LOCATION '{loc}'{clause}"
+        )
+    spark.sql(f"CREATE VIEW {_RT_SRC}.by_region AS {_RT_VIEW.format(db=_RT_SRC)}")
+    want_types = {
+        t: [f.dataType.simpleString() for f in spark.read.parquet(loc).schema]
+        for t, loc in locations.items()
+    }
+    manifest = export_manifest(spark, _RT_SRC)
+    import_manifest(spark.newSession(), manifest, _RT_DST)
+    yield manifest, want_types
+    for db in (_RT_DST, _RT_SRC):
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def _canon(manifest: list, db: str) -> list:
+    return [
+        dict(e, database="", view_text=_requalify_view_text(e["view_text"], db, "<db>"))
+        for e in manifest
+    ]
+
+
+def test_manifest_roundtrips_views_properties_and_nested_types(spark, roundtrip):
+    """Export -> import -> export is the identity up to the namespace
+    name: the multi-line view text arrives whole and resolves, property
+    values keep their separators, and nested column types replay in
+    CREATE TABLE."""
+    manifest, _ = roundtrip
+    view = {e["table"]: e for e in manifest}["by_region"]
+    assert view["view_text"] == _RT_VIEW.format(db=_RT_SRC)
+    assert _canon(export_manifest(spark, _RT_DST), _RT_DST) == _canon(manifest, _RT_SRC)
+    n_src = spark.table(f"{_RT_SRC}.by_region").count()
+    assert n_src > 0 and spark.table(f"{_RT_DST}.by_region").count() == n_src
+    props = {
+        r.key: r.value
+        for r in spark.sql(f"SHOW TBLPROPERTIES {_RT_DST}.nation").collect()
+        if r.key in _RT_PROPS
+    }
+    assert props == _RT_PROPS
+    dims = {
+        db: spark.sql(f"SELECT DISTINCT size(embedding) FROM {db}.embeddings").collect()
+        for db in (_RT_SRC, _RT_DST)
+    }
+    assert dims[_RT_DST] == dims[_RT_SRC] and len(dims[_RT_SRC]) == 1
+
+
+def test_exported_column_types_match_parquet_schema(roundtrip):
+    """The manifest spells every column type as ``simpleString()`` of the
+    table's Parquet schema — for all base tables and for decimal, map and
+    struct-of-array columns — so existing manifests stay byte-identical
+    and every type replays in CREATE TABLE."""
+    manifest, want_types = roundtrip
+    got = {
+        e["table"]: [c["type"] for c in e["columns"]]
+        for e in manifest
+        if e["type"] == "table"
+    }
+    assert got == want_types
+    assert want_types["nested"] == [
+        "decimal(28,4)", "map<string,int>", "struct<x:int,y:array<string>>"
+    ]

@@ -120,9 +120,9 @@ def test_multi_assigned_clamps_r_past_k(spark, sf_dir):
 
 
 def test_ivf_nassign_env_pair_consistency(spark, sf_dir, oracle):
-    """The documented contract: a process overriding SPARK_GRAFT_IVF_NASSIGN
-    gets a CONSISTENT engine+oracle pair (round-16 ADVICE — the oracle
-    used to hardcode rn = 1). Pin both settings: classic nassign=1 and
+    """The documented contract: overriding the ``_IVF_NASSIGN`` module
+    constant gives a CONSISTENT engine+oracle pair (round-16 ADVICE — the
+    oracle used to hardcode rn = 1). Pin both settings: classic nassign=1 and
     the default multi-assignment nassign=2 must each hash-match the
     oracle SQL rebuilt from the same constant."""
     from tests.compare import assert_match

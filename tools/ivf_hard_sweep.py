@@ -200,6 +200,7 @@ def main() -> int:
     # charge it separately so per-nprobe search_sec is search, not
     # training.
     t0 = time.monotonic()
+    defaults = sim._IVF_NPROBE, sim._IVF_NASSIGN
     sim._IVF_NPROBE, sim._IVF_NASSIGN = NPROBES[0], 1
     q(spark, hard_dir).select("query_id").count()
     train_and_first = time.monotonic() - t0
@@ -255,12 +256,11 @@ def main() -> int:
 
     rows2 = sweep(2)
 
-    # Restore the module's env-derived defaults (round-16 ADVICE: the
-    # sweep mutated _IVF_NASSIGN/_IVF_NPROBE and returned with them
-    # stuck at the last swept values — harmless for the standalone CLI,
-    # wrong for any caller that imports main()).
-    sim._IVF_NPROBE = int(os.environ.get("SPARK_GRAFT_IVF_NPROBE", "3"))
-    sim._IVF_NASSIGN = int(os.environ.get("SPARK_GRAFT_IVF_NASSIGN", "2"))
+    # Restore the module's defaults (round-16 ADVICE: the sweep mutated
+    # _IVF_NASSIGN/_IVF_NPROBE and returned with them stuck at the last
+    # swept values — harmless for the standalone CLI, wrong for any
+    # caller that imports main()).
+    sim._IVF_NPROBE, sim._IVF_NASSIGN = defaults
 
     out = {
         "km_k": K,

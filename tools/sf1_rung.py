@@ -60,7 +60,7 @@ too often):
       SPARK_GRAFT_SF1_OUT=.scratch/sf100 SPARK_GRAFT_SF1_COPIES=1000 \
           SPARK_GRAFT_SF1_TABLES=region,nation,customer,supplier,part,orders,lineitem,events \
           SPARK_GRAFT_SF1_CHUNK=50 python tools/make_sf1.py
-  sf100_docs (documents only, for tools/labels_5m_profile.py):
+  sf100_docs (documents only, the 5M-doc corpus behind LABELS_5M_r17.json):
       SPARK_GRAFT_SF1_OUT=.scratch/sf100_docs SPARK_GRAFT_SF1_COPIES=1000 \
           SPARK_GRAFT_SF1_TABLES=documents python tools/make_sf1.py
   hard 2M-doc corpus (for the label fixpoint + truth analysis):

@@ -78,9 +78,10 @@ _IVF_NPROBE = int(_os.environ.get("SPARK_GRAFT_IVF_NPROBE", "3"))
 # registry key ships the multi-assignment path and the oracle replays
 # the top-r assignment bit-exactly (_ivf_oracle_sql interpolates
 # ``rn <= _IVF_NASSIGN`` + DISTINCT hits — round-16 ADVICE), so the
-# driver hash-adjudicates the nassign=2 index end-to-end. Set the env
-# to 1 for classic IVF; engine and oracle stay consistent either way.
-_IVF_NASSIGN = int(_os.environ.get("SPARK_GRAFT_IVF_NASSIGN", "2"))
+# oracle hash check covers the nassign=2 index end-to-end. Set it to 1
+# for classic IVF; engine and oracle stay consistent either way, since
+# the oracle reads the module attribute when it is built.
+_IVF_NASSIGN = 2
 
 
 def _dot(a, b) -> F.Column:
@@ -1207,7 +1208,7 @@ def _ivf_oracle_sql() -> str:
         # ROW_NUMBER spelling of _km_multi_assigned's top-r, and at the
         # classic r=1 it degenerates to the argmin (round-16 ADVICE: the
         # oracle interpolates the SAME constant the engine reads, so an
-        # env override keeps the pair consistent).
+        # override keeps the pair consistent).
         "assign AS (SELECT vec_id, j AS list_id FROM ("
         "SELECT q.vec_id, c.j, ROW_NUMBER() OVER (PARTITION BY q.vec_id "
         f"ORDER BY {cost}, c.j) AS rn FROM q CROSS JOIN cfin c) "

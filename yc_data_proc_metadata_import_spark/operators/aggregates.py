@@ -10,8 +10,6 @@ both engines, so even stddev/corr match bit-for-bit.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1139,11 +1137,8 @@ def agg_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cumulative window (single-task sort per group — cheapest while the
 # histogram fits one task comfortably; measured faster to 594 k rows)
 # to two-level bucket selection (every sort bucket-bounded). Module
-# level + env-overridable so tests can force the bucket path and a
-# deployment can tune the crossover.
-_MAD_BUCKET_SELECT_MIN = int(
-    _os.environ.get("SPARK_GRAFT_MAD_BUCKET_MIN", str(2_000_000))
-)
+# level so tests can force the bucket path.
+_MAD_BUCKET_SELECT_MIN = 2_000_000
 # Bucket width for the bucket-selection path: values here span
 # ~[0, 105 k] (prices and absolute deviations), so 64.0 yields ~1.6 k
 # buckets per group — small enough for the bucket walk, wide enough

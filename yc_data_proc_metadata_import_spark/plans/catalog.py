@@ -20,6 +20,7 @@ Design rules:
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +32,18 @@ from ..sources.io import SCRATCH, _fixture_dir, _materialize, load, table_path
 def _reset_db(spark: SparkSession, db: str) -> None:
     spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
     spark.sql(f"CREATE DATABASE {db}")
+
+
+def describe(spark: SparkSession, name: str) -> dict:
+    """One catalog object as structured data: ``type``, ``columns``,
+    ``location``, ``table_properties``, ``partition_columns``,
+    ``view_text`` and ``statistics`` of ``DESCRIBE TABLE EXTENDED ... AS
+    JSON``. Every table-level catalog read goes through here, so nothing
+    parses Spark's human-readable catalog output. ``collect()`` rather
+    than ``first()``: the latter plans an extra limit on every call."""
+    return json.loads(
+        spark.sql(f"DESCRIBE TABLE EXTENDED {name} AS JSON").collect()[0][0]
+    )
 
 
 # Bump whenever the parts_orders derivation below changes — re-keys the
@@ -366,11 +379,7 @@ def catalog_partition_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # flag would make the DROP delete files inside the shared
     # fingerprint-keyed fixture and corrupt every later run; round-4
     # ADVICE).
-    ttype = next(
-        r.data_type
-        for r in spark.sql("DESCRIBE TABLE EXTENDED eng_pd_db.orders_parts").collect()
-        if r.col_name == "Type"
-    )
+    ttype = describe(spark, "eng_pd_db.orders_parts")["type"]
     if ttype != "EXTERNAL":
         raise AssertionError(
             f"orders_parts must be EXTERNAL before DROP PARTITION, got {ttype}"
@@ -417,21 +426,14 @@ def catalog_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "DESCRIBE TABLE EXTENDED eng_st_db.nation_stats n_regionkey"
     ).collect()
     col_stats = {r["info_name"]: r["info_value"] for r in rows}
-    tbl_rows = next(
-        r["data_type"]
-        for r in spark.sql("DESCRIBE TABLE EXTENDED eng_st_db.nation_stats").collect()
-        if r["col_name"] == "Statistics"
-    )
-    import re as _re
-
-    m = _re.search(r"(\d+) rows", tbl_rows)
-    if not m:
-        raise AssertionError(f"no row count in catalog statistics: {tbl_rows!r}")
+    tbl_stats = describe(spark, "eng_st_db.nation_stats").get("statistics") or {}
+    if "num_rows" not in tbl_stats:
+        raise AssertionError(f"no row count in catalog statistics: {tbl_stats!r}")
     return spark.createDataFrame(
         [
             (
                 "nation_stats",
-                int(m.group(1)),
+                tbl_stats["num_rows"],
                 int(col_stats["distinct_count"]),
                 int(col_stats["num_nulls"]),
                 col_stats["min"],

@@ -23,14 +23,14 @@ Every key here is value-hash-checked: the manifest content is fully
 determined by the DDL that built the source namespace, and the roundtrip
 check aggregates the SAME parquet through both namespaces.
 
-Scale notes: export is one batched ``SHOW TABLE EXTENDED`` catalog scan
-(O(1) driver round-trips for schemas/locations/properties/view text)
-plus one ``SHOW PARTITIONS`` per PARTITIONED table — O(partitioned
-tables), not O(partitions): each call returns the full partition listing
-in one round-trip. A 10k-table metastore therefore exports in ~1 +
-|partitioned| calls; partition lists themselves can reach millions of
-rows per table at 100 TB, which is why they ride a per-table bulk call
-instead of DESCRIBE-per-partition.
+Scale notes: export is 1 ``SHOW TABLES``, plus 1 ``describe``
+(``DESCRIBE TABLE EXTENDED ... AS JSON``) per object, plus 1
+``DESCRIBE`` per column of each analyzed table, plus 1 ``SHOW
+PARTITIONS`` per PARTITIONED table — O(objects + analyzed columns +
+partitioned tables), not O(partitions): each ``SHOW PARTITIONS`` returns
+the full partition listing in one round-trip. Partition lists can reach
+millions of rows per table at 100 TB, which is why they ride a
+per-table bulk call instead of DESCRIBE-per-partition.
 """
 
 from __future__ import annotations
@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
 from ..sources.io import _fixture_dir, load, sf_tag, table_path
-from .catalog import _ext_table, _reset_db
+from .catalog import _ext_table, _reset_db, describe
 
 _SRC_DB = "eng_meta_src"
 _DST_DB = "eng_meta_dst"
@@ -153,80 +153,43 @@ def _build_source(spark: SparkSession, sf_dir: str) -> None:
     )
 
 
-# `SHOW TABLE EXTENDED` prints the schema as a `printTreeString` block;
-# its type names differ from DDL short names for the integer family.
-_SCHEMA_LINE = re.compile(r"^ \|-- ([^:]+): ([^(]+?) \(nullable")
-_TYPE_NAMES = {"integer": "int", "long": "bigint", "short": "smallint", "byte": "tinyint"}
-# Spark-internal properties leak into `Table Properties` on some builds;
-# only user-set keys migrate (HMS behaves the same for its own params).
+# Spark-internal properties leak into the table properties on some
+# builds (a Hive-catalog session adds transient_lastDdlTime); only
+# user-set keys migrate (HMS behaves the same for its own params).
 _INTERNAL_PROP = re.compile(r"^(spark\.|transient_|external$|numFiles|totalSize)")
 
 
-def _parse_info(information: str) -> dict:
-    """Parse one `SHOW TABLE EXTENDED` information block into the fields
-    the manifest carries."""
-    out = {
-        "type": None,
-        "location": None,
-        "view_text": None,
-        "properties": {},
-        "partition_columns": [],
-        "columns": [],
-    }
-    for line in information.splitlines():
-        if line.startswith("Type: "):
-            out["type"] = line[len("Type: "):].strip()
-        elif line.startswith("Location: "):
-            out["location"] = line[len("Location: "):]
-        elif line.startswith("View Text: "):
-            out["view_text"] = line[len("View Text: "):]
-        elif line.startswith("Table Properties: ["):
-            body = line[len("Table Properties: ["):].rstrip("]")
-            for kv in body.split(", "):
-                if "=" in kv:
-                    k, v = kv.split("=", 1)
-                    if not _INTERNAL_PROP.match(k):
-                        out["properties"][k] = v
-        elif line.startswith("Partition Columns: ["):
-            body = line[len("Partition Columns: ["):].rstrip("]")
-            out["partition_columns"] = [c.strip(" `") for c in body.split(",")]
-        else:
-            m = _SCHEMA_LINE.match(line)
-            if m:
-                name, typ = m.group(1), m.group(2).strip()
-                out["columns"].append(
-                    {
-                        "name": name,
-                        "type": _TYPE_NAMES.get(typ, typ),
-                        "ordinal": len(out["columns"]),
-                    }
-                )
-    return out
+def _type_str(t: dict) -> str:
+    """One ``DESCRIBE ... AS JSON`` column type in the DDL spelling of
+    ``DataType.simpleString()`` (``timestamp_ltz`` is plain
+    ``timestamp``), so import can replay it in CREATE TABLE."""
+    name = t["name"]
+    if name == "decimal":
+        return f"decimal({t['precision']},{t['scale']})"
+    if name == "array":
+        return f"array<{_type_str(t['element_type'])}>"
+    if name == "map":
+        return f"map<{_type_str(t['key_type'])},{_type_str(t['value_type'])}>"
+    if name == "struct":
+        fields = ",".join(f"{f['name']}:{_type_str(f['type'])}" for f in t["fields"])
+        return f"struct<{fields}>"
+    return "timestamp" if name == "timestamp_ltz" else name
 
 
-_ROWS_STAT = re.compile(r"(\d+) rows")
-
-
-def _catalog_stats(spark: SparkSession, db: str, tbl: str, columns: list) -> dict:
-    """Read ANALYZE statistics back from the catalog for one table:
-    ``{"row_count": N, "columns": {col: {distinct,nulls,min,max}}}`` —
-    empty dict when the table was never analyzed. One DESCRIBE EXTENDED
-    per table, plus one per column ONLY for analyzed tables (bounded by
+def _catalog_stats(spark: SparkSession, name: str, desc: dict) -> dict:
+    """Read ANALYZE statistics back from the catalog for one table, given
+    its ``describe``: ``{"row_count": N, "columns": {col:
+    {distinct,nulls,min,max}}}`` — empty dict when the table was never
+    analyzed. The row count comes from the description; each column
+    costs one ``DESCRIBE TABLE EXTENDED t col`` (Spark rejects ``AS
+    JSON`` for a single column), ONLY for analyzed tables (bounded by
     the schema width; an HMS thrift export would batch these)."""
-    tbl_line = next(
-        (
-            r.data_type
-            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {db}.{tbl}").collect()
-            if r.col_name == "Statistics"
-        ),
-        None,
-    )
-    m = _ROWS_STAT.search(tbl_line or "")
-    if not m:
+    n_rows = (desc.get("statistics") or {}).get("num_rows")
+    if n_rows is None:
         return {}
-    stats: dict = {"row_count": int(m.group(1)), "columns": {}}
-    for c in columns:
-        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {db}.{tbl} {c['name']}").collect()
+    stats: dict = {"row_count": n_rows, "columns": {}}
+    for c in desc["columns"]:
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name} {c['name']}").collect()
         info = {r["info_name"]: r["info_value"] for r in rows}
         if info.get("distinct_count") in (None, "NULL"):
             continue
@@ -241,61 +204,70 @@ def _catalog_stats(spark: SparkSession, db: str, tbl: str, columns: list) -> dic
 
 def export_manifest(spark: SparkSession, db: str) -> list[dict]:
     """Serialize ``db`` to a portable manifest: the export half of the
-    reference's migration. ONE batched catalog scan — ``SHOW TABLE
-    EXTENDED IN db LIKE '*'`` carries every object's location, schema,
-    table properties, partition columns, and view text in a single
-    driver round-trip (round-2 VERDICT: DESCRIBE-per-table collect loops
-    stall a 10k-table metastore) — plus one bulk ``SHOW PARTITIONS`` per
-    partitioned table for its registered partition specs."""
-    rows = spark.sql(f"SHOW TABLE EXTENDED IN {db} LIKE '*'").collect()
+    reference's migration. One ``SHOW TABLES`` lists the namespace, one
+    ``describe`` per object carries its type, schema, location, table
+    properties, partition columns, view text and row count; analyzed
+    tables add one ``DESCRIBE`` per column for column statistics, and
+    partitioned tables one bulk ``SHOW PARTITIONS`` for their registered
+    partition specs."""
+    names = sorted(
+        r.tableName
+        for r in spark.sql(f"SHOW TABLES IN {db}").collect()
+        # the listing also returns session-scoped temp views, which
+        # are not part of the namespace being migrated.
+        if not r.isTemporary
+    )
     manifest = []
-    for r in sorted(rows, key=lambda r: r.tableName):
-        if r.isTemporary:
-            # the listing also returns session-scoped temp views, which
-            # are not part of the namespace being migrated.
-            continue
-        info = _parse_info(r.information)
-        if info["type"] == "VIEW":
-            if not info["view_text"]:
-                raise ValueError(f"no view text for {db}.{r.tableName}")
+    for tbl in names:
+        name = f"{db}.{tbl}"
+        desc = describe(spark, name)
+        columns = [
+            {"name": c["name"], "type": _type_str(c["type"]), "ordinal": i}
+            for i, c in enumerate(desc["columns"])
+        ]
+        if desc["type"] == "VIEW":
+            if not desc.get("view_text"):
+                raise ValueError(f"no view text for {name}")
             manifest.append(
                 {
                     "database": db,
-                    "table": r.tableName,
+                    "table": tbl,
                     "type": "view",
                     "format": "",
                     "location": "",
-                    "columns": info["columns"],
+                    "columns": columns,
                     "partition_columns": [],
                     "partitions": [],
                     "properties": {},
-                    "view_text": info["view_text"],
+                    "view_text": desc["view_text"],
                 }
             )
             continue
-        if info["location"] is None:
-            raise ValueError(f"no location for {db}.{r.tableName}")
+        if desc.get("location") is None:
+            raise ValueError(f"no location for {name}")
+        partition_columns = desc.get("partition_columns", [])
         partitions = []
-        if info["partition_columns"]:
+        if partition_columns:
             partitions = sorted(
-                p[0]
-                for p in spark.sql(f"SHOW PARTITIONS {db}.{r.tableName}").collect()
+                p[0] for p in spark.sql(f"SHOW PARTITIONS {name}").collect()
             )
         manifest.append(
             {
                 "database": db,
-                "table": r.tableName,
+                "table": tbl,
                 "type": "table",
                 "format": "parquet",
-                "location": info["location"],
-                "columns": info["columns"],
-                "partition_columns": info["partition_columns"],
+                "location": desc["location"],
+                "columns": columns,
+                "partition_columns": partition_columns,
                 "partitions": partitions,
-                "properties": info["properties"],
+                "properties": {
+                    k: v
+                    for k, v in sorted(desc.get("table_properties", {}).items())
+                    if not _INTERNAL_PROP.match(k)
+                },
                 "view_text": "",
-                "statistics": _catalog_stats(
-                    spark, db, r.tableName, info["columns"]
-                ),
+                "statistics": _catalog_stats(spark, name, desc),
             }
         )
     return manifest
@@ -728,16 +700,11 @@ def meta_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One row per stats-bearing table (all three migrated tables since
     # round 15 — round-14 VERDICT task 4): a table whose stats were
     # dropped on import fails its row, not just nation_ext's.
-    stats_cols = {
-        "nation_ext": ("n_nationkey", "n_name", "n_regionkey"),
-        "region_ext": ("r_regionkey", "r_name"),
-        _PART_TABLE: ("o_orderkey", "o_orderstatus", "o_totalprice"),
-    }
     stats_rows = []
-    for tbl, colnames in sorted(stats_cols.items()):
-        cols = [{"name": c} for c in colnames]
-        src_stats = _catalog_stats(spark, _SRC_DB, tbl, cols)
-        dst_stats = _catalog_stats(spark, _DST_DB, tbl, cols)
+    for tbl in ("nation_ext", _PART_TABLE, "region_ext"):
+        src, dst = f"{_SRC_DB}.{tbl}", f"{_DST_DB}.{tbl}"
+        src_stats = _catalog_stats(spark, src, describe(spark, src))
+        dst_stats = _catalog_stats(spark, dst, describe(spark, dst))
         stats_rows.append(
             (
                 "stats",
@@ -920,22 +887,21 @@ def meta_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically, so the hash check simultaneously proves drift
     DETECTION and migration FIDELITY of everything else.
 
-    Scale shape: manifests are metadata (one batched SHOW TABLE
-    EXTENDED per namespace, O(tables) driver rows — same budget as
-    meta_export); the compare is a dict diff over canonical strings.
-    At a 10k-table metastore this is two catalog scans and a
+    Scale shape: manifests are metadata (per namespace, 1 SHOW TABLES
+    plus 1 describe per object, 1 DESCRIBE per column of each analyzed
+    table and 1 SHOW PARTITIONS per partitioned table — the
+    export_manifest budget); the compare is a dict diff over canonical
+    strings. At a 10k-table metastore this is two catalog walks and a
     set-difference, not a data read."""
     manifest = _load_or_export_manifest(spark, sf_dir)
     import_manifest(spark.newSession(), manifest, _DIFF_DB)
     # Controlled drift. DROP PARTITION deregisters metadata only — the
     # imported tables are EXTERNAL over shared storage (assert, as in
     # catalog_partition_ddl: a MANAGED drop would delete shared data).
-    info = spark.sql(
-        f"DESCRIBE TABLE EXTENDED {_DIFF_DB}.{_PART_TABLE}"
-    ).collect()
-    assert any(
-        r.col_name == "Type" and r.data_type == "EXTERNAL" for r in info
-    ), f"{_DIFF_DB}.{_PART_TABLE} must be EXTERNAL before DROP PARTITION"
+    if describe(spark, f"{_DIFF_DB}.{_PART_TABLE}")["type"] != "EXTERNAL":
+        raise AssertionError(
+            f"{_DIFF_DB}.{_PART_TABLE} must be EXTERNAL before DROP PARTITION"
+        )
     spark.sql(
         f"ALTER TABLE {_DIFF_DB}.{_PART_TABLE} "
         f"DROP PARTITION ({_PART_COL}='5-LOW')"

@@ -191,17 +191,13 @@ def _read_stream(spark: SparkSession, path: str, **options) -> DataFrame:
 # at 256 MB/partition a 1 TB/day key plans ~4k state partitions on any
 # cluster size, while every rung tier (sf0.1 events 2 MB, sf1 20 MB,
 # sf10 200 MB) stays at the floor, keeping the bench comparable by
-# construction. Env-overridable for production tuning.
-_STATE_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STATE_TARGET_BYTES", str(256 * 1024 * 1024))
-)
+# construction.
+_STATE_TARGET_BYTES = 256 * 1024 * 1024
 # Python arbitrary-state operators parallelize per-group PYTHON compute,
 # so their partition count scales much earlier: ~1 partition per MB of
 # source (sf1-swept: 20 MB -> 20 partitions lands in the measured-best
 # 16-32 band), capped at 4x parallelism.
-_PY_STATE_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PY_STATE_TARGET_BYTES", str(1024 * 1024))
-)
+_PY_STATE_TARGET_BYTES = 1024 * 1024
 
 
 def _dir_bytes(path: str) -> int:

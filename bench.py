@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract + BASELINE.md targets T1-T4).
 
-Runs every registered ``queries()`` key at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` (default 32) and
-prints ONE JSON line::
+Runs every registered ``queries()`` key at ``$SPARK_GRAFT_SF_DIR`` (default:
+the sf0.1 testdata dir) on ``local[n]``, where ``n`` is the engine's
+``session.cpu_count()`` (``$SPARK_GRAFT_CPUS``, else the host's core count),
+and prints ONE JSON line::
 
     {"metric": "full_suite_wall", "value": <total sec>, "unit": "sec",
      "queries": {"<key>": sec, ...}, "sf": 0.1}
@@ -13,6 +14,13 @@ codegen — nothing collected to the driver), so timings measure the engine,
 not result transfer.  A warm-up query absorbs JVM/codegen spin-up so the
 first measured key isn't charged for session start.  Per-query errors are
 recorded under "errors" and don't abort the suite.
+
+Besides the calibration-normalized ``value_norm``, the timed loop is also
+read with ``perfbench.clock.Stopwatch``, the repo benchmark's clock:
+``value_scaled`` is ``value`` times the share of the CPU time the host's
+vCPUs wanted that they were granted (``granted_share``; ``steal_s`` is the
+CPU time the hypervisor took), see perfbench/README.md, "Timing on a
+shared host".
 """
 
 from __future__ import annotations
@@ -22,6 +30,86 @@ import os
 import sys
 import threading
 import time
+
+from perfbench.clock import Stopwatch
+
+# Keys that build one-time derived fixtures (_SUCCESS-guarded under
+# .scratch/ — bucketed/typed/partitioned tables, stream source dirs, media
+# tables, shared shingle/token checkpoints) or session-cached shared
+# artifacts on their first call. That build is input preparation, not the
+# operator under test, so each runs once UNMEASURED before the timed loop.
+PREWARM_KEYS = (
+    "scan_csv",
+    "scan_json",
+    "scan_orc",
+    "scan_schema_evolution",
+    "scan_permissive_json",
+    "scan_ignore_corrupt",
+    "scan_partition_pruned",
+    "catalog_csv_table",
+    "bucketed_join_noshuffle",
+    "join_dpp_pruned",
+    "sink_compaction",
+    "stream_tumbling",
+    "stream_dedup",
+    "stream_watermark",
+    "llm_dedup_near",
+    "llm_dedup_simhash",
+    "llm_sim_join",
+    "llm_sim_join_lsh",
+    "llm_multimodal",
+    "llm_audio_decode",
+    "llm_image_decode",
+    "llm_png_decode",
+    "llm_jpeg_decode",
+    "llm_tfidf",
+    "llm_curation_pipeline",
+    # the BPE merge table and the dedup cluster labels are session-cached
+    # inputs their consumer keys fan out over
+    "llm_bpe_apply",
+    "llm_dedup_cluster",
+    "sink_codec_zstd",
+    # prewarming the fit also serves llm_semdedup (shared _KM_CACHE)
+    "llm_kmeans_cluster",
+)
+
+# The keys the stdout line reports. A caller may keep only the TAIL of
+# stdout, and a line carrying every per-key timing overflowed such a
+# capture, so the line carries the BASELINE.md targets plus one
+# representative per operator family; the full per-key map lands in
+# BENCH_LOCAL.jsonl.
+# Cross-round key overlap is what rows are compared on: add, never remove.
+HEADLINE_KEYS = (
+    "flagship_pricing_summary",
+    "tpch_q3_shipping_priority",
+    "tpch_q5_local_supplier",
+    "tpch_q10_returned_items",
+    "join_asof",
+    "join_star",
+    "bucketed_join_noshuffle",
+    "agg_groupby",
+    "agg_cube",
+    "win_ranking",
+    "win_sessionize",
+    "topk_per_group",
+    "sort_multi",
+    "meta_roundtrip",
+    "llm_dedup_exact",
+    "llm_dedup_near",
+    "llm_topk_cosine",
+    "llm_sim_join",
+    "llm_tokenize",
+    "llm_tfidf",
+    "stream_tumbling",
+    "stream_stateful",
+    "graph_pagerank",
+    "llm_cdc_chunking",
+    "win_retention_cohorts",
+    "dq_expectations",
+    "llm_dedup_simhash_labels",
+    "llm_ann_ivf",
+)
+
 
 # Contention-demotion bounds (round-11 ADVICE: hoisted from inline
 # literals so re-calibration is a one-line, greppable change — and
@@ -314,8 +402,14 @@ def demote_if_contended(
 
 
 def main() -> int:
+    from yc_data_proc_metadata_import_spark.session import (
+        codegen_compiles,
+        cpu_count,
+        get_spark,
+    )
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpu_count()
     # Solo-vs-concurrent provenance (round-8 VERDICT item 4): the round-8
     # recorded wall was 19% above the same code's solo runs because bench
     # sometimes ran beside the full-registry rehearsal. Tag every row so
@@ -426,11 +520,7 @@ def main() -> int:
 
     _n_warm = _count_warm_fixtures()
 
-    from yc_data_proc_metadata_import_spark.session import codegen_compiles, get_spark
-
-    spark = get_spark(
-        app_name="engine-bench", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
+    spark = get_spark(app_name="engine-bench")  # local[cpus], cpus partitions
 
     import __spark_entry__ as contract
 
@@ -518,50 +608,9 @@ def main() -> int:
 
     _warm("udtf", _warm_udtf)
 
-    # Fixture prewarm: these keys build one-time derived fixtures
-    # (_SUCCESS-guarded under .scratch/ — bucketed/typed/partitioned
-    # tables, stream source dirs, media tables, shared shingle/token
-    # checkpoints) on first call. That build is input preparation, not
-    # the operator under test, so it runs once UNMEASURED here; the
-    # timed loop below then measures steady-state query cost for every
-    # key. On a warm .scratch this pass is a few seconds of no-ops.
-    fixture_keys = (
-        "scan_csv",
-        "scan_json",
-        "scan_orc",
-        "scan_schema_evolution",
-        "scan_permissive_json",
-        "scan_ignore_corrupt",
-        "scan_partition_pruned",
-        "catalog_csv_table",
-        "bucketed_join_noshuffle",
-        "join_dpp_pruned",
-        "sink_compaction",
-        "stream_tumbling",
-        "stream_dedup",
-        "stream_watermark",
-        "llm_dedup_near",
-        "llm_dedup_simhash",
-        "llm_sim_join",
-        "llm_sim_join_lsh",
-        "llm_multimodal",
-        "llm_audio_decode",
-        "llm_image_decode",
-        "llm_png_decode",
-        "llm_jpeg_decode",
-        "llm_tfidf",
-        "llm_curation_pipeline",
-        # session-cached shared artifacts (round 7): the BPE merge table
-        # and the dedup cluster labels are one-time derived inputs their
-        # consumer keys fan out over, same class as the shingle/token
-        # checkpoints above.
-        "llm_bpe_apply",
-        "llm_dedup_cluster",
-        "sink_codec_zstd",
-        # prewarming the fit also serves llm_semdedup (shared _KM_CACHE)
-        "llm_kmeans_cluster",
-    )
-    for key in fixture_keys:
+    # Fixture prewarm (PREWARM_KEYS): on a warm .scratch this pass is a few
+    # seconds of no-ops.
+    for key in PREWARM_KEYS:
         if key in queries:
             try:
                 run(queries[key](spark, sf_dir))
@@ -577,6 +626,7 @@ def main() -> int:
     times: dict[str, float] = {}
     errors: dict[str, str] = {}
     compiles_start = codegen_compiles(spark)
+    clock = Stopwatch()
     for key in sorted(queries):
         t0 = time.perf_counter()
         try:
@@ -586,6 +636,7 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001 — record, keep benching
             errors[key] = f"{type(e).__name__}: {e}"[:200]
             print(f"[bench] {key}: ERROR {errors[key]}", file=sys.stderr, flush=True)
+    _, share, steal = clock.read()
     # Janino compiles in the timed loop: generated-class cache misses.
     compiles = codegen_compiles(spark) - compiles_start
 
@@ -593,47 +644,6 @@ def main() -> int:
     # retired with the typed_probe_* keys once CORRECTNESS_r08 recorded
     # the finding — see SURVEY 6.1b.)
 
-    # The driver captures only the TAIL of stdout: a JSON line carrying
-    # all 158 per-key timings overflowed that capture in rounds 2-3 and
-    # recorded as parsed:null. The printed line therefore reports the
-    # headline queries only (BASELINE.md targets + one representative per
-    # operator family); the full per-key map still lands in
-    # BENCH_LOCAL.jsonl below.
-    headline = (
-        "flagship_pricing_summary",
-        "tpch_q3_shipping_priority",
-        "tpch_q5_local_supplier",
-        "tpch_q10_returned_items",
-        "join_asof",
-        "join_star",
-        "bucketed_join_noshuffle",
-        "agg_groupby",
-        "agg_cube",
-        "win_ranking",
-        "win_sessionize",
-        "topk_per_group",
-        "sort_multi",
-        "meta_roundtrip",
-        "llm_dedup_exact",
-        "llm_dedup_near",
-        "llm_topk_cosine",
-        "llm_sim_join",
-        "llm_tokenize",
-        "llm_tfidf",
-        "stream_tumbling",
-        "stream_stateful",
-        # round-6 family representatives (additive — cross-round key
-        # overlap is what the judge compares, so never remove entries)
-        "graph_pagerank",
-        "llm_cdc_chunking",
-        "win_retention_cohorts",
-        "dq_expectations",
-        # round-14: the two round-13 keys whose bench cost the verdict
-        # asked to itemize (labels redesigned onto star edges this
-        # round; additive, never remove)
-        "llm_dedup_simhash_labels",
-        "llm_ann_ivf",
-    )
     # Re-check contention AFTER the run (round-10 ADVICE): loadavg is
     # exponentially damped, so contention that arrives mid-run reads
     # near 0 at start and would stay labeled solo. See
@@ -663,8 +673,11 @@ def main() -> int:
         "metric": "full_suite_wall",
         "value": value,
         "value_norm": round(value * (120.0 / cal_mean), 3),
+        "value_scaled": round(value * share, 3),
+        "granted_share": round(share, 4),
+        "steal_s": round(steal, 2),
         "unit": "sec",
-        "queries": {k: times[k] for k in headline if k in times},
+        "queries": {k: times[k] for k in HEADLINE_KEYS if k in times},
         "n_queries": len(times),
         "sf": sf,
         "solo": solo,
@@ -686,9 +699,7 @@ def main() -> int:
         "scratch": scratch_state,
         "n_warm_fixtures": _n_warm,
         "n_warm_fixtures_end": _n_warm_end,
-        # Core count the suite actually ran on (round-18 VERDICT task
-        # 1c): BENCH_LOCAL rows from SPARK_GRAFT_CPUS=8 scaling runs were
-        # previously only identifiable by timestamp adjacency.
+        # The core count the suite actually ran on (session.cpu_count()).
         "cpus": cpus,
     }
     if errors:

@@ -144,20 +144,15 @@ def test_bloom_filter_reaches_probe_side(spark, sf_dir):
         _BLOOM_CONFS,
         bloom_join_frame,
     )
+    from yc_data_proc_metadata_import_spark.session import conf_scope
 
-    orig = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, _BLOOM_CONFS):
         plan = (
             bloom_join_frame(spark, sf_dir)
             ._jdf.queryExecution()
             .optimizedPlan()
             .toString()
         )
-    finally:
-        for k, v in orig.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
     assert "bloom" in plan.lower(), f"no runtime bloom filter:\n{plan}"
 
 

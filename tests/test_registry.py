@@ -286,9 +286,10 @@ def test_bench_scratch_state_is_tri_state():
 
 
 def test_scale_rung_presets_reference_registered_keys():
-    """The sf1/sf10 rung presets (tools/sf1_rung.py) must only name
-    registered queries — a key rename would otherwise rot the scale
-    evidence silently (the rung is run manually, not per-pytest)."""
+    """The sf1/sf10 rung presets (tools/sf1_rung.py) and bench.py's prewarm
+    and headline keys must only name registered queries — a key rename
+    would otherwise rot the scale evidence silently (the rung is run
+    manually, not per-pytest)."""
     import importlib.util
     import os
 
@@ -305,6 +306,12 @@ def test_scale_rung_presets_reference_registered_keys():
         unknown = set(getattr(mod, name)) - registered
         assert not unknown, f"{name} names unregistered keys: {sorted(unknown)}"
     assert mod.CHECKSUM_KEYS_SF10 <= set(mod.KEYS_SF10)
+    # bench.py skips an unknown key, so a rename would drop it silently.
+    import bench
+
+    for name in ("PREWARM_KEYS", "HEADLINE_KEYS"):
+        unknown = set(getattr(bench, name)) - registered
+        assert not unknown, f"bench.{name} names unregistered keys: {sorted(unknown)}"
 
 
 def test_bench_allcore_probe_shape():
@@ -468,3 +475,30 @@ def test_stream_state_partitions_sizing():
     assert _state_partitions(sp, 2 * 1024**2, python_state=True) == 8
     assert _state_partitions(sp, 20 * 1024**2, python_state=True) == 20
     assert _state_partitions(sp, 100 * 1024**3, python_state=True) == 128
+
+
+def test_keys_leave_caller_conf_unchanged(spark, sf_dir):
+    """Keys that hold a conf while they run must hand the caller's session
+    back as they found it: ``SET`` lists the same keys with the same
+    values afterwards, including keys that were unset before."""
+
+    def conf_rows():
+        return {
+            r.key: r.value
+            for r in spark.sql("SET").collect()
+            # load() sets this for every events read: the parquet reader
+            # consults it when the frame executes, so it cannot be scoped
+            # inside the call (an open leak, not one these keys own).
+            if r.key != "spark.sql.legacy.parquet.nanosAsLong"
+        }
+
+    before = conf_rows()
+    queries = engine.queries()
+    for key in (
+        "sink_dynamic_overwrite",
+        "sql_scripting",
+        "stream_dedup",
+        "stream_rocksdb_state",
+    ):
+        queries[key](spark, sf_dir).collect()
+    assert conf_rows() == before

@@ -21,7 +21,7 @@ uniform draw, so the Lloyd init rows (vec_id < K) are a uniform sample.
 Run:  python tools/ivf_hard_sweep.py          # writes IVF_HARD_SWEEP.json
 Env:  SPARK_GRAFT_HARD_N (200000), SPARK_GRAFT_HARD_C (100),
       SPARK_GRAFT_HARD_SIGMA (4.0), SPARK_GRAFT_HARD_K (448),
-      SPARK_GRAFT_CPUS (32)
+      SPARK_GRAFT_CPUS (the host's core count)
 
 The registry-tier `llm_ann_ivf` key (default K=8/nprobe=3, standard
 fixture, full DuckDB-oracle replay) is untouched — this sweep runs at
@@ -95,11 +95,7 @@ def make_fixture(dest: str) -> str:
 def main() -> int:
     from yc_data_proc_metadata_import_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        app_name="ivf-hard-sweep", master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
+    spark = get_spark(app_name="ivf-hard-sweep")
     hard_dir = make_fixture(os.path.join(REPO, ".scratch"))
     print(f"[hard-sweep] fixture: {hard_dir}", flush=True)
 

@@ -512,10 +512,7 @@ def main() -> int:
     from yc_data_proc_metadata_import_spark.session import get_spark
     from yc_data_proc_metadata_import_spark.sources.io import TABLES, table_path
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(
-        app_name=f"{preset}-rung", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
+    spark = get_spark(app_name=f"{preset}-rung")
     import yc_data_proc_metadata_import_spark as engine
 
     queries, oracles = engine.queries(), engine.oracle_sql()

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
+from ..session import conf_scope
 from ..sources.io import load
 from ..utils import dsum, sql_dsum
 
@@ -524,17 +525,8 @@ def join_bloom_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     confs are held, then the originals are restored so later keys keep
     their broadcast plans.
     """
-    orig = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, _BLOOM_CONFS):
         return bloom_join_frame(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in orig.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @query(

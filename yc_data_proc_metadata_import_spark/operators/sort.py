@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import conf_scope
 from ..sources.io import load
 
 
@@ -152,9 +153,7 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst plans normally.
     """
     load(spark, sf_dir, "orders").createOrReplaceTempView("script_orders")
-    prev = spark.conf.get("spark.sql.scripting.enabled", "true")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with conf_scope(spark, {"spark.sql.scripting.enabled": "true"}):
         spark.sql(
             "DECLARE OR REPLACE VARIABLE eng_script_factor BIGINT DEFAULT 2"
         )
@@ -182,8 +181,6 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         )
-    finally:
-        spark.conf.set("spark.sql.scripting.enabled", prev)
 
 
 @query(

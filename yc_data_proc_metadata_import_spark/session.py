@@ -32,6 +32,7 @@ Scale notes (local[32] today, 1000-executor cluster tomorrow):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -121,6 +122,28 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     ):
         spark.conf.set(k, DEFAULT_CONF.get(k, "true"))
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, conf: dict[str, str]):
+    """Hold ``conf`` on the session for the ``with`` block.
+
+    On exit each key gets its previous value back, or is unset if it was not
+    set before, so the caller's ``SET`` output is what it was. SQL conf is
+    read when a frame executes, so a frame that needs these values must run
+    inside the block."""
+    was_set = spark.conf.getAll
+    prev = {k: was_set[k] for k in conf if k in was_set}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k in conf:
+            if k in prev:
+                spark.conf.set(k, prev[k])
+            else:
+                spark.conf.unset(k)
 
 
 def codegen_compiles(spark: SparkSession) -> int:

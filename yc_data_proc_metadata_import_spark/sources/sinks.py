@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import conf_scope
 from .io import SCRATCH, _fixture_dir, _materialize, load, sf_tag, table_path
 
 
@@ -516,9 +517,7 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         (
             orders.repartition("o_orderstatus", "o_orderkey")
             .write.mode("overwrite")
@@ -534,8 +533,6 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("o_orderstatus")
             .parquet(out)
         )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return spark.read.parquet(out).select(
         "o_orderkey",
         F.col("o_orderstatus").cast("string").alias("o_orderstatus"),

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import conf_scope
 from ..sources.io import (
     SCRATCH,
     _commit_fixture,
@@ -279,15 +280,17 @@ def _run_to_memory(
     import shutil
 
     shutil.rmtree(chk, ignore_errors=True)  # fresh run each invocation
-    nd_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nd = spark.conf.get(nd_key)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(_state_partitions(spark, src_bytes, python_state)),
-    )
-    spark.conf.set(nd_key, str(final_no_data_batch).lower())
-    try:
+    with conf_scope(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": str(
+                _state_partitions(spark, src_bytes, python_state)
+            ),
+            "spark.sql.streaming.noDataMicroBatches.enabled": str(
+                final_no_data_batch
+            ).lower(),
+        },
+    ):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -297,9 +300,6 @@ def _run_to_memory(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(nd_key, prev_nd)
 
 
 _WINDOWED_SQL = """
@@ -998,18 +998,14 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence is exactly what this key hash-pins.
     """
     src = _stream_src(spark, sf_dir)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    changelog_key = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    spark.conf.set(changelog_key, "true")
-    try:
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"
+        ),
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    }
+    with conf_scope(spark, rocksdb):
         agg = (
             _read_stream(spark, src)
             .groupBy(F.window("ts", "15 minutes"), "event_type")
@@ -1022,11 +1018,6 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         _run_to_memory(agg, "mem_stream_rocksdb", "complete", src_bytes=_dir_bytes(src))
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
     return spark.table("mem_stream_rocksdb")
 
 

@@ -58,16 +58,16 @@ def test_sf_tag_stable_without_changes(regen_sf):
     assert sf_tag(regen_sf) == sf_tag(regen_sf)
 
 
-def _regenerate_orders(regen_sf: str) -> None:
-    """Rewrite orders.parquet under the SAME path with half the rows —
-    what a driver-side testdata regeneration does between rounds."""
+def _regenerate(regen_sf: str, table: str = "orders", key: str = "o_orderkey") -> None:
+    """Rewrite ``table`` under the SAME path with the rows of odd ``key``
+    only — what regenerating the testdata does."""
     import duckdb
 
-    path = table_path(regen_sf, "orders")
+    path = table_path(regen_sf, table)
     con = duckdb.connect()
     con.execute(
         f"CREATE TABLE o AS SELECT * FROM read_parquet('{path}') "
-        "WHERE o_orderkey % 2 = 1"
+        f"WHERE {key} % 2 = 1"
     )
     os.remove(path)
     con.execute(f"COPY o TO '{path}' (FORMAT parquet)")
@@ -80,7 +80,7 @@ def test_typed_orders_rebuilds_after_regen(spark, regen_sf):
     and serve the NEW row counts (the broken guard served the old)."""
     q = QUERIES["scan_typed_columns"]
     before = {r["status_c"]: r["n"] for r in q(spark, regen_sf).collect()}
-    _regenerate_orders(regen_sf)
+    _regenerate(regen_sf)
     after = {r["status_c"]: r["n"] for r in q(spark, regen_sf).collect()}
     assert sum(after.values()) < sum(before.values()), (
         "derived typed_orders table served stale pre-regeneration data: "
@@ -93,10 +93,24 @@ def test_partitioned_sink_rebuilds_after_regen(spark, regen_sf):
     partition-pruned scan must observe regenerated source data."""
     q = QUERIES["scan_partition_pruned"]
     before = q(spark, regen_sf).count()
-    _regenerate_orders(regen_sf)
+    _regenerate(regen_sf)
     after = q(spark, regen_sf).count()
     assert after < before, (
         f"sink_orders_part fixture served stale data: before={before} after={after}"
+    )
+
+
+def test_session_artifact_rebuilds_after_regen(spark, regen_sf):
+    """Same hazard class for session artifacts: the token table, built
+    once per session and shared by the text keys, must rebuild when
+    ``documents`` is regenerated under the same path."""
+    from yc_data_proc_metadata_import_spark.llm.text import tokens
+
+    before = tokens(spark, regen_sf).select("doc_id").distinct().count()
+    _regenerate(regen_sf, "documents", "doc_id")
+    after = tokens(spark, regen_sf).select("doc_id").distinct().count()
+    assert 0 < after < before, (
+        f"token table served stale pre-regeneration rows: before={before} after={after}"
     )
 
 

@@ -5,7 +5,8 @@ Inference starts one footer-reading Spark job per read; these tests pin
 that the cached schema is the one inference gives, that a repeated load
 starts no job, that a rewritten table file or a replaced staged directory
 re-infers (a stale schema is never served), and that
-``clear_session_caches`` drops the entries.
+``clear_session_caches`` drops the entries, which share one thread-safe
+cache with the ``session_artifact`` builders.
 """
 
 from __future__ import annotations
@@ -22,7 +23,11 @@ from pyspark.sql import functions as F
 
 from yc_data_proc_metadata_import_spark.sources import io
 from yc_data_proc_metadata_import_spark.sources.io import TABLES, load, load_documents_wide, table_path
-from yc_data_proc_metadata_import_spark.utils import clear_session_caches, session_cached
+from yc_data_proc_metadata_import_spark.utils import (
+    clear_session_caches,
+    session_artifact,
+    session_cached,
+)
 
 
 def _events_ts_converted(df):
@@ -103,30 +108,32 @@ def test_replaced_directory_reinfers(spark, tmp_path):
 
 def test_clear_session_caches_drops_schemas(spark, sf_dir, count_jobs):
     load(spark, sf_dir, "nation")
-    key = os.path.realpath(table_path(sf_dir, "nation"))
-    assert any(k[1][0] == key for k in io._SCHEMA_CACHE)
-    clear_session_caches()
-    assert not io._SCHEMA_CACHE
+    _, jobs = count_jobs(lambda: load(spark, sf_dir, "nation"))
+    assert jobs == 0
+    assert clear_session_caches() >= 1
     _, jobs = count_jobs(lambda: load(spark, sf_dir, "nation"))
     assert jobs >= 1
 
 
+class _Spark:
+    """Stands in for a session: the cache reads only the application id."""
+
+    class sparkContext:
+        applicationId = "app"
+
+
 def test_session_cached_is_thread_safe():
-    """Harnesses build keys from several threads, and every ``load()`` now
-    goes through ``session_cached``: concurrent inserts must neither raise
+    """Harnesses build keys from several threads, and every ``load()``
+    goes through the one session cache: concurrent inserts, each scanning
+    the cache to evict dead applications' entries, must neither raise
     nor lose entries."""
-
-    class _Spark:
-        class sparkContext:
-            applicationId = "app"
-
-    cache: dict = {}
+    clear_session_caches()
     errors: list = []
 
     def insert(t):
         try:
             for i in range(500):
-                session_cached(cache, _Spark, (t, i), lambda: i)
+                session_cached(insert, _Spark, (t, i), lambda: i)
         except Exception as e:  # noqa: BLE001 — reported by the assert below
             errors.append(e)
 
@@ -142,6 +149,30 @@ def test_session_cached_is_thread_safe():
         sys.setswitchinterval(old)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
-    assert len(cache) == 16 * 500
-    clear_session_caches()
-    assert not cache
+    assert clear_session_caches() == 16 * 500
+
+
+def test_session_artifact_builds_once_per_application(tmp_path):
+    """A ``session_artifact`` builder runs once per (application, source
+    fingerprint); ``cache_clear()`` drops only its own entries, and an
+    insert from another application evicts the dead one's entries."""
+    calls: list = []
+
+    @session_artifact
+    def built(spark, sf_dir):
+        calls.append(spark.sparkContext.applicationId)
+        return object()
+
+    class _Other:
+        class sparkContext:
+            applicationId = "other-app"
+
+    sf = str(tmp_path)
+    session_cached("schemas", _Spark, "path", lambda: 1)
+    first = built(_Spark, sf)
+    assert built(_Spark, sf) is first and calls == ["app"]
+    assert built.cache_clear() == 1
+    assert built(_Spark, sf) is not first and calls == ["app", "app"]
+    built(_Other, sf)
+    # the other application's insert evicted both "app" entries
+    assert clear_session_caches() == 1

@@ -131,12 +131,12 @@ def test_spec_to_ddl_unescapes_hive_path_encoding():
     literal values (round-5 ADVICE — verbatim replay double-escapes)."""
     from yc_data_proc_metadata_import_spark.plans.metadata import _spec_to_ddl
 
-    assert _spec_to_ddl("p=1-URGENT") == "(p='1-URGENT')"
-    assert _spec_to_ddl("p=6-SPECIAL %25PCT") == "(p='6-SPECIAL %PCT')"
-    assert _spec_to_ddl("p=a b%3Ac") == "(p='a b:c')"
-    assert _spec_to_ddl("p=x%2Fy/q=7") == "(p='x/y', q='7')"
+    assert _spec_to_ddl("p=1-URGENT") == "(`p`='1-URGENT')"
+    assert _spec_to_ddl("p=6-SPECIAL %25PCT") == "(`p`='6-SPECIAL %PCT')"
+    assert _spec_to_ddl("p=a b%3Ac") == "(`p`='a b:c')"
+    assert _spec_to_ddl("p=x%2Fy/q=7") == "(`p`='x/y', `q`='7')"
     # a quote inside the value is doubled for the SQL literal
-    assert _spec_to_ddl("p=o%27neil") == "(p='o''neil')"
+    assert _spec_to_ddl("p=o%27neil") == "(`p`='o''neil')"
 
 
 def test_view_requalification_is_identifier_boundary():
@@ -259,9 +259,12 @@ def test_manifest_location_validation():
 # A namespace holding what Spark's human-readable catalog output cannot
 # carry: every base table (``embeddings`` has an ``array<float>``
 # column), a table of nested types, property values containing the list
-# separators ", " and "]", and a view whose text spans several lines.
+# separators ", " and "]", a quote and a backslash, and a view whose text
+# spans several lines.  Its ``odd`` table has columns that only parse
+# backquoted (a keyword, a space, a backquote), is partitioned by one of
+# them with a quote in the partition value, and is analyzed on them.
 _RT_SRC, _RT_DST = "eng_meta_rt_src", "eng_meta_rt_dst"
-_RT_PROPS = {"note": "a, b", "tag": "x]"}
+_RT_PROPS = {"note": "a, b", "tag": "x]", "team": "o'neil", "path": "C:\\new"}
 _RT_VIEW = """SELECT n_regionkey,
        COUNT(*) AS n_nations
 FROM {db}.nation
@@ -271,6 +274,12 @@ _NESTED_COLS = {
     "counts": "map('a', 1)",
     "s": "named_struct('x', 1, 'y', array('p', 'q'))",
 }
+_ODD_COLS = ("select", "my col", "a`b")
+_ODD_PART = "part col"
+
+
+def _sql_literal(v: str) -> str:
+    return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 @pytest.fixture(scope="module")
@@ -281,15 +290,28 @@ def roundtrip(spark, sf_dir, tmp_path_factory):
     spark.sql(
         "SELECT " + ", ".join(f"{v} AS {k}" for k, v in _NESTED_COLS.items())
     ).write.parquet(nested)
-    locations = {t: table_path(sf_dir, t) for t in TABLES} | {"nested": nested}
+    odd = str(tmp_path_factory.mktemp("odd") / "odd")
+    spark.range(4).selectExpr(
+        *(f"id + {i} AS `{c.replace('`', '``')}`" for i, c in enumerate(_ODD_COLS)),
+        f"if(id < 2, 'o''neil', 'plain') AS `{_ODD_PART}`",
+    ).write.partitionBy(_ODD_PART).parquet(odd)
+    locations = {t: table_path(sf_dir, t) for t in TABLES}
+    locations |= {"nested": nested, "odd": odd}
     spark.sql(f"DROP DATABASE IF EXISTS {_RT_SRC} CASCADE")
     spark.sql(f"CREATE DATABASE {_RT_SRC}")
-    props = ", ".join(f"'{k}'='{v}'" for k, v in _RT_PROPS.items())
+    props = ", ".join(
+        f"{_sql_literal(k)}={_sql_literal(v)}" for k, v in _RT_PROPS.items()
+    )
     for t, loc in locations.items():
-        clause = f" TBLPROPERTIES ({props})" if t == "nation" else ""
+        clause = f" TBLPROPERTIES ({props})" if t in ("nation", "odd") else ""
         spark.sql(
             f"CREATE TABLE {_RT_SRC}.{t} USING parquet LOCATION '{loc}'{clause}"
         )
+    spark.sql(f"ALTER TABLE {_RT_SRC}.odd RECOVER PARTITIONS")
+    spark.sql(
+        f"ANALYZE TABLE {_RT_SRC}.odd COMPUTE STATISTICS FOR COLUMNS "
+        "`select`, `my col`, `a``b`, `part col`"
+    )
     spark.sql(f"CREATE VIEW {_RT_SRC}.by_region AS {_RT_VIEW.format(db=_RT_SRC)}")
     want_types = {
         t: [f.dataType.simpleString() for f in spark.read.parquet(loc).schema]
@@ -312,8 +334,9 @@ def _canon(manifest: list, db: str) -> list:
 def test_manifest_roundtrips_views_properties_and_nested_types(spark, roundtrip):
     """Export -> import -> export is the identity up to the namespace
     name: the multi-line view text arrives whole and resolves, property
-    values keep their separators, and nested column types replay in
-    CREATE TABLE."""
+    values keep their separators, quotes and backslashes, nested column
+    types replay in CREATE TABLE, and columns that need backquotes keep
+    their partitions, statistics and rows."""
     manifest, _ = roundtrip
     view = {e["table"]: e for e in manifest}["by_region"]
     assert view["view_text"] == _RT_VIEW.format(db=_RT_SRC)
@@ -331,6 +354,11 @@ def test_manifest_roundtrips_views_properties_and_nested_types(spark, roundtrip)
         for db in (_RT_SRC, _RT_DST)
     }
     assert dims[_RT_DST] == dims[_RT_SRC] and len(dims[_RT_SRC]) == 1
+    odd = {e["table"]: e for e in manifest}["odd"]
+    assert odd["partition_columns"] == [_ODD_PART] and len(odd["partitions"]) == 2
+    assert set(odd["statistics"]["columns"]) == {*_ODD_COLS, _ODD_PART}
+    rows = {db: sorted(spark.table(f"{db}.odd").collect()) for db in (_RT_SRC, _RT_DST)}
+    assert rows[_RT_DST] == rows[_RT_SRC] and len(rows[_RT_SRC]) == 4
 
 
 def test_exported_column_types_match_parquet_schema(roundtrip):

@@ -1043,8 +1043,8 @@ def main() -> int:
         # itself — clear them so both runs truly recompute. Input-level
         # caches (fingerprints, token tables) stay: their partitioning
         # is fixed by defaultParallelism, not shuffle.partitions.
-        _dedup._SIMHASH_LABELS_CACHE.clear()
-        _dedup._CLUSTER_CACHE.clear()
+        _dedup.simhash_labels_cached.cache_clear()
+        _dedup.dedup_clusters_cached.cache_clear()
 
     base = spark.conf.get("spark.sql.shuffle.partitions")
     for key in inv_keys:

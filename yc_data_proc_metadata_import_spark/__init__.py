@@ -220,3 +220,9 @@ def queries():
 def oracle_sql():
     load_all()
     return dict(registry.ORACLES)
+
+
+def prewarm_keys() -> tuple[str, ...]:
+    """The keys registered with ``prewarm=True``, in registration order."""
+    load_all()
+    return tuple(registry.PREWARM)

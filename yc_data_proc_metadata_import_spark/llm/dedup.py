@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load, load_documents_wide
+from ..utils import session_artifact
 
 # Shingle width (tokens per shingle) and near-dup Jaccard threshold.
 _SHINGLE = 3
@@ -105,18 +106,9 @@ def shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the "build the index once, fan out consumers" split a real pipeline
 # uses. tests/test_plans.py keeps calling the UNCACHED shingled() so the
 # tokenizer-hoisting plan guards still exercise the real pipeline.
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_artifact
 def shingled_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..utils import session_cached
-
-    return session_cached(
-        _SHINGLE_CACHE,
-        spark,
-        sf_dir,
-        lambda: shingled(spark, sf_dir).localCheckpoint(eager=True),
-    )
+    return shingled(spark, sf_dir).localCheckpoint(eager=True)
 
 
 # The hashed inverted index (doc_id, n_sh, xxhash64(shingle)) is the
@@ -126,21 +118,14 @@ def shingled_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 # table. One materialization per (session, scale) — index size ~2% of
 # corpus at 100 TB (8-byte hashes), the "build the index once, fan out
 # consumers" split production dedup runs.
-_HASHED_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_artifact
 def hashed_index_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..utils import session_cached
-
-    def build() -> DataFrame:
-        sh = shingled_cached(spark, sf_dir)
-        return sh.select(
-            "doc_id",
-            F.size("shingles").alias("n_sh"),
-            F.explode(F.expr("transform(shingles, s -> xxhash64(s))")).alias("sh_h"),
-        ).localCheckpoint(eager=True)
-
-    return session_cached(_HASHED_INDEX_CACHE, spark, sf_dir, build)
+    sh = shingled_cached(spark, sf_dir)
+    return sh.select(
+        "doc_id",
+        F.size("shingles").alias("n_sh"),
+        F.explode(F.expr("transform(shingles, s -> xxhash64(s))")).alias("sh_h"),
+    ).localCheckpoint(eager=True)
 
 
 # Oracle pair generation mirrors the Spark inverted-index shape (unnest
@@ -314,24 +299,18 @@ def lsh_candidates(sh: DataFrame) -> DataFrame:
 # recall audit's candidate replay; without materialization the 32-hash
 # permutation expression is evaluated once per join side per run.  Same
 # build-once discipline as hashed_index_cached.
-_MINHASH_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_artifact
 def minhash_signed_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..utils import session_cached
-
-    return session_cached(
-        _MINHASH_SIG_CACHE,
-        spark,
-        sf_dir,
-        lambda: shingled_cached(spark, sf_dir)
+    return (
+        shingled_cached(spark, sf_dir)
         .withColumn("sig", _minhash_sig())
-        .localCheckpoint(eager=True),
+        .localCheckpoint(eager=True)
     )
 
 
 @query(
     "llm_dedup_near",
+    prewarm=True,
     # exact all-pairs ground truth, spelled as the inverted-index join
     # (identical result set — see _PAIRS_SQL comment).
     oracle=_PAIRS_SQL,
@@ -430,8 +409,7 @@ _CHUNKS_PER_BLOCK = 5  # block j covers chunks 5j..5j+4
 # future consumer — reuse it instead of re-running tokenize+hash+fold.
 # At 100 TB this is exactly the "compute fingerprints, then join
 # fingerprints" pipeline split; the materialized set is ~0.01% of
-# corpus size.
-_SIMHASH_FP_CACHE: dict[tuple[str, str], DataFrame] = {}
+# corpus size.  Built by simhash_fingerprints_cached.
 
 
 def _simhash_fp_kernel(batches):
@@ -526,19 +504,15 @@ def _simhash_fp_expr_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_artifact
 def simhash_fingerprints_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..utils import session_cached
-
-    def build() -> DataFrame:
-        # Empty-token docs are excluded via trim(text) <> '' — exactly
-        # equivalent to size(hashes) > 0 (tokens are empty iff the text
-        # is all whitespace) but cheap when Catalyst pushes it down to
-        # the scan; a filter on size(hashes) would be substituted below
-        # the repartition and re-run tokenize+hash per row inside the
-        # predicate (measured 3x cost of the whole stage).
-        return _simhash_fp_plan(spark, sf_dir).localCheckpoint(eager=True)
-
-    return session_cached(_SIMHASH_FP_CACHE, spark, sf_dir, build)
+    # Empty-token docs are excluded via trim(text) <> '' — exactly
+    # equivalent to size(hashes) > 0 (tokens are empty iff the text
+    # is all whitespace) but cheap when Catalyst pushes it down to
+    # the scan; a filter on size(hashes) would be substituted below
+    # the repartition and re-run tokenize+hash per row inside the
+    # predicate (measured 3x cost of the whole stage).
+    return _simhash_fp_plan(spark, sf_dir).localCheckpoint(eager=True)
 
 
 # tok/fp/blocks CTE chain shared by the simhash PAIR oracle and the
@@ -586,6 +560,7 @@ _SIMHASH_CTES = f"""tok AS (
 
 @query(
     "llm_dedup_simhash",
+    prewarm=True,
     oracle=f"""
     WITH {_SIMHASH_CTES}
     SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b,
@@ -919,14 +894,6 @@ def _keyed_blocks(dfp: DataFrame) -> DataFrame:
     return keyed
 
 
-# Converged (doc_id, cluster_id, keep) labels, one materialization per
-# (session, scale): the propagation loop is a multi-job iteration whose
-# output is a stable derived artifact — the rung's wall pass and
-# comparator pass (and any downstream consumer) share it (round-13
-# ADVICE; same pattern as dedup_clusters_cached).
-_SIMHASH_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _labels_from_fps(spark: SparkSession, fps: DataFrame) -> DataFrame:
     """(doc_id, cluster_id, keep) from a fingerprint relation: distinct-fp
     collapse -> bucket-CC star edges -> min-label propagation -> map docs
@@ -957,17 +924,14 @@ def _labels_from_fps(spark: SparkSession, fps: DataFrame) -> DataFrame:
     )
 
 
+# Converged (doc_id, cluster_id, keep) labels, one materialization per
+# (session, scale): the propagation loop is a multi-job iteration whose
+# output is a stable derived artifact — the rung's wall pass and
+# comparator pass (and any downstream consumer) share it (round-13
+# ADVICE; same pattern as dedup_clusters_cached).
+@session_artifact
 def simhash_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..utils import session_cached
-
-    return session_cached(
-        _SIMHASH_LABELS_CACHE,
-        spark,
-        sf_dir,
-        lambda: _labels_from_fps(
-            spark, simhash_fingerprints_cached(spark, sf_dir)
-        ),
-    )
+    return _labels_from_fps(spark, simhash_fingerprints_cached(spark, sf_dir))
 
 
 def _labels_oracle(ctes: str) -> str:
@@ -1129,15 +1093,13 @@ def _hard_docs_ctes() -> str:
         FROM ids)"""
 
 
-_HARD_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 @query(
     "llm_dedup_simhash_labels_hard",
     oracle=_labels_oracle(
         _hard_docs_ctes() + ",\n    " + _simhash_ctes("docs")
     ),
 )
+@session_artifact
 def llm_dedup_simhash_labels_hard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """llm_dedup_simhash_labels' pipeline — fingerprint kernel, bucket-CC
     star edges, min-label propagation — over the generated FRAGMENTING
@@ -1147,17 +1109,10 @@ def llm_dedup_simhash_labels_hard(spark: SparkSession, sf_dir: str) -> DataFrame
     shape as the main key; the corpus generator is a parallel range +
     codegen expression, so the key adds no driver-side or quadratic
     work."""
-    from ..utils import session_cached
-
-    return session_cached(
-        _HARD_LABELS_CACHE,
+    return _labels_from_fps(
         spark,
-        sf_dir,
-        lambda: _labels_from_fps(
-            spark,
-            _fp_plan_from_docs(spark, _hard_docs_df(spark, sf_dir))
-            .localCheckpoint(eager=True),
-        ),
+        _fp_plan_from_docs(spark, _hard_docs_df(spark, sf_dir))
+        .localCheckpoint(eager=True),
     )
 
 
@@ -1195,10 +1150,11 @@ def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
+# The cluster labels are a session artifact llm_curation_pipeline also
+# consumes; prewarming builds them.
 @query(
     "llm_dedup_cluster",
+    prewarm=True,
     oracle=f"""
     WITH RECURSIVE inv AS ({_INV_SQL}),
     pairs AS (
@@ -1243,9 +1199,7 @@ def llm_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters_cached(spark, sf_dir)
 
 
-_CLUSTER_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_artifact
 def dedup_clusters_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The converged (doc_id, cluster_id, keep) label table, materialized
     once per (session, scale): the label-propagation loop is a multi-job
@@ -1253,10 +1207,7 @@ def dedup_clusters_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact — llm_dedup_cluster surfaces it and llm_curation_pipeline
     consumes it, the same share-the-derived-input pattern as
     hashed_index_cached."""
-    from ..utils import session_cached
-
-    return session_cached(_CLUSTER_CACHE, spark, sf_dir,
-                          lambda: _cluster_labels(spark, sf_dir).localCheckpoint(eager=True))
+    return _cluster_labels(spark, sf_dir).localCheckpoint(eager=True)
 
 
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -62,6 +62,7 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "llm_multimodal",
+    prewarm=True,
     oracle="""
     SELECT doc_id,
            CASE WHEN doc_id % 2 = 0 THEN 'png' ELSE 'jpeg' END AS fmt,
@@ -604,6 +605,7 @@ def _image_decode_iter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 @query(
     "llm_image_decode",
+    prewarm=True,
     oracle="""
     WITH dims AS (
         SELECT doc_id,
@@ -715,6 +717,7 @@ def _png_decode_iter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 @query(
     "llm_png_decode",
+    prewarm=True,
     oracle="""
     WITH dims AS (
         SELECT doc_id,
@@ -1173,6 +1176,7 @@ def _jpeg_decode_iter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 @query(
     "llm_jpeg_decode",
+    prewarm=True,
     oracle="""
     WITH dims AS (
         SELECT doc_id,
@@ -1322,6 +1326,7 @@ def _audio_decode_iter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 @query(
     "llm_audio_decode",
+    prewarm=True,
     oracle=f"""
     WITH dims AS (
         SELECT doc_id, 400 + (doc_id % 100) * 4 AS n FROM documents),

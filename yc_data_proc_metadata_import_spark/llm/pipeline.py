@@ -29,6 +29,7 @@ _LANG_STOP_RATIO = 0.04
 
 @query(
     "llm_curation_pipeline",
+    prewarm=True,
     oracle=f"""
     WITH RECURSIVE inv AS ({_INV_SQL}),
     pairs AS ({_PAIRS_BODY}),

@@ -43,6 +43,7 @@ from pyspark.sql.window import Window
 
 from ..registry import query
 from ..sources.io import load
+from ..utils import session_artifact
 
 # Queries for top-k keys; bucket count for the block join; thresholds.
 _N_QUERIES = 10
@@ -212,6 +213,7 @@ def _block_pairs_iter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 @query(
     "llm_sim_join",
+    prewarm=True,
     oracle=f"""
     WITH v AS ({_VECS_SQL})
     SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
@@ -359,9 +361,7 @@ def _srp_sig(t: int) -> str:
     return expr
 
 
-_SRP_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_artifact
 def _srp_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (vec_id, table_id, sig) SRP index — ~24 bytes/row —
     materialized once per (session, scale) so the candidate self-join's
@@ -370,34 +370,30 @@ def _srp_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     back only for the verify stage (the candidate shuffle never carries
     vectors). Same "build the index, then join the index" split as
     llm_dedup_ngram's hashed_index_cached."""
-    from ..utils import session_cached
-
-    def build() -> DataFrame:
-        v = _vecs(spark, sf_dir)
-        return (
-            v.select(
-                "vec_id",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(t).alias("table_id"),
-                                F.expr(_srp_sig(t)).alias("sig"),
-                            )
-                            for t in range(_SRP_TABLES)
-                        ]
-                    )
-                ).alias("s"),
-            )
-            .select("vec_id", "s.table_id", "s.sig")
-            .localCheckpoint(eager=True)
+    v = _vecs(spark, sf_dir)
+    return (
+        v.select(
+            "vec_id",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(t).alias("table_id"),
+                            F.expr(_srp_sig(t)).alias("sig"),
+                        )
+                        for t in range(_SRP_TABLES)
+                    ]
+                )
+            ).alias("s"),
         )
-
-    return session_cached(_SRP_SIG_CACHE, spark, sf_dir, build)
+        .select("vec_id", "s.table_id", "s.sig")
+        .localCheckpoint(eager=True)
+    )
 
 
 @query(
     "llm_sim_join_lsh",
+    prewarm=True,
     oracle=f"""
     WITH v AS ({_VECS_SQL}),
     sigs AS (
@@ -1006,7 +1002,9 @@ def _km_cost_array(cents: list, max_abs_qv: int, qv: str = "qv") -> F.Column:
     )
 
 
-@query("llm_kmeans_cluster", oracle=_km_oracle_sql())
+# Prewarming the fit also serves llm_semdedup and the IVF keys, which
+# share _km_fit.
+@query("llm_kmeans_cluster", oracle=_km_oracle_sql(), prewarm=True)
 def llm_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means clustering over the embedding corpus — the grouping stage
     of SemDeDup-style semantic dedup and the centroid-training stage IVF
@@ -1037,24 +1035,12 @@ llm_kmeans_cluster.__doc__ = llm_kmeans_cluster.__doc__.format(k=_KM_K, iters=_K
 # Fit result cached per (application, source fingerprint): the Lloyd
 # loop's per-iteration collects are the expensive part, and
 # llm_kmeans_cluster + llm_semdedup would otherwise each run the full
-# loop. Session identity + dead-context eviction live in
-# utils.session_cached (round-5 ADVICE fix, shared with the token and
-# shingle caches).
-_KM_CACHE: dict = {}
-
-
+# loop.
+@session_artifact
 def _km_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the Lloyd loop; return (vec_id, qv, cluster) after the final
-    assignment (shared by llm_kmeans_cluster and llm_semdedup)."""
-    from ..sources.io import sf_tag
-    from ..utils import session_cached
-
-    return session_cached(
-        _KM_CACHE, spark, sf_tag(sf_dir), lambda: _km_fit_uncached(spark, sf_dir)
-    )
-
-
-def _km_fit_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    assignment (shared by llm_kmeans_cluster, llm_semdedup and the IVF
+    keys)."""
     qv = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(
@@ -1134,54 +1120,46 @@ def _km_fit_uncached(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF codebook = ONE more centroid-update step over the final Lloyd
 # assignment — the "final centroids" a k-means trainer ships. Cached
 # per (session, scale): two K-bounded collects (K*d sums + K counts).
-_IVF_CODEBOOK_CACHE: dict = {}
-
-
+@session_artifact
 def _ivf_codebook(spark: SparkSession, sf_dir: str):
     """(cents, max_abs_qv): the trained IVF quantizer. cents is the
     driver-held exact-integer (j, sum-vector, count) list computed from
     llm_kmeans_cluster's FINAL assignment; max_abs_qv feeds the int64
     overflow guards. Collects are K*d rows — independent of corpus size
     (the broadcast-codebook pattern)."""
-    from ..sources.io import sf_tag
-    from ..utils import session_cached
-
-    def build():
-        assigned = _km_fit(spark, sf_dir)
-        # ONE job: the (cluster, dim) hash agg visits every (row, dim)
-        # pair, so count(1) gives the cluster's row count and
-        # max(abs(val)) folded over dims gives the cluster's max|qv| —
-        # the previous separate groupBy("cluster") stats job re-executed
-        # the full final assignment pass (guide §1.2).
-        sums = (
-            assigned.select("cluster", F.posexplode("qv").alias("dim", "val"))
-            .groupBy("cluster", "dim")
-            .agg(
-                F.sum("val").alias("s"),
-                F.count(F.lit(1)).alias("cnt"),
-                F.max(F.abs(F.col("val"))).alias("m"),
-            )
-            .collect()
+    assigned = _km_fit(spark, sf_dir)
+    # ONE job: the (cluster, dim) hash agg visits every (row, dim)
+    # pair, so count(1) gives the cluster's row count and
+    # max(abs(val)) folded over dims gives the cluster's max|qv| —
+    # the previous separate groupBy("cluster") stats job re-executed
+    # the full final assignment pass (guide §1.2).
+    sums = (
+        assigned.select("cluster", F.posexplode("qv").alias("dim", "val"))
+        .groupBy("cluster", "dim")
+        .agg(
+            F.sum("val").alias("s"),
+            F.count(F.lit(1)).alias("cnt"),
+            F.max(F.abs(F.col("val"))).alias("m"),
         )
-        by_cluster: dict = {}
-        counts: dict = {}
-        for r in sums:
-            by_cluster.setdefault(int(r["cluster"]), {})[int(r["dim"])] = int(r["s"])
-            counts[int(r["cluster"])] = int(r["cnt"])
-        if len(counts) != _KM_K and _KM_K <= _KM_LITERAL_MAX:
-            # see _km_fit_uncached: strict at oracle-replayed K, fewer
-            # lists are fine at scaled (recall-adjudicated) K.
-            raise AssertionError(
-                f"IVF codebook expects {_KM_K} trained lists, got {sorted(counts)}"
-            )
-        max_abs_qv = max(int(r["m"]) for r in sums)
-        cents = sorted(
-            (j, [d[i] for i in range(len(d))], counts[j])
-            for j, d in by_cluster.items()
+        .collect()
+    )
+    by_cluster: dict = {}
+    counts: dict = {}
+    for r in sums:
+        by_cluster.setdefault(int(r["cluster"]), {})[int(r["dim"])] = int(r["s"])
+        counts[int(r["cluster"])] = int(r["cnt"])
+    if len(counts) != _KM_K and _KM_K <= _KM_LITERAL_MAX:
+        # see _km_fit: strict at oracle-replayed K, fewer
+        # lists are fine at scaled (recall-adjudicated) K.
+        raise AssertionError(
+            f"IVF codebook expects {_KM_K} trained lists, got {sorted(counts)}"
         )
-        return cents, max_abs_qv
-
-    return session_cached(_IVF_CODEBOOK_CACHE, spark, sf_tag(sf_dir), build)
+    max_abs_qv = max(int(r["m"]) for r in sums)
+    cents = sorted(
+        (j, [d[i] for i in range(len(d))], counts[j])
+        for j, d in by_cluster.items()
+    )
+    return cents, max_abs_qv
 
 
 def _ivf_oracle_sql() -> str:
@@ -1657,22 +1635,11 @@ def _pq_slice_sql(m: int) -> str:
     return f"slice(qv, {m * _PQ_DSUB + 1}, {_PQ_DSUB})"
 
 
-_PQ_CACHE: dict = {}
-
-
+# llm_ann_pq and llm_ann_ivfpq share one training per (session, scale)
+# — the build-once/consume-many split every derived index here uses
+# (_km_fit, _ivf_codebook, ...).
+@session_artifact
 def _pq_train_encode(spark: SparkSession, sf_dir: str):
-    """Session-cached: llm_ann_pq and llm_ann_ivfpq share one training
-    per (session, scale) — the build-once/consume-many split every
-    derived index here uses (_KM_CACHE, _IVF_CODEBOOK_CACHE, ...)."""
-    from ..sources.io import sf_tag
-    from ..utils import session_cached
-
-    return session_cached(
-        _PQ_CACHE, spark, sf_tag(sf_dir), lambda: _pq_train_encode_uncached(spark, sf_dir)
-    )
-
-
-def _pq_train_encode_uncached(spark: SparkSession, sf_dir: str):
     """LOCKSTEP per-subspace Lloyd over micro-int slices; returns
     (codes DataFrame with vec_id + code0..code{M-1}, per-subspace
     (cents, max_abs_qv) list).
@@ -1812,7 +1779,7 @@ def _pq_train_encode_uncached(spark: SparkSession, sf_dir: str):
             if len(got) != _PQ_K:
                 # codes index the j-sorted LUT positionally; a dropped
                 # list would silently misalign — fail loudly (the
-                # _km_fit_uncached policy at oracle-replayed K).
+                # _km_fit policy at oracle-replayed K).
                 raise AssertionError(
                     f"PQ subspace {m}: empty codeword after round {t}: {got}"
                 )

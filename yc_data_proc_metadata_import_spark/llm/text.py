@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load_documents_wide
-from ..utils import sql_davg, davg
+from ..utils import davg, session_artifact, sql_davg
 
 # Whitespace tokenizer used by every operator in this module (regex split,
 # empty tokens dropped so leading/trailing whitespace can't skew counts).
@@ -63,33 +63,26 @@ _LEXICON = [
 # shared intermediate once, fan out consumers" pattern a real curation
 # pipeline uses (persist or write the token table, then run the whole
 # metric battery over it); localCheckpoint keeps it executor-local.
-_TOK_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_artifact
 def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, token) rows: lowercase whitespace tokenization, exploded.
 
     Map-only: at 100 TB this is a pure scan→flatMap with no shuffle; the
     explode multiplies rows ~40x but stays within each input partition.
     Materialized once per session+scale and shared by every consumer
-    (see _TOK_CACHE note).
+    (see the note above).
     """
-    from ..utils import session_cached
-
-    def build() -> DataFrame:
-        n = spark.sparkContext.defaultParallelism
-        return (
-            load_documents_wide(spark, sf_dir)
-            .repartition(n, "doc_id")  # single-file fixture scans as 1 partition
-            .select(
-                "doc_id",
-                F.explode(F.split(F.lower(F.col("text")), _WS)).alias("token"),
-            )
-            .filter(F.col("token") != "")
-            .localCheckpoint(eager=True)
+    n = spark.sparkContext.defaultParallelism
+    return (
+        load_documents_wide(spark, sf_dir)
+        .repartition(n, "doc_id")  # single-file fixture scans as 1 partition
+        .select(
+            "doc_id",
+            F.explode(F.split(F.lower(F.col("text")), _WS)).alias("token"),
         )
-
-    return session_cached(_TOK_CACHE, spark, sf_dir, build)
+        .filter(F.col("token") != "")
+        .localCheckpoint(eager=True)
+    )
 
 
 _TOKENS_SQL = (
@@ -150,6 +143,7 @@ def llm_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "llm_tfidf",
+    prewarm=True,
     oracle=f"""
     WITH tok AS ({_TOKENS_SQL}),
          tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token),
@@ -1058,8 +1052,7 @@ def _bpe_apply_merge(w: DataFrame, a: str, b: str) -> DataFrame:
 # and encode must share it anyway (that is the train/encode-consistency
 # contract), so it is session-cached like the k-means codebook — one
 # trainer run per (session, scale), llm_bpe_train surfaces it,
-# llm_bpe_apply replays it.
-_BPE_MERGE_CACHE: dict[tuple[str, str], list] = {}
+# llm_bpe_apply replays it (_bpe_merges_cached).
 
 
 def _bpe_word_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1073,24 +1066,20 @@ def _bpe_word_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_artifact
 def _bpe_merges_cached(spark: SparkSession, sf_dir: str) -> list:
-    from ..utils import session_cached
-
-    def build() -> list:
-        w = _bpe_word_table(spark, sf_dir)
-        rows = []
-        for step_no in range(_BPE_STEPS):
-            win = (
-                _bpe_pair_counts(w)
-                .orderBy(F.col("cnt").desc(), F.col("a").asc(), F.col("b").asc())
-                .first()
-            )
-            rows.append((step_no + 1, win["a"], win["b"], int(win["cnt"])))
-            if step_no + 1 < _BPE_STEPS:
-                w = _bpe_apply_merge(w, win["a"], win["b"])
-        return rows
-
-    return session_cached(_BPE_MERGE_CACHE, spark, sf_dir, build)
+    w = _bpe_word_table(spark, sf_dir)
+    rows = []
+    for step_no in range(_BPE_STEPS):
+        win = (
+            _bpe_pair_counts(w)
+            .orderBy(F.col("cnt").desc(), F.col("a").asc(), F.col("b").asc())
+            .first()
+        )
+        rows.append((step_no + 1, win["a"], win["b"], int(win["cnt"])))
+        if step_no + 1 < _BPE_STEPS:
+            w = _bpe_apply_merge(w, win["a"], win["b"])
+    return rows
 
 
 @query("llm_bpe_train", oracle=_bpe_oracle())
@@ -1610,7 +1599,9 @@ def _bpe_apply_oracle() -> str:
     return "WITH " + ",\n    ".join(ctes) + "\n    " + final
 
 
-@query("llm_bpe_apply", oracle=_bpe_apply_oracle())
+# The BPE merge table is a session artifact llm_bpe_train and this key
+# share; prewarming builds it.
+@query("llm_bpe_apply", oracle=_bpe_apply_oracle(), prewarm=True)
 def llm_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE ENCODE — the other half of llm_bpe_train: apply the LEARNED
     merge table to every word and report per-document tokenization

@@ -301,6 +301,7 @@ def catalog_alter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "catalog_csv_table",
+    prewarm=True,
     oracle="""
     SELECT n_nationkey, n_name, n_regionkey FROM nation
     """,

@@ -159,6 +159,18 @@ def _build_source(spark: SparkSession, sf_dir: str) -> None:
 _INTERNAL_PROP = re.compile(r"^(spark\.|transient_|external$|numFiles|totalSize)")
 
 
+def _ident(name: str) -> str:
+    """``name`` as a backquoted SQL identifier, so a column named
+    ``select`` or ``my col`` replays (embedded backquotes doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _literal(value: str) -> str:
+    """``value`` as a SQL string literal: quotes doubled and backslashes
+    escaped, so the parser reads back exactly ``value``."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
 def _type_str(t: dict) -> str:
     """One ``DESCRIBE ... AS JSON`` column type in the DDL spelling of
     ``DataType.simpleString()`` (``timestamp_ltz`` is plain
@@ -189,7 +201,7 @@ def _catalog_stats(spark: SparkSession, name: str, desc: dict) -> dict:
         return {}
     stats: dict = {"row_count": n_rows, "columns": {}}
     for c in desc["columns"]:
-        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name} {c['name']}").collect()
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name} {_ident(c['name'])}").collect()
         info = {r["info_name"]: r["info_value"] for r in rows}
         if info.get("distinct_count") in (None, "NULL"):
             continue
@@ -303,13 +315,12 @@ def _spec_to_ddl(spec: str) -> str:
     PARTITION takes UNescaped literal values — replaying the spec
     verbatim double-escapes every special character and pruned queries
     on the real value silently miss rows (round-5 ADVICE, pinned by the
-    SPECIAL_PRIO fixture partition).  Decode %XX before quoting; the
-    quote itself is escaped by doubling."""
+    SPECIAL_PRIO fixture partition).  Decode %XX in both the column name
+    and the value before quoting them."""
     parts = []
     for kv in spec.split("/"):
-        k, v = kv.split("=", 1)
-        v = _unescape_path_name(v)
-        parts.append(f"{k}='{v.replace(chr(39), chr(39) * 2)}'")
+        k, v = map(_unescape_path_name, kv.split("=", 1))
+        parts.append(f"{_ident(k)}={_literal(v)}")
     return "(" + ", ".join(parts) + ")"
 
 
@@ -339,16 +350,16 @@ def import_manifest(spark: SparkSession, manifest: list[dict], dst_db: str) -> N
             text = _requalify_view_text(entry["view_text"], entry["database"], dst_db)
             spark.sql(f"CREATE VIEW {tbl} AS {text}")
             continue
-        cols = ", ".join(f"{c['name']} {c['type']}" for c in entry["columns"])
+        cols = ", ".join(f"{_ident(c['name'])} {c['type']}" for c in entry["columns"])
         part_clause = (
-            f" PARTITIONED BY ({', '.join(entry['partition_columns'])})"
+            f" PARTITIONED BY ({', '.join(map(_ident, entry['partition_columns']))})"
             if entry["partition_columns"]
             else ""
         )
         props = entry.get("properties") or {}
         props_clause = (
             " TBLPROPERTIES ("
-            + ", ".join(f"'{k}'='{v}'" for k, v in sorted(props.items()))
+            + ", ".join(f"{_literal(k)}={_literal(v)}" for k, v in sorted(props.items()))
             + ")"
             if props
             else ""
@@ -379,7 +390,7 @@ def import_manifest(spark: SparkSession, manifest: list[dict], dst_db: str) -> N
             if cols:
                 spark.sql(
                     f"ANALYZE TABLE {tbl} COMPUTE STATISTICS "
-                    f"FOR COLUMNS {', '.join(cols)}"
+                    f"FOR COLUMNS {', '.join(map(_ident, cols))}"
                 )
             else:
                 spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS")

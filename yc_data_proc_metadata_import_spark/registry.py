@@ -21,6 +21,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+# Keys registered with prewarm=True, in registration order.
+PREWARM: list[str] = []
 
 _PYFILES_SENT: set[int] = set()
 
@@ -111,8 +113,17 @@ def _normalize_result_types(df: DataFrame) -> DataFrame:
     return df.select(*cols) if replaced else df
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register ``fn`` under ``name``; optionally attach a DuckDB oracle."""
+def query(
+    name: str, oracle: str | None = None, prewarm: bool = False
+) -> Callable[[QueryFn], QueryFn]:
+    """Register ``fn`` under ``name``; optionally attach a DuckDB oracle.
+
+    ``prewarm=True`` declares that the key's first call builds a one-time
+    derived fixture (``_SUCCESS``-guarded under ``.scratch/``) or a
+    session artifact (``utils.session_artifact``) that other keys share.
+    That build is input preparation, not the operator under test, so
+    ``bench.py`` runs these keys once, unmeasured, before its timed loop.
+    """
 
     def deco(fn: QueryFn) -> QueryFn:
         def wrapped(spark: SparkSession, sf_dir: str, *args: Any, **kwargs: Any) -> DataFrame:
@@ -133,6 +144,8 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         QUERIES[name] = wrapped
         if oracle is not None:
             ORACLES[name] = oracle
+        if prewarm:
+            PREWARM.append(name)
         return fn
 
     return deco

@@ -90,10 +90,6 @@ def sf_tag(sf_dir: str) -> str:
     return f"{base}_{_sf_fingerprint(sf_dir)}"
 
 
-# Parquet schemas per (session, file version); see parquet_schema().
-_SCHEMA_CACHE: dict = {}
-
-
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """Schema of the Parquet file or directory at ``path``, inferred once
     per session and file version.
@@ -106,7 +102,7 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """
     st = os.stat(path)
     return session_cached(
-        _SCHEMA_CACHE,
+        parquet_schema,
         spark,
         (os.path.realpath(path), st.st_size, st.st_mtime_ns),
         lambda: spark.read.parquet(path).schema,
@@ -289,8 +285,10 @@ def _materialize(writer, out: str) -> str:
     Spark ``_SUCCESS`` marker is ever treated as valid (an interrupted write
     leaves a marker-less temp dir that gets overwritten on retry, never
     read — ADVICE.md round 1).  Fixture generation is a one-time setup cost
-    outside the measured query (``prepare_fixtures``); writes keep the
-    source's natural partitioning — no ``coalesce(1)`` single-task funnel.
+    outside the measured query (the keys that build fixtures are
+    registered with ``prewarm=True``, and ``bench.py`` runs them before
+    its timed loop); writes keep the source's natural partitioning — no
+    ``coalesce(1)`` single-task funnel.
 
     The staging dir is PID-suffixed so two cold drivers racing to build
     the same missing fixture each write privately and the rename is
@@ -481,17 +479,9 @@ def _xml_fixture(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def prepare_fixtures(spark: SparkSession, sf_dir: str) -> None:
-    """One-time setup: materialize every derived-format fixture so the
-    scans themselves (the measured path) are pure reads."""
-    _csv_fixture(spark, sf_dir)
-    _json_fixture(spark, sf_dir)
-    _orc_fixture(spark, sf_dir)
-    _xml_fixture(spark, sf_dir)
-
-
 @query(
     "scan_csv",
+    prewarm=True,
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
 )
 def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -508,6 +498,7 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scan_json",
+    prewarm=True,
     oracle="SELECT r_regionkey, r_name FROM region",
 )
 def scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -540,6 +531,7 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scan_orc",
+    prewarm=True,
     oracle="SELECT r_regionkey, r_name FROM region",
 )
 def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -615,6 +607,7 @@ def flagship_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scan_schema_evolution",
+    prewarm=True,
     oracle="""
     SELECT s_suppkey, s_name, s_acctbal, NULL AS s_tier FROM supplier
     WHERE s_suppkey % 2 = 0
@@ -663,6 +656,7 @@ def scan_schema_evolution(spark, sf_dir: str):
 
 @query(
     "scan_permissive_json",
+    prewarm=True,
     oracle="""
     SELECT CASE WHEN doc_id % 10 = 0 THEN NULL ELSE doc_id END AS doc_id,
            CASE WHEN doc_id % 10 = 0 THEN NULL ELSE lang END AS lang,
@@ -707,6 +701,7 @@ def scan_permissive_json(spark, sf_dir: str):
 
 @query(
     "scan_ignore_corrupt",
+    prewarm=True,
     oracle="SELECT r_regionkey, r_name FROM region",
 )
 def scan_ignore_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -106,6 +106,7 @@ def sink_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scan_partition_pruned",
+    prewarm=True,
     oracle="""
     SELECT o_orderkey, o_custkey, o_totalprice
     FROM orders WHERE o_orderstatus = 'F'
@@ -134,6 +135,7 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_dpp_pruned",
+    prewarm=True,
     oracle="""
     SELECT 'finished' AS label, COUNT(*) AS n,
            CAST(SUM(CAST(o_totalprice AS DECIMAL(28,4))) AS DOUBLE) AS total_price
@@ -171,6 +173,7 @@ def join_dpp_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bucketed_join_noshuffle",
+    prewarm=True,
     oracle="""
     SELECT o.o_orderkey, o.o_totalprice, COUNT(*) AS n_li
     FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -408,6 +411,7 @@ def sink_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sink_compaction",
+    prewarm=True,
     oracle="""
     SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders
     """,
@@ -449,6 +453,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sink_codec_zstd",
+    prewarm=True,
     oracle="""
     SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
     FROM lineitem

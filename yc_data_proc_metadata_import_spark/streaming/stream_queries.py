@@ -311,7 +311,11 @@ _WINDOWED_SQL = """
 """
 
 
-@query("stream_tumbling", oracle=_WINDOWED_SQL.format(vsum=sql_dsum("value")))
+@query(
+    "stream_tumbling",
+    prewarm=True,
+    oracle=_WINDOWED_SQL.format(vsum=sql_dsum("value")),
+)
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 10-minute windows x event_type, complete mode.
 
@@ -425,6 +429,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_watermark",
+    prewarm=True,
     oracle=f"""
     WITH wme AS (
         SELECT max(ts) - INTERVAL '10 minutes' AS w
@@ -476,6 +481,7 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_dedup",
+    prewarm=True,
     oracle="SELECT event_id, event_type, ts FROM events",
 )
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,6 +13,7 @@ sums instead of the engines' (order-sensitive) streaming implementations.
 
 from __future__ import annotations
 
+import functools
 import threading
 
 from pyspark.sql import Column
@@ -74,53 +75,84 @@ def sql_dsum_prod(a: str, b: str) -> str:
     )
 
 
-# Every dict ever passed to session_cached, so long-lived harnesses (the
-# scale rungs run 40+ keys in ONE session) can drop every cached artifact
-# at once: cached DataFrames pin their localCheckpoint/persisted blocks
-# via the py4j reference, and 40 keys of pinned blocks ground an 8 GB
-# driver heap into GC thrash (measured r17: llm_ann_ivf 42 s fresh vs
-# 117 s as the rung's 37th key, then an invariance-pass OOM two entries
-# later).
-_ALL_CACHES: list[dict] = []
-# Guards the cache dicts' mutations: harnesses build keys from several
-# threads, and evicting (which iterates a dict) while another thread
+# Every session artifact the engine holds: (owner, applicationId,
+# suffix) -> value.  One dict, so long-lived harnesses (the scale rungs
+# run 40+ keys in ONE session) can drop every cached artifact at once:
+# cached DataFrames pin their localCheckpoint/persisted blocks via the
+# py4j reference, and 40 keys of pinned blocks ground an 8 GB driver
+# heap into GC thrash (measured r17: llm_ann_ivf 42 s fresh vs 117 s as
+# the rung's 37th key, then an invariance-pass OOM two entries later).
+_SESSION_ARTIFACTS: dict[tuple, object] = {}
+# Guards the dict's mutations: harnesses build keys from several
+# threads, and evicting (which iterates the dict) while another thread
 # inserts raises "dictionary changed size during iteration".  Builds run
 # outside it, so one slow build never blocks another thread's.
-_CACHES_LOCK = threading.Lock()
+_CACHE_LOCK = threading.Lock()
 
 
-def session_cached(cache: dict, spark, suffix, build):
-    """Get-or-build a per-(session, suffix) cached value.
+def session_cached(owner, spark, suffix, build):
+    """Get-or-build the value ``owner`` keeps for ``suffix`` in this
+    Spark application.
 
     Keys on ``spark.sparkContext.applicationId`` — NEVER ``id(spark)``:
     CPython reuses object ids after GC, so a new session allocated at a
     dead session's address could be served a DataFrame bound to the
-    stopped context (round-5 ADVICE). Entries from other application
-    ids are evicted on insert — they reference dead contexts and would
-    otherwise leak. Shared by the token, shingle, and k-means caches so
-    the hazard fix lives in exactly one place.
+    stopped context (round-5 ADVICE).  ``newSession()`` children share
+    the application id, so they share the entries.  Entries from other
+    application ids are evicted on insert — they reference dead contexts
+    and would otherwise leak.  ``session_artifact`` builders and
+    ``sources.io.parquet_schema`` are the owners.
     """
-    with _CACHES_LOCK:
-        if not any(c is cache for c in _ALL_CACHES):
-            _ALL_CACHES.append(cache)
     app_id = spark.sparkContext.applicationId
-    key = (app_id, suffix)
-    cached = cache.get(key)
+    key = (owner, app_id, suffix)
+    cached = _SESSION_ARTIFACTS.get(key)
     if cached is None:
         cached = build()
-        with _CACHES_LOCK:
-            for k in [k for k in cache if k[0] != app_id]:
-                del cache[k]
-            cache[key] = cached
+        with _CACHE_LOCK:
+            for k in [k for k in _SESSION_ARTIFACTS if k[1] != app_id]:
+                del _SESSION_ARTIFACTS[k]
+            _SESSION_ARTIFACTS[key] = cached
+    return cached
+
+
+def _drop_entries(owner=None) -> int:
+    """Drop ``owner``'s entries (every entry when None); returns the count."""
+    with _CACHE_LOCK:
+        keys = [k for k in _SESSION_ARTIFACTS if owner is None or k[0] is owner]
+        for k in keys:
+            del _SESSION_ARTIFACTS[k]
+    return len(keys)
+
+
+def session_artifact(builder):
+    """Build ``builder(spark, sf_dir)`` once per Spark application and
+    source-data version, then hand back the same value.
+
+    For the shared derived inputs several keys consume (token and
+    shingle tables, fingerprints, label tables, the k-means fit,
+    codebooks).  The entry is keyed on ``sf_tag(sf_dir)``, the content
+    fingerprint every derived disk fixture is keyed on, so testdata
+    regenerated under the same path rebuilds the artifact instead of
+    serving the old one.  ``cache_clear()`` drops the builder's entries,
+    in the ``functools`` style.
+    """
+
+    @functools.wraps(builder)
+    def cached(spark, sf_dir: str):
+        # sources.io imports this module, so it is imported here.
+        from .sources.io import sf_tag
+
+        return session_cached(
+            builder, spark, sf_tag(sf_dir), lambda: builder(spark, sf_dir)
+        )
+
+    cached.cache_clear = lambda: _drop_entries(builder)
     return cached
 
 
 def clear_session_caches() -> int:
-    """Drop every session-cached artifact; returns the entry count
-    dropped. The caller should follow with gc.collect() (and a JVM GC)
-    so the ContextCleaner actually releases the pinned blocks."""
-    with _CACHES_LOCK:
-        n = sum(len(c) for c in _ALL_CACHES)
-        for c in _ALL_CACHES:
-            c.clear()
-    return n
+    """Drop every session artifact and cached Parquet schema; returns
+    the entry count dropped. The caller should follow with gc.collect()
+    (and a JVM GC) so the ContextCleaner actually releases the pinned
+    blocks."""
+    return _drop_entries()

@@ -27,3 +27,15 @@ def test_warm_build_starts_no_job(key, spark, sf_dir, count_jobs):
     QUERIES[key](spark, sf_dir)
     _, jobs = count_jobs(lambda: QUERIES[key](spark, sf_dir))
     assert jobs == 0, f"{key}: a warm build started {jobs} Spark job(s)"
+
+
+def test_mad_warm_build_job_count(spark, sf_dir, count_jobs):
+    """A warm build of the MAD key starts exactly its four materializing
+    jobs: the price histogram's and the median's ``localCheckpoint`` (two
+    jobs each, the shuffle-map stage and the result).  The histogram's row
+    count comes from an ``Observation`` on its checkpoint job; a separate
+    ``count()`` for the selection dispatch would add two more."""
+    key = "agg_median_absolute_deviation"
+    QUERIES[key](spark, sf_dir)
+    _, jobs = count_jobs(lambda: QUERIES[key](spark, sf_dir))
+    assert jobs == 4, f"{key}: a warm build started {jobs} Spark job(s), want 4"

@@ -96,7 +96,7 @@ def test_partitioned_sink_rebuilds_after_regen(spark, regen_sf):
     _regenerate(regen_sf)
     after = q(spark, regen_sf).count()
     assert after < before, (
-        f"sink_orders_part fixture served stale data: before={before} after={after}"
+        f"status_parts_orders fixture served stale data: before={before} after={after}"
     )
 
 
@@ -228,50 +228,187 @@ def test_media_fixture_width_visible_in_name(spark, sf_dir):
     assert out.endswith(f"_w{par}"), out
 
 
-def test_commit_fixture_first_wins(tmp_path):
-    """A late racer must DROP its identical copy, never delete a
-    committed fixture another session may be scanning (code-review
-    round 8): _commit_fixture is first-wins on a _SUCCESS-complete
-    destination."""
-    from yc_data_proc_metadata_import_spark.sources.io import _commit_fixture
+def test_materialize_never_rebuilds_committed_fixture(tmp_path):
+    """A committed fixture (marker present) is served as it is: the
+    writer is never called, so no late builder can replace a directory
+    another session may be scanning."""
+    from yc_data_proc_metadata_import_spark.sources.io import _materialize
 
     out = tmp_path / "fix"
     out.mkdir()
     (out / "_SUCCESS").touch()
     (out / "part-0.parquet").write_bytes(b"winner")
-    tmp = tmp_path / f"fix.tmp{os.getpid()}"
-    tmp.mkdir()
-    (tmp / "_SUCCESS").touch()
-    (tmp / "part-0.parquet").write_bytes(b"late copy")
-    _commit_fixture(str(tmp), str(out))
+
+    def writer(p):
+        raise AssertionError("writer called for a committed fixture")
+
+    assert _materialize(writer, str(out)) == str(out)
     assert (out / "part-0.parquet").read_bytes() == b"winner"
-    assert not tmp.exists(), "late racer's staging dir not dropped"
+    assert sorted(os.listdir(tmp_path)) == ["fix"], os.listdir(tmp_path)
 
 
-def test_commit_fixture_replaces_markerless_debris(tmp_path):
-    """Marker-less debris (an interrupted pre-PID-suffix write) is the
-    one thing promotion may remove; the staged copy must land."""
-    from yc_data_proc_metadata_import_spark.sources.io import _commit_fixture
+def _write_part(payload: bytes):
+    def writer(p):
+        os.makedirs(p)
+        with open(os.path.join(p, "part-0.parquet"), "wb") as f:
+            f.write(payload)
+
+    return writer
+
+
+def test_materialize_replaces_markerless_debris(tmp_path):
+    """Marker-less debris (an interrupted write) is the one thing a build
+    may remove; the fresh build must land with its marker."""
+    from yc_data_proc_metadata_import_spark.sources.io import _materialize
 
     out = tmp_path / "fix"
     out.mkdir()
-    (out / "part-0.parquet").write_bytes(b"torn write, no _SUCCESS")
-    tmp = tmp_path / f"fix.tmp{os.getpid()}"
-    tmp.mkdir()
-    (tmp / "_SUCCESS").touch()
-    (tmp / "part-0.parquet").write_bytes(b"fresh build")
-    _commit_fixture(str(tmp), str(out))
+    (out / "part-0.parquet").write_bytes(b"torn write, no marker")
+    (out / "part-1.parquet").write_bytes(b"more debris")
+    _materialize(_write_part(b"fresh build"), str(out))
     assert (out / "_SUCCESS").exists()
+    assert sorted(os.listdir(out)) == ["_SUCCESS", "part-0.parquet"]
     assert (out / "part-0.parquet").read_bytes() == b"fresh build"
-    assert not tmp.exists()
-    # The debris is shunted aside atomically (never rmtree'd in place —
-    # round-8 ADVICE TOCTOU) and cleaned up after the commit lands. The
-    # 0-byte flock file that serializes promotion (round-9 ADVICE) is
-    # the one permitted leftover — it must NEVER be deleted (unlinking a
-    # lock another process holds open would let two committers into the
-    # critical section on different inodes).
+    # The 0-byte flock file that serializes builds is the one permitted
+    # leftover — it must NEVER be deleted (unlinking a lock another
+    # process holds open would let two builders in at once on different
+    # inodes).
     assert sorted(os.listdir(tmp_path)) == ["fix", "fix.lock"], os.listdir(tmp_path)
     assert os.path.getsize(tmp_path / "fix.lock") == 0
+
+
+def test_materialize_builds_once_across_threads(tmp_path):
+    """Threads racing a cold fixture (at least three, and more than the
+    cores): the writer runs exactly once, and ``out`` holds exactly that
+    writer's output (the threads of one process share a ``.tmp<pid>``
+    staging name, so an unlocked build lets them write into each other's
+    staging).  The scratch dir does not exist yet, as in a fresh
+    checkout."""
+    import sys
+    import threading
+    import time
+
+    from yc_data_proc_metadata_import_spark.sources.io import _materialize
+
+    scratch = tmp_path / "scratch"
+    out = str(scratch / "fix")
+    n = max(3, (os.cpu_count() or 1) + 1)
+    calls = []
+    start = threading.Barrier(n)
+
+    def writer(p):
+        calls.append(threading.get_ident())
+        os.makedirs(p)
+        time.sleep(0.2)  # hold the build open while the others arrive
+        with open(os.path.join(p, f"part-{len(calls)}.parquet"), "wb") as f:
+            f.write(b"x")
+
+    errors = []
+
+    def build():
+        start.wait(timeout=30)
+        try:
+            _materialize(writer, out)
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=build) for _ in range(n)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads), "a builder never finished"
+    assert errors == []
+    assert len(calls) == 1, f"writer ran {len(calls)} times"
+    assert sorted(os.listdir(out)) == ["_SUCCESS", "part-1.parquet"]
+    assert sorted(os.listdir(scratch)) == ["fix", "fix.lock"], os.listdir(scratch)
+
+
+def test_materialize_failed_writer_leaves_no_marker(tmp_path):
+    """A writer that raises leaves no marker at ``out`` and releases the
+    lock, so the next call rebuilds."""
+    import fcntl
+
+    from yc_data_proc_metadata_import_spark.sources.io import _materialize
+
+    out = tmp_path / "fix"
+
+    def failing(p):
+        os.makedirs(p)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        _materialize(failing, str(out))
+    assert not (out / "_SUCCESS").exists()
+    with open(tmp_path / "fix.lock") as lf:  # released: a non-blocking take succeeds
+        fcntl.flock(lf, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        fcntl.flock(lf, fcntl.LOCK_UN)
+    _materialize(_write_part(b"rebuilt"), str(out))
+    assert (out / "_SUCCESS").exists()
+    assert (out / "part-0.parquet").read_bytes() == b"rebuilt"
+
+
+@pytest.mark.parametrize("kind", ["parts_orders", "png_media"])
+def test_concurrent_cold_fixture_build(spark, regen_sf, kind):
+    """Three threads building one cold fixture through its real builder
+    raise nothing, and the committed fixture holds the rows DuckDB
+    counts.  Unlocked, the threads of one process shared one
+    ``.tmp<pid>`` staging dir (parts_orders: a Py4JJavaError, or every
+    row twice), and an in-place writer's copies landed in ``out``
+    together (png_media: more rows than documents)."""
+    import threading
+
+    import duckdb
+
+    from yc_data_proc_metadata_import_spark.llm.multimodal import (
+        _media_fixture_dir,
+        _png_fixture,
+    )
+    from yc_data_proc_metadata_import_spark.plans.catalog import (
+        _PARTS_VERSION,
+        SPECIAL_PRED,
+        parts_orders_fixture,
+    )
+
+    con = duckdb.connect()
+    if kind == "parts_orders":
+        out = _fixture_dir(kind, regen_sf, version=_PARTS_VERSION)
+        build = parts_orders_fixture
+        src = table_path(regen_sf, "orders")
+        want = con.execute(
+            f"SELECT COUNT(*) + COUNT(*) FILTER (WHERE {SPECIAL_PRED}) "
+            f"FROM read_parquet('{src}')"
+        ).fetchone()[0]
+    else:
+        out = _media_fixture_dir(spark, kind, regen_sf)
+        build = _png_fixture
+        src = table_path(regen_sf, "documents")
+        want = con.execute(f"SELECT COUNT(*) FROM read_parquet('{src}')").fetchone()[0]
+    con.close()
+    shutil.rmtree(out, ignore_errors=True)
+
+    start = threading.Barrier(3)
+    errors = []
+
+    def run():
+        start.wait()
+        try:
+            build(spark, regen_sf)
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run) for _ in range(3)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == [], errors
+    assert spark.read.parquet(out).count() == want
 
 
 def test_reap_scratch_orphans(monkeypatch, tmp_path):
@@ -302,8 +439,8 @@ def test_reap_scratch_orphans(monkeypatch, tmp_path):
         "stream_sink_parquet_sf0_01_ab12cd34ef",
         "upsert_state_sf0_01_ab12cd34ef",
     ]
-    # _commit_fixture's flock files are PERMANENT (deleting one while a
-    # committer holds it would hand a second committer a fresh inode at
+    # _materialize's flock files are PERMANENT (deleting one while a
+    # builder holds it would hand a second builder a fresh inode at
     # the same path — both "locked" at once). The exclusion must win even
     # over a name that would otherwise match a reap pattern (round-10
     # ADVICE: enforce the invariant in code, not only a comment).

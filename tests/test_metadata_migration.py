@@ -261,8 +261,10 @@ def test_manifest_location_validation():
 # column), a table of nested types, property values containing the list
 # separators ", " and "]", a quote and a backslash, and a view whose text
 # spans several lines.  Its ``odd`` table has columns that only parse
-# backquoted (a keyword, a space, a backquote), is partitioned by one of
-# them with a quote in the partition value, and is analyzed on them.
+# backquoted (a keyword, a space, a backquote) and a struct column whose
+# field name needs backquotes too; it is partitioned by a column with a
+# space and a quote in the partition value, and analyzed on the
+# non-struct columns.
 _RT_SRC, _RT_DST = "eng_meta_rt_src", "eng_meta_rt_dst"
 _RT_PROPS = {"note": "a, b", "tag": "x]", "team": "o'neil", "path": "C:\\new"}
 _RT_VIEW = """SELECT n_regionkey,
@@ -275,6 +277,7 @@ _NESTED_COLS = {
     "s": "named_struct('x', 1, 'y', array('p', 'q'))",
 }
 _ODD_COLS = ("select", "my col", "a`b")
+_ODD_STRUCT = "named_struct('my f', id, 'ok', id) AS st"
 _ODD_PART = "part col"
 
 
@@ -293,6 +296,7 @@ def roundtrip(spark, sf_dir, tmp_path_factory):
     odd = str(tmp_path_factory.mktemp("odd") / "odd")
     spark.range(4).selectExpr(
         *(f"id + {i} AS `{c.replace('`', '``')}`" for i, c in enumerate(_ODD_COLS)),
+        _ODD_STRUCT,
         f"if(id < 2, 'o''neil', 'plain') AS `{_ODD_PART}`",
     ).write.partitionBy(_ODD_PART).parquet(odd)
     locations = {t: table_path(sf_dir, t) for t in TABLES}
@@ -365,14 +369,18 @@ def test_exported_column_types_match_parquet_schema(roundtrip):
     """The manifest spells every column type as ``simpleString()`` of the
     table's Parquet schema — for all base tables and for decimal, map and
     struct-of-array columns — so existing manifests stay byte-identical
-    and every type replays in CREATE TABLE."""
+    and every type replays in CREATE TABLE.  The one departure is a
+    struct field name that is not a plain identifier: it is backquoted,
+    where ``simpleString()`` leaves ``my f`` bare and unparseable."""
     manifest, want_types = roundtrip
     got = {
         e["table"]: [c["type"] for c in e["columns"]]
         for e in manifest
         if e["type"] == "table"
     }
-    assert got == want_types
+    odd = [t.replace("struct<my f:", "struct<`my f`:") for t in want_types["odd"]]
+    assert "struct<`my f`:bigint,ok:bigint>" in odd
+    assert got == dict(want_types, odd=odd)
     assert want_types["nested"] == [
         "decimal(28,4)", "map<string,int>", "struct<x:int,y:array<string>>"
     ]

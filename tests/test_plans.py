@@ -136,6 +136,20 @@ def test_partition_pruned_scan_skips_partitions(spark, sf_dir):
     )[1].split("]")[0], f"no partition filter on the scan:\n{plan}"
 
 
+def test_pruning_frames_survive_sink_partitioned(spark, sf_dir, oracle):
+    """The two pruning keys read a one-time layout of their own, so frames
+    built before ``sink_partitioned`` rewrites its output still execute to
+    the oracle rows afterwards (reading ``sink_partitioned``'s directory,
+    they failed with FAILED_READ_FILE.FILE_NOT_EXIST)."""
+    from .compare import assert_match
+
+    keys = ("scan_partition_pruned", "join_dpp_pruned")
+    frames = {k: QUERIES[k](spark, sf_dir) for k in keys}
+    QUERIES["sink_partitioned"](spark, sf_dir)
+    for k in keys:
+        assert_match(frames[k], oracle, engine.oracle_sql()[k], k)
+
+
 def test_bloom_filter_reaches_probe_side(spark, sf_dir):
     """join_bloom_filtered's reason to exist: under the key's conf window
     the optimized plan must carry a bloom filter (might_contain) applied

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.io import load
+from ..sources.io import _fixture_dir, _materialize, load
 
 
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,8 +81,6 @@ def llm_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     path byte-exactly (payload_sha is computed from the ROUND-TRIPPED
     bytes and hash-checked against DuckDB hashing the original text).
     """
-    from ..sources.io import _fixture_dir
-
     out = _fixture_dir("media_roundtrip", sf_dir)
     media_table(spark, sf_dir).write.mode("overwrite").parquet(out)
     rt = spark.read.parquet(out)
@@ -530,10 +528,20 @@ def _media_fixture_dir(spark: SparkSession, kind: str, sf_dir: str) -> str:
     cross-session race class the round-8 manifest fix closed; round-8
     ADVICE.  Version bumped 2->3 so the legacy hashed-width dirs read as
     stale and get reaped on first access.)"""
-    from ..sources.io import _fixture_dir
-
     return _fixture_dir(
         kind, sf_dir, version="3", width=spark.sparkContext.defaultParallelism
+    )
+
+
+def _media_fixture(spark: SparkSession, sf_dir: str, kind: str, gen) -> str:
+    """One-time parquet of ``(doc_id, media)`` rows: ``gen`` maps batches
+    of ``_media_doc_ids`` to their payloads."""
+    return _materialize(
+        lambda p: _media_doc_ids(spark, sf_dir)
+        .mapInPandas(gen, "doc_id long, media binary")
+        .write.mode("overwrite")
+        .parquet(p),
+        _media_fixture_dir(spark, kind, sf_dir),
     )
 
 
@@ -543,10 +551,6 @@ def _ppm_fixture(spark: SparkSession, sf_dir: str) -> str:
     8 + doc_id % 9 by 8 + (3*doc_id) % 9 — a pure function of doc_id, so
     the oracle can recompute expected stats arithmetically while the
     engine path decodes the actual bytes."""
-    out = _media_fixture_dir(spark, "ppm_media", sf_dir)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
@@ -568,13 +572,7 @@ def _ppm_fixture(spark: SparkSession, sf_dir: str) -> str:
                 payloads.append(header + v.astype(np.uint8).tobytes())
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": payloads})
 
-    (
-        _media_doc_ids(spark, sf_dir)
-        .mapInPandas(gen, "doc_id long, media binary")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    return out
+    return _media_fixture(spark, sf_dir, "ppm_media", gen)
 
 
 def _image_decode_iter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -655,10 +653,6 @@ def _png_fixture(spark: SparkSession, sf_dir: str) -> str:
     corpus, and everything is a pure function of doc_id so the oracle
     recomputes expected stats arithmetically while the engine path
     inflates and unfilters the actual bytes."""
-    out = _media_fixture_dir(spark, "png_media", sf_dir)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
@@ -680,13 +674,7 @@ def _png_fixture(spark: SparkSession, sf_dir: str) -> str:
                 payloads.append(encode_png(v.astype(np.uint8), filters))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": payloads})
 
-    (
-        _media_doc_ids(spark, sf_dir)
-        .mapInPandas(gen, "doc_id long, media binary")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    return out
+    return _media_fixture(spark, sf_dir, "png_media", gen)
 
 
 def _png_decode_iter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1119,10 +1107,6 @@ def _jpeg_fixture(spark: SparkSession, sf_dir: str) -> str:
     YCbCr->RGB the identity — so the oracle recomputes the decoded
     means arithmetically while the engine path huffman-decodes and
     IDCTs the actual bytes."""
-    out = _media_fixture_dir(spark, "jpeg_media", sf_dir)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
@@ -1139,13 +1123,7 @@ def _jpeg_fixture(spark: SparkSession, sf_dir: str) -> str:
                 payloads.append(encode_jpeg(img))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": payloads})
 
-    (
-        _media_doc_ids(spark, sf_dir)
-        .mapInPandas(gen, "doc_id long, media binary")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    return out
+    return _media_fixture(spark, sf_dir, "jpeg_media", gen)
 
 
 def _jpeg_decode_iter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1261,10 +1239,6 @@ def _wav_fixture(spark: SparkSession, sf_dir: str) -> str:
     a pure function of doc_id so the oracle can recompute exact stats."""
     import struct
 
-    out = _media_fixture_dir(spark, "wav_media", sf_dir)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
@@ -1287,13 +1261,7 @@ def _wav_fixture(spark: SparkSession, sf_dir: str) -> str:
                 payloads.append(hdr + body)
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": payloads})
 
-    (
-        _media_doc_ids(spark, sf_dir)
-        .mapInPandas(gen, "doc_id long, media binary")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    return out
+    return _media_fixture(spark, sf_dir, "wav_media", gen)
 
 
 def _audio_decode_iter(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1371,43 +1339,32 @@ def _ppm_files_fixture(spark: SparkSession, sf_dir: str) -> str:
     are a pure function of doc_id."""
     import numpy as np
 
-    from ..sources.io import _fixture_dir, load
+    def write(p: str) -> None:
+        ids = [
+            int(r["doc_id"])
+            for r in load(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % _BINFILE_MOD == 0)
+            .select("doc_id")
+            .collect()
+        ]
+        os.makedirs(p)
+        for doc_id in ids:
+            w = 8 + doc_id % 9
+            h = 8 + (3 * doc_id) % 9
+            x = np.arange(w, dtype=np.int64)
+            y = np.arange(h, dtype=np.int64)
+            c = np.arange(3, dtype=np.int64)
+            v = (
+                doc_id * 7
+                + 3 * x[None, :, None]
+                + 5 * y[:, None, None]
+                + 11 * c[None, None, :]
+            ) % 256
+            payload = f"P6\n{w} {h}\n255\n".encode() + v.astype(np.uint8).tobytes()
+            with open(os.path.join(p, f"doc_{doc_id}.ppm"), "wb") as f:
+                f.write(payload)
 
-    out = _fixture_dir("ppm_files", sf_dir)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    ids = [
-        int(r["doc_id"])
-        for r in load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % _BINFILE_MOD == 0)
-        .select("doc_id")
-        .collect()
-    ]
-    tmp = f"{out}.tmp{os.getpid()}"
-    import shutil
-
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    for doc_id in ids:
-        w = 8 + doc_id % 9
-        h = 8 + (3 * doc_id) % 9
-        x = np.arange(w, dtype=np.int64)
-        y = np.arange(h, dtype=np.int64)
-        c = np.arange(3, dtype=np.int64)
-        v = (
-            doc_id * 7
-            + 3 * x[None, :, None]
-            + 5 * y[:, None, None]
-            + 11 * c[None, None, :]
-        ) % 256
-        payload = f"P6\n{w} {h}\n255\n".encode() + v.astype(np.uint8).tobytes()
-        with open(os.path.join(tmp, f"doc_{doc_id}.ppm"), "wb") as f:
-            f.write(payload)
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    from ..sources.io import _commit_fixture
-
-    _commit_fixture(tmp, out)
-    return out
+    return _materialize(write, _fixture_dir("ppm_files", sf_dir))
 
 
 @query(

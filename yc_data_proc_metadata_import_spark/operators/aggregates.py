@@ -1268,15 +1268,19 @@ def agg_median_absolute_deviation(spark: SparkSession, sf_dir: str) -> DataFrame
 
     # The ONLY fact scan: per-group value histogram, materialized once
     # (domain-bounded — never the table) because both the median
-    # selection and the deviation re-key consume it.
+    # selection and the deviation re-key consume it.  The histogram's row
+    # count, which drives the selection dispatch above, is observed by the
+    # materializing job itself — no separate count() job.
+    from pyspark.sql import Observation
+
+    rows = Observation()
     hist = (
         li.groupBy("l_returnflag", "l_extendedprice")
         .agg(F.count(F.lit(1)).alias("cnt"))
+        .observe(rows, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    # Count over the MATERIALIZED rows (cheap — no recomputation) drives
-    # the selection dispatch above.
-    n_hist = hist.count()
+    n_hist = rows.get["n"]
     # The 3-row med relation is referenced twice (deviation re-key +
     # result join); localCheckpoint materializes it once so the
     # histogram+window subtree isn't re-executed per reference.

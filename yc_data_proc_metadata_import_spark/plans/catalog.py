@@ -47,7 +47,7 @@ def describe(spark: SparkSession, name: str) -> dict:
 
 
 # Bump whenever the parts_orders derivation below changes — re-keys the
-# fixture dir so a _SUCCESS-complete dir built by older logic rebuilds.
+# fixture dir so a complete dir built by older logic rebuilds.
 _PARTS_VERSION = "2"  # v2: added the escape-pinning SPECIAL partition
 
 # A partition VALUE containing a space and a '%' — '%' is in Hive's
@@ -210,9 +210,9 @@ def catalog_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def catalog_recover_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-layout partition discovery: write orders partitioned by
-    o_orderpriority (one-time fixture, _SUCCESS-marker cached), register
-    an external PARTITIONED table over it, MSCK REPAIR to discover the
-    partition directories, then aggregate through the table.  The fixture
+    o_orderpriority (one-time fixture), register an external PARTITIONED
+    table over it, MSCK REPAIR to discover the partition directories,
+    then aggregate through the table.  The fixture
     includes the escape-pinning SPECIAL partition (space + '%' in the
     value, dir name 'o_orderpriority=6-SPECIAL %25PCT'): MSCK must
     UNescape the directory name into the real value for its group to
@@ -313,14 +313,14 @@ def catalog_csv_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Registering is metadata-only; the query below scans through the
     catalog name with the CSV reader, proving format plumbing lives in
     the table definition, not the query."""
-    import shutil
-
-    csv_dir = _fixture_dir("cat_csv_nation", sf_dir)
-    if not os.path.exists(os.path.join(csv_dir, "_SUCCESS")):
-        shutil.rmtree(csv_dir, ignore_errors=True)
-        load(spark, sf_dir, "nation").select(
-            "n_nationkey", "n_name", "n_regionkey"
-        ).write.mode("overwrite").option("header", True).csv(csv_dir)
+    csv_dir = _materialize(
+        lambda p: load(spark, sf_dir, "nation")
+        .select("n_nationkey", "n_name", "n_regionkey")
+        .write.mode("overwrite")
+        .option("header", True)
+        .csv(p),
+        _fixture_dir("cat_csv_nation", sf_dir),
+    )
     _reset_db(spark, "eng_csv_db")
     spark.sql(
         "CREATE TABLE eng_csv_db.nation_csv "

@@ -171,10 +171,16 @@ def _literal(value: str) -> str:
     return "'" + value.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
+_PLAIN_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
 def _type_str(t: dict) -> str:
     """One ``DESCRIBE ... AS JSON`` column type in the DDL spelling of
     ``DataType.simpleString()`` (``timestamp_ltz`` is plain
-    ``timestamp``), so import can replay it in CREATE TABLE."""
+    ``timestamp``), so import can replay it in CREATE TABLE.  A struct
+    field name that is not a plain identifier is backquoted
+    (``struct<`my f`:int>``), so the type parses; plain names stay bare,
+    which keeps existing manifests byte-identical."""
     name = t["name"]
     if name == "decimal":
         return f"decimal({t['precision']},{t['scale']})"
@@ -183,7 +189,11 @@ def _type_str(t: dict) -> str:
     if name == "map":
         return f"map<{_type_str(t['key_type'])},{_type_str(t['value_type'])}>"
     if name == "struct":
-        fields = ",".join(f"{f['name']}:{_type_str(f['type'])}" for f in t["fields"])
+        fields = ",".join(
+            (f["name"] if _PLAIN_IDENT.fullmatch(f["name"]) else _ident(f["name"]))
+            + f":{_type_str(f['type'])}"
+            for f in t["fields"]
+        )
         return f"struct<{fields}>"
     return "timestamp" if name == "timestamp_ltz" else name
 
@@ -490,7 +500,7 @@ def _load_or_export_manifest(spark: SparkSession, sf_dir: str) -> list[dict]:
 def _export_to_disk(spark: SparkSession, sf_dir: str) -> list[dict]:
     _ensure_source(spark, sf_dir)
     manifest = export_manifest(spark, _SRC_DB)
-    # PID-staged + atomic replace (the fixture _commit_fixture pattern):
+    # PID-staged + atomic replace (the staging name _materialize uses):
     # a concurrent reader never sees a partially-written manifest, and
     # two same-SF exporters last-win with identical content.
     path = _manifest_path(sf_dir)

@@ -119,8 +119,10 @@ def query(
     """Register ``fn`` under ``name``; optionally attach a DuckDB oracle.
 
     ``prewarm=True`` declares that the key's first call builds a one-time
-    derived fixture (``_SUCCESS``-guarded under ``.scratch/``) or a
-    session artifact (``utils.session_artifact``) that other keys share.
+    derived fixture under ``.scratch/`` (through ``sources.io._materialize``,
+    the one locked build path, so concurrent first calls build it once)
+    or a session artifact (``utils.session_artifact``) that other keys
+    share.
     That build is input preparation, not the operator under test, so
     ``bench.py`` runs these keys once, unmeasured, before its timed loop.
     """

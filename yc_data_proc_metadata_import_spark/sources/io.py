@@ -84,7 +84,7 @@ def sf_tag(sf_dir: str) -> str:
     path yields new names and the derived object rebuilds — serving stale
     cached data is structurally impossible.  (Round-3/4 VERDICT:
     ``scan_typed_columns`` hash-failed twice because its rebuild guard
-    keyed on ``_SUCCESS`` existence, which survives a fixture regen.)
+    keyed on the completion marker, which survives a fixture regen.)
     """
     base = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     return f"{base}_{_sf_fingerprint(sf_dir)}"
@@ -152,7 +152,7 @@ def load_documents_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     serializes on a single core no matter how wide the session is.  At
     100 TB the corpus arrives as many files and scan parallelism is
     free; this one-time staged re-layout (identical rows, multi-file
-    physical layout, ``_SUCCESS``-guarded per fixture fingerprint) gives
+    physical layout, built once per fixture fingerprint) gives
     the local plan the same property — parallelism comes from the scan,
     not from an extra per-query exchange, and the operators stay
     map-only."""
@@ -164,7 +164,8 @@ def load_documents_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # Width baked into the dir name (the streaming-source rule): a layout
     # built by a narrower session must rebuild, not be silently reused —
-    # _SUCCESS alone can't tell an 8-file stage from a 32-file one.
+    # the completion marker alone can't tell an 8-file stage from a
+    # 32-file one.
     # Routed through _fixture_dir (same name shape) so stale-fingerprint
     # siblings from a testdata regeneration get reaped (round-8 ADVICE).
     out = _materialize(
@@ -199,7 +200,7 @@ def scan_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FP_SUFFIX = __import__("re").compile(r"^[0-9a-f]{10}$")
 
 # Version-alternation guard: two call sites passing DIFFERENT versions
-# for the same kind would reap each other's _SUCCESS-complete dirs on
+# for the same kind would reap each other's complete dirs on
 # every access (rest != fp both ways) — silent rebuild thrash, and
 # deletion of a directory a live catalog table's LOCATION may point at.
 # A forward version change is legitimate (that IS the bump mechanism);
@@ -216,7 +217,7 @@ def _fixture_dir(
     logic ``version``.
 
     ``sf_tag`` alone covers only the SOURCE data: a round that edits a
-    fixture-builder's DDL/transform while a ``_SUCCESS``-complete dir
+    fixture-builder's DDL/transform while a complete dir
     survives would serve stale-by-code data (round-5 VERDICT item 7 — the
     r3/r4 hazard class, one level up).  Builders therefore bump their
     ``version`` argument whenever the derivation logic changes; the
@@ -258,7 +259,7 @@ def _fixture_dir(
     # be exactly <10-hex-fp> or <10-hex-fp>_w<digits>, so a foreign SF
     # whose sanitized basename embeds or extends this base can never
     # full-match (the metadata-manifest reaper discipline). This shape
-    # also structurally spares ``*.lock`` files (``_commit_fixture``'s
+    # also structurally spares ``*.lock`` files (``_materialize``'s
     # permanent flock inodes — see the inode-swap note in
     # ``_reap_scratch_orphans``); keep it exact if ever widened.
     sib = __import__("re").compile(r"^([0-9a-f]{10})(?:_w(\d+))?$")
@@ -281,25 +282,49 @@ def _fixture_dir(
 
 
 def _materialize(writer, out: str) -> str:
-    """Write a derived fixture atomically: only a directory containing the
-    Spark ``_SUCCESS`` marker is ever treated as valid (an interrupted write
-    leaves a marker-less temp dir that gets overwritten on retry, never
-    read — ADVICE.md round 1).  Fixture generation is a one-time setup cost
-    outside the measured query (the keys that build fixtures are
-    registered with ``prewarm=True``, and ``bench.py`` runs them before
-    its timed loop); writes keep the source's natural partitioning — no
-    ``coalesce(1)`` single-task funnel.
+    """Build the one-time derived fixture at ``out`` with ``writer`` and
+    return ``out``.  This is the only way a fixture under ``.scratch/``
+    is built, and it is safe for concurrent builders in any thread or
+    process.
 
-    The staging dir is PID-suffixed so two cold drivers racing to build
-    the same missing fixture each write privately and the rename is
-    last-wins — both produce identical content (the build is a pure
-    function of the immutable testdata), so whichever lands is valid.
+    - ``out`` is complete once it holds ``_SUCCESS``.  ``_materialize``
+      writes that marker after ``writer`` returns; writers never write
+      it.  Readers never lock: a marked ``out`` returns at once.
+    - One flock per ``out``, on ``{out}.lock``, held across the whole
+      build and the promotion.  Each call opens the lock file itself, so
+      the lock also serializes threads of one process.  A builder that
+      finds the marker once it holds the lock returns without building.
+    - ``writer(tmp)`` fills the staging dir ``{out}.tmp<pid>`` (the name
+      ``_reap_scratch_orphans`` collects after a crash), which is renamed
+      onto ``out`` after any marker-less debris there is removed.  A
+      writer that raises leaves no marker and releases the lock, so the
+      next call rebuilds.
+    - A writer may build other fixtures, but never its own ``out``: it
+      would wait forever on the lock it holds.
+
+    Fixture generation is one-time setup outside the measured query (the
+    keys that build fixtures are registered with ``prewarm=True``, and
+    ``bench.py`` runs them before its timed loop); writes keep the
+    source's natural partitioning — no ``coalesce(1)`` single-task
+    funnel.
     """
     _reap_scratch_orphans()
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        tmp = f"{out}.tmp{os.getpid()}"
-        writer(tmp)
-        _commit_fixture(tmp, out)
+    marker = os.path.join(out, "_SUCCESS")
+    if os.path.exists(marker):
+        return out
+    import fcntl
+    import shutil
+
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    with open(f"{out}.lock", "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)  # released when the file closes
+        if not os.path.exists(marker):
+            tmp = f"{out}.tmp{os.getpid()}"
+            shutil.rmtree(tmp, ignore_errors=True)
+            writer(tmp)
+            open(os.path.join(tmp, "_SUCCESS"), "w").close()
+            shutil.rmtree(out, ignore_errors=True)
+            os.replace(tmp, out)
     return out
 
 
@@ -329,10 +354,10 @@ def _reap_scratch_orphans() -> None:
         return
     for e in entries:
         if e.endswith(".lock"):
-            # ``{out}.lock`` files (``_commit_fixture``) are PERMANENT by
-            # design: deleting one while a committer holds the flock would
-            # let a second committer open a NEW inode at the same path and
-            # both "hold the lock" at once, reopening the two-committers
+            # ``{out}.lock`` files (``_materialize``) are PERMANENT by
+            # design: deleting one while a builder holds the flock would
+            # let a second builder open a NEW inode at the same path and
+            # both "hold the lock" at once, reopening the two-builders
             # race (inode-swap hazard). They are 0-byte; never reap them,
             # whatever patterns below are widened to.
             continue
@@ -369,78 +394,6 @@ def _reap_scratch_orphans() -> None:
             e,
         ):
             shutil.rmtree(os.path.join(SCRATCH, e), ignore_errors=True)
-
-
-def _commit_fixture(tmp: str, out: str) -> None:
-    """Promote a fully-built staging dir to its fixture path.
-    Used with PID-suffixed staging dirs: two cold drivers racing to
-    build the same missing fixture each write privately; FIRST-wins —
-    both produce identical content (the build is a pure function of the
-    immutable testdata), so the late builder drops its copy rather than
-    clobbering a valid committed dir another session may already be
-    scanning.
-
-    Promotion is serialized by an flock on ``{out}.lock`` (round-9
-    ADVICE: the lock-free version had a residual window between the
-    _SUCCESS re-check and the debris shunt where a concurrent builder's
-    FRESH commit could be renamed aside, leaving ``out`` briefly
-    absent).  With every committer inside the lock, a committed dir is
-    never moved aside; only genuine marker-less debris (which no reader
-    could have been serving — no _SUCCESS) is shunted.  The flock is
-    kernel-released on process death, so a crashed builder can't
-    wedge the fixture; readers never take the lock (the critical
-    section is rename-only, microseconds).  A promotion that still
-    can't land raises instead of silently serving whatever is in
-    ``out``."""
-    import fcntl
-    import shutil
-
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        # Lost the race to a builder that committed while we wrote:
-        # their copy is valid and possibly mid-scan elsewhere — keep it.
-        shutil.rmtree(tmp, ignore_errors=True)
-        return
-    with open(f"{out}.lock", "w") as lf:
-        fcntl.flock(lf, fcntl.LOCK_EX)
-        try:
-            if os.path.exists(os.path.join(out, "_SUCCESS")):
-                # A builder committed while we waited on the lock.
-                shutil.rmtree(tmp, ignore_errors=True)
-                return
-            debris = None
-            if os.path.exists(out):
-                # Under the lock this can only be marker-less debris
-                # from an interrupted pre-PID-suffix write (every
-                # committer serializes here, and committed dirs carry
-                # _SUCCESS) — shunt it aside with one atomic rename to
-                # a dead-PID-collectable staging name rather than
-                # recursively deleting in place.
-                debris = f"{out}.debris.tmp{os.getpid()}"
-                try:
-                    os.replace(out, debris)
-                except OSError:
-                    debris = None  # out vanished — another session handled it
-            try:
-                os.replace(tmp, out)
-            except OSError:
-                if os.path.exists(os.path.join(out, "_SUCCESS")):
-                    # Shouldn't happen under the lock; tolerate anyway.
-                    shutil.rmtree(tmp, ignore_errors=True)
-                else:
-                    if debris is not None:
-                        # Put the shunted dir back so state is as found.
-                        try:
-                            os.replace(debris, out)
-                        except OSError:
-                            pass
-                    raise  # unexpected state: never serve debris
-            if debris is not None:
-                # Our commit landed; the shunted debris (ours to clean
-                # now — _reap_scratch_orphans would also collect it once
-                # this PID exits) can go.
-                shutil.rmtree(debris, ignore_errors=True)
-        finally:
-            fcntl.flock(lf, fcntl.LOCK_UN)
 
 
 def _csv_fixture(spark: SparkSession, sf_dir: str) -> str:
@@ -644,7 +597,6 @@ def scan_schema_evolution(spark, sf_dir: str):
         )
         old.write.mode("overwrite").parquet(os.path.join(p, "batch=v1"))
         new.write.mode("overwrite").parquet(os.path.join(p, "batch=v2"))
-        open(os.path.join(p, "_SUCCESS"), "w").close()
 
     _materialize(write, out)
     return (
@@ -710,19 +662,16 @@ def scan_ignore_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ignoreCorruptFiles`` — at 100 TB a single bad object out of
     millions must cost a warning, not the job. (Schema-level dirtiness is
     the PERMISSIVE-mode key's job; this one is file-level.) The fixture
-    is one-time (_SUCCESS-gated); the oracle is the intact table."""
-    import shutil
+    is one-time; the oracle is the intact table."""
 
-    out = _fixture_dir("corrupt_mix", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        tmp = f"{out}.tmp{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+    def write(p: str) -> None:
         load(spark, sf_dir, "region").select("r_regionkey", "r_name").coalesce(
             1
-        ).write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, "part-garbage.parquet"), "wb") as f:
+        ).write.mode("overwrite").parquet(p)
+        with open(os.path.join(p, "part-garbage.parquet"), "wb") as f:
             f.write(b"PAR1 this is not a parquet file, just bytes\x00\x01\x02")
-        _commit_fixture(tmp, out)
+
+    out = _materialize(write, _fixture_dir("corrupt_mix", sf_dir))
     return (
         spark.read.option("ignoreCorruptFiles", "true")
         .parquet(out)
@@ -852,8 +801,6 @@ def _nested_nation_fixture(spark: SparkSession, sf_dir: str) -> str:
         # decoys the glob filter must skip
         with open(os.path.join(tmp, "README.txt"), "w") as f:
             f.write("not data\n")
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
 
     return _materialize(write, _fixture_dir("nested_nation", sf_dir))
 
@@ -972,8 +919,6 @@ def _manifest_fixture(spark: SparkSession, sf_dir: str) -> str:
         with open(os.path.join(tmp, "manifest.json"), "w") as f:
             for rel in ("part0", "part2"):
                 f.write(_json.dumps({"path": rel}) + "\n")
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
 
     return _materialize(write, _fixture_dir("manifest_orders", sf_dir))
 
@@ -1032,8 +977,6 @@ def _wholetext_fixture(spark: SparkSession, sf_dir: str) -> str:
             p = os.path.join(tmp, f"r_{r.r_regionkey}.txt")
             with open(p, "w") as f:
                 f.write(f"{r.r_name}|{r.r_regionkey}")
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
 
     return _materialize(write, _fixture_dir("wholetext_region", sf_dir))
 

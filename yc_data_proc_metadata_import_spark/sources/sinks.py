@@ -37,6 +37,30 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out).select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
 
 
+def _write_status_partitioned(spark: SparkSession, sf_dir: str, out: str) -> None:
+    """Write orders to ``out`` partitioned by ``o_status_part`` (a copy
+    of ``o_orderstatus``) — ``sink_partitioned``'s operator."""
+    (
+        load(spark, sf_dir, "orders")
+        .withColumn("o_status_part", F.col("o_orderstatus"))
+        .repartition(F.col("o_status_part"), F.col("o_orderkey"))
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", 1_000_000)
+        .partitionBy("o_status_part")
+        .parquet(out)
+    )
+
+
+def _status_parts_fixture(spark: SparkSession, sf_dir: str) -> str:
+    """One-time status-partitioned orders layout read by the two pruning
+    keys: written by ``sink_partitioned``'s writer into a directory of its
+    own, because ``sink_partitioned`` rewrites its output on every call."""
+    return _materialize(
+        lambda p: _write_status_partitioned(spark, sf_dir, p),
+        _fixture_dir("status_parts_orders", sf_dir),
+    )
+
+
 @query(
     "sink_partitioned",
     oracle="""
@@ -56,15 +80,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     still prunes to matching directories only.
     """
     out = _fixture_dir("sink_orders_part", sf_dir)
-    orders = load(spark, sf_dir, "orders")
-    (
-        orders.withColumn("o_status_part", F.col("o_orderstatus"))
-        .repartition(F.col("o_status_part"), F.col("o_orderkey"))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", 1_000_000)
-        .partitionBy("o_status_part")
-        .parquet(out)
-    )
+    _write_status_partitioned(spark, sf_dir, out)
     back = spark.read.parquet(out)
     return back.select(
         "o_orderkey",
@@ -120,14 +136,13 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan shows the pruned count in "partition filters" / a reduced
     "files read" (asserted in tests/test_plans.py).
 
-    Reuses sink_partitioned's layout (building it if absent) — exactly
-    how a production table is produced and then selectively read.
+    Reads a one-time layout written by sink_partitioned's writer into
+    its own directory — exactly how a production table is produced and
+    then selectively read.  It shares the writer, not the directory:
+    sink_partitioned rewrites its output on every call.
     """
-    out = _fixture_dir("sink_orders_part", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        sink_partitioned(spark, sf_dir)  # build the layout once
     return (
-        spark.read.parquet(out)
+        spark.read.parquet(_status_parts_fixture(spark, sf_dir))
         .filter(F.col("o_status_part") == "F")
         .select("o_orderkey", "o_custkey", "o_totalprice")
     )
@@ -150,12 +165,11 @@ def join_dpp_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     PartitionFilters at runtime (asserted in tests/test_plans.py). At
     100 TB this is the mechanism that keeps a star join from scanning
     partitions no dimension row selects — static pruning can't help
-    because the fact query itself carries no partition predicate.
+    because the fact query itself carries no partition predicate.  The
+    fact side is the same one-time layout ``scan_partition_pruned`` reads
+    (sink_partitioned's writer, its own directory).
     """
-    out = _fixture_dir("sink_orders_part", sf_dir)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        sink_partitioned(spark, sf_dir)  # build the layout once
-    fact = spark.read.parquet(out)
+    fact = spark.read.parquet(_status_parts_fixture(spark, sf_dir))
     dim = spark.createDataFrame(
         [("F", "finished"), ("O", "open"), ("P", "pending")], "st string, label string"
     )
@@ -474,12 +488,15 @@ def sink_codec_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     cols = ("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
     li = load(spark, sf_dir, "lineitem").select(*cols)
-    outs = {}
-    for codec in ("zstd", "uncompressed"):
-        out = _fixture_dir(f"sink_codec_{codec}", sf_dir)
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            li.write.mode("overwrite").option("compression", codec).parquet(out)
-        outs[codec] = out
+    outs = {
+        codec: _materialize(
+            lambda p, codec=codec: li.write.mode("overwrite")
+            .option("compression", codec)
+            .parquet(p),
+            _fixture_dir(f"sink_codec_{codec}", sf_dir),
+        )
+        for codec in ("zstd", "uncompressed")
+    }
 
     def nbytes(d: str) -> int:
         return sum(
@@ -701,13 +718,13 @@ def sink_rebalanced_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the layout change is execution-only (byte-identical data);
     the even-size property itself is asserted in tests/test_plans.py
     from the written files."""
-    out = _fixture_dir("rebalanced_orders", sf_dir)
-    src = load(spark, sf_dir, "orders")
-    src.createOrReplaceTempView("rb_orders")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        spark.sql("SELECT /*+ REBALANCE */ * FROM rb_orders").write.mode(
-            "overwrite"
-        ).parquet(out)
+    load(spark, sf_dir, "orders").createOrReplaceTempView("rb_orders")
+    out = _materialize(
+        lambda p: spark.sql("SELECT /*+ REBALANCE */ * FROM rb_orders")
+        .write.mode("overwrite")
+        .parquet(p),
+        _fixture_dir("rebalanced_orders", sf_dir),
+    )
     return (
         spark.read.parquet(out)
         .groupBy("o_orderstatus")

@@ -38,7 +38,6 @@ from ..registry import query
 from ..session import conf_scope
 from ..sources.io import (
     SCRATCH,
-    _commit_fixture,
     _fixture_dir,
     _materialize,
     load,
@@ -132,11 +131,9 @@ def _stream_three_batch_src(spark: SparkSession, sf_dir: str) -> str:
 
     Single-file writes are fine here: a tiny one-time TEST fixture whose
     whole point is exact batch boundaries, not a data path."""
-    out = _fixture_dir("stream_events_3b", sf_dir)  # same name; stale-fp reaping
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        import shutil
+    import shutil
 
+    def write(p: str) -> None:
         e = load(spark, sf_dir, "events")
         cutoff = e.agg(
             (F.max("ts") - F.expr("INTERVAL 10 MINUTES")).alias("c")
@@ -146,20 +143,17 @@ def _stream_three_batch_src(spark: SparkSession, sf_dir: str) -> str:
             e.filter((F.col("event_id") % 2 == 1) & (F.col("ts") > F.lit(cutoff))),
             e.filter((F.col("event_id") % 2 == 1) & (F.col("ts") <= F.lit(cutoff))),
         )
-        tmp = f"{out}.tmp{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
+        os.makedirs(p)
         for idx, part in enumerate(parts):
-            sub = os.path.join(tmp, f"write_{idx}")
+            sub = os.path.join(p, f"write_{idx}")
             part.coalesce(1).write.mode("overwrite").parquet(sub)
             src = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
-            dst = os.path.join(tmp, f"batch{idx}.parquet")
+            dst = os.path.join(p, f"batch{idx}.parquet")
             shutil.move(os.path.join(sub, src), dst)
             os.utime(dst, (1_700_000_000 + idx * 100, 1_700_000_000 + idx * 100))
             shutil.rmtree(sub)
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        _commit_fixture(tmp, out)
-    return out
+
+    return _materialize(write, _fixture_dir("stream_events_3b", sf_dir))
 
 
 def _read_stream(spark: SparkSession, path: str, **options) -> DataFrame:
@@ -794,25 +788,22 @@ def stream_restart_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
-    tag = _sf_tag(sf_dir)
-    stage = os.path.join(SCRATCH, f"stream_restart_stage_{tag}")
-    if not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        tmp = f"{stage}.tmp{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
+    def write_halves(p: str) -> None:
         e = load(spark, sf_dir, "events")
         halves = (
             e.filter(F.col("event_id") % 2 == 0),
             e.filter(F.col("event_id") % 2 == 1),
         )
+        os.makedirs(p)
         for idx, part in enumerate(halves):
-            sub = os.path.join(tmp, f"w{idx}")
+            sub = os.path.join(p, f"w{idx}")
             part.coalesce(1).write.mode("overwrite").parquet(sub)
             fname = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
-            shutil.move(os.path.join(sub, fname), os.path.join(tmp, f"half{idx}.parquet"))
+            shutil.move(os.path.join(sub, fname), os.path.join(p, f"half{idx}.parquet"))
             shutil.rmtree(sub)
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-        _commit_fixture(tmp, stage)
+
+    tag = _sf_tag(sf_dir)
+    stage = _materialize(write_halves, _fixture_dir("stream_restart_stage", sf_dir))
 
     src = os.path.join(_run_scratch(), f"stream_restart_src_{tag}")
     out = os.path.join(_run_scratch(), f"stream_restart_out_{tag}")

@@ -39,3 +39,17 @@ def test_mad_warm_build_job_count(spark, sf_dir, count_jobs):
     QUERIES[key](spark, sf_dir)
     _, jobs = count_jobs(lambda: QUERIES[key](spark, sf_dir))
     assert jobs == 4, f"{key}: a warm build started {jobs} Spark job(s), want 4"
+
+
+# Warm-build job counts of the metastore migration keys: the import
+# replays ANALYZE on its three tables (two jobs each), and export starts
+# none.  The ANALYZE jobs run on driver_map's threads, so a count that
+# drops means they lost the caller's job group.
+META_JOBS = {"meta_import": 6, "meta_roundtrip": 6, "meta_diff": 6, "meta_export": 0}
+
+
+@pytest.mark.parametrize("key", sorted(META_JOBS))
+def test_meta_warm_build_job_count(key, spark, sf_dir, count_jobs):
+    QUERIES[key](spark, sf_dir)
+    _, jobs = count_jobs(lambda: QUERIES[key](spark, sf_dir))
+    assert jobs == META_JOBS[key], f"{key}: a warm build started {jobs} Spark job(s)"

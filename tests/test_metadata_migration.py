@@ -30,14 +30,16 @@ _IMPORTER = """
 import json, sys
 from pyspark.sql import SparkSession
 
-manifest_path, out_path, warehouse = sys.argv[1:4]
-spark = (
+manifest_path, out_path, warehouse, catalog = sys.argv[1:5]
+builder = (
     SparkSession.builder.master("local[2]")
     .config("spark.sql.shuffle.partitions", "2")
     .config("spark.sql.warehouse.dir", warehouse)
     .config("spark.ui.enabled", "false")
-    .getOrCreate()
 )
+if catalog == "hive":
+    builder = builder.enableHiveSupport()
+spark = builder.getOrCreate()
 # Cluster B starts with a catalog that never saw cluster A's DDL.
 pre = sorted(db.name for db in spark.catalog.listDatabases())
 assert pre == ["default"], f"importing catalog not pristine: {pre}"
@@ -87,7 +89,7 @@ spark.stop()
 """
 
 
-def test_manifest_imports_into_pristine_process(spark, sf_dir, tmp_path):
+def _import_in_pristine_process(spark, sf_dir, tmp_path, catalog: str) -> None:
     _build_source(spark, sf_dir)
     manifest = export_manifest(spark, _SRC_DB)
     manifest_path = tmp_path / "manifest.json"
@@ -103,6 +105,7 @@ def test_manifest_imports_into_pristine_process(spark, sf_dir, tmp_path):
             str(manifest_path),
             str(out_path),
             str(tmp_path / "wh_b"),
+            catalog,
         ],
         check=True,
         env=env,
@@ -124,6 +127,63 @@ def test_manifest_imports_into_pristine_process(spark, sf_dir, tmp_path):
     ).fetchone()[0]
     assert got["urgent"] == want_urgent, (got["urgent"], want_urgent)
     assert os.path.isdir(SCRATCH) or True  # parent-side scratch untouched invariant
+
+
+def test_manifest_imports_into_pristine_process(spark, sf_dir, tmp_path):
+    _import_in_pristine_process(spark, sf_dir, tmp_path, "in-memory")
+
+
+def test_manifest_imports_into_pristine_hive_catalog(spark, sf_dir, tmp_path):
+    """The same import into a Derby-backed Hive catalog, the local
+    stand-in for the managed metastore: batched ADD PARTITION, OPTIONS
+    and the concurrent per-table replay go through HiveExternalCatalog
+    (its Derby metastore and derby.log land in ``tmp_path``)."""
+    _import_in_pristine_process(spark, sf_dir, tmp_path, "hive")
+
+
+def test_partition_chunks_register_every_partition(spark, sf_dir, monkeypatch):
+    """With two specs per ADD PARTITION statement, the six partitions of
+    ``orders_part`` go out in three statements, every one registers and
+    a partition-pruned count per value equals the source's."""
+    from yc_data_proc_metadata_import_spark.plans import metadata as M
+
+    M._ensure_source(spark, sf_dir)
+    entry = next(e for e in export_manifest(spark, _SRC_DB) if e["table"] == M._PART_TABLE)
+    assert len(entry["partitions"]) >= 5
+    monkeypatch.setattr(M, "_ADD_PARTITION_CHUNK", 2)
+    target, db = spark.newSession(), "eng_meta_chunks"
+    sent, real_sql = [], target.sql
+
+    def sql(query, *args, **kwargs):
+        sent.append(query)
+        return real_sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(target, "sql", sql)
+    try:
+        import_manifest(target, [entry], db)
+        adds = [q for q in sent if " ADD PARTITION " in q]
+        assert [q.count(" PARTITION (") for q in adds] == [2, 2, 2]
+        specs = {
+            d: sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {d}.{M._PART_TABLE}").collect())
+            for d in (_SRC_DB, db)
+        }
+        assert specs[db] == specs[_SRC_DB] == entry["partitions"]
+        values = spark.sql(
+            f"SELECT DISTINCT {M._PART_COL} FROM {_SRC_DB}.{M._PART_TABLE}"
+        ).collect()
+        in_list = ", ".join(_sql_literal(v) for v, in values)
+        counts = {
+            d: sorted(
+                spark.sql(
+                    f"SELECT {M._PART_COL}, COUNT(*) FROM {d}.{M._PART_TABLE} "
+                    f"WHERE {M._PART_COL} IN ({in_list}) GROUP BY {M._PART_COL}"
+                ).collect()
+            )
+            for d in (_SRC_DB, db)
+        }
+        assert len(counts[db]) == len(entry["partitions"]) and counts[db] == counts[_SRC_DB]
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
 def test_spec_to_ddl_unescapes_hive_path_encoding():
@@ -264,7 +324,8 @@ def test_manifest_location_validation():
 # backquoted (a keyword, a space, a backquote) and a struct column whose
 # field name needs backquotes too; it is partitioned by a column with a
 # space and a quote in the partition value, and analyzed on the
-# non-struct columns.
+# non-struct columns.  ``csv_header`` is a CSV table read with the
+# ``header`` option, so its provider and storage options must travel.
 _RT_SRC, _RT_DST = "eng_meta_rt_src", "eng_meta_rt_dst"
 _RT_PROPS = {"note": "a, b", "tag": "x]", "team": "o'neil", "path": "C:\\new"}
 _RT_VIEW = """SELECT n_regionkey,
@@ -299,6 +360,10 @@ def roundtrip(spark, sf_dir, tmp_path_factory):
         _ODD_STRUCT,
         f"if(id < 2, 'o''neil', 'plain') AS `{_ODD_PART}`",
     ).write.partitionBy(_ODD_PART).parquet(odd)
+    csv = str(tmp_path_factory.mktemp("csv") / "csv")
+    spark.range(3).selectExpr("id", "concat('v', id) AS v").write.option(
+        "header", "true"
+    ).csv(csv)
     locations = {t: table_path(sf_dir, t) for t in TABLES}
     locations |= {"nested": nested, "odd": odd}
     spark.sql(f"DROP DATABASE IF EXISTS {_RT_SRC} CASCADE")
@@ -311,6 +376,10 @@ def roundtrip(spark, sf_dir, tmp_path_factory):
         spark.sql(
             f"CREATE TABLE {_RT_SRC}.{t} USING parquet LOCATION '{loc}'{clause}"
         )
+    spark.sql(
+        f"CREATE TABLE {_RT_SRC}.csv_header USING csv OPTIONS (header 'true') "
+        f"LOCATION '{csv}'"
+    )
     spark.sql(f"ALTER TABLE {_RT_SRC}.odd RECOVER PARTITIONS")
     spark.sql(
         f"ANALYZE TABLE {_RT_SRC}.odd COMPUTE STATISTICS FOR COLUMNS "
@@ -321,6 +390,10 @@ def roundtrip(spark, sf_dir, tmp_path_factory):
         t: [f.dataType.simpleString() for f in spark.read.parquet(loc).schema]
         for t, loc in locations.items()
     }
+    want_types["csv_header"] = [
+        f.dataType.simpleString()
+        for f in spark.read.option("header", "true").csv(csv).schema
+    ]
     manifest = export_manifest(spark, _RT_SRC)
     import_manifest(spark.newSession(), manifest, _RT_DST)
     yield manifest, want_types
@@ -339,8 +412,9 @@ def test_manifest_roundtrips_views_properties_and_nested_types(spark, roundtrip)
     """Export -> import -> export is the identity up to the namespace
     name: the multi-line view text arrives whole and resolves, property
     values keep their separators, quotes and backslashes, nested column
-    types replay in CREATE TABLE, and columns that need backquotes keep
-    their partitions, statistics and rows."""
+    types replay in CREATE TABLE, columns that need backquotes keep
+    their partitions, statistics and rows, and a CSV table keeps its
+    provider and ``header`` option, so it reads the same rows."""
     manifest, _ = roundtrip
     view = {e["table"]: e for e in manifest}["by_region"]
     assert view["view_text"] == _RT_VIEW.format(db=_RT_SRC)
@@ -363,13 +437,20 @@ def test_manifest_roundtrips_views_properties_and_nested_types(spark, roundtrip)
     assert set(odd["statistics"]["columns"]) == {*_ODD_COLS, _ODD_PART}
     rows = {db: sorted(spark.table(f"{db}.odd").collect()) for db in (_RT_SRC, _RT_DST)}
     assert rows[_RT_DST] == rows[_RT_SRC] and len(rows[_RT_SRC]) == 4
+    csv = {e["table"]: e for e in manifest}["csv_header"]
+    assert (csv["format"], csv["options"]) == ("csv", {"header": "true"})
+    rows = {
+        db: sorted(spark.table(f"{db}.csv_header").collect()) for db in (_RT_SRC, _RT_DST)
+    }
+    assert rows[_RT_DST] == rows[_RT_SRC] and len(rows[_RT_SRC]) == 3
 
 
 def test_exported_column_types_match_parquet_schema(roundtrip):
     """The manifest spells every column type as ``simpleString()`` of the
-    table's Parquet schema — for all base tables and for decimal, map and
-    struct-of-array columns — so existing manifests stay byte-identical
-    and every type replays in CREATE TABLE.  The one departure is a
+    table's file schema — for all base tables, for decimal, map and
+    struct-of-array columns and for a CSV table's string columns — so
+    existing manifests keep their type strings and every type replays
+    in CREATE TABLE.  The one departure is a
     struct field name that is not a plain identifier: it is backquoted,
     where ``simpleString()`` leaves ``my f`` bare and unparseable."""
     manifest, want_types = roundtrip

@@ -30,7 +30,17 @@ PARTITIONS`` per PARTITIONED table — O(objects + analyzed columns +
 partitioned tables), not O(partitions): each ``SHOW PARTITIONS`` returns
 the full partition listing in one round-trip. Partition lists can reach
 millions of rows per table at 100 TB, which is why they ride a
-per-table bulk call instead of DESCRIBE-per-partition.
+per-table bulk call instead of DESCRIBE-per-partition. The calls after
+``SHOW TABLES`` run in two concurrent rounds on driver threads
+(``utils.driver_map``): every ``describe``, then every column
+``DESCRIBE`` and ``SHOW PARTITIONS`` across all tables.
+
+Import is 2 statements to reset the namespace, then per table 1
+``CREATE TABLE``, 1 ``ADD PARTITION`` per ``_ADD_PARTITION_CHUNK``
+partition specs and at most 1 ``ANALYZE``, then 1 ``CREATE VIEW`` per
+view — O(objects + partitions / chunk). The tables import concurrently,
+one driver-thread task per table; the views follow one at a time, in
+manifest order, because their text resolves against the tables.
 """
 
 from __future__ import annotations
@@ -43,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
 from ..sources.io import _fixture_dir, load, sf_tag, table_path
+from ..utils import driver_map
 from .catalog import _ext_table, _reset_db, describe
 
 _SRC_DB = "eng_meta_src"
@@ -198,21 +209,23 @@ def _type_str(t: dict) -> str:
     return "timestamp" if name == "timestamp_ltz" else name
 
 
-def _catalog_stats(spark: SparkSession, name: str, desc: dict) -> dict:
-    """Read ANALYZE statistics back from the catalog for one table, given
-    its ``describe``: ``{"row_count": N, "columns": {col:
-    {distinct,nulls,min,max}}}`` — empty dict when the table was never
-    analyzed. The row count comes from the description; each column
-    costs one ``DESCRIBE TABLE EXTENDED t col`` (Spark rejects ``AS
-    JSON`` for a single column), ONLY for analyzed tables (bounded by
-    the schema width; an HMS thrift export would batch these)."""
-    n_rows = (desc.get("statistics") or {}).get("num_rows")
-    if n_rows is None:
+def _analyzed(desc: dict) -> bool:
+    return (desc.get("statistics") or {}).get("num_rows") is not None
+
+
+def _catalog_stats(desc: dict, column_rows) -> dict:
+    """ANALYZE statistics of one table: ``{"row_count": N, "columns":
+    {col: {distinct,nulls,min,max}}}``, or an empty dict when the table
+    was never analyzed. The row count comes from its ``describe``; the
+    column statistics from ``column_rows(col)``, the rows of one
+    ``DESCRIBE TABLE EXTENDED t col`` per column (Spark rejects ``AS
+    JSON`` for a single column), which ``export_manifest`` issues only
+    for analyzed tables, concurrently with every other table's."""
+    if not _analyzed(desc):
         return {}
-    stats: dict = {"row_count": n_rows, "columns": {}}
+    stats: dict = {"row_count": desc["statistics"]["num_rows"], "columns": {}}
     for c in desc["columns"]:
-        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {name} {_ident(c['name'])}").collect()
-        info = {r["info_name"]: r["info_value"] for r in rows}
+        info = {r["info_name"]: r["info_value"] for r in column_rows(c["name"])}
         if info.get("distinct_count") in (None, "NULL"):
             continue
         stats["columns"][c["name"]] = {
@@ -227,11 +240,13 @@ def _catalog_stats(spark: SparkSession, name: str, desc: dict) -> dict:
 def export_manifest(spark: SparkSession, db: str) -> list[dict]:
     """Serialize ``db`` to a portable manifest: the export half of the
     reference's migration. One ``SHOW TABLES`` lists the namespace, one
-    ``describe`` per object carries its type, schema, location, table
-    properties, partition columns, view text and row count; analyzed
-    tables add one ``DESCRIBE`` per column for column statistics, and
-    partitioned tables one bulk ``SHOW PARTITIONS`` for their registered
-    partition specs."""
+    ``describe`` per object carries its type, schema, provider, storage
+    options, location, table properties, partition columns, view text
+    and row count; analyzed tables add one ``DESCRIBE`` per column for
+    column statistics, and partitioned tables one bulk ``SHOW
+    PARTITIONS`` for their registered partition specs. The describes
+    run concurrently, then the column and partition reads of all tables
+    together."""
     names = sorted(
         r.tableName
         for r in spark.sql(f"SHOW TABLES IN {db}").collect()
@@ -239,10 +254,28 @@ def export_manifest(spark: SparkSession, db: str) -> list[dict]:
         # are not part of the namespace being migrated.
         if not r.isTemporary
     )
+    descs = driver_map(spark, lambda tbl: describe(spark, f"{db}.{tbl}"), names)
+    # (table, column) for a column's statistics, (table, None) for the
+    # table's partition listing.
+    reads = []
+    for tbl, desc in zip(names, descs):
+        if desc["type"] == "VIEW":
+            continue
+        if _analyzed(desc):
+            reads += [(tbl, c["name"]) for c in desc["columns"]]
+        if desc.get("partition_columns"):
+            reads.append((tbl, None))
+
+    def read(r: tuple) -> list:
+        tbl, col = r
+        if col is None:
+            return spark.sql(f"SHOW PARTITIONS {db}.{tbl}").collect()
+        return spark.sql(f"DESCRIBE TABLE EXTENDED {db}.{tbl} {_ident(col)}").collect()
+
+    got = dict(zip(reads, driver_map(spark, read, reads)))
     manifest = []
-    for tbl in names:
+    for tbl, desc in zip(names, descs):
         name = f"{db}.{tbl}"
-        desc = describe(spark, name)
         columns = [
             {"name": c["name"], "type": _type_str(c["type"]), "ordinal": i}
             for i, c in enumerate(desc["columns"])
@@ -256,6 +289,7 @@ def export_manifest(spark: SparkSession, db: str) -> list[dict]:
                     "table": tbl,
                     "type": "view",
                     "format": "",
+                    "options": {},
                     "location": "",
                     "columns": columns,
                     "partition_columns": [],
@@ -267,29 +301,26 @@ def export_manifest(spark: SparkSession, db: str) -> list[dict]:
             continue
         if desc.get("location") is None:
             raise ValueError(f"no location for {name}")
-        partition_columns = desc.get("partition_columns", [])
-        partitions = []
-        if partition_columns:
-            partitions = sorted(
-                p[0] for p in spark.sql(f"SHOW PARTITIONS {name}").collect()
-            )
         manifest.append(
             {
                 "database": db,
                 "table": tbl,
                 "type": "table",
-                "format": "parquet",
+                "format": desc["provider"],
+                # Spark keeps the data path out of these (it is the
+                # location), so every one is a user-set reader option.
+                "options": dict(sorted(desc.get("storage_properties", {}).items())),
                 "location": desc["location"],
                 "columns": columns,
-                "partition_columns": partition_columns,
-                "partitions": partitions,
+                "partition_columns": desc.get("partition_columns", []),
+                "partitions": sorted(p[0] for p in got.get((tbl, None), [])),
                 "properties": {
                     k: v
                     for k, v in sorted(desc.get("table_properties", {}).items())
                     if not _INTERNAL_PROP.match(k)
                 },
                 "view_text": "",
-                "statistics": _catalog_stats(spark, name, desc),
+                "statistics": _catalog_stats(desc, lambda col: got[(tbl, col)]),
             }
         )
     return manifest
@@ -334,14 +365,84 @@ def _spec_to_ddl(spec: str) -> str:
     return "(" + ", ".join(parts) + ")"
 
 
+# Partition specs per ``ALTER TABLE ... ADD PARTITION`` statement. One
+# statement registers a whole table's partitions in one catalog round
+# trip (83 single-spec statements took 1.56 s where one 83-spec statement
+# took 0.03 s); the chunk keeps a table with an HMS-sized partition list
+# to statements of bounded length.
+_ADD_PARTITION_CHUNK = 1000
+
+
+def _kv_clause(keyword: str, kv: dict) -> str:
+    """`` KEYWORD ('k'='v', ...)`` over the sorted pairs, or "" for none."""
+    if not kv:
+        return ""
+    pairs = ", ".join(f"{_literal(k)}={_literal(v)}" for k, v in sorted(kv.items()))
+    return f" {keyword} ({pairs})"
+
+
+def _import_table(spark: SparkSession, entry: dict, dst_db: str) -> None:
+    """One manifest table into ``dst_db``: CREATE TABLE, its partitions
+    and its statistics replay."""
+    tbl = f"{dst_db}.{entry['table']}"
+    cols = ", ".join(f"{_ident(c['name'])} {c['type']}" for c in entry["columns"])
+    part_clause = (
+        f" PARTITIONED BY ({', '.join(map(_ident, entry['partition_columns']))})"
+        if entry["partition_columns"]
+        else ""
+    )
+    spark.sql(
+        f"CREATE TABLE {tbl} ({cols}) USING {entry['format']}"
+        f"{_kv_clause('OPTIONS', entry.get('options') or {})}"
+        f"{part_clause} LOCATION '{entry['location']}'"
+        f"{_kv_clause('TBLPROPERTIES', entry.get('properties') or {})}"
+    )
+    specs = [_spec_to_ddl(spec) for spec in entry["partitions"]]
+    for i in range(0, len(specs), _ADD_PARTITION_CHUNK):
+        chunk = specs[i : i + _ADD_PARTITION_CHUNK]
+        spark.sql(f"ALTER TABLE {tbl} ADD PARTITION {' PARTITION '.join(chunk)}")
+    # Statistics replay: data is shared (external locations), so
+    # re-running ANALYZE on the target reproduces the exported stats
+    # exactly — the tutorial's documented missing post-migration
+    # step, now part of the import. meta_roundtrip asserts the
+    # target catalog's stats EQUAL the manifest's.
+    stats = entry.get("statistics") or {}
+    if stats:
+        # One scan per table: FOR COLUMNS records table-level stats
+        # (rows + size) as a side effect, so the plain COMPUTE
+        # STATISTICS runs only for tables with no analyzed columns.
+        # Direct property injection would avoid the scan entirely,
+        # but the in-memory session catalog stores
+        # spark.sql.statistics.* TBLPROPERTIES as opaque strings
+        # without materializing CatalogStatistics (verified r16), so
+        # replaying ANALYZE over the shared data IS the fidelity
+        # mechanism here — same stats, honestly recomputed.
+        stat_cols = sorted(stats.get("columns", {}))
+        if stat_cols:
+            spark.sql(
+                f"ANALYZE TABLE {tbl} COMPUTE STATISTICS "
+                f"FOR COLUMNS {', '.join(map(_ident, stat_cols))}"
+            )
+        else:
+            spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS")
+
+
 def import_manifest(spark: SparkSession, manifest: list[dict], dst_db: str) -> None:
     """Replay a manifest as DDL into another namespace ("cluster B").
     External CREATE TABLE against the SAME locations — the shared-bucket
     import semantics of the reference (data unmoved, metadata recreated)
-    — then ALTER TABLE ADD PARTITION per exported partition spec (the
-    partitions travel IN the manifest, as in HMS; no MSCK rediscovery
-    pass over storage), TBLPROPERTIES, and finally CREATE VIEW (views
-    last — their text references the tables).
+    — with the exported provider, storage OPTIONS and TBLPROPERTIES;
+    then one ALTER TABLE ADD PARTITION carrying up to
+    ``_ADD_PARTITION_CHUNK`` exported partition specs (the partitions
+    travel IN the manifest, as in HMS; no MSCK rediscovery pass over
+    storage), then the table's ANALYZE; finally CREATE VIEW (views last —
+    their text references the tables).
+
+    After the namespace reset, the tables import concurrently, one
+    ``utils.driver_map`` task per table, each sending its own statements
+    in order; the views are created afterwards, one at a time in
+    manifest order.  A table with ``p`` partitions costs 1 + ceil(p /
+    chunk) + (1 if analyzed) statements.
 
     The manifest is the ONLY input: no source-namespace object is read.
     View text is re-qualified from the source database name to
@@ -354,56 +455,12 @@ def import_manifest(spark: SparkSession, manifest: list[dict], dst_db: str) -> N
     metastore-import.tf:181-278).
     """
     _reset_db(spark, dst_db)
-    for entry in sorted(manifest, key=lambda e: e["type"] == "view"):
-        tbl = f"{dst_db}.{entry['table']}"
+    tables = [e for e in manifest if e["type"] != "view"]
+    driver_map(spark, lambda e: _import_table(spark, e, dst_db), tables)
+    for entry in manifest:
         if entry["type"] == "view":
             text = _requalify_view_text(entry["view_text"], entry["database"], dst_db)
-            spark.sql(f"CREATE VIEW {tbl} AS {text}")
-            continue
-        cols = ", ".join(f"{_ident(c['name'])} {c['type']}" for c in entry["columns"])
-        part_clause = (
-            f" PARTITIONED BY ({', '.join(map(_ident, entry['partition_columns']))})"
-            if entry["partition_columns"]
-            else ""
-        )
-        props = entry.get("properties") or {}
-        props_clause = (
-            " TBLPROPERTIES ("
-            + ", ".join(f"{_literal(k)}={_literal(v)}" for k, v in sorted(props.items()))
-            + ")"
-            if props
-            else ""
-        )
-        spark.sql(
-            f"CREATE TABLE {tbl} ({cols}) USING {entry['format']}"
-            f"{part_clause} LOCATION '{entry['location']}'{props_clause}"
-        )
-        for spec in entry["partitions"]:
-            spark.sql(f"ALTER TABLE {tbl} ADD PARTITION {_spec_to_ddl(spec)}")
-        # Statistics replay: data is shared (external locations), so
-        # re-running ANALYZE on the target reproduces the exported stats
-        # exactly — the tutorial's documented missing post-migration
-        # step, now part of the import. meta_roundtrip asserts the
-        # target catalog's stats EQUAL the manifest's.
-        stats = entry.get("statistics") or {}
-        if stats:
-            # One scan per table: FOR COLUMNS records table-level stats
-            # (rows + size) as a side effect, so the plain COMPUTE
-            # STATISTICS runs only for tables with no analyzed columns.
-            # Direct property injection would avoid the scan entirely,
-            # but the in-memory session catalog stores
-            # spark.sql.statistics.* TBLPROPERTIES as opaque strings
-            # without materializing CatalogStatistics (verified r16), so
-            # replaying ANALYZE over the shared data IS the fidelity
-            # mechanism here — same stats, honestly recomputed.
-            cols = sorted(stats.get("columns", {}))
-            if cols:
-                spark.sql(
-                    f"ANALYZE TABLE {tbl} COMPUTE STATISTICS "
-                    f"FOR COLUMNS {', '.join(map(_ident, cols))}"
-                )
-            else:
-                spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS")
+            spark.sql(f"CREATE VIEW {dst_db}.{entry['table']} AS {text}")
 
 
 # Manifest FORMAT version: bump whenever export_manifest's shape or the
@@ -417,7 +474,9 @@ def import_manifest(spark: SparkSession, manifest: list[dict], dst_db: str) -> N
 # v3 = round-15 source fixtures (stats on ALL tables: region_ext
 # table-level, orders_part table + o_orderstatus column) — a v2
 # manifest on disk lacks them and must regenerate.
-_MANIFEST_VERSION = "3"
+# v4 = the table's provider as ``format`` (was always "parquet") and its
+# storage ``options``.
+_MANIFEST_VERSION = "4"
 
 
 def _manifest_path(sf_dir: str) -> str:
@@ -721,20 +780,22 @@ def meta_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One row per stats-bearing table (all three migrated tables since
     # round 15 — round-14 VERDICT task 4): a table whose stats were
     # dropped on import fails its row, not just nation_ext's.
-    stats_rows = []
-    for tbl in ("nation_ext", _PART_TABLE, "region_ext"):
-        src, dst = f"{_SRC_DB}.{tbl}", f"{_DST_DB}.{tbl}"
-        src_stats = _catalog_stats(spark, src, describe(spark, src))
-        dst_stats = _catalog_stats(spark, dst, describe(spark, dst))
-        stats_rows.append(
-            (
-                "stats",
-                tbl,
-                int(src_stats.get("row_count") or -1),
-                int(dst_stats.get("row_count") or -1),
-                bool(src_stats) and src_stats == dst_stats,
-            )
+    # Both sides are read through export_manifest: the source's stats are
+    # the manifest just exported, the target's a fresh export of it.
+    src, dst = (
+        {e["table"]: e.get("statistics") or {} for e in m}
+        for m in (manifest, export_manifest(spark, _DST_DB))
+    )
+    stats_rows = [
+        (
+            "stats",
+            tbl,
+            int(src[tbl].get("row_count") or -1),
+            int(dst[tbl].get("row_count") or -1),
+            bool(src[tbl]) and src[tbl] == dst[tbl],
         )
+        for tbl in ("nation_ext", _PART_TABLE, "region_ext")
+    ]
     stats_df = spark.createDataFrame(
         stats_rows,
         "entity string, k string, n_src bigint, n_dst bigint, match boolean",
@@ -839,6 +900,8 @@ def _canon_entry(entry: dict, requalified_view: str | None = None) -> dict:
     }
     for k, v in props.items():
         aspects[f"property:{k}"] = v
+    for k, v in (entry.get("options") or {}).items():
+        aspects[f"option:{k}"] = v
     return aspects
 
 

@@ -15,9 +15,13 @@ from __future__ import annotations
 
 import functools
 import threading
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
+
+from .session import cpu_count
 
 # Wide enough for sf0.1 money sums (~1e11) with plenty of headroom; scale 4
 # preserves cents and tax/discount precision exactly.
@@ -156,3 +160,28 @@ def clear_session_caches() -> int:
     (and a JVM GC) so the ContextCleaner actually releases the pinned
     blocks."""
     return _drop_entries()
+
+
+def driver_map(spark, fn, items) -> list:
+    """``[fn(x) for x in items]`` on at most ``session.cpu_count()`` driver
+    threads: results in input order, the first error (in input order)
+    re-raised and the tasks not yet started cancelled.
+
+    For independent catalog round trips, which wait on the metastore and
+    py4j, not on Python.  Each task runs under its own clone of the
+    caller's local properties and session tags, so the jobs it starts
+    carry the caller's job group.  The clone is per task, never per
+    pool: tasks sharing one JVM ``Properties`` object race on the keys
+    Spark sets and clears per query (a task reading
+    ``spark.sql.execution.root.id`` while another clears it fails with
+    ``NumberFormatException``)."""
+    items = list(items)
+    if not items:
+        return []
+    with ThreadPoolExecutor(max_workers=min(cpu_count(), len(items))) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(fn), x) for x in items]
+        try:
+            return [f.result() for f in futures]
+        finally:
+            for f in futures:
+                f.cancel()

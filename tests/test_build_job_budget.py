@@ -41,11 +41,13 @@ def test_mad_warm_build_job_count(spark, sf_dir, count_jobs):
     assert jobs == 4, f"{key}: a warm build started {jobs} Spark job(s), want 4"
 
 
-# Warm-build job counts of the metastore migration keys: the import
-# replays ANALYZE on its three tables (two jobs each), and export starts
-# none.  The ANALYZE jobs run on driver_map's threads, so a count that
-# drops means they lost the caller's job group.
-META_JOBS = {"meta_import": 6, "meta_roundtrip": 6, "meta_diff": 6, "meta_export": 0}
+# Warm-build job counts of the metastore migration keys.  Export and
+# import are catalog calls only: statistics travel as catalog metadata,
+# so the import writes them back without scanning the shared data, and
+# no key starts a job once its source namespace is built.  That
+# driver_map tasks keep the caller's job group is checked in
+# tests/test_driver_map.py.
+META_JOBS = {"meta_import": 0, "meta_roundtrip": 0, "meta_diff": 0, "meta_export": 0}
 
 
 @pytest.mark.parametrize("key", sorted(META_JOBS))

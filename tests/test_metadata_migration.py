@@ -9,6 +9,7 @@ result back; the parent checks it equals the direct-parquet aggregate.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import subprocess
@@ -17,6 +18,7 @@ import sys
 import duckdb
 import pytest
 
+from yc_data_proc_metadata_import_spark.plans.catalog import describe, read_stats
 from yc_data_proc_metadata_import_spark.plans.metadata import (
     _SRC_DB,
     _build_source,
@@ -24,6 +26,7 @@ from yc_data_proc_metadata_import_spark.plans.metadata import (
     export_manifest,
     import_manifest,
 )
+from yc_data_proc_metadata_import_spark.session import conf_scope
 from yc_data_proc_metadata_import_spark.sources.io import SCRATCH, TABLES, table_path
 
 _IMPORTER = """
@@ -77,6 +80,23 @@ props = spark.sql(
 got_props = {r.key: r.value for r in props if not r.key.startswith("transient")}
 assert got_props.get("owner_team") == "ingest", got_props
 assert got_props.get("quality_tier") == "gold", got_props
+# Statistics arrive as the catalog stores them, through this catalog's
+# alterTableStats: Spark's own DESCRIBE reads back the manifest's values.
+from yc_data_proc_metadata_import_spark.plans.catalog import describe, read_stats
+want = next(e for e in manifest if e["table"] == "nation_ext")["statistics"]
+assert read_stats(spark, "eng_meta_dst", "nation_ext") == want, want
+table_stats = describe(spark, "eng_meta_dst.nation_ext")["statistics"]
+assert table_stats == {
+    "size_in_bytes": want["size_in_bytes"], "num_rows": want["row_count"]
+}, table_stats
+col = {
+    r.info_name: r.info_value
+    for r in spark.sql("DESCRIBE TABLE EXTENDED eng_meta_dst.nation_ext n_regionkey").collect()
+}
+rk = want["columns"]["n_regionkey"]
+assert (col["distinct_count"], col["num_nulls"], col["min"], col["max"]) == tuple(
+    str(rk[f]) for f in ("distinct", "nulls", "min", "max")
+), col
 with open(out_path, "w") as f:
     json.dump(
         {
@@ -326,6 +346,7 @@ def test_manifest_location_validation():
 # space and a quote in the partition value, and analyzed on the
 # non-struct columns.  ``csv_header`` is a CSV table read with the
 # ``header`` option, so its provider and storage options must travel.
+# ``nation`` and the view carry a table comment and a column comment.
 _RT_SRC, _RT_DST = "eng_meta_rt_src", "eng_meta_rt_dst"
 _RT_PROPS = {"note": "a, b", "tag": "x]", "team": "o'neil", "path": "C:\\new"}
 _RT_VIEW = """SELECT n_regionkey,
@@ -340,6 +361,11 @@ _NESTED_COLS = {
 _ODD_COLS = ("select", "my col", "a`b")
 _ODD_STRUCT = "named_struct('my f', id, 'ok', id) AS st"
 _ODD_PART = "part col"
+# table -> (table comment, column, column comment)
+_RT_COMMENTS = {
+    "nation": ("nations, o'neil", "n_name", "the nation's name"),
+    "by_region": ("nations per region", "n_nations", "row count"),
+}
 
 
 def _sql_literal(v: str) -> str:
@@ -380,12 +406,23 @@ def roundtrip(spark, sf_dir, tmp_path_factory):
         f"CREATE TABLE {_RT_SRC}.csv_header USING csv OPTIONS (header 'true') "
         f"LOCATION '{csv}'"
     )
+    comment, col, col_comment = _RT_COMMENTS["nation"]
+    spark.sql(f"COMMENT ON TABLE {_RT_SRC}.nation IS {_sql_literal(comment)}")
+    spark.sql(
+        f"ALTER TABLE {_RT_SRC}.nation ALTER COLUMN {col} "
+        f"COMMENT {_sql_literal(col_comment)}"
+    )
     spark.sql(f"ALTER TABLE {_RT_SRC}.odd RECOVER PARTITIONS")
     spark.sql(
         f"ANALYZE TABLE {_RT_SRC}.odd COMPUTE STATISTICS FOR COLUMNS "
         "`select`, `my col`, `a``b`, `part col`"
     )
-    spark.sql(f"CREATE VIEW {_RT_SRC}.by_region AS {_RT_VIEW.format(db=_RT_SRC)}")
+    comment, col, col_comment = _RT_COMMENTS["by_region"]
+    spark.sql(
+        f"CREATE VIEW {_RT_SRC}.by_region "
+        f"(n_regionkey, {col} COMMENT {_sql_literal(col_comment)}) "
+        f"COMMENT {_sql_literal(comment)} AS {_RT_VIEW.format(db=_RT_SRC)}"
+    )
     want_types = {
         t: [f.dataType.simpleString() for f in spark.read.parquet(loc).schema]
         for t, loc in locations.items()
@@ -413,8 +450,9 @@ def test_manifest_roundtrips_views_properties_and_nested_types(spark, roundtrip)
     name: the multi-line view text arrives whole and resolves, property
     values keep their separators, quotes and backslashes, nested column
     types replay in CREATE TABLE, columns that need backquotes keep
-    their partitions, statistics and rows, and a CSV table keeps its
-    provider and ``header`` option, so it reads the same rows."""
+    their partitions, statistics and rows, a CSV table keeps its
+    provider and ``header`` option, so it reads the same rows, and table
+    and column comments of a table and a view arrive."""
     manifest, _ = roundtrip
     view = {e["table"]: e for e in manifest}["by_region"]
     assert view["view_text"] == _RT_VIEW.format(db=_RT_SRC)
@@ -443,6 +481,43 @@ def test_manifest_roundtrips_views_properties_and_nested_types(spark, roundtrip)
         db: sorted(spark.table(f"{db}.csv_header").collect()) for db in (_RT_SRC, _RT_DST)
     }
     assert rows[_RT_DST] == rows[_RT_SRC] and len(rows[_RT_SRC]) == 3
+    for t, (comment, col, col_comment) in _RT_COMMENTS.items():
+        for db in (_RT_SRC, _RT_DST):
+            desc = describe(spark, f"{db}.{t}")
+            got = {c["name"]: c.get("comment") for c in desc["columns"]}
+            assert (desc.get("comment"), got[col]) == (comment, col_comment), (db, t)
+
+
+def test_import_starts_no_spark_job(spark, roundtrip, count_jobs):
+    """Importing the whole ``roundtrip`` manifest (partitions, statistics,
+    comments, a view) is catalog calls only: it starts no Spark job,
+    and the analyzed table's statistics arrive all the same."""
+    manifest, _ = roundtrip
+    db = "eng_meta_rt_jobs"
+    try:
+        _, jobs = count_jobs(lambda: import_manifest(spark.newSession(), manifest, db))
+        assert jobs == 0, f"import_manifest started {jobs} Spark job(s)"
+        odd = {e["table"]: e for e in manifest}["odd"]
+        assert read_stats(spark, db, "odd") == odd["statistics"]
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_manifest_without_size_in_bytes_raises_value_error(spark, roundtrip):
+    """A v4 manifest's statistics lack ``size_in_bytes`` (and the column
+    lengths): import names the missing field in a ``ValueError`` before
+    it touches the target namespace."""
+    manifest, _ = roundtrip
+    v4 = copy.deepcopy(manifest)
+    for e in v4:
+        stats = e.get("statistics") or {}
+        stats.pop("size_in_bytes", None)
+        for fields in stats.get("columns", {}).values():
+            del fields["avg_len"], fields["max_len"]
+    db = "eng_meta_rt_v4"
+    with pytest.raises(ValueError, match="lack size_in_bytes"):
+        import_manifest(spark.newSession(), v4, db)
+    assert not spark.catalog.databaseExists(db)
 
 
 def test_exported_column_types_match_parquet_schema(roundtrip):
@@ -465,3 +540,88 @@ def test_exported_column_types_match_parquet_schema(roundtrip):
     assert want_types["nested"] == [
         "decimal(28,4)", "map<string,int>", "struct<x:int,y:array<string>>"
     ]
+
+
+# One column per statistics shape: integers, a double, a decimal, a
+# boolean, a string (no min/max), a date, a microsecond timestamp (stored
+# in UTC form, displayed with the zone) and an all-NULL column.
+_TYPED_COLS = {
+    "i": "CAST(id AS INT)",
+    "b": "if(id % 5 = 0, NULL, id * 1000000007)",
+    "d": "id / 4.0D",
+    "dec": "CAST(id / 3 AS DECIMAL(10,2))",
+    "flag": "id % 3 = 0",
+    "s": "concat('s', id % 7)",
+    "dt": "date_add(DATE'2020-01-01', CAST(id AS INT))",
+    "ts": "TIMESTAMP'2020-01-01 10:00:00.123456' + make_interval(0, 0, 0, 0, 0, 0, id)",
+    "nothing": "CAST(NULL AS INT)",
+}
+_HIST_COL = "d"
+
+
+def _analyze_typed(spark, table: str) -> None:
+    spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR ALL COLUMNS")
+    with conf_scope(spark, {"spark.sql.statistics.histogram.enabled": "true"}):
+        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS {_HIST_COL}")
+
+
+def _plan_stats(df) -> tuple:
+    """(size, rows, {column: its estimate in stored form}) of the
+    optimized plan's statistics, keyed by name, not by expression id."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    conv = df.sparkSession._jvm.scala.jdk.javaapi.CollectionConverters
+    columns = {}
+    for attr, col_stat in conv.asJava(stats.attributeStats()).items():
+        name = attr.name()
+        stored = col_stat.toCatalogColumnStat(name, attr.dataType()).toMap(name)
+        columns[name] = dict(conv.asJava(stored))
+    return stats.sizeInBytes(), str(stats.rowCount()), columns
+
+
+def test_statistics_replay_matches_analyze_across_types(spark, tmp_path):
+    """Statistics written from the manifest are the statistics ANALYZE
+    stored, for every column type: each column's DESCRIBE and the
+    table's statistics read the same on both sides, the cost-based
+    optimizer estimates a filter the same, and ANALYZE re-run on the
+    target over the shared files stores exactly what was replayed."""
+    src, dst = "eng_meta_types_src", "eng_meta_types_dst"
+    loc = str(tmp_path / "typed")
+    spark.range(40).selectExpr(*(f"{v} AS {k}" for k, v in _TYPED_COLS.items())).write.parquet(loc)
+    try:
+        spark.sql(f"DROP DATABASE IF EXISTS {src} CASCADE")
+        spark.sql(f"CREATE DATABASE {src}")
+        spark.sql(f"CREATE TABLE {src}.typed USING parquet LOCATION '{loc}'")
+        _analyze_typed(spark, f"{src}.typed")
+        manifest = export_manifest(spark, src)
+        stats = manifest[0]["statistics"]
+        assert set(stats["columns"]) == set(_TYPED_COLS)
+        assert [c for c, f in stats["columns"].items() if "histogram" in f] == [_HIST_COL]
+        assert stats["columns"]["ts"]["min"] == "2020-01-01 10:00:00.123456"
+        assert stats["columns"]["nothing"]["nulls"] == 40
+        import_manifest(spark.newSession(), manifest, dst)
+
+        for col in _TYPED_COLS:
+            rows = {
+                db: spark.sql(f"DESCRIBE TABLE EXTENDED {db}.typed {col}").collect()
+                for db in (src, dst)
+            }
+            assert rows[dst] == rows[src], col
+        assert describe(spark, f"{dst}.typed")["statistics"] == (
+            describe(spark, f"{src}.typed")["statistics"]
+        )
+        where = (
+            "i < 30 AND d > 1.5 AND dt < DATE'2020-02-01' "
+            "AND ts > TIMESTAMP'2020-01-01 10:00:05' AND s <> 's3'"
+        )
+        with conf_scope(spark, {"spark.sql.cbo.enabled": "true"}):
+            plan = {db: _plan_stats(spark.table(f"{db}.typed").where(where)) for db in (src, dst)}
+        assert plan[dst] == plan[src]
+        assert set(plan[src][2]) == set(_TYPED_COLS)
+
+        replayed = read_stats(spark, dst, "typed")
+        assert replayed == stats
+        _analyze_typed(spark, f"{dst}.typed")
+        assert read_stats(spark, dst, "typed") == replayed
+    finally:
+        for db in (dst, src):
+            spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")

@@ -37,12 +37,111 @@ def _reset_db(spark: SparkSession, db: str) -> None:
 def describe(spark: SparkSession, name: str) -> dict:
     """One catalog object as structured data: ``type``, ``columns``,
     ``location``, ``table_properties``, ``partition_columns``,
-    ``view_text`` and ``statistics`` of ``DESCRIBE TABLE EXTENDED ... AS
-    JSON``. Every table-level catalog read goes through here, so nothing
+    ``comment``, ``view_text`` and ``statistics`` of ``DESCRIBE TABLE
+    EXTENDED ... AS JSON``. Every table-level catalog read goes through here, so nothing
     parses Spark's human-readable catalog output. ``collect()`` rather
     than ``first()``: the latter plans an extra limit on every call."""
     return json.loads(
         spark.sql(f"DESCRIBE TABLE EXTENDED {name} AS JSON").collect()[0][0]
+    )
+
+
+# Manifest field -> ``CatalogColumnStat.toMap`` key of one column's
+# statistics; min and max stay in the catalog's stored (UTC) string form.
+_COLUMN_STAT_KEYS = {
+    "distinct": "distinctCount",
+    "nulls": "nullCount",
+    "min": "min",
+    "max": "max",
+    "avg_len": "avgLen",
+    "max_len": "maxLen",
+}
+_INT_STATS = {"distinct", "nulls", "avg_len", "max_len"}
+# Fields every table's and every column's statistics carry; "NULL" marks
+# a column value the catalog does not hold (string columns have no
+# min/max). A column's ``histogram`` is optional.
+TABLE_STAT_FIELDS = ("row_count", "size_in_bytes", "columns")
+COLUMN_STAT_FIELDS = tuple(_COLUMN_STAT_KEYS)
+
+
+def _table_ident(spark: SparkSession, db: str, table: str):
+    jvm = spark._jvm
+    return jvm.org.apache.spark.sql.catalyst.TableIdentifier(table, jvm.scala.Some(db))
+
+
+def read_stats(spark: SparkSession, db: str, table: str) -> dict:
+    """The statistics ANALYZE stored for ``db.table``, read from the
+    session catalog in one ``getTableMetadata`` call: ``{"row_count",
+    "size_in_bytes", "columns": {col: {distinct, nulls, min, max,
+    avg_len, max_len[, histogram]}}}``, or an empty dict when the table
+    holds no row count. No SQL runs and no data is read."""
+    opt = spark._jsparkSession.sessionState().catalog().getTableMetadata(
+        _table_ident(spark, db, table)
+    ).stats()
+    if not opt.isDefined() or not opt.get().rowCount().isDefined():
+        return {}
+    stats = opt.get()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    columns = {}
+    for col, col_stat in sorted(conv.asJava(stats.colStats()).items()):
+        stored = dict(conv.asJava(col_stat.toMap(col)))
+        fields = columns[col] = {}
+        for field, key in _COLUMN_STAT_KEYS.items():
+            v = stored.get(f"{col}.{key}", "NULL")
+            fields[field] = int(v) if field in _INT_STATS and v != "NULL" else v
+        if f"{col}.histogram" in stored:
+            fields["histogram"] = stored[f"{col}.histogram"]
+    # scala BigInts reach Python as ints
+    return {
+        "row_count": stats.rowCount().get(),
+        "size_in_bytes": stats.sizeInBytes(),
+        "columns": columns,
+    }
+
+
+def write_stats(spark: SparkSession, db: str, table: str, stats: dict) -> None:
+    """Store ``stats`` (the ``read_stats`` form) as the statistics of
+    ``db.table`` with one ``SessionCatalog.alterTableStats`` call, as
+    ANALYZE would have stored them: no SQL runs and no data is read."""
+    jvm = spark._jvm
+    catalog = jvm.org.apache.spark.sql.catalyst.catalog
+    to_map = jvm.org.apache.spark.api.python.PythonUtils.toScalaMap
+    version = str(catalog.CatalogColumnStat.VERSION())
+    name = f"{db}.{table}"
+
+    def parse(col: str, stored: dict):
+        keyed = {f"{col}.{k}": str(v) for k, v in stored.items()}
+        opt = catalog.CatalogColumnStat.fromMap(
+            name, col, to_map({f"{col}.version": version, **keyed})
+        )
+        if not opt.isDefined():
+            raise ValueError(f"unparseable statistics of {name}.{col}: {stored}")
+        return opt.get()
+
+    columns = {}
+    for col, fields in stats["columns"].items():
+        stored = {
+            key: fields[f] for f, key in _COLUMN_STAT_KEYS.items() if fields[f] != "NULL"
+        }
+        if "histogram" in fields:
+            stored["histogram"] = fields["histogram"]
+        columns[col] = parse(col, stored)
+    # CatalogStatistics takes scala BigInts, which py4j cannot pass. A
+    # parsed carrier column stat holds both counts as Option[BigInt] on
+    # the JVM, and mapping the size's Option over the curried constructor
+    # keeps the bare BigInt there too.
+    carrier = parse(
+        "c", {"distinctCount": stats["size_in_bytes"], "nullCount": stats["row_count"]}
+    )
+    new = (
+        carrier.distinctCount()
+        .map(catalog.CatalogStatistics.curried())
+        .get()
+        .apply(carrier.nullCount())
+        .apply(to_map(columns))
+    )
+    spark._jsparkSession.sessionState().catalog().alterTableStats(
+        _table_ident(spark, db, table), jvm.scala.Some(new)
     )
 
 

@@ -12,34 +12,40 @@ reference's topology, where both clusters' metastores describe one bucket
 and only METADATA crosses. The manifest is a portable JSON file (the IR
 the managed service would ship over thrift): database, table/view,
 column schema, format, data location, PARTITION SPECS, TABLE PROPERTIES,
-and VIEW TEXT — the full HMS payload the reference's Hive service
-migrates (metastore-import.tf:196). Import replays it as DDL; data never
-moves. The import half runs in a separate ``spark.newSession()`` inside
-the driver keys, and tests/test_metadata_migration.py replays the same
-manifest in a SUBPROCESS whose catalog starts empty — metadata crossing a
-process boundary with the JSON manifest as the only carrier.
+COMMENTS, ANALYZE STATISTICS and VIEW TEXT — the full HMS payload the
+reference's Hive service migrates (metastore-import.tf:196). Import
+replays it as DDL plus one catalog statistics write per analyzed table;
+data never moves and is never read. The import half runs in a separate
+``spark.newSession()`` inside the driver keys, and
+tests/test_metadata_migration.py replays the same manifest in a
+SUBPROCESS whose catalog starts empty — metadata crossing a process
+boundary with the JSON manifest as the only carrier.
 
 Every key here is value-hash-checked: the manifest content is fully
 determined by the DDL that built the source namespace, and the roundtrip
 check aggregates the SAME parquet through both namespaces.
 
 Scale notes: export is 1 ``SHOW TABLES``, plus 1 ``describe``
-(``DESCRIBE TABLE EXTENDED ... AS JSON``) per object, plus 1
-``DESCRIBE`` per column of each analyzed table, plus 1 ``SHOW
-PARTITIONS`` per PARTITIONED table — O(objects + analyzed columns +
-partitioned tables), not O(partitions): each ``SHOW PARTITIONS`` returns
-the full partition listing in one round-trip. Partition lists can reach
-millions of rows per table at 100 TB, which is why they ride a
-per-table bulk call instead of DESCRIBE-per-partition. The calls after
-``SHOW TABLES`` run in two concurrent rounds on driver threads
-(``utils.driver_map``): every ``describe``, then every column
-``DESCRIBE`` and ``SHOW PARTITIONS`` across all tables.
+(``DESCRIBE TABLE EXTENDED ... AS JSON``) per object, plus 1 ``SHOW
+PARTITIONS`` per PARTITIONED table, plus 1 session-catalog statistics
+read (``catalog.read_stats``, no SQL) per analyzed table — O(objects),
+not O(partitions) or O(columns): each ``SHOW PARTITIONS`` returns the
+full partition listing in one round-trip, and one catalog read carries
+every column's statistics. Partition lists can reach millions of rows
+per table at 100 TB, which is why they ride a per-table bulk call
+instead of DESCRIBE-per-partition. The calls after ``SHOW TABLES`` run
+in two concurrent rounds on driver threads (``utils.driver_map``):
+every ``describe``, then every statistics read and ``SHOW PARTITIONS``
+across all tables.
 
 Import is 2 statements to reset the namespace, then per table 1
 ``CREATE TABLE``, 1 ``ADD PARTITION`` per ``_ADD_PARTITION_CHUNK``
-partition specs and at most 1 ``ANALYZE``, then 1 ``CREATE VIEW`` per
-view — O(objects + partitions / chunk). The tables import concurrently,
-one driver-thread task per table; the views follow one at a time, in
+partition specs and at most 1 session-catalog statistics write
+(``catalog.write_stats``, no SQL), then 1 ``CREATE VIEW`` per view —
+O(objects + partitions / chunk), and no Spark job: statistics travel
+as catalog metadata, as HMS carries them as table parameters, so the
+shared data is never scanned. The tables import concurrently, one
+driver-thread task per table; the views follow one at a time, in
 manifest order, because their text resolves against the tables.
 """
 
@@ -54,7 +60,15 @@ from pyspark.sql import DataFrame, SparkSession
 from ..registry import query
 from ..sources.io import _fixture_dir, load, sf_tag, table_path
 from ..utils import driver_map
-from .catalog import _ext_table, _reset_db, describe
+from .catalog import (
+    COLUMN_STAT_FIELDS,
+    TABLE_STAT_FIELDS,
+    _ext_table,
+    _reset_db,
+    describe,
+    read_stats,
+    write_stats,
+)
 
 _SRC_DB = "eng_meta_src"
 _DST_DB = "eng_meta_dst"
@@ -213,40 +227,17 @@ def _analyzed(desc: dict) -> bool:
     return (desc.get("statistics") or {}).get("num_rows") is not None
 
 
-def _catalog_stats(desc: dict, column_rows) -> dict:
-    """ANALYZE statistics of one table: ``{"row_count": N, "columns":
-    {col: {distinct,nulls,min,max}}}``, or an empty dict when the table
-    was never analyzed. The row count comes from its ``describe``; the
-    column statistics from ``column_rows(col)``, the rows of one
-    ``DESCRIBE TABLE EXTENDED t col`` per column (Spark rejects ``AS
-    JSON`` for a single column), which ``export_manifest`` issues only
-    for analyzed tables, concurrently with every other table's."""
-    if not _analyzed(desc):
-        return {}
-    stats: dict = {"row_count": desc["statistics"]["num_rows"], "columns": {}}
-    for c in desc["columns"]:
-        info = {r["info_name"]: r["info_value"] for r in column_rows(c["name"])}
-        if info.get("distinct_count") in (None, "NULL"):
-            continue
-        stats["columns"][c["name"]] = {
-            "distinct": int(info["distinct_count"]),
-            "nulls": int(info["num_nulls"]),
-            "min": info["min"],
-            "max": info["max"],
-        }
-    return stats
-
-
 def export_manifest(spark: SparkSession, db: str) -> list[dict]:
     """Serialize ``db`` to a portable manifest: the export half of the
     reference's migration. One ``SHOW TABLES`` lists the namespace, one
     ``describe`` per object carries its type, schema, provider, storage
-    options, location, table properties, partition columns, view text
-    and row count; analyzed tables add one ``DESCRIBE`` per column for
-    column statistics, and partitioned tables one bulk ``SHOW
-    PARTITIONS`` for their registered partition specs. The describes
-    run concurrently, then the column and partition reads of all tables
-    together."""
+    options, location, table properties, partition columns, table and
+    column comments, view text and row count; analyzed tables add one
+    session-catalog read of their stored statistics
+    (``catalog.read_stats``: no SQL, no data scan), and partitioned
+    tables one bulk ``SHOW PARTITIONS`` for their registered partition
+    specs. The describes run concurrently, then the statistics and
+    partition reads of all tables together."""
     names = sorted(
         r.tableName
         for r in spark.sql(f"SHOW TABLES IN {db}").collect()
@@ -255,29 +246,34 @@ def export_manifest(spark: SparkSession, db: str) -> list[dict]:
         if not r.isTemporary
     )
     descs = driver_map(spark, lambda tbl: describe(spark, f"{db}.{tbl}"), names)
-    # (table, column) for a column's statistics, (table, None) for the
-    # table's partition listing.
+    # (table, "stats") for a table's statistics, (table, "partitions")
+    # for its partition listing.
     reads = []
     for tbl, desc in zip(names, descs):
         if desc["type"] == "VIEW":
             continue
         if _analyzed(desc):
-            reads += [(tbl, c["name"]) for c in desc["columns"]]
+            reads.append((tbl, "stats"))
         if desc.get("partition_columns"):
-            reads.append((tbl, None))
+            reads.append((tbl, "partitions"))
 
-    def read(r: tuple) -> list:
-        tbl, col = r
-        if col is None:
-            return spark.sql(f"SHOW PARTITIONS {db}.{tbl}").collect()
-        return spark.sql(f"DESCRIBE TABLE EXTENDED {db}.{tbl} {_ident(col)}").collect()
+    def read(r: tuple):
+        tbl, what = r
+        if what == "stats":
+            return read_stats(spark, db, tbl)
+        return spark.sql(f"SHOW PARTITIONS {db}.{tbl}").collect()
 
     got = dict(zip(reads, driver_map(spark, read, reads)))
     manifest = []
     for tbl, desc in zip(names, descs):
         name = f"{db}.{tbl}"
         columns = [
-            {"name": c["name"], "type": _type_str(c["type"]), "ordinal": i}
+            {
+                "name": c["name"],
+                "type": _type_str(c["type"]),
+                "ordinal": i,
+                "comment": c.get("comment", ""),
+            }
             for i, c in enumerate(desc["columns"])
         ]
         if desc["type"] == "VIEW":
@@ -288,6 +284,7 @@ def export_manifest(spark: SparkSession, db: str) -> list[dict]:
                     "database": db,
                     "table": tbl,
                     "type": "view",
+                    "comment": desc.get("comment", ""),
                     "format": "",
                     "options": {},
                     "location": "",
@@ -306,6 +303,7 @@ def export_manifest(spark: SparkSession, db: str) -> list[dict]:
                 "database": db,
                 "table": tbl,
                 "type": "table",
+                "comment": desc.get("comment", ""),
                 "format": desc["provider"],
                 # Spark keeps the data path out of these (it is the
                 # location), so every one is a user-set reader option.
@@ -313,14 +311,14 @@ def export_manifest(spark: SparkSession, db: str) -> list[dict]:
                 "location": desc["location"],
                 "columns": columns,
                 "partition_columns": desc.get("partition_columns", []),
-                "partitions": sorted(p[0] for p in got.get((tbl, None), [])),
+                "partitions": sorted(p[0] for p in got.get((tbl, "partitions"), [])),
                 "properties": {
                     k: v
                     for k, v in sorted(desc.get("table_properties", {}).items())
                     if not _INTERNAL_PROP.match(k)
                 },
                 "view_text": "",
-                "statistics": _catalog_stats(desc, lambda col: got[(tbl, col)]),
+                "statistics": got.get((tbl, "stats"), {}),
             }
         )
     return manifest
@@ -381,11 +379,19 @@ def _kv_clause(keyword: str, kv: dict) -> str:
     return f" {keyword} ({pairs})"
 
 
+def _comment_clause(entry: dict) -> str:
+    return f" COMMENT {_literal(entry['comment'])}" if entry.get("comment") else ""
+
+
 def _import_table(spark: SparkSession, entry: dict, dst_db: str) -> None:
-    """One manifest table into ``dst_db``: CREATE TABLE, its partitions
-    and its statistics replay."""
+    """One manifest table into ``dst_db``: CREATE TABLE with its comments,
+    its partitions, then its statistics stored straight into the catalog
+    (``catalog.write_stats``) — the target holds what the source's
+    ANALYZE stored, without scanning the shared data."""
     tbl = f"{dst_db}.{entry['table']}"
-    cols = ", ".join(f"{_ident(c['name'])} {c['type']}" for c in entry["columns"])
+    cols = ", ".join(
+        f"{_ident(c['name'])} {c['type']}{_comment_clause(c)}" for c in entry["columns"]
+    )
     part_clause = (
         f" PARTITIONED BY ({', '.join(map(_ident, entry['partition_columns']))})"
         if entry["partition_columns"]
@@ -394,55 +400,68 @@ def _import_table(spark: SparkSession, entry: dict, dst_db: str) -> None:
     spark.sql(
         f"CREATE TABLE {tbl} ({cols}) USING {entry['format']}"
         f"{_kv_clause('OPTIONS', entry.get('options') or {})}"
-        f"{part_clause} LOCATION '{entry['location']}'"
+        f"{part_clause} LOCATION '{entry['location']}'{_comment_clause(entry)}"
         f"{_kv_clause('TBLPROPERTIES', entry.get('properties') or {})}"
     )
     specs = [_spec_to_ddl(spec) for spec in entry["partitions"]]
     for i in range(0, len(specs), _ADD_PARTITION_CHUNK):
         chunk = specs[i : i + _ADD_PARTITION_CHUNK]
         spark.sql(f"ALTER TABLE {tbl} ADD PARTITION {' PARTITION '.join(chunk)}")
-    # Statistics replay: data is shared (external locations), so
-    # re-running ANALYZE on the target reproduces the exported stats
-    # exactly — the tutorial's documented missing post-migration
-    # step, now part of the import. meta_roundtrip asserts the
-    # target catalog's stats EQUAL the manifest's.
+    if entry.get("statistics"):
+        write_stats(spark, dst_db, entry["table"], entry["statistics"])
+
+
+def _import_view(spark: SparkSession, entry: dict, dst_db: str) -> None:
+    """One manifest view into ``dst_db``, its text re-qualified to
+    ``dst_db``. Column comments need the view's column list, which is
+    spelled out only when one of them carries a comment."""
+    text = _requalify_view_text(entry["view_text"], entry["database"], dst_db)
+    cols = ""
+    if any(c.get("comment") for c in entry["columns"]):
+        cols = " (" + ", ".join(
+            f"{_ident(c['name'])}{_comment_clause(c)}" for c in entry["columns"]
+        ) + ")"
+    spark.sql(
+        f"CREATE VIEW {dst_db}.{entry['table']}{cols}{_comment_clause(entry)} AS {text}"
+    )
+
+
+def _check_statistics(entry: dict) -> None:
+    """Raise ``ValueError`` naming each statistics field ``entry`` lacks
+    (a manifest written before the format carried them)."""
     stats = entry.get("statistics") or {}
-    if stats:
-        # One scan per table: FOR COLUMNS records table-level stats
-        # (rows + size) as a side effect, so the plain COMPUTE
-        # STATISTICS runs only for tables with no analyzed columns.
-        # Direct property injection would avoid the scan entirely,
-        # but the in-memory session catalog stores
-        # spark.sql.statistics.* TBLPROPERTIES as opaque strings
-        # without materializing CatalogStatistics (verified r16), so
-        # replaying ANALYZE over the shared data IS the fidelity
-        # mechanism here — same stats, honestly recomputed.
-        stat_cols = sorted(stats.get("columns", {}))
-        if stat_cols:
-            spark.sql(
-                f"ANALYZE TABLE {tbl} COMPUTE STATISTICS "
-                f"FOR COLUMNS {', '.join(map(_ident, stat_cols))}"
-            )
-        else:
-            spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS")
+    if not stats:
+        return
+    missing = [f for f in TABLE_STAT_FIELDS if f not in stats]
+    for col, fields in sorted((stats.get("columns") or {}).items()):
+        missing += [f"{col}.{f}" for f in COLUMN_STAT_FIELDS if f not in fields]
+    if missing:
+        raise ValueError(
+            f"statistics of {entry['table']} lack {', '.join(missing)}: "
+            f"a manifest older than format v{_MANIFEST_VERSION}?"
+        )
 
 
 def import_manifest(spark: SparkSession, manifest: list[dict], dst_db: str) -> None:
-    """Replay a manifest as DDL into another namespace ("cluster B").
+    """Replay a manifest into another namespace ("cluster B").
     External CREATE TABLE against the SAME locations — the shared-bucket
     import semantics of the reference (data unmoved, metadata recreated)
-    — with the exported provider, storage OPTIONS and TBLPROPERTIES;
-    then one ALTER TABLE ADD PARTITION carrying up to
+    — with the exported provider, storage OPTIONS, COMMENTs and
+    TBLPROPERTIES; then one ALTER TABLE ADD PARTITION carrying up to
     ``_ADD_PARTITION_CHUNK`` exported partition specs (the partitions
     travel IN the manifest, as in HMS; no MSCK rediscovery pass over
-    storage), then the table's ANALYZE; finally CREATE VIEW (views last —
-    their text references the tables).
+    storage), then the table's statistics written into the catalog as
+    they were exported; finally CREATE VIEW (views last — their text
+    references the tables).
 
-    After the namespace reset, the tables import concurrently, one
-    ``utils.driver_map`` task per table, each sending its own statements
-    in order; the views are created afterwards, one at a time in
-    manifest order.  A table with ``p`` partitions costs 1 + ceil(p /
-    chunk) + (1 if analyzed) statements.
+    Every table's statistics are checked first, so a manifest without
+    the fields the catalog needs raises ``ValueError`` before the
+    namespace is touched. After the namespace reset, the tables import
+    concurrently, one ``utils.driver_map`` task per table, each sending
+    its own statements in order; the views are created afterwards, one
+    at a time in manifest order.  A table with ``p`` partitions costs 1
+    + ceil(p / chunk) statements and, if analyzed, one catalog call; no
+    statement starts a Spark job.
 
     The manifest is the ONLY input: no source-namespace object is read.
     View text is re-qualified from the source database name to
@@ -454,13 +473,14 @@ def import_manifest(spark: SparkSession, manifest: list[dict], dst_db: str) -> N
     empty (the reference's two-cluster topology,
     metastore-import.tf:181-278).
     """
+    for entry in manifest:
+        _check_statistics(entry)
     _reset_db(spark, dst_db)
     tables = [e for e in manifest if e["type"] != "view"]
     driver_map(spark, lambda e: _import_table(spark, e, dst_db), tables)
     for entry in manifest:
         if entry["type"] == "view":
-            text = _requalify_view_text(entry["view_text"], entry["database"], dst_db)
-            spark.sql(f"CREATE VIEW {dst_db}.{entry['table']} AS {text}")
+            _import_view(spark, entry, dst_db)
 
 
 # Manifest FORMAT version: bump whenever export_manifest's shape or the
@@ -476,7 +496,10 @@ def import_manifest(spark: SparkSession, manifest: list[dict], dst_db: str) -> N
 # manifest on disk lacks them and must regenerate.
 # v4 = the table's provider as ``format`` (was always "parquet") and its
 # storage ``options``.
-_MANIFEST_VERSION = "4"
+# v5 = statistics as the catalog stores them (``size_in_bytes``, per
+# column ``avg_len``/``max_len``/``histogram``, timestamps in stored UTC
+# form) and table and column ``comment``s.
+_MANIFEST_VERSION = "5"
 
 
 def _manifest_path(sf_dir: str) -> str:
@@ -774,9 +797,10 @@ def meta_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("match"),
         )
 
-    # Statistics roundtrip: the target catalog's ANALYZE stats (replayed
-    # from the manifest) must EQUAL the source's — row count surfaced as
-    # the comparable number, full column-stat dict equality in `match`.
+    # Statistics roundtrip: the target catalog's stats (written from the
+    # manifest) must EQUAL the source's — row count surfaced as the
+    # comparable number, full statistics dict equality (size, every
+    # column field, histograms) in `match`.
     # One row per stats-bearing table (all three migrated tables since
     # round 15 — round-14 VERDICT task 4): a table whose stats were
     # dropped on import fails its row, not just nation_ext's.
@@ -879,17 +903,35 @@ def meta_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DIFF_DB = "eng_meta_diff"
 
 
+# The column statistics ``meta_diff`` compares. Size in bytes and the
+# lengths follow the data files' bytes, so no oracle can state them.
+_DIFF_COLUMN_STATS = ("distinct", "nulls", "min", "max")
+
+
 def _canon_entry(entry: dict, requalified_view: str | None = None) -> dict:
     """Canonical comparable form of one manifest entry: every migrated
     aspect rendered as a string, so the diff below is a plain dict
-    compare with deterministic values."""
+    compare with deterministic values. Statistics render as the row
+    count and each column's ``_DIFF_COLUMN_STATS``; a column comment
+    renders beside its column's type."""
     props = entry.get("properties") or {}
     stats = entry.get("statistics") or {}
+    if stats:
+        stats = {
+            "row_count": stats["row_count"],
+            "columns": {
+                col: {f: fields[f] for f in _DIFF_COLUMN_STATS}
+                for col, fields in stats["columns"].items()
+            },
+        }
     aspects = {
         "type": entry["type"],
+        "comment": entry.get("comment") or "",
         "format": entry.get("format") or "",
         "columns": ", ".join(
-            f"{c['name']}:{c['type']}" for c in entry.get("columns", [])
+            f"{c['name']}:{c['type']}"
+            + (f" comment={c['comment']}" if c.get("comment") else "")
+            for c in entry.get("columns", [])
         ),
         "partition_columns": ", ".join(entry.get("partition_columns", [])),
         "partitions": str(len(entry.get("partitions", []))),
@@ -966,13 +1008,13 @@ def meta_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALTER TABLE DROP PARTITION, so the dst's orders_part statistics
     aspect reads '{}' against the source's migrated stats; since round
     15 all three tables carry stats, making this a detectable aspect).
-    Any extra row means some aspect (schema, partition specs, view
-    text, statistics, remaining properties) failed to migrate
+    Any extra row means some aspect (schema, comments, partition specs,
+    view text, statistics, remaining properties) failed to migrate
     identically, so the hash check simultaneously proves drift
     DETECTION and migration FIDELITY of everything else.
 
     Scale shape: manifests are metadata (per namespace, 1 SHOW TABLES
-    plus 1 describe per object, 1 DESCRIBE per column of each analyzed
+    plus 1 describe per object, 1 catalog statistics read per analyzed
     table and 1 SHOW PARTITIONS per partitioned table — the
     export_manifest budget); the compare is a dict diff over canonical
     strings. At a 10k-table metastore this is two catalog walks and a

@@ -18,7 +18,7 @@ import sys
 import duckdb
 import pytest
 
-from yc_data_proc_metadata_import_spark.plans.catalog import describe, read_stats
+from yc_data_proc_metadata_import_spark.plans.catalog import describe
 from yc_data_proc_metadata_import_spark.plans.metadata import (
     _SRC_DB,
     _build_source,
@@ -82,9 +82,14 @@ assert got_props.get("owner_team") == "ingest", got_props
 assert got_props.get("quality_tier") == "gold", got_props
 # Statistics arrive as the catalog stores them, through this catalog's
 # alterTableStats: Spark's own DESCRIBE reads back the manifest's values.
-from yc_data_proc_metadata_import_spark.plans.catalog import describe, read_stats
+from yc_data_proc_metadata_import_spark.plans.catalog import describe
+from yc_data_proc_metadata_import_spark.plans.metadata import (
+    _requalify_view_text,
+    export_manifest,
+)
+exported = export_manifest(spark, "eng_meta_dst")
 want = next(e for e in manifest if e["table"] == "nation_ext")["statistics"]
-assert read_stats(spark, "eng_meta_dst", "nation_ext") == want, want
+assert next(e for e in exported if e["table"] == "nation_ext")["statistics"] == want, want
 table_stats = describe(spark, "eng_meta_dst.nation_ext")["statistics"]
 assert table_stats == {
     "size_in_bytes": want["size_in_bytes"], "num_rows": want["row_count"]
@@ -97,11 +102,21 @@ rk = want["columns"]["n_regionkey"]
 assert (col["distinct_count"], col["num_nulls"], col["min"], col["max"]) == tuple(
     str(rk[f]) for f in ("distinct", "nulls", "min", "max")
 ), col
+# Re-exporting this catalog gives the source's manifest, up to the
+# namespace name: partitions, their locations and statistics included.
+canon = lambda m, db: [
+    dict(e, database="", view_text=_requalify_view_text(e["view_text"], db, "<db>"))
+    for e in m
+]
+assert canon(exported, "eng_meta_dst") == canon(manifest, manifest[0]["database"])
+
+from tests.test_metadata_migration import _partition_facts
 with open(out_path, "w") as f:
     json.dump(
         {
             "nation": [[r.n_regionkey, r.n_nations, r.first_name] for r in rows],
             "urgent": urgent,
+            "partitions": _partition_facts(spark, "eng_meta_dst"),
         },
         f,
     )
@@ -109,9 +124,35 @@ spark.stop()
 """
 
 
-def _import_in_pristine_process(spark, sf_dir, tmp_path, catalog: str) -> None:
+def _partition_facts(spark, db: str) -> dict:
+    """{value: [rows, DESCRIBE's partition statistics]} of every
+    ``orders_part`` partition that reads rows through the catalog."""
+    facts = {}
+    for r in spark.sql(
+        f"SELECT o_orderpriority AS p, COUNT(*) AS n FROM {db}.orders_part GROUP BY 1"
+    ).collect():
+        desc = spark.sql(
+            f"DESCRIBE TABLE EXTENDED {db}.orders_part "
+            f"PARTITION (o_orderpriority = {_sql_literal(r.p)})"
+        ).collect()
+        stats = [d.data_type for d in desc if d.col_name == "Partition Statistics"]
+        facts[r.p] = [r.n, stats[0] if stats else None]
+    return facts
+
+
+def _import_in_pristine_process(spark, sf_dir, tmp_path, catalog: str, mutate=None) -> dict:
+    """Export the source namespace, after ``mutate()`` if given, import
+    it in a pristine process and check what it reads there; returns the
+    source's ``_partition_facts``. A mutated source is rebuilt after."""
     _build_source(spark, sf_dir)
-    manifest = export_manifest(spark, _SRC_DB)
+    try:
+        if mutate:
+            mutate()
+        manifest = export_manifest(spark, _SRC_DB)
+        src_parts = _partition_facts(spark, _SRC_DB)
+    finally:
+        if mutate:
+            _build_source(spark, sf_dir)
     manifest_path = tmp_path / "manifest.json"
     manifest_path.write_text(json.dumps(manifest))
     out_path = tmp_path / "result.json"
@@ -134,6 +175,14 @@ def _import_in_pristine_process(spark, sf_dir, tmp_path, catalog: str) -> None:
     )
 
     got = json.loads(out_path.read_text())
+    # Every partition reads the source's rows on the target, and an
+    # analyzed partition (its statistics hold a row count) reads the
+    # source's statistics; the target's catalog may size the others.
+    assert {p: n for p, (n, _) in got["partitions"].items()} == {
+        p: n for p, (n, _) in src_parts.items()
+    }
+    analyzed = {p: st for p, (_, st) in src_parts.items() if st and "rows" in st}
+    assert {p: got["partitions"].get(p, [0, None])[1] for p in analyzed} == analyzed
     con = duckdb.connect()
     want = con.execute(
         f"SELECT n_regionkey, COUNT(*) AS n, MIN(n_name) "
@@ -147,6 +196,7 @@ def _import_in_pristine_process(spark, sf_dir, tmp_path, catalog: str) -> None:
     ).fetchone()[0]
     assert got["urgent"] == want_urgent, (got["urgent"], want_urgent)
     assert os.path.isdir(SCRATCH) or True  # parent-side scratch untouched invariant
+    return src_parts
 
 
 def test_manifest_imports_into_pristine_process(spark, sf_dir, tmp_path):
@@ -159,6 +209,31 @@ def test_manifest_imports_into_pristine_hive_catalog(spark, sf_dir, tmp_path):
     and the concurrent per-table replay go through HiveExternalCatalog
     (its Derby metastore and derby.log land in ``tmp_path``)."""
     _import_in_pristine_process(spark, sf_dir, tmp_path, "hive")
+
+
+@pytest.mark.parametrize("catalog", ["in-memory", "hive"])
+def test_relocated_and_analyzed_partitions_migrate(spark, sf_dir, tmp_path, catalog):
+    """A partition registered at its own directory (a '%' in its name)
+    reads the source's rows on the target, not the empty default path,
+    and a partition analyzed on the source arrives with the same
+    statistics, under both catalogs."""
+    moved, part = tmp_path / "re%located", f"{_SRC_DB}.orders_part"
+
+    def mutate():
+        spark.table(part).where("o_orderpriority = '1-URGENT'").drop(
+            "o_orderpriority"
+        ).write.parquet(str(moved))
+        spark.sql(
+            f"ALTER TABLE {part} ADD PARTITION (o_orderpriority = '7-MOVED') "
+            f"LOCATION {_sql_literal(str(moved))}"
+        )
+        spark.sql(
+            f"ANALYZE TABLE {part} PARTITION (o_orderpriority = '2-HIGH') COMPUTE STATISTICS"
+        )
+
+    src = _import_in_pristine_process(spark, sf_dir, tmp_path, catalog, mutate)
+    assert src["7-MOVED"][0] == src["1-URGENT"][0] > 0
+    assert src["2-HIGH"][1].endswith(f" bytes, {src['2-HIGH'][0]} rows"), src["2-HIGH"]
 
 
 def test_partition_chunks_register_every_partition(spark, sf_dir, monkeypatch):
@@ -187,7 +262,9 @@ def test_partition_chunks_register_every_partition(spark, sf_dir, monkeypatch):
             d: sorted(r[0] for r in spark.sql(f"SHOW PARTITIONS {d}.{M._PART_TABLE}").collect())
             for d in (_SRC_DB, db)
         }
-        assert specs[db] == specs[_SRC_DB] == entry["partitions"]
+        assert specs[db] == specs[_SRC_DB] == sorted(
+            M._partition_path(p["spec"]) for p in entry["partitions"]
+        )
         values = spark.sql(
             f"SELECT DISTINCT {M._PART_COL} FROM {_SRC_DB}.{M._PART_TABLE}"
         ).collect()
@@ -206,17 +283,51 @@ def test_partition_chunks_register_every_partition(spark, sf_dir, monkeypatch):
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
-def test_spec_to_ddl_unescapes_hive_path_encoding():
-    """SHOW PARTITIONS returns path-ESCAPED specs; ADD PARTITION takes
-    literal values (round-5 ADVICE — verbatim replay double-escapes)."""
+def test_spec_to_ddl_quotes_catalog_values_verbatim():
+    """The catalog's partition specs hold the real (unescaped) values;
+    ADD PARTITION takes them as literals, never through a ``%XX``
+    decoder (round-5 ADVICE — an escaped replay registers another
+    value), so a value spelled ``x%2Fy`` replays as itself."""
     from yc_data_proc_metadata_import_spark.plans.metadata import _spec_to_ddl
 
-    assert _spec_to_ddl("p=1-URGENT") == "(`p`='1-URGENT')"
-    assert _spec_to_ddl("p=6-SPECIAL %25PCT") == "(`p`='6-SPECIAL %PCT')"
-    assert _spec_to_ddl("p=a b%3Ac") == "(`p`='a b:c')"
-    assert _spec_to_ddl("p=x%2Fy/q=7") == "(`p`='x/y', `q`='7')"
+    assert _spec_to_ddl({"p": "1-URGENT"}) == "(`p`='1-URGENT')"
+    assert _spec_to_ddl({"p": "6-SPECIAL %PCT"}) == "(`p`='6-SPECIAL %PCT')"
+    assert _spec_to_ddl({"p": "a b:c"}) == "(`p`='a b:c')"
+    assert _spec_to_ddl({"p": "x/y", "q": "7"}) == "(`p`='x/y', `q`='7')"
+    assert _spec_to_ddl({"p": "x%2Fy"}) == "(`p`='x%2Fy')"
     # a quote inside the value is doubled for the SQL literal
-    assert _spec_to_ddl("p=o%27neil") == "(`p`='o''neil')"
+    assert _spec_to_ddl({"p": "o'neil"}) == "(`p`='o''neil')"
+
+
+def test_partition_path_escapes_as_spark_does(spark):
+    """The default partition directory the export compares a partition's
+    location with escapes every character Spark's own
+    ``escapePathName`` escapes, and no other."""
+    from yc_data_proc_metadata_import_spark.plans.metadata import _partition_path
+
+    chars = "".join(map(chr, range(1, 256)))
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    assert _partition_path({"p": chars}) == f"p={utils.escapePathName(chars)}"
+    assert _partition_path({"a b": "", "q": "x%2Fy"}) == "a b=__HIVE_DEFAULT_PARTITION__/q=x%252Fy"
+
+
+def test_missing_catalog_field_raises_value_error(spark, roundtrip, monkeypatch):
+    """A catalog JSON without a field the manifest maps (a Spark upgrade
+    that renamed a case-class field) raises a ``ValueError`` naming it
+    instead of writing a wrong manifest."""
+    from yc_data_proc_metadata_import_spark.plans import metadata as M
+
+    real = M.catalog_json
+
+    def renamed(spark, obj):
+        got = real(spark, obj)
+        for t in got:
+            t.pop("partitionColumnNames", None)
+        return got
+
+    monkeypatch.setattr(M, "catalog_json", renamed)
+    with pytest.raises(ValueError, match="partitionColumnNames"):
+        export_manifest(spark, _RT_SRC)
 
 
 def test_view_requalification_is_identifier_boundary():
@@ -334,6 +445,11 @@ def test_manifest_location_validation():
     assert not _manifest_locations_exist(
         [{"location": "file:/nonexistent/reaped_fixture_dir"}]
     )
+    # a partition's custom location counts too; a default one has none
+    table = {"location": f"file:{SCRATCH}", "partitions": [{"spec": {"p": "a"}}]}
+    assert _manifest_locations_exist([table])
+    moved = {"spec": {"p": "b"}, "location": "file:/nonexistent/reaped_partition_dir"}
+    assert not _manifest_locations_exist([dict(table, partitions=[moved])])
 
 
 # A namespace holding what Spark's human-readable catalog output cannot
@@ -498,7 +614,8 @@ def test_import_starts_no_spark_job(spark, roundtrip, count_jobs):
         _, jobs = count_jobs(lambda: import_manifest(spark.newSession(), manifest, db))
         assert jobs == 0, f"import_manifest started {jobs} Spark job(s)"
         odd = {e["table"]: e for e in manifest}["odd"]
-        assert read_stats(spark, db, "odd") == odd["statistics"]
+        got = {e["table"]: e for e in export_manifest(spark, db)}["odd"]
+        assert got["statistics"] == odd["statistics"]
     finally:
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
@@ -618,10 +735,35 @@ def test_statistics_replay_matches_analyze_across_types(spark, tmp_path):
         assert plan[dst] == plan[src]
         assert set(plan[src][2]) == set(_TYPED_COLS)
 
-        replayed = read_stats(spark, dst, "typed")
+        replayed = export_manifest(spark, dst)[0]["statistics"]
         assert replayed == stats
         _analyze_typed(spark, f"{dst}.typed")
-        assert read_stats(spark, dst, "typed") == replayed
+        assert export_manifest(spark, dst)[0]["statistics"] == replayed
     finally:
         for db in (dst, src):
             spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+
+def test_meta_diff_reports_partition_location_drift(spark, sf_dir, tmp_path):
+    """A partition of the drifted copy moved with ``SET LOCATION`` is one
+    more drift row, ``partition_locations``, beside meta_diff's four."""
+    from yc_data_proc_metadata_import_spark.plans import metadata as M
+
+    base = [tuple(r) for r in M.meta_diff(spark, sf_dir).collect()]
+    assert len(base) == 4
+    spark.sql(
+        f"ALTER TABLE {M._DIFF_DB}.{M._PART_TABLE} PARTITION ({M._PART_COL} = '1-URGENT') "
+        f"SET LOCATION {_sql_literal(str(tmp_path))}"
+    )
+    rows = M._diff_manifests(
+        export_manifest(spark, _SRC_DB), export_manifest(spark, M._DIFF_DB), _SRC_DB, M._DIFF_DB
+    )
+    assert sorted(set(rows) - set(base)) == [
+        (
+            M._PART_TABLE,
+            "partition_locations",
+            "",
+            f"(`{M._PART_COL}`='1-URGENT') file:{tmp_path}",
+        )
+    ]
+    assert len(rows) == 5

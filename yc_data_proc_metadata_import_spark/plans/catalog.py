@@ -20,6 +20,7 @@ Design rules:
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
@@ -38,7 +39,8 @@ def describe(spark: SparkSession, name: str) -> dict:
     """One catalog object as structured data: ``type``, ``columns``,
     ``location``, ``table_properties``, ``partition_columns``,
     ``comment``, ``view_text`` and ``statistics`` of ``DESCRIBE TABLE
-    EXTENDED ... AS JSON``. Every table-level catalog read goes through here, so nothing
+    EXTENDED ... AS JSON``, for the keys whose output is the description
+    itself (the bulk export reads ``catalog_json`` instead), so nothing
     parses Spark's human-readable catalog output. ``collect()`` rather
     than ``first()``: the latter plans an extra limit on every call."""
     return json.loads(
@@ -46,8 +48,25 @@ def describe(spark: SparkSession, name: str) -> dict:
     )
 
 
-# Manifest field -> ``CatalogColumnStat.toMap`` key of one column's
-# statistics; min and max stay in the catalog's stored (UTC) string form.
+@functools.cache
+def _mapper(gateway):
+    """Jackson with its Scala module, both on Spark's classpath: it
+    serializes catalog case classes. Built once per JVM (thread-safe)."""
+    scala = getattr(gateway.jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+    return gateway.jvm.com.fasterxml.jackson.databind.ObjectMapper().registerModule(
+        getattr(scala, "MODULE$")
+    )
+
+
+def catalog_json(spark: SparkSession, obj):
+    """A JVM catalog object (or a Seq of them) as parsed JSON, serialized
+    on the JVM in one py4j call rather than one call per field."""
+    return json.loads(_mapper(spark.sparkContext._gateway).writeValueAsString(obj))
+
+
+# Manifest field -> ``CatalogColumnStat`` field (and ``toMap`` key) of one
+# column's statistics; min and max stay in the catalog's stored (UTC)
+# string form.
 _COLUMN_STAT_KEYS = {
     "distinct": "distinctCount",
     "nulls": "nullCount",
@@ -56,10 +75,9 @@ _COLUMN_STAT_KEYS = {
     "avg_len": "avgLen",
     "max_len": "maxLen",
 }
-_INT_STATS = {"distinct", "nulls", "avg_len", "max_len"}
 # Fields every table's and every column's statistics carry; "NULL" marks
 # a column value the catalog does not hold (string columns have no
-# min/max). A column's ``histogram`` is optional.
+# min/max). A column's ``histogram`` ({height, bins}) is optional.
 TABLE_STAT_FIELDS = ("row_count", "size_in_bytes", "columns")
 COLUMN_STAT_FIELDS = tuple(_COLUMN_STAT_KEYS)
 
@@ -69,50 +87,31 @@ def _table_ident(spark: SparkSession, db: str, table: str):
     return jvm.org.apache.spark.sql.catalyst.TableIdentifier(table, jvm.scala.Some(db))
 
 
-def read_stats(spark: SparkSession, db: str, table: str) -> dict:
-    """The statistics ANALYZE stored for ``db.table``, read from the
-    session catalog in one ``getTableMetadata`` call: ``{"row_count",
-    "size_in_bytes", "columns": {col: {distinct, nulls, min, max,
-    avg_len, max_len[, histogram]}}}``, or an empty dict when the table
-    holds no row count. No SQL runs and no data is read."""
-    opt = spark._jsparkSession.sessionState().catalog().getTableMetadata(
-        _table_ident(spark, db, table)
-    ).stats()
-    if not opt.isDefined() or not opt.get().rowCount().isDefined():
+def stats_from_json(stats: dict | None) -> dict:
+    """A ``catalog_json`` ``CatalogStatistics`` in the manifest's form,
+    ``{"row_count", "size_in_bytes", "columns": {col: fields}}``, or {}
+    when it holds no row count (ANALYZE did not store it)."""
+    if not stats or stats["rowCount"] is None:
         return {}
-    stats = opt.get()
-    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
     columns = {}
-    for col, col_stat in sorted(conv.asJava(stats.colStats()).items()):
-        stored = dict(conv.asJava(col_stat.toMap(col)))
-        fields = columns[col] = {}
-        for field, key in _COLUMN_STAT_KEYS.items():
-            v = stored.get(f"{col}.{key}", "NULL")
-            fields[field] = int(v) if field in _INT_STATS and v != "NULL" else v
-        if f"{col}.histogram" in stored:
-            fields["histogram"] = stored[f"{col}.histogram"]
-    # scala BigInts reach Python as ints
-    return {
-        "row_count": stats.rowCount().get(),
-        "size_in_bytes": stats.sizeInBytes(),
-        "columns": columns,
-    }
+    for col, cs in sorted(stats["colStats"].items()):
+        columns[col] = {f: "NULL" if cs[k] is None else cs[k] for f, k in _COLUMN_STAT_KEYS.items()}
+        if cs["histogram"] is not None:
+            columns[col]["histogram"] = cs["histogram"]
+    return {"row_count": stats["rowCount"], "size_in_bytes": stats["sizeInBytes"], "columns": columns}
 
 
-def write_stats(spark: SparkSession, db: str, table: str, stats: dict) -> None:
-    """Store ``stats`` (the ``read_stats`` form) as the statistics of
-    ``db.table`` with one ``SessionCatalog.alterTableStats`` call, as
-    ANALYZE would have stored them: no SQL runs and no data is read."""
+def _jvm_statistics(spark: SparkSession, name: str, stats: dict):
+    """``stats`` (the ``stats_from_json`` form) as the JVM
+    ``CatalogStatistics`` ANALYZE would have stored for ``name``."""
     jvm = spark._jvm
     catalog = jvm.org.apache.spark.sql.catalyst.catalog
-    to_map = jvm.org.apache.spark.api.python.PythonUtils.toScalaMap
     version = str(catalog.CatalogColumnStat.VERSION())
-    name = f"{db}.{table}"
 
     def parse(col: str, stored: dict):
         keyed = {f"{col}.{k}": str(v) for k, v in stored.items()}
         opt = catalog.CatalogColumnStat.fromMap(
-            name, col, to_map({f"{col}.version": version, **keyed})
+            name, col, jvm.PythonUtils.toScalaMap({f"{col}.version": version, **keyed})
         )
         if not opt.isDefined():
             raise ValueError(f"unparseable statistics of {name}.{col}: {stored}")
@@ -124,7 +123,11 @@ def write_stats(spark: SparkSession, db: str, table: str, stats: dict) -> None:
             key: fields[f] for f, key in _COLUMN_STAT_KEYS.items() if fields[f] != "NULL"
         }
         if "histogram" in fields:
-            stored["histogram"] = fields["histogram"]
+            logical = "org.apache.spark.sql.catalyst.plans.logical"
+            hist = _mapper(spark.sparkContext._gateway).readValue(
+                json.dumps(fields["histogram"]), jvm.java.lang.Class.forName(f"{logical}.Histogram")
+            )
+            stored["histogram"] = getattr(jvm, f"{logical}.HistogramSerializer").serialize(hist)
         columns[col] = parse(col, stored)
     # CatalogStatistics takes scala BigInts, which py4j cannot pass. A
     # parsed carrier column stat holds both counts as Option[BigInt] on
@@ -133,16 +136,34 @@ def write_stats(spark: SparkSession, db: str, table: str, stats: dict) -> None:
     carrier = parse(
         "c", {"distinctCount": stats["size_in_bytes"], "nullCount": stats["row_count"]}
     )
-    new = (
+    return (
         carrier.distinctCount()
         .map(catalog.CatalogStatistics.curried())
         .get()
         .apply(carrier.nullCount())
-        .apply(to_map(columns))
+        .apply(jvm.PythonUtils.toScalaMap(columns))
     )
-    spark._jsparkSession.sessionState().catalog().alterTableStats(
-        _table_ident(spark, db, table), jvm.scala.Some(new)
-    )
+
+
+def write_stats(spark: SparkSession, db: str, table: str, stats: dict, partitions=()) -> None:
+    """Store each ``(spec, stats)`` of ``partitions`` on that partition of
+    ``db.table`` with one ``SessionCatalog.alterPartitions`` call, then
+    ``stats`` (the ``stats_from_json`` form) as the table's with one
+    ``alterTableStats`` call, as ANALYZE would have stored them: no SQL
+    runs and no data is read."""
+    jvm, catalog = spark._jvm, spark._jsparkSession.sessionState().catalog()
+    ident, name = _table_ident(spark, db, table), f"{db}.{table}"
+    parts = []
+    for spec, part_stats in partitions:
+        p = catalog.getPartition(ident, jvm.PythonUtils.toScalaMap(spec))
+        new = jvm.scala.Some(_jvm_statistics(spark, name, part_stats))
+        parts.append(
+            p.copy(p.spec(), p.storage(), p.parameters(), p.createTime(), p.lastAccessTime(), new)
+        )
+    if parts:
+        catalog.alterPartitions(ident, jvm.PythonUtils.toSeq(parts))
+    if stats:
+        catalog.alterTableStats(ident, jvm.scala.Some(_jvm_statistics(spark, name, stats)))
 
 
 # Bump whenever the parts_orders derivation below changes — re-keys the
@@ -150,10 +171,11 @@ def write_stats(spark: SparkSession, db: str, table: str, stats: dict) -> None:
 _PARTS_VERSION = "2"  # v2: added the escape-pinning SPECIAL partition
 
 # A partition VALUE containing a space and a '%' — '%' is in Hive's
-# escapePathName set, so its directory name and SHOW PARTITIONS spec read
-# '6-SPECIAL %25PCT'. Any code that replays the escaped spec verbatim
-# double-escapes the value and pruned queries on the real value silently
-# return nothing (round-5 ADVICE, pinned by plans/metadata._spec_to_ddl).
+# escapePathName set, so its directory name reads '6-SPECIAL %25PCT' (and
+# its location URI '6-SPECIAL%20%2525PCT'). Code that replays an escaped
+# form as the value double-escapes it, and pruned queries on the real
+# value silently return nothing; code that mistakes the encoded location
+# for a custom one pins the partition to a path. Pinned by meta_roundtrip.
 SPECIAL_PRIO = "6-SPECIAL %PCT"
 # Deterministic, SF-independent membership rule for the synthetic
 # partition's rows, reproducible in pure SQL for the oracles.

@@ -18,16 +18,19 @@ import sys
 import duckdb
 import pytest
 
-from yc_data_proc_metadata_import_spark.plans.catalog import describe
+from yc_data_proc_metadata_import_spark.plans.catalog import describe, parts_orders_fixture
 from yc_data_proc_metadata_import_spark.plans.metadata import (
+    _DST_DB,
     _SRC_DB,
     _build_source,
     _requalify_view_text,
     export_manifest,
     import_manifest,
+    meta_export,
+    meta_import,
 )
 from yc_data_proc_metadata_import_spark.session import conf_scope
-from yc_data_proc_metadata_import_spark.sources.io import SCRATCH, TABLES, table_path
+from yc_data_proc_metadata_import_spark.sources.io import TABLES, table_path
 
 _IMPORTER = """
 import json, sys
@@ -140,10 +143,18 @@ def _partition_facts(spark, db: str) -> dict:
     return facts
 
 
+def _tree(root: str) -> list:
+    """Every directory under ``root`` with its sorted subdirectory and
+    file names."""
+    return sorted((os.path.relpath(d, root), sorted(ds), sorted(fs)) for d, ds, fs in os.walk(root))
+
+
 def _import_in_pristine_process(spark, sf_dir, tmp_path, catalog: str, mutate=None) -> dict:
     """Export the source namespace, after ``mutate()`` if given, import
-    it in a pristine process and check what it reads there; returns the
-    source's ``_partition_facts``. A mutated source is rebuilt after."""
+    it in a pristine process and check what it reads there and that the
+    import wrote nothing into the shared partitioned table's storage;
+    returns the source's ``_partition_facts``. A mutated source is
+    rebuilt after."""
     _build_source(spark, sf_dir)
     try:
         if mutate:
@@ -156,6 +167,8 @@ def _import_in_pristine_process(spark, sf_dir, tmp_path, catalog: str, mutate=No
     manifest_path = tmp_path / "manifest.json"
     manifest_path.write_text(json.dumps(manifest))
     out_path = tmp_path / "result.json"
+    shared = parts_orders_fixture(spark, sf_dir)
+    before = _tree(shared)
 
     env = dict(os.environ, PYTHONPATH=os.path.dirname(os.path.dirname(__file__)))
     subprocess.run(
@@ -174,6 +187,9 @@ def _import_in_pristine_process(spark, sf_dir, tmp_path, catalog: str, mutate=No
         timeout=300,
     )
 
+    # Only metadata crosses: the import creates, removes or renames no
+    # file or directory in the storage the two catalogs share.
+    assert _tree(shared) == before
     got = json.loads(out_path.read_text())
     # Every partition reads the source's rows on the target, and an
     # analyzed partition (its statistics hold a row count) reads the
@@ -195,7 +211,6 @@ def _import_in_pristine_process(spark, sf_dir, tmp_path, catalog: str, mutate=No
         f"WHERE o_orderpriority = '1-URGENT'"
     ).fetchone()[0]
     assert got["urgent"] == want_urgent, (got["urgent"], want_urgent)
-    assert os.path.isdir(SCRATCH) or True  # parent-side scratch untouched invariant
     return src_parts
 
 
@@ -234,6 +249,22 @@ def test_relocated_and_analyzed_partitions_migrate(spark, sf_dir, tmp_path, cata
     src = _import_in_pristine_process(spark, sf_dir, tmp_path, catalog, mutate)
     assert src["7-MOVED"][0] == src["1-URGENT"][0] > 0
     assert src["2-HIGH"][1].endswith(f" bytes, {src['2-HIGH'][0]} rows"), src["2-HIGH"]
+
+
+def test_meta_keys_replay_the_live_catalog(spark, sf_dir):
+    """The meta_* keys export the source catalog as it stands on each
+    call: a property changed on the source after one key ran reaches the
+    target on the next."""
+    meta_export(spark, sf_dir)
+    try:
+        spark.sql(
+            f"ALTER TABLE {_SRC_DB}.nation_ext SET TBLPROPERTIES ('quality_tier'='silver')"
+        )
+        meta_import(spark, sf_dir)
+        got = spark.sql(f"SHOW TBLPROPERTIES {_DST_DB}.nation_ext ('quality_tier')").collect()
+        assert [r.value for r in got] == ["silver"]
+    finally:
+        _build_source(spark, sf_dir)
 
 
 def test_partition_chunks_register_every_partition(spark, sf_dir, monkeypatch):
@@ -365,91 +396,6 @@ def test_view_requalification_handles_backtick_qualifier():
     )
     # a backticked lookalike that merely embeds the name survives
     assert sub("FROM `my_eng_meta_src`.t") == "FROM `my_eng_meta_src`.t"
-
-
-def test_manifest_path_reaps_stale_versions(tmp_path, monkeypatch):
-    """A manifest file from an older format version (or the unversioned
-    pre-round-6 name) must be reaped, not replayed: a .scratch surviving
-    a code update would otherwise satisfy meta_import with a
-    stale-by-code manifest (code-review round 6 — the r3/r4 hazard
-    class, at the manifest level)."""
-    from yc_data_proc_metadata_import_spark.plans import metadata as M
-
-    monkeypatch.setattr("yc_data_proc_metadata_import_spark.sources.io.SCRATCH", str(tmp_path))
-    sf = "/root/testdata/sf0.001"
-    for stale in ("meta_manifest_sf0_001_deadbeef00.json",
-                  "meta_manifest_v0_sf0_001_deadbeef00.json"):
-        (tmp_path / stale).write_text("[]")
-    path = M._manifest_path(sf)
-    assert f"_v{M._MANIFEST_VERSION}_" in os.path.basename(path)
-    left = [f for f in os.listdir(tmp_path) if f.startswith("meta_manifest_")]
-    assert left == [], f"stale manifests not reaped: {left}"
-
-
-def test_manifest_reaper_spares_other_sf_and_inflight_staging(
-    tmp_path, monkeypatch
-):
-    """The reaper must retire only SAME-SF stale siblings. Another scale
-    factor's committed manifest is a live artifact — a concurrent
-    session (bench at sf0.1 beside the correctness gate at sf0.01) may
-    be between its export and import, and reaping it injects a spurious
-    re-export into that run (observed: round-8 concurrent cold-start
-    bench + full-registry rehearsal, meta_import ENOENT). In-flight
-    ``*.json.tmp<pid>`` staging files are equally off-limits."""
-    from yc_data_proc_metadata_import_spark.plans import metadata as M
-
-    monkeypatch.setattr(
-        "yc_data_proc_metadata_import_spark.sources.io.SCRATCH", str(tmp_path)
-    )
-    sf = "/root/testdata/sf0.001"
-    other_sf = f"meta_manifest_v{M._MANIFEST_VERSION}_sf0_01_0e19330547.json"
-    # sanitized basename EMBEDS this SF's base ('sf0_001_old') — substring
-    # containment would misclassify it as a same-SF stale sibling
-    embedded_base = (
-        f"meta_manifest_v{M._MANIFEST_VERSION}_sf0_001_old_abcdef0123.json"
-    )
-    same_sf_stale = (
-        f"meta_manifest_v{M._MANIFEST_VERSION}_sf0_001_deadbeef00.json"
-    )
-    # sanitized basename ENDS WITH this SF's base ('old_sf0.001') — a
-    # greedy version group (_v\w+ swallowing '_v2_old') would full-match
-    # it as same-SF; the version group is strictly numeric (round-8
-    # ADVICE, the prefix-direction twin of embedded_base)
-    suffixed_base = (
-        f"meta_manifest_v{M._MANIFEST_VERSION}_old_sf0_001_abcdef0123.json"
-    )
-    # version-dead files are unreadable by EVERY session running this
-    # code, so they are reaped regardless of scale factor
-    other_sf_dead_version = "meta_manifest_v0_sf0_01_0e19330547.json"
-    inflight = same_sf_stale + ".tmp99999"
-    survivors = (other_sf, embedded_base, suffixed_base, inflight)
-    for name in survivors + (same_sf_stale, other_sf_dead_version):
-        (tmp_path / name).write_text("[]")
-    M._manifest_path(sf)
-    left = sorted(
-        f for f in os.listdir(tmp_path) if f.startswith("meta_manifest_")
-    )
-    assert left == sorted(survivors), f"reaper touched the wrong files: {left}"
-
-
-def test_manifest_location_validation():
-    """A manifest naming a vanished table location is not replayable —
-    meta_import must re-export instead of registering tables over a
-    reaped fixture dir."""
-    from yc_data_proc_metadata_import_spark.plans.metadata import (
-        _manifest_locations_exist,
-    )
-
-    assert _manifest_locations_exist([{"location": None}, {"location": ""}])
-    assert _manifest_locations_exist([{"location": f"file:{SCRATCH}"}])
-    assert not _manifest_locations_exist(
-        [{"location": "file:/nonexistent/reaped_fixture_dir"}]
-    )
-    # a partition's custom location counts too; a default one has none
-    table = {"location": f"file:{SCRATCH}", "partitions": [{"spec": {"p": "a"}}]}
-    assert _manifest_locations_exist([table])
-    moved = {"spec": {"p": "b"}, "location": "file:/nonexistent/reaped_partition_dir"}
-    assert not _manifest_locations_exist([dict(table, partitions=[moved])])
 
 
 # A namespace holding what Spark's human-readable catalog output cannot

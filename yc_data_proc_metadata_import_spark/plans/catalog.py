@@ -23,6 +23,7 @@ from __future__ import annotations
 import functools
 import json
 import os
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,19 +50,27 @@ def describe(spark: SparkSession, name: str) -> dict:
 
 
 @functools.cache
-def _mapper(gateway):
-    """Jackson with its Scala module, both on Spark's classpath: it
-    serializes catalog case classes. Built once per JVM (thread-safe)."""
-    scala = getattr(gateway.jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
-    return gateway.jvm.com.fasterxml.jackson.databind.ObjectMapper().registerModule(
-        getattr(scala, "MODULE$")
+def _jvm_objects(gateway) -> SimpleNamespace:
+    """The JVM objects the migration calls, resolved once per JVM: py4j
+    pays a round trip per package name on every resolution. ``mapper``
+    is Jackson with its Scala module; it serializes catalog case classes."""
+    jvm, jackson = gateway.jvm, gateway.jvm.com.fasterxml.jackson
+    catalyst = jvm.org.apache.spark.sql.catalyst
+    logical, stat = catalyst.plans.logical, catalyst.catalog
+    scala = getattr(getattr(jackson.module.scala, "DefaultScalaModule$"), "MODULE$")
+    return SimpleNamespace(
+        mapper=jackson.databind.ObjectMapper().registerModule(scala),
+        TableIdentifier=catalyst.TableIdentifier, PythonUtils=jvm.PythonUtils,
+        Some=jvm.scala.Some, empty=jvm.scala.Option.empty(),
+        CatalogColumnStat=stat.CatalogColumnStat, CatalogStatistics=stat.CatalogStatistics,
+        HistogramSerializer=logical.HistogramSerializer, Histogram=logical.Histogram._java_lang_class,
     )
 
 
 def catalog_json(spark: SparkSession, obj):
     """A JVM catalog object (or a Seq of them) as parsed JSON, serialized
     on the JVM in one py4j call rather than one call per field."""
-    return json.loads(_mapper(spark.sparkContext._gateway).writeValueAsString(obj))
+    return json.loads(_jvm_objects(spark.sparkContext._gateway).mapper.writeValueAsString(obj))
 
 
 # Manifest field -> ``CatalogColumnStat`` field (and ``toMap`` key) of one
@@ -82,11 +91,6 @@ TABLE_STAT_FIELDS = ("row_count", "size_in_bytes", "columns")
 COLUMN_STAT_FIELDS = tuple(_COLUMN_STAT_KEYS)
 
 
-def _table_ident(spark: SparkSession, db: str, table: str):
-    jvm = spark._jvm
-    return jvm.org.apache.spark.sql.catalyst.TableIdentifier(table, jvm.scala.Some(db))
-
-
 def stats_from_json(stats: dict | None) -> dict:
     """A ``catalog_json`` ``CatalogStatistics`` in the manifest's form,
     ``{"row_count", "size_in_bytes", "columns": {col: fields}}``, or {}
@@ -104,13 +108,12 @@ def stats_from_json(stats: dict | None) -> dict:
 def _jvm_statistics(spark: SparkSession, name: str, stats: dict):
     """``stats`` (the ``stats_from_json`` form) as the JVM
     ``CatalogStatistics`` ANALYZE would have stored for ``name``."""
-    jvm = spark._jvm
-    catalog = jvm.org.apache.spark.sql.catalyst.catalog
-    version = str(catalog.CatalogColumnStat.VERSION())
+    jvm = _jvm_objects(spark.sparkContext._gateway)
+    version = str(jvm.CatalogColumnStat.VERSION())
 
     def parse(col: str, stored: dict):
         keyed = {f"{col}.{k}": str(v) for k, v in stored.items()}
-        opt = catalog.CatalogColumnStat.fromMap(
+        opt = jvm.CatalogColumnStat.fromMap(
             name, col, jvm.PythonUtils.toScalaMap({f"{col}.version": version, **keyed})
         )
         if not opt.isDefined():
@@ -123,11 +126,8 @@ def _jvm_statistics(spark: SparkSession, name: str, stats: dict):
             key: fields[f] for f, key in _COLUMN_STAT_KEYS.items() if fields[f] != "NULL"
         }
         if "histogram" in fields:
-            logical = "org.apache.spark.sql.catalyst.plans.logical"
-            hist = _mapper(spark.sparkContext._gateway).readValue(
-                json.dumps(fields["histogram"]), jvm.java.lang.Class.forName(f"{logical}.Histogram")
-            )
-            stored["histogram"] = getattr(jvm, f"{logical}.HistogramSerializer").serialize(hist)
+            hist = jvm.mapper.readValue(json.dumps(fields["histogram"]), jvm.Histogram)
+            stored["histogram"] = jvm.HistogramSerializer.serialize(hist)
         columns[col] = parse(col, stored)
     # CatalogStatistics takes scala BigInts, which py4j cannot pass. A
     # parsed carrier column stat holds both counts as Option[BigInt] on
@@ -138,7 +138,7 @@ def _jvm_statistics(spark: SparkSession, name: str, stats: dict):
     )
     return (
         carrier.distinctCount()
-        .map(catalog.CatalogStatistics.curried())
+        .map(jvm.CatalogStatistics.curried())
         .get()
         .apply(carrier.nullCount())
         .apply(jvm.PythonUtils.toScalaMap(columns))
@@ -151,19 +151,20 @@ def write_stats(spark: SparkSession, db: str, table: str, stats: dict, partition
     ``stats`` (the ``stats_from_json`` form) as the table's with one
     ``alterTableStats`` call, as ANALYZE would have stored them: no SQL
     runs and no data is read."""
-    jvm, catalog = spark._jvm, spark._jsparkSession.sessionState().catalog()
-    ident, name = _table_ident(spark, db, table), f"{db}.{table}"
+    jvm = _jvm_objects(spark.sparkContext._gateway)
+    catalog = spark._jsparkSession.sessionState().catalog()
+    ident, name = jvm.TableIdentifier(table, jvm.Some(db)), f"{db}.{table}"
     parts = []
     for spec, part_stats in partitions:
         p = catalog.getPartition(ident, jvm.PythonUtils.toScalaMap(spec))
-        new = jvm.scala.Some(_jvm_statistics(spark, name, part_stats))
+        new = jvm.Some(_jvm_statistics(spark, name, part_stats))
         parts.append(
             p.copy(p.spec(), p.storage(), p.parameters(), p.createTime(), p.lastAccessTime(), new)
         )
     if parts:
         catalog.alterPartitions(ident, jvm.PythonUtils.toSeq(parts))
     if stats:
-        catalog.alterTableStats(ident, jvm.scala.Some(_jvm_statistics(spark, name, stats)))
+        catalog.alterTableStats(ident, jvm.Some(_jvm_statistics(spark, name, stats)))
 
 
 # Bump whenever the parts_orders derivation below changes — re-keys the

@@ -55,3 +55,20 @@ def test_meta_warm_build_job_count(key, spark, sf_dir, count_jobs):
     QUERIES[key](spark, sf_dir)
     _, jobs = count_jobs(lambda: QUERIES[key](spark, sf_dir))
     assert jobs == META_JOBS[key], f"{key}: a warm build started {jobs} Spark job(s)"
+
+
+def test_bucketed_fresh_session_job_count(spark, sf_dir, count_jobs):
+    """With its bucketed fixtures on disk, bucketed_join_noshuffle in a
+    fresh session (no cached table schema) starts only the two footer
+    reads that type its tables' DDL, and a warm call starts none: it
+    registers its tables over the fixtures and writes nothing."""
+    from yc_data_proc_metadata_import_spark.sources.io import parquet_schema
+    from yc_data_proc_metadata_import_spark.utils import _drop_entries
+
+    key = "bucketed_join_noshuffle"
+    QUERIES[key](spark, sf_dir)
+    _drop_entries(parquet_schema)
+    _, jobs = count_jobs(lambda: QUERIES[key](spark, sf_dir))
+    assert jobs == 2, f"{key}: a fresh-session build started {jobs} Spark job(s), want 2"
+    _, jobs = count_jobs(lambda: QUERIES[key](spark, sf_dir))
+    assert jobs == 0, f"{key}: a warm build started {jobs} Spark job(s)"

@@ -17,11 +17,14 @@ from __future__ import annotations
 
 import os
 import shutil
+import subprocess
+import sys
 
 import pytest
 
 from yc_data_proc_metadata_import_spark.registry import QUERIES
 from yc_data_proc_metadata_import_spark.sources.io import (
+    SCRATCH,
     _fixture_dir,
     _sf_fingerprint,
     sf_tag,
@@ -140,20 +143,17 @@ def test_fingerprint_covers_nested_files(tmp_path):
     assert _sf_fingerprint(str(d)) != fp1
 
 
-def test_bucketed_warehouse_stale_cleanup(spark, sf_dir):
-    """bucketed_join_noshuffle must delete warehouse table copies whose
-    fingerprint suffix is stale (they live outside .scratch, so the
-    fixture-dir sibling cleanup can't reach them)."""
-    from yc_data_proc_metadata_import_spark.sources.io import sf_tag
-
+def test_bucketed_stale_fixture_cleanup(spark, sf_dir):
+    """bucketed_join_noshuffle's bucketed copies are ``_fixture_dir``
+    fixtures, so a copy (and its lock) at a stale fingerprint is reaped
+    when the key runs."""
     base, _fp = sf_tag(sf_dir).rsplit("_", 1)
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    wh_db = os.path.join(wh, "bucketed_db.db")
-    os.makedirs(wh_db, exist_ok=True)
-    stale = os.path.join(wh_db, f"orders_b_{base}_{'0' * 10}")
+    stale = os.path.join(SCRATCH, f"orders_b_{base}_{'0' * 10}")
     os.makedirs(stale, exist_ok=True)
+    open(f"{stale}.lock", "w").close()
     QUERIES["bucketed_join_noshuffle"](spark, sf_dir).count()
-    assert not os.path.exists(stale), "stale bucketed warehouse copy not cleaned"
+    assert not os.path.exists(stale), "stale bucketed fixture not cleaned"
+    assert not os.path.exists(f"{stale}.lock"), "stale bucketed lock not cleaned"
 
 
 def test_fixture_version_forces_rebuild(regen_sf):
@@ -192,25 +192,34 @@ def test_width_sibling_spared_stale_fp_reaped(regen_sf):
     concurrent session's live layout and must survive; a sibling at a
     STALE fingerprint is pre-regeneration debris and must be reaped at
     ANY width (previously width-suffixed dirs escaped reaping entirely
-    and accumulated across testdata regenerations)."""
+    and accumulated across testdata regenerations).  The same holds for
+    ``_materialize``'s lock files: a stale-fingerprint lock goes with
+    its dir, a current-fingerprint one is never touched."""
     cur = _fixture_dir("fpwidth_kind", regen_sf, width=32)
     assert cur.endswith("_w32"), cur
     base = cur[: -len("_w32")]
     other_width = base + "_w8"
-    os.makedirs(cur, exist_ok=True)
-    os.makedirs(other_width, exist_ok=True)
     prefix_dir, _fp = base.rsplit("_", 1)
     stale_w = f"{prefix_dir}_{'0' * 10}_w32"
     stale_other_w = f"{prefix_dir}_{'0' * 10}_w8"
     stale_bare = f"{prefix_dir}_{'0' * 10}"  # legacy hashed-width layout
-    for d in (stale_w, stale_other_w, stale_bare):
-        os.makedirs(d, exist_ok=True)
+    keep = (cur, other_width, f"{cur}.lock", f"{other_width}.lock", f"{base}.lock")
+    stale = (stale_w, stale_other_w, stale_bare, f"{stale_w}.lock", f"{stale_bare}.lock")
+    for d in keep + stale:
+        if d.endswith(".lock"):
+            open(d, "w").close()
+        else:
+            os.makedirs(d, exist_ok=True)
     assert _fixture_dir("fpwidth_kind", regen_sf, width=32) == cur
-    assert os.path.exists(other_width), "concurrent other-width layout reaped"
-    for d in (stale_w, stale_other_w, stale_bare):
+    for d in keep:
+        assert os.path.exists(d), f"current-fingerprint entry reaped: {d}"
+    for d in stale:
         assert not os.path.exists(d), f"stale-fingerprint sibling survived: {d}"
-    for d in (cur, other_width):
-        shutil.rmtree(d, ignore_errors=True)
+    for d in keep:
+        if d.endswith(".lock"):
+            os.remove(d)
+        else:
+            shutil.rmtree(d)
 
 
 def test_media_fixture_width_visible_in_name(spark, sf_dir):
@@ -280,10 +289,10 @@ def test_materialize_replaces_markerless_debris(tmp_path):
 def test_materialize_builds_once_across_threads(tmp_path):
     """Threads racing a cold fixture (at least three, and more than the
     cores): the writer runs exactly once, and ``out`` holds exactly that
-    writer's output (the threads of one process share a ``.tmp<pid>``
-    staging name, so an unlocked build lets them write into each other's
-    staging).  The scratch dir does not exist yet, as in a fresh
-    checkout."""
+    writer's output (the threads of one process share one staging name
+    under the process's run root, so an unlocked build lets them write
+    into each other's staging).  The scratch dir does not exist yet, as
+    in a fresh checkout."""
     import sys
     import threading
     import time
@@ -357,10 +366,10 @@ def test_materialize_failed_writer_leaves_no_marker(tmp_path):
 def test_concurrent_cold_fixture_build(spark, regen_sf, kind):
     """Three threads building one cold fixture through its real builder
     raise nothing, and the committed fixture holds the rows DuckDB
-    counts.  Unlocked, the threads of one process shared one
-    ``.tmp<pid>`` staging dir (parts_orders: a Py4JJavaError, or every
-    row twice), and an in-place writer's copies landed in ``out``
-    together (png_media: more rows than documents)."""
+    counts.  Unlocked, the threads of one process shared one staging
+    dir (parts_orders: a Py4JJavaError, or every row twice), and an
+    in-place writer's copies landed in ``out`` together (png_media:
+    more rows than documents)."""
     import threading
 
     import duckdb
@@ -411,53 +420,102 @@ def test_concurrent_cold_fixture_build(spark, regen_sf, kind):
     assert spark.read.parquet(out).count() == want
 
 
-def test_reap_scratch_orphans(monkeypatch, tmp_path):
-    """Dead builders' PID-suffixed staging dirs and legacy
-    pre-width-suffix layouts are reaped; live-PID staging, width-suffixed
-    layouts, and the one-time 3-batch fixture are left alone."""
-    import yc_data_proc_metadata_import_spark.sources.io as io_mod
+_BUILDER = """
+import os, sys, time
+from yc_data_proc_metadata_import_spark.sources import io
 
-    scratch = tmp_path / "scratch"
-    scratch.mkdir()
-    keep = [
-        f"docs_wide_sf0_01_ab12cd34ef_w32",      # current width-keyed layout
-        f"stream_events_sf0_01_ab12cd34ef_w32",  # current width-keyed layout
-        "stream_events_3b_sf0_01_ab12cd34ef",    # 3-batch fixture: no width rule
-        f"thing.tmp{os.getpid()}",               # live builder (this process)
-    ]
-    keep.append("stream_restart_stage_sf0_01_ab12cd34ef")  # live shared fixture
-    reap = [
-        "docs_wide_sf0_01_ab12cd34ef",           # legacy, pre-width-suffix
-        "stream_events_sf0_01_ab12cd34ef",       # legacy, pre-width-suffix
-        "stream_events_dup_sf0_01_ab12cd34ef",   # legacy, pre-width-suffix
-        "thing.tmp",                             # legacy fixed staging name
-        "thing.tmp999999999",                    # dead builder (pid_max < 2^22 + 1)
-        "checkpoints",                           # pre-relocation checkpoint root
-        "stream_rate_sf0_01_ab12cd34ef",         # pre-relocation per-run dirs
-        "stream_restart_src_sf0_01_ab12cd34ef",
-        "stream_restart_out_sf0_01_ab12cd34ef",
-        "stream_sink_parquet_sf0_01_ab12cd34ef",
-        "upsert_state_sf0_01_ab12cd34ef",
-    ]
-    # _materialize's flock files are PERMANENT (deleting one while a
-    # builder holds it would hand a second builder a fresh inode at
-    # the same path — both "locked" at once). The exclusion must win even
-    # over a name that would otherwise match a reap pattern (round-10
-    # ADVICE: enforce the invariant in code, not only a comment).
-    keep_locks = [
-        "csv_nation_sf0_01_ab12cd34ef.lock",
-        "thing.tmp999999999.lock",
-    ]
-    for d in keep + reap:
-        (scratch / d).mkdir()
-    for f in keep_locks:
-        (scratch / f).touch()
-    monkeypatch.setattr(io_mod, "SCRATCH", str(scratch))
-    monkeypatch.setattr(io_mod, "_ORPHANS_REAPED", False)
-    io_mod._reap_scratch_orphans()
-    for d in keep:
-        assert (scratch / d).exists(), f"wrongly reaped {d}"
-    for f in keep_locks:
-        assert (scratch / f).exists(), f"wrongly reaped lock {f}"
-    for d in reap:
-        assert not (scratch / d).exists(), f"orphan survived: {d}"
+io.SCRATCH, out, log, mode = sys.argv[1:]
+
+
+def writer(p):
+    with open(log, "a") as f:
+        f.write(f"{os.getpid()}\\n")
+    os.makedirs(p)
+    open(os.path.join(p, "part-0.parquet"), "w").close()
+    if mode == "crash":
+        os._exit(3)  # dies mid-build: no exception handler, no cleanup
+    time.sleep(0.5)  # hold the build open while the other builder arrives
+
+
+if mode == "race":
+    open(f"{log}.ready{os.getpid()}", "w").close()
+    while not os.path.exists(f"{log}.go"):
+        time.sleep(0.01)
+print(io._materialize(writer, out))
+"""
+
+
+def _builder(scratch, out, log, mode):
+    """A Spark-free process that calls ``_materialize`` with ``scratch``
+    as its ``.scratch``; its writer logs its pid to ``log``."""
+    env = dict(os.environ, PYTHONPATH=os.path.dirname(os.path.dirname(__file__)))
+    return subprocess.Popen(
+        [sys.executable, "-c", _BUILDER, str(scratch), str(out), str(log), mode],
+        env=env,
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+
+
+def _runs(scratch) -> dict:
+    """{run root: its entries} under ``scratch``."""
+    runs = scratch / "runs"
+    return {d: sorted(os.listdir(runs / d)) for d in os.listdir(runs)} if runs.exists() else {}
+
+
+def test_materialize_builds_once_across_processes(tmp_path):
+    """Two processes racing one cold ``out``: the writer runs once, both
+    calls return ``out``, and neither process's run root is left holding
+    staging."""
+    import time
+
+    scratch, log = tmp_path / "scratch", tmp_path / "calls"
+    out = scratch / "fix"
+    procs = [_builder(scratch, out, log, "race") for _ in range(2)]
+    deadline = time.monotonic() + 60
+    while len([f for f in os.listdir(tmp_path) if ".ready" in f]) < 2:
+        assert time.monotonic() < deadline, "builders never got ready"
+        time.sleep(0.01)
+    (tmp_path / "calls.go").touch()
+    outs = [p.communicate(timeout=60)[0].strip() for p in procs]
+    assert [p.returncode for p in procs] == [0, 0]
+    assert outs == [str(out), str(out)]
+    assert len(log.read_text().split()) == 1, "writer ran more than once"
+    assert sorted(os.listdir(out)) == ["_SUCCESS", "part-0.parquet"]
+    assert all(entries == [] for entries in _runs(scratch).values()), _runs(scratch)
+
+
+def test_crashed_builder_staging_reaped(tmp_path):
+    """A builder that dies inside its writer leaves its staging under its
+    ``runs/pid<N>``.  The next process's first run-root call removes it
+    (a live process's root is spared), and that process's
+    ``_materialize`` of the same ``out`` builds exactly once.  Fixture
+    dirs and lock files survive throughout."""
+    scratch, log = tmp_path / "scratch", tmp_path / "calls"
+    out = scratch / "fix"
+    other = scratch / "other_fixture"
+    other.mkdir(parents=True)
+    (other / "_SUCCESS").touch()
+    (scratch / "other_fixture.lock").touch()
+    live = scratch / "runs" / f"pid{os.getpid()}"
+    (live / "staging").mkdir(parents=True)
+
+    crashed = _builder(scratch, out, log, "crash")
+    crashed.communicate(timeout=60)
+    assert crashed.returncode == 3
+    dead = f"pid{crashed.pid}"
+    assert _runs(scratch)[dead] == ["fix"], _runs(scratch)
+    assert not (out / "_SUCCESS").exists()
+    survivors = ["fix.lock", "other_fixture", "other_fixture.lock", "runs"]
+    assert sorted(os.listdir(scratch)) == survivors
+
+    rebuilt = _builder(scratch, out, log, "build")
+    assert rebuilt.communicate(timeout=60)[0].strip() == str(out)
+    assert rebuilt.returncode == 0
+    assert log.read_text().split() == [str(crashed.pid), str(rebuilt.pid)]
+    runs = _runs(scratch)
+    assert dead not in runs, runs
+    assert runs[live.name] == ["staging"], runs
+    assert runs[f"pid{rebuilt.pid}"] == [], runs
+    assert sorted(os.listdir(out)) == ["_SUCCESS", "part-0.parquet"]
+    assert sorted(os.listdir(scratch)) == ["fix"] + survivors

@@ -33,10 +33,7 @@ from yc_data_proc_metadata_import_spark.utils import (
 def _events_ts_converted(df):
     """The logical ``events.ts`` that ``load`` documents, applied to a
     plain read."""
-    ts_type = df.schema["ts"].dataType.simpleString()
-    if ts_type == "bigint":
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if ts_type == "timestamp":
+    if df.schema["ts"].dataType.simpleString() == "timestamp":
         return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     return df
 

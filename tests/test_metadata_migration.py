@@ -171,7 +171,7 @@ def _import_in_pristine_process(spark, sf_dir, tmp_path, catalog: str, mutate=No
     before = _tree(shared)
 
     env = dict(os.environ, PYTHONPATH=os.path.dirname(os.path.dirname(__file__)))
-    subprocess.run(
+    proc = subprocess.run(
         [
             sys.executable,
             "-c",
@@ -181,11 +181,16 @@ def _import_in_pristine_process(spark, sf_dir, tmp_path, catalog: str, mutate=No
             str(tmp_path / "wh_b"),
             catalog,
         ],
-        check=True,
         env=env,
         cwd=str(tmp_path),  # keep cluster B's derby.log/metastore out of the repo
         timeout=300,
+        stderr=subprocess.PIPE,
+        text=True,
     )
+    assert proc.returncode == 0, proc.stderr
+    # Every imported table is one Hive itself can read: HiveExternalCatalog
+    # warns when it has to persist a table in a Spark-only format.
+    assert "in a Hive compatible way" not in proc.stderr, proc.stderr
 
     # Only metadata crosses: the import creates, removes or renames no
     # file or directory in the storage the two catalogs share.

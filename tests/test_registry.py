@@ -483,14 +483,7 @@ def test_keys_leave_caller_conf_unchanged(spark, sf_dir):
     values afterwards, including keys that were unset before."""
 
     def conf_rows():
-        return {
-            r.key: r.value
-            for r in spark.sql("SET").collect()
-            # load() sets this for every events read: the parquet reader
-            # consults it when the frame executes, so it cannot be scoped
-            # inside the call (an open leak, not one these keys own).
-            if r.key != "spark.sql.legacy.parquet.nanosAsLong"
-        }
+        return {r.key: r.value for r in spark.sql("SET").collect()}
 
     before = conf_rows()
     queries = engine.queries()
@@ -499,6 +492,7 @@ def test_keys_leave_caller_conf_unchanged(spark, sf_dir):
         "sql_scripting",
         "stream_dedup",
         "stream_rocksdb_state",
+        "win_lag_lead",  # reads events through load()
     ):
         queries[key](spark, sf_dir).collect()
     assert conf_rows() == before

@@ -9,8 +9,10 @@ Hive Metastore — session.py get_spark(enable_hive=True) — because every
 operator goes through ``spark.sql`` DDL / ``spark.catalog``).
 
 Design rules:
-- EXTERNAL tables point at the existing parquet — registering metadata
-  never copies data, exactly the reference's shared-bucket model.
+- EXTERNAL tables point at existing parquet — registering metadata
+  never copies data, exactly the reference's shared-bucket model. A
+  base table's single file is copied once into a directory
+  (``table_dir``), the only location a Hive metastore accepts.
 - Every operator is SELF-CONTAINED and idempotent: it drops and recreates
   its own database first, so the driver can run keys in any order, twice.
 - Catalog introspection outputs are fully determined by the DDL the
@@ -23,12 +25,13 @@ from __future__ import annotations
 import functools
 import json
 import os
+import shutil
 from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
-from ..sources.io import SCRATCH, _fixture_dir, _materialize, load, table_path
+from ..sources.io import _fixture_dir, _materialize, _run_scratch, load, table_path
 
 
 def _reset_db(spark: SparkSession, db: str) -> None:
@@ -205,11 +208,23 @@ def parts_orders_fixture(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
+def table_dir(sf_dir: str, src: str) -> str:
+    """Directory holding a copy of ``src``'s Parquet file, built once.
+    A Hive metastore takes only a directory as a table location; a table
+    over the bare file is persisted in a Spark-only format."""
+
+    def write(p: str) -> None:
+        os.makedirs(p)
+        shutil.copy(table_path(sf_dir, src), p)
+
+    return _materialize(write, _fixture_dir(f"{src}_dir", sf_dir))
+
+
 def _ext_table(spark: SparkSession, db: str, name: str, sf_dir: str, src: str) -> None:
     """Register an external parquet table over the shared-storage path."""
     spark.sql(f"DROP TABLE IF EXISTS {db}.{name}")
     spark.sql(
-        f"CREATE TABLE {db}.{name} USING parquet LOCATION '{table_path(sf_dir, src)}'"
+        f"CREATE TABLE {db}.{name} USING parquet LOCATION '{table_dir(sf_dir, src)}'"
     )
 
 
@@ -251,11 +266,13 @@ def catalog_create_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def catalog_save_as_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """saveAsTable: persist a DataFrame as a catalog table and read it
-    back BY NAME. The table data lands under .scratch (explicit path —
-    the local stand-in for a warehouse bucket); at scale this is a
-    parallel parquet write keeping the frame's partitioning."""
+    back BY NAME. The table data lands under the process's run root in
+    .scratch (explicit path — the local stand-in for a warehouse bucket;
+    per process, so concurrent drivers never rewrite each other's); at
+    scale this is a parallel parquet write keeping the frame's
+    partitioning."""
     _reset_db(spark, "eng_sat_db")
-    out = os.path.join(SCRATCH, "saveastable_region")
+    out = os.path.join(_run_scratch(), "saveastable_region")
     (
         load(spark, sf_dir, "region")
         .select("r_regionkey", "r_name")
@@ -653,14 +670,13 @@ def catalog_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
     Metadata-scoped: a 3-row table exercises the DDL path; the default
     machinery itself is plan-time constant folding, so at any scale the
     cost is the insert itself.  STATELESS per run (the
-    scan_typed_columns lesson): the table lives at an explicit .scratch
-    location wiped before CREATE — a stale directory from an
-    interrupted prior run (catalog entry gone, files left) would
-    otherwise fail CREATE with LOCATION_ALREADY_EXISTS."""
-    import shutil
-
+    scan_typed_columns lesson): the table lives at an explicit location
+    under the process's run root, wiped before CREATE — a stale
+    directory from an interrupted earlier call (catalog entry gone,
+    files left) would otherwise fail CREATE with
+    LOCATION_ALREADY_EXISTS."""
     _reset_db(spark, "eng_def_db")
-    loc = os.path.join(SCRATCH, "defaults_t")
+    loc = os.path.join(_run_scratch(), "defaults_t")
     shutil.rmtree(loc, ignore_errors=True)
     spark.sql(
         "CREATE TABLE eng_def_db.t ("
@@ -697,13 +713,12 @@ def catalog_refresh_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders) through the table, overwrite the location with v2 (all
     orders) bypassing the catalog, REFRESH, read again — both phase
     counts are relational facts the oracle restates.  Stateless per run
-    (explicitly wiped location, the scan_typed_columns discipline)."""
-    import shutil
-
+    (explicitly wiped location under the process's run root, the
+    scan_typed_columns discipline)."""
     from pyspark.sql import functions as F
 
     _reset_db(spark, "eng_rf_db")
-    loc = os.path.join(SCRATCH, "refresh_orders")
+    loc = os.path.join(_run_scratch(), "refresh_orders")
     shutil.rmtree(loc, ignore_errors=True)
     o = load(spark, sf_dir, "orders").select("o_orderkey")
     o.where(F.col("o_orderkey") % 2 == 0).write.parquet(loc)

@@ -60,7 +60,7 @@ import urllib.parse
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
-from ..sources.io import load, table_path
+from ..sources.io import load
 from ..utils import driver_map, session_artifact
 from .catalog import (
     COLUMN_STAT_FIELDS,
@@ -73,6 +73,7 @@ from .catalog import (
     describe,
     parts_orders_fixture,
     stats_from_json,
+    table_dir,
     write_stats,
 )
 
@@ -100,8 +101,9 @@ _PART_COL = "o_orderpriority"
 
 def _build_source(spark: SparkSession, sf_dir: str) -> str:
     """Cluster A: a namespace of external tables over shared storage —
-    an unpartitioned table with properties, a plain table, a
-    hive-PARTITIONED table (partitions registered via MSCK), and a
+    an unpartitioned table with properties, a plain table (both over
+    ``catalog.table_dir`` directories, the only locations Hive accepts),
+    a hive-PARTITIONED table (partitions registered via MSCK), and a
     permanent VIEW. Returns the partitioned table's location (never
     None, which ``utils.session_cached`` reads as a miss)."""
     parts_loc = parts_orders_fixture(spark, sf_dir)
@@ -109,7 +111,7 @@ def _build_source(spark: SparkSession, sf_dir: str) -> str:
     props = ", ".join(f"'{k}'='{v}'" for k, v in sorted(_NATION_PROPS.items()))
     spark.sql(
         f"CREATE TABLE {_SRC_DB}.nation_ext USING parquet "
-        f"LOCATION '{table_path(sf_dir, 'nation')}' TBLPROPERTIES ({props})"
+        f"LOCATION '{table_dir(sf_dir, 'nation')}' TBLPROPERTIES ({props})"
     )
     _ext_table(spark, _SRC_DB, "region_ext", sf_dir, "region")
     spark.sql(

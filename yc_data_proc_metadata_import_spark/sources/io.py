@@ -116,25 +116,14 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     once per session and table-file version, so a table costs one
     footer-reading Spark job per session, not one per ``load()`` call.
 
-    ``events.ts`` has shipped in two physical encodings across testdata
-    generations: nanosecond-precision INT64 (which Spark 4 refuses to map
-    to TimestampType — read as raw nanos via nanosAsLong and
-    floor-converted to microseconds, the same truncation DuckDB applies
-    casting TIMESTAMP_NS to TIMESTAMP) and plain microsecond TIMESTAMP
-    (NTZ).  Branch on the actual physical type so either fixture
-    generation loads to the same logical column: TIMESTAMP_NTZ in UTC.
+    ``events.ts`` is a microsecond TIMESTAMP without a time zone on every
+    testdata tier; a session that infers it as the zoned TIMESTAMP (LTZ)
+    gets it cast back, so the column is TIMESTAMP_NTZ in UTC either way.
     """
-    _reap_scratch_orphans()  # once per process; every key passes through here
     path = table_path(sf_dir, name)
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
-    if name == "events":
-        ts_type = df.schema["ts"].dataType.simpleString()
-        if ts_type == "bigint":
-            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        if ts_type == "timestamp":  # LTZ -> NTZ, session tz is UTC
-            return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    if name == "events" and df.schema["ts"].dataType.simpleString() == "timestamp":
+        return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     return df
 
 
@@ -197,8 +186,6 @@ def scan_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(name).select("r_regionkey", "r_name")
 
 
-_FP_SUFFIX = __import__("re").compile(r"^[0-9a-f]{10}$")
-
 # Version-alternation guard: two call sites passing DIFFERENT versions
 # for the same kind would reap each other's complete dirs on
 # every access (rest != fp both ways) — silent rebuild thrash, and
@@ -223,8 +210,12 @@ def _fixture_dir(
     ``version`` argument whenever the derivation logic changes; the
     version is hashed into the fingerprint suffix, so exactly that
     fixture rebuilds.  Stale siblings (same kind and sf, different
-    fingerprint) are removed so regenerating testdata each round doesn't
-    accumulate dead fixture copies.
+    fingerprint) are removed, each with its ``_materialize`` lock file,
+    so regenerating testdata each round doesn't accumulate dead fixture
+    copies.  A lock at the CURRENT fingerprint is never touched:
+    unlinking one a builder holds would let a second builder lock a new
+    inode at the same path.  A stale one is safe to remove, because its
+    dir is reaped under any holder anyway.
 
     ``width`` — for fixtures whose FILE LAYOUT depends on the building
     session's parallelism — appends a VISIBLE ``_w<N>`` name suffix
@@ -239,6 +230,8 @@ def _fixture_dir(
     width, while other-width siblings at the CURRENT fingerprint are
     spared as a concurrent session's live layout."""
     import hashlib
+    import re
+    import shutil
 
     state = _KIND_VERSIONS.setdefault(kind, {"last": version, "seen": {version}})
     if version != state["last"]:
@@ -256,29 +249,52 @@ def _fixture_dir(
         fp = hashlib.sha256(f"{fp}|v{version}".encode()).hexdigest()[:10]
     prefix = f"{kind}_{base}_"
     # Exact-shape suffix match (never substring containment): rest must
-    # be exactly <10-hex-fp> or <10-hex-fp>_w<digits>, so a foreign SF
-    # whose sanitized basename embeds or extends this base can never
-    # full-match (the metadata-manifest reaper discipline). This shape
-    # also structurally spares ``*.lock`` files (``_materialize``'s
-    # permanent flock inodes — see the inode-swap note in
-    # ``_reap_scratch_orphans``); keep it exact if ever widened.
-    sib = __import__("re").compile(r"^([0-9a-f]{10})(?:_w(\d+))?$")
+    # be exactly <10-hex-fp>, optionally with _w<digits> and then .lock,
+    # so a foreign SF whose sanitized basename embeds or extends this
+    # base can never full-match.
+    sib = re.compile(r"^([0-9a-f]{10})(?:_w\d+)?(\.lock)?$")
     try:
         for entry in os.listdir(SCRATCH):
-            if not entry.startswith(prefix):
-                continue
-            m = sib.match(entry[len(prefix):])
+            m = sib.match(entry[len(prefix):]) if entry.startswith(prefix) else None
             if m and m.group(1) != fp:
-                # Stale fingerprint (any width) — reap; CURRENT
-                # fingerprint (any width, incl. a concurrent session's
-                # other-width layout) — never touched.
-                import shutil
-
-                shutil.rmtree(os.path.join(SCRATCH, entry), ignore_errors=True)
+                path = os.path.join(SCRATCH, entry)
+                if m.group(2):
+                    os.remove(path)
+                else:
+                    shutil.rmtree(path, ignore_errors=True)
     except OSError:
-        pass
+        pass  # no scratch yet, or a concurrent reaper got there first
     suffix = "" if width is None else f"_w{width}"
     return os.path.join(SCRATCH, f"{kind}_{base}_{fp}{suffix}")
+
+
+def _run_scratch() -> str:
+    """Per-PROCESS root for mutable per-run state: ``_materialize``'s
+    staging, streaming checkpoints, foreachBatch landing dirs, upsert
+    state tables and the outputs keys rewrite on every call.  The
+    fixtures ``_materialize`` commits are immutable build-once dirs and
+    stay shared; this state is not, and Spark hard-fails a streaming
+    offset log touched by two writers with CONCURRENT_STREAM_LOG_UPDATE.
+    Keying by PID makes concurrent drivers (bench run + oracle replay +
+    pytest) mutually invisible — the multi-writer isolation a per-job
+    checkpoint prefix gives on a real cluster.  A process's first call
+    reaps the roots of dead PIDs, a crashed build's staging with them,
+    so .scratch stays bounded."""
+    import shutil
+
+    root = os.path.join(SCRATCH, "runs")
+    mine = os.path.join(root, f"pid{os.getpid()}")
+    if not os.path.isdir(mine):
+        os.makedirs(mine, exist_ok=True)
+        for d in os.listdir(root):
+            if d.startswith("pid") and d != f"pid{os.getpid()}":
+                try:
+                    os.kill(int(d[3:]), 0)  # raises if that pid is gone
+                except (ProcessLookupError, ValueError):
+                    shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+                except PermissionError:
+                    pass  # alive, owned by someone else: leave it
+    return mine
 
 
 def _materialize(writer, out: str) -> str:
@@ -294,11 +310,14 @@ def _materialize(writer, out: str) -> str:
       build and the promotion.  Each call opens the lock file itself, so
       the lock also serializes threads of one process.  A builder that
       finds the marker once it holds the lock returns without building.
-    - ``writer(tmp)`` fills the staging dir ``{out}.tmp<pid>`` (the name
-      ``_reap_scratch_orphans`` collects after a crash), which is renamed
-      onto ``out`` after any marker-less debris there is removed.  A
-      writer that raises leaves no marker and releases the lock, so the
-      next call rebuilds.
+    - ``writer(tmp)`` fills a staging dir named after ``out`` under the
+      process's ``_run_scratch()`` root, which is renamed onto ``out``
+      after any marker-less debris there is removed.  A writer that
+      raises leaves no marker and releases the lock, so the next call
+      rebuilds; a builder that dies leaves its staging under its PID's
+      root, which the next process's first ``_run_scratch()`` reaps.
+      Staging is renamed, so ``out`` must be on the filesystem of
+      ``.scratch/``.
     - A writer may build other fixtures, but never its own ``out``: it
       would wait forever on the lock it holds.
 
@@ -308,7 +327,6 @@ def _materialize(writer, out: str) -> str:
     source's natural partitioning — no ``coalesce(1)`` single-task
     funnel.
     """
-    _reap_scratch_orphans()
     marker = os.path.join(out, "_SUCCESS")
     if os.path.exists(marker):
         return out
@@ -319,81 +337,13 @@ def _materialize(writer, out: str) -> str:
     with open(f"{out}.lock", "w") as lock:
         fcntl.flock(lock, fcntl.LOCK_EX)  # released when the file closes
         if not os.path.exists(marker):
-            tmp = f"{out}.tmp{os.getpid()}"
+            tmp = os.path.join(_run_scratch(), os.path.basename(out))
             shutil.rmtree(tmp, ignore_errors=True)
             writer(tmp)
             open(os.path.join(tmp, "_SUCCESS"), "w").close()
             shutil.rmtree(out, ignore_errors=True)
             os.replace(tmp, out)
     return out
-
-
-_ORPHANS_REAPED = False
-
-
-def _reap_scratch_orphans() -> None:
-    """Once per process: remove scratch debris no current code path can
-    reach — (a) PID-suffixed staging dirs whose builder died mid-write
-    (a crashed build would otherwise leak its ``*.tmp<pid>`` copy
-    forever, where the old fixed ``.tmp`` name at least self-overwrote),
-    and (b) legacy pre-width-suffix stream/documents layouts (the width
-    now lives in the dir name, so the un-suffixed dirs are permanently
-    stale).  Live builders are left alone (pid probe), as are
-    other-width siblings — a concurrent session at a different
-    parallelism may be scanning them."""
-    global _ORPHANS_REAPED
-    if _ORPHANS_REAPED:
-        return
-    _ORPHANS_REAPED = True
-    import re
-    import shutil
-
-    try:
-        entries = os.listdir(SCRATCH)
-    except OSError:
-        return
-    for e in entries:
-        if e.endswith(".lock"):
-            # ``{out}.lock`` files (``_materialize``) are PERMANENT by
-            # design: deleting one while a builder holds the flock would
-            # let a second builder open a NEW inode at the same path and
-            # both "hold the lock" at once, reopening the two-builders
-            # race (inode-swap hazard). They are 0-byte; never reap them,
-            # whatever patterns below are widened to.
-            continue
-        m = re.search(r"\.tmp(\d+)?$", e)
-        if m:
-            if m.group(1):
-                try:
-                    os.kill(int(m.group(1)), 0)
-                    continue  # builder still alive: not ours to touch
-                except ProcessLookupError:
-                    pass
-                except (PermissionError, OSError):
-                    continue
-            p = os.path.join(SCRATCH, e)
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-            else:
-                # staging FILES too (manifest exports stage as
-                # ``<name>.json.tmp<pid>``; rmtree no-ops on a file)
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
-        elif re.match(
-            r"(stream_events(_dup)?|docs_wide)_sf\w+$", e
-        ) and not re.search(r"_w\d+$", e):
-            shutil.rmtree(os.path.join(SCRATCH, e), ignore_errors=True)
-        elif e == "checkpoints" or re.match(
-            # Per-run mutable dirs at their pre-relocation top-level
-            # paths (they now live under runs/pid<pid>/) — unreachable.
-            # stream_restart_STAGE_* stays: a live shared fixture.
-            r"(stream_rate_|stream_restart_(src|out)_"
-            r"|stream_sink_parquet_|upsert_state_)sf\w+$",
-            e,
-        ):
-            shutil.rmtree(os.path.join(SCRATCH, e), ignore_errors=True)
 
 
 def _csv_fixture(spark: SparkSession, sf_dir: str) -> str:

@@ -37,9 +37,9 @@ from pyspark.sql import functions as F
 from ..registry import query
 from ..session import conf_scope
 from ..sources.io import (
-    SCRATCH,
     _fixture_dir,
     _materialize,
+    _run_scratch,
     load,
     parquet_schema,
     sf_tag,
@@ -63,34 +63,6 @@ def _src_width(spark: SparkSession) -> int:
     (or a stage created by the old single-file writer) rebuilds instead
     of silently reusing the wrong layout."""
     return max(1, spark.sparkContext.defaultParallelism)
-
-
-def _run_scratch() -> str:
-    """Per-PROCESS root for mutable per-run state (streaming checkpoints,
-    foreachBatch landing dirs, upsert state tables). The staged SOURCE
-    fixtures above are immutable build-once dirs and stay shared; these
-    are not — every invocation rmtree-and-rewrites them, and Spark
-    hard-fails a streaming offset log touched by two writers with
-    CONCURRENT_STREAM_LOG_UPDATE. Keying by PID makes concurrent
-    drivers (bench run + oracle replay + pytest) mutually invisible —
-    the multi-writer isolation a per-job checkpoint prefix gives on a
-    real cluster. Dead siblings are reaped lazily so .scratch stays
-    bounded."""
-    import shutil
-
-    root = os.path.join(SCRATCH, "runs")
-    mine = os.path.join(root, f"pid{os.getpid()}")
-    if not os.path.isdir(mine):
-        os.makedirs(mine, exist_ok=True)
-        for d in os.listdir(root):
-            if d.startswith("pid") and d != f"pid{os.getpid()}":
-                try:
-                    os.kill(int(d[3:]), 0)  # raises if that pid is gone
-                except (ProcessLookupError, ValueError):
-                    shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-                except PermissionError:
-                    pass  # alive, owned by someone else: leave it
-    return mine
 
 
 def _stream_src(spark: SparkSession, sf_dir: str) -> str:

@@ -519,3 +519,31 @@ def test_crashed_builder_staging_reaped(tmp_path):
     assert runs[f"pid{rebuilt.pid}"] == [], runs
     assert sorted(os.listdir(out)) == ["_SUCCESS", "part-0.parquet"]
     assert sorted(os.listdir(scratch)) == ["fix"] + survivors
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "sink_compaction",
+        "sink_csv",
+        "sink_dynamic_overwrite",
+        "sink_json",
+        "sink_orc",
+        "sink_parquet",
+        "sink_partitioned",
+        "sink_text",
+        "sink_zorder_cluster",
+    ],
+)
+def test_sink_outputs_live_under_run_root(spark, sf_dir, key):
+    """Sink keys rewrite their output on every call, so it must live
+    under the process's run root: at a shared ``_fixture_dir`` path two
+    drivers over one sf dir would rewrite each other's files mid-read."""
+    from urllib.parse import urlparse
+
+    from yc_data_proc_metadata_import_spark.sources.io import _run_scratch
+
+    files = QUERIES[key](spark, sf_dir).inputFiles()
+    root = _run_scratch() + os.sep
+    assert files
+    assert [f for f in files if not urlparse(f).path.startswith(root)] == []

@@ -175,7 +175,7 @@ def test_compaction_reduces_file_count(spark, sf_dir):
     the same rows in strictly fewer files than the fragmented input."""
     import os
 
-    from yc_data_proc_metadata_import_spark.sources.io import _fixture_dir
+    from yc_data_proc_metadata_import_spark.sources.io import _fixture_dir, _run_scratch
 
     QUERIES["sink_compaction"](spark, sf_dir).count()
 
@@ -183,7 +183,7 @@ def test_compaction_reduces_file_count(spark, sf_dir):
         return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
 
     n_frag = n_parquet(_fixture_dir("frag_orders", sf_dir))
-    n_comp = n_parquet(_fixture_dir("compact_orders", sf_dir))
+    n_comp = n_parquet(os.path.join(_run_scratch(), "compact_orders"))
     assert n_frag == 64, f"fragmented fixture expected 64 files, got {n_frag}"
     assert n_comp < n_frag / 8, f"compaction left {n_comp} files (from {n_frag})"
 
@@ -200,10 +200,10 @@ def test_zorder_layout_prunes_both_dimensions(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
-    from yc_data_proc_metadata_import_spark.sources.io import _fixture_dir
+    from yc_data_proc_metadata_import_spark.sources.io import _run_scratch
 
     QUERIES["sink_zorder_cluster"](spark, sf_dir).count()
-    d = _fixture_dir("zorder_orders", sf_dir)
+    d = os.path.join(_run_scratch(), "zorder_orders")
     files = [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
     assert len(files) >= 8, f"expected >=8 range-partitioned files, got {len(files)}"
 

@@ -491,7 +491,11 @@ def test_keys_leave_caller_conf_unchanged(spark, sf_dir):
         "sink_dynamic_overwrite",
         "sql_scripting",
         "stream_dedup",
+        "stream_foreach_upsert",  # the four foreachBatch drains
+        "stream_rate_source",
+        "stream_restart_checkpoint",
         "stream_rocksdb_state",
+        "stream_sink_parquet",
         "win_lag_lead",  # reads events through load()
     ):
         queries[key](spark, sf_dir).collect()

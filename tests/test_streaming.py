@@ -2,26 +2,64 @@
 must actually exercise the late-drop path (not just produce matching
 output), the controlled three-batch fixture must split as designed, the
 no-data-batch suppression (round-9 VERDICT task 2) must be applied only
-where it is output-invariant, and the transformWithStateInPandas
+where it is output-invariant, the generator source must run exactly
+one micro-batch per drain, and the transformWithStateInPandas
 environment gate must stay evidenced, not asserted.
 """
 
 from __future__ import annotations
 
+import contextlib
 import importlib.util
-import shutil
+import json
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
-from yc_data_proc_metadata_import_spark.sources.io import SCRATCH
+from yc_data_proc_metadata_import_spark import registry
 from yc_data_proc_metadata_import_spark.streaming.stream_queries import (
+    _RATE_BATCHES,
+    _RATE_ROWS_PER_BATCH,
+    _drain,
     _read_stream,
-    _run_to_memory,
     _stream_dup_src,
     _stream_src,
     _stream_three_batch_src,
 )
+
+
+class _Progress(StreamingQueryListener):
+    """Every micro-batch progress of the session, as the dicts
+    ``StreamingQuery.recentProgress`` holds."""
+
+    def __init__(self) -> None:
+        self.events: list[dict] = []
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        self.events.append(json.loads(event.progress.json))
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
+
+
+@contextlib.contextmanager
+def _progress(spark):
+    """Collect the progress of every micro-batch run inside the block;
+    the listener bus is drained before the block's list is complete."""
+    listener = _Progress()
+    spark.streams.addListener(listener)
+    try:
+        yield listener.events
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    finally:
+        spark.streams.removeListener(listener)
 
 
 def test_watermark_drops_late_rows(spark, sf_dir):
@@ -32,18 +70,8 @@ def test_watermark_drops_late_rows(spark, sf_dir):
         .groupBy(F.window("ts", "10 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    chk = f"{SCRATCH}/checkpoints/test_wm_drops"
-    shutil.rmtree(chk, ignore_errors=True)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("test_wm_drops")
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    progress = q.recentProgress
+    with _progress(spark) as progress:
+        _drain(agg, "test_wm_drops", "append")
     # three data batches, in the constructed order
     data_batches = [p for p in progress if p["numInputRows"] > 0]
     assert len(data_batches) == 3, [p["numInputRows"] for p in progress]
@@ -84,7 +112,7 @@ def test_no_data_batch_suppression_boundary(spark, sf_dir):
             .select("event_id", "event_type", "ts")
         )
         name = f"test_nd_dedup_{int(final_no_data_batch)}"
-        _run_to_memory(df, name, "append", final_no_data_batch=final_no_data_batch)
+        _drain(df, name, "append", final_no_data_batch=final_no_data_batch)
         return sorted(map(tuple, spark.table(name).collect()))
 
     with_nd_rows = dedup_rows(True)
@@ -100,7 +128,7 @@ def test_no_data_batch_suppression_boundary(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
         name = f"test_nd_session_{int(final_no_data_batch)}"
-        _run_to_memory(agg, name, "append", final_no_data_batch=final_no_data_batch)
+        _drain(agg, name, "append", final_no_data_batch=final_no_data_batch)
         return spark.table(name).count()
 
     with_nd, without_nd = session_count(True), session_count(False)
@@ -132,3 +160,14 @@ def test_transform_with_state_gate(spark, sf_dir):
         )
     with pytest.raises(ModuleNotFoundError, match="google"):
         import pyspark.sql.streaming.proto.StateMessage_pb2  # noqa: F401
+
+
+def test_rate_source_runs_one_batch_per_drain(spark, sf_dir):
+    """``stream_rate_source`` drains the generator source once per batch
+    it keeps, so exactly ``_RATE_BATCHES`` micro-batches run, each a full
+    batch — none past the kept set, which a drain that polls for batch
+    ``_RATE_BATCHES`` and then stops the query always runs."""
+    with _progress(spark) as progress:
+        registry.QUERIES["stream_rate_source"](spark, sf_dir).collect()
+    batches = [(p["batchId"], p["numInputRows"]) for p in progress]
+    assert batches == [(i, _RATE_ROWS_PER_BATCH) for i in range(_RATE_BATCHES)]

@@ -48,3 +48,32 @@ def test_python_exec_keys_survive_syspath_only_driver(tmp_path):
     assert "WORKER_IMPORT_OK" in out.stdout, (
         f"stdout:\n{out.stdout[-2000:]}\nstderr:\n{out.stderr[-2000:]}"
     )
+
+
+def test_pyfiles_shipped_once_per_application(monkeypatch):
+    """The zip is shipped once per Spark application, keyed on its
+    ``applicationId``: a context object whose id outlives its
+    application (CPython reuses the address of a collected object) must
+    still get the zip for the new application."""
+    from yc_data_proc_metadata_import_spark import registry
+
+    class _Context:
+        applicationId = "app-1"
+
+        def __init__(self):
+            self.shipped = []
+
+        def addPyFile(self, path):
+            self.shipped.append(path)
+
+    class _Spark:
+        sparkContext = _Context()
+
+    monkeypatch.setattr(registry, "_PYFILES_SENT", set())
+    spark = _Spark()
+    registry._ensure_worker_imports(spark)
+    registry._ensure_worker_imports(spark)
+    assert len(spark.sparkContext.shipped) == 1
+    spark.sparkContext.applicationId = "app-2"
+    registry._ensure_worker_imports(spark)
+    assert len(spark.sparkContext.shipped) == 2

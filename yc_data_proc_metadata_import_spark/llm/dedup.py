@@ -743,15 +743,12 @@ def _bucket_group_cc_edges(pdf):
     return _consolidate_star_edges(pd.concat(frames, ignore_index=True))
 
 
-def _consolidate_star_edges(edges):
-    """Linear union-find over a pandas (doc_a, doc_b) star-edge frame,
-    re-emitted as one (component-min -> member) row per non-root node.
-    Overlapping sub-bucket components collapse in-memory before anything
-    is shuffled — the global propagation then sees a minimal star graph
-    per group (cross-group unions still happen in
-    _propagate_min_labels, as before)."""
-    import pandas as pd
-
+def _component_min(a, b) -> dict[int, int]:
+    """Linear union-find over the undirected edges ``zip(a, b)`` (lists
+    of python ints): maps every node that appears in an edge to its
+    component's minimum node.  Union by VALUE (the smaller root wins)
+    keeps each root the component minimum; path compression keeps the
+    finds near-constant."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -762,19 +759,26 @@ def _consolidate_star_edges(edges):
             parent[x], x = r, parent[x]
         return r
 
-    for a, b in zip(edges["doc_a"].to_numpy(), edges["doc_b"].to_numpy()):
-        ra, rb = find(int(a)), find(int(b))
-        if ra != rb:
-            # union by VALUE: the root is always the component minimum,
-            # so the emitted star edges keep min-label semantics
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
+    for u, v in zip(a, b):
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {x: find(x) for x in parent}
+
+
+def _consolidate_star_edges(edges):
+    """Linear union-find over a pandas (doc_a, doc_b) star-edge frame,
+    re-emitted as one (component-min -> member) row per non-root node.
+    Overlapping sub-bucket components collapse in-memory before anything
+    is shuffled — the global propagation then sees a minimal star graph
+    per group (cross-group unions still happen in
+    _propagate_min_labels, as before)."""
+    import pandas as pd
+
+    labels = _component_min(edges["doc_a"].tolist(), edges["doc_b"].tolist())
     out_a = []
     out_b = []
-    for node in parent:
-        root = find(node)
+    for node, root in labels.items():
         if root != node:
             out_a.append(root)
             out_b.append(node)
@@ -1285,25 +1289,11 @@ def _propagate_min_labels(pairs: DataFrame) -> DataFrame:
             tbl = src.toArrow()
         finally:
             src.unpersist()
-        a = tbl.column("doc_a").to_numpy(zero_copy_only=False)
-        b = tbl.column("doc_b").to_numpy(zero_copy_only=False)
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            r = x
-            while parent.setdefault(r, r) != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for u, v in zip(a.tolist(), b.tolist()):
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                if rv < ru:
-                    ru, rv = rv, ru
-                parent[rv] = ru  # min-id root => label = component min
-        rows = [(int(x), int(find(x))) for x in parent]
+        labels = _component_min(
+            tbl.column("doc_a").to_numpy(zero_copy_only=False).tolist(),
+            tbl.column("doc_b").to_numpy(zero_copy_only=False).tolist(),
+        )
+        rows = list(labels.items())
         # Broadcast hint, UF path ONLY: this label table is driver-held
         # and <=2x _DRIVER_UF_MAX_EDGES rows by construction (<=8 MB of
         # int64 pairs — the same bounded-state license as the collect

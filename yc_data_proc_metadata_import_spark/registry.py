@@ -24,7 +24,9 @@ ORACLES: dict[str, str] = {}
 # Keys registered with prewarm=True, in registration order.
 PREWARM: list[str] = []
 
-_PYFILES_SENT: set[int] = set()
+# applicationIds whose context has the package zip (see session_cached
+# for why never id(sc)).
+_PYFILES_SENT: set[str] = set()
 
 
 def _ensure_worker_imports(spark: SparkSession) -> None:
@@ -38,9 +40,14 @@ def _ensure_worker_imports(spark: SparkSession) -> None:
     ModuleNotFoundError on the first Python-exec key. ``addPyFile`` of a
     package zip is the canonical fix and also exactly how this library
     deploys to a real cluster (``spark-submit --py-files``).
+
+    Keyed on ``applicationId``, the rule ``utils.session_cached`` states:
+    CPython reuses object ids after GC, so a new context allocated at a
+    stopped one's address would otherwise never get the zip.
     """
     sc = spark.sparkContext
-    if id(sc) in _PYFILES_SENT:
+    app_id = sc.applicationId
+    if app_id in _PYFILES_SENT:
         return
     import os
     import tempfile
@@ -61,7 +68,7 @@ def _ensure_worker_imports(spark: SparkSession) -> None:
                         z.write(full, rel)
         os.replace(tmp, zpath)
     sc.addPyFile(zpath)
-    _PYFILES_SENT.add(id(sc))
+    _PYFILES_SENT.add(app_id)
 
 
 def _ntz_type(dt):

@@ -269,9 +269,18 @@ def _fixture_dir(
 
 
 def _run_scratch() -> str:
-    """Per-PROCESS root for mutable per-run state: ``_materialize``'s
-    staging, streaming checkpoints, foreachBatch landing dirs, upsert
-    state tables and the outputs keys rewrite on every call.  The
+    """Per-PROCESS root for mutable per-run state.  It holds:
+
+    - ``_materialize``'s staging dirs, named after the fixture;
+    - ``checkpoints/<name>``: every stream drain's checkpoint
+      (``streaming.stream_queries._drain``);
+    - the stream keys' foreachBatch landing dirs, the restart key's
+      source dir and the upsert key's state table;
+    - the sink keys' outputs (``sources.sinks``: ``sink_supplier``,
+      ``compact_orders``, ``zorder_orders`` and the rest);
+    - the catalog keys' table locations (``plans.catalog``).
+
+    Everything but the staging is rewritten on every call.  The
     fixtures ``_materialize`` commits are immutable build-once dirs and
     stay shared; this state is not, and Spark hard-fails a streaming
     offset log touched by two writers with CONCURRENT_STREAM_LOG_UPDATE.

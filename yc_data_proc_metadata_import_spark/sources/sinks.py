@@ -4,7 +4,10 @@ The tutorial workflow writes tables into the shared bucket
 (metastore-import.tf:165-179) so both clusters can read them.  These
 queries write to scratch and read the result back, proving the round-trip;
 the driver's check is rows-only for sinks, but we attach full oracles by
-returning the re-read data.
+returning the re-read data.  A key that rewrites its output on every call
+writes it under the process's run root (``io._run_scratch``), so two
+drivers over one sf dir never rewrite each other's output mid-read; the
+inputs it builds once (``_materialize``) stay shared.
 
 Scale notes: a partitioned sink is how 100 TB stays prunable — downstream
 readers with a predicate on the partition column scan only matching
@@ -23,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..session import conf_scope
-from .io import _fixture_dir, _materialize, load, table_path
+from .io import _fixture_dir, _materialize, _run_scratch, load, table_path
 
 
 @query(
@@ -32,7 +35,7 @@ from .io import _fixture_dir, _materialize, load, table_path
 )
 def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write supplier to Parquet, read it back."""
-    out = _fixture_dir("sink_supplier", sf_dir)
+    out = os.path.join(_run_scratch(), "sink_supplier")
     load(spark, sf_dir, "supplier").write.mode("overwrite").parquet(out)
     return spark.read.parquet(out).select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
 
@@ -79,7 +82,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the task count sane.  Reading back with a partition-column filter
     still prunes to matching directories only.
     """
-    out = _fixture_dir("sink_orders_part", sf_dir)
+    out = os.path.join(_run_scratch(), "sink_orders_part")
     _write_status_partitioned(spark, sf_dir, out)
     back = spark.read.parquet(out)
     return back.select(
@@ -98,7 +101,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV export/import round-trip with header + explicit read schema
     (schema inference would cost a second scan at 100 TB)."""
-    out = _fixture_dir("sink_nation_csv", sf_dir)
+    out = os.path.join(_run_scratch(), "sink_nation_csv")
     load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey").write.mode(
         "overwrite"
     ).option("header", True).csv(out)
@@ -113,7 +116,7 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sink_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines export/import round-trip with explicit read schema."""
-    out = _fixture_dir("sink_region_json", sf_dir)
+    out = os.path.join(_run_scratch(), "sink_region_json")
     load(spark, sf_dir, "region").select("r_regionkey", "r_name").write.mode(
         "overwrite"
     ).json(out)
@@ -363,7 +366,7 @@ def scan_typed_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC export/import round-trip — the Hive-native columnar format the
     reference's Hive 3.1 service defaults to for managed tables."""
-    out = _fixture_dir("sink_part_orc", sf_dir)
+    out = os.path.join(_run_scratch(), "sink_part_orc")
     load(spark, sf_dir, "part").select(
         "p_partkey", "p_name", "p_brand", "p_retailprice"
     ).write.mode("overwrite").orc(out)
@@ -378,7 +381,7 @@ def sink_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Plain-text sink/scan round-trip (one document per line; the fixture
     corpus is newline-free, asserted before writing — line-oriented
     formats corrupt silently otherwise)."""
-    out = _fixture_dir("sink_docs_text", sf_dir)
+    out = os.path.join(_run_scratch(), "sink_docs_text")
     d = load(spark, sf_dir, "documents").select(F.col("text").alias("value"))
     n_nl = d.filter(F.col("value").contains("\n")).count()
     if n_nl:
@@ -424,7 +427,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         if f.endswith(".parquet")
     )
     n_out = max(1, round(frag_bytes / (128 * 1024 * 1024)))
-    out = _fixture_dir("compact_orders", sf_dir)
+    out = os.path.join(_run_scratch(), "compact_orders")
     spark.read.parquet(frag).repartition(n_out).write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -499,7 +502,7 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     The read-back proves 'F' changed and the untouched partitions
     survived byte-for-byte.
     """
-    out = _fixture_dir("sink_dynover", sf_dir)
+    out = os.path.join(_run_scratch(), "sink_dynover")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -612,7 +615,7 @@ def sink_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the scale + interleave against the oracle's independent
     formulation (scalar-subquery bounds, operator-built Morton).
     """
-    out = _fixture_dir("zorder_orders", sf_dir)
+    out = os.path.join(_run_scratch(), "zorder_orders")
     orders = load(spark, sf_dir, "orders")
     b = orders.agg(
         F.min("o_custkey").alias("ck_min"),

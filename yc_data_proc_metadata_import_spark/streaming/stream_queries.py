@@ -4,6 +4,14 @@ streaming engine (file source -> stateful operators -> sink) yet
 terminates and returns a batch-queryable DataFrame, per the driver
 contract.
 
+All 15 keys drain through one function, ``_drain``: it owns the
+checkpoint, the state-partition and no-data-batch confs, the trigger,
+the wait and the sink (a memory table or a ``foreachBatch`` function).
+A file source's drain ends at the files present when it starts; the
+generator source (``rate-micro-batch``) serves exactly one batch per
+drain, so ``stream_rate_source`` drains once per batch on one
+checkpoint, as ``stream_restart_checkpoint`` resumes its second run.
+
 Verification strategy (SURVEY.md SS5.3): streaming results are checked by
 BATCH EQUIVALENCE — tumbling/sliding/session/dedup produce exactly what
 the equivalent batch query produces, so they carry full DuckDB oracles.
@@ -30,6 +38,7 @@ instead of a single update fn).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,14 +51,8 @@ from ..sources.io import (
     _run_scratch,
     load,
     parquet_schema,
-    sf_tag,
 )
 from ..utils import dsum, sql_dsum
-
-# Fingerprint-keyed (io.sf_tag): a testdata regeneration renames every
-# staged stream source AND its checkpoints, so offset logs can never
-# replay against changed data.
-_sf_tag = sf_tag
 
 
 def _src_width(spark: SparkSession) -> int:
@@ -92,6 +95,20 @@ def _stream_dup_src(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
+def _write_one_file(df: DataFrame, path: str) -> None:
+    """Write ``df`` as the single parquet file ``path``: one task writes
+    a part file into a sibling directory, which is moved onto ``path``
+    and the directory removed.  For fixtures whose file boundaries are
+    the point (one file = one micro-batch), not for data paths."""
+    import shutil
+
+    sub = f"{path}.d"
+    df.coalesce(1).write.mode("overwrite").parquet(sub)
+    part = next(f for f in os.listdir(sub) if f.endswith(".parquet"))
+    shutil.move(os.path.join(sub, part), path)
+    shutil.rmtree(sub)
+
+
 def _stream_three_batch_src(spark: SparkSession, sf_dir: str) -> str:
     """Three-file source with CONTROLLED batch order for the watermark
     key (modification times forced apart; maxFilesPerTrigger=1 +
@@ -103,7 +120,6 @@ def _stream_three_batch_src(spark: SparkSession, sf_dir: str) -> str:
 
     Single-file writes are fine here: a tiny one-time TEST fixture whose
     whole point is exact batch boundaries, not a data path."""
-    import shutil
 
     def write(p: str) -> None:
         e = load(spark, sf_dir, "events")
@@ -117,13 +133,9 @@ def _stream_three_batch_src(spark: SparkSession, sf_dir: str) -> str:
         )
         os.makedirs(p)
         for idx, part in enumerate(parts):
-            sub = os.path.join(p, f"write_{idx}")
-            part.coalesce(1).write.mode("overwrite").parquet(sub)
-            src = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
             dst = os.path.join(p, f"batch{idx}.parquet")
-            shutil.move(os.path.join(sub, src), dst)
+            _write_one_file(part, dst)
             os.utime(dst, (1_700_000_000 + idx * 100, 1_700_000_000 + idx * 100))
-            shutil.rmtree(sub)
 
     return _materialize(write, _fixture_dir("stream_events_3b", sf_dir))
 
@@ -215,15 +227,25 @@ def _state_partitions(
     return max(floor, min(src_bytes // target, 4 * cores))
 
 
-def _run_to_memory(
+def _drain(
     df: DataFrame,
     name: str,
     mode: str,
     final_no_data_batch: bool = True,
     src_bytes: int = 0,
     python_state: bool = False,
-) -> None:
-    """Drive the stream to completion into a memory sink table ``name``.
+    sink: Callable[[DataFrame, int], None] | None = None,
+    resume: bool = False,
+) -> str:
+    """Drain the stream ``df`` with an ``availableNow`` trigger and return
+    its checkpoint path.  Every stream key drains through here.
+
+    The sink is the memory table ``name`` or, given ``sink``, that
+    ``foreachBatch`` function.  The checkpoint is ``checkpoints/<name>``
+    under ``_run_scratch()``, reset on every call unless ``resume`` picks
+    up the offset log of an earlier drain of the same name.  The state
+    partition count (``_state_partitions``) only takes effect when the
+    checkpoint is fresh; a resumed one keeps its own.
 
     ``final_no_data_batch=False`` suppresses the trailing no-data
     micro-batch (``spark.sql.streaming.noDataMicroBatches.enabled``) for
@@ -237,15 +259,26 @@ def _run_to_memory(
     and must keep the default. On a 24x7 production stream the flag is
     moot — there is always a next data batch to advance eviction.
     """
-    spark = df.sparkSession
-    # Direct drop — no-op when absent. (Enumerating listTables() first
-    # walked the whole temp-view catalog per stream key; in a full-suite
-    # session that catalog holds 100+ registered views.)
-    spark.catalog.dropTempView(name)
-    chk = os.path.join(_run_scratch(), "checkpoints", name)
     import shutil
 
-    shutil.rmtree(chk, ignore_errors=True)  # fresh run each invocation
+    spark = df.sparkSession
+    chk = os.path.join(_run_scratch(), "checkpoints", name)
+    if not resume:
+        shutil.rmtree(chk, ignore_errors=True)
+    writer = (
+        df.writeStream.queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", chk)
+        .trigger(availableNow=True)
+    )
+    if sink is None:
+        # Direct drop — no-op when absent. (Enumerating listTables()
+        # first walked the whole temp-view catalog per stream key; in a
+        # full-suite session that catalog holds 100+ registered views.)
+        spark.catalog.dropTempView(name)
+        writer = writer.format("memory")
+    else:
+        writer = writer.foreachBatch(sink)
     with conf_scope(
         spark,
         {
@@ -257,15 +290,8 @@ def _run_to_memory(
             ).lower(),
         },
     ):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        writer.start().awaitTermination()
+    return chk
 
 
 _WINDOWED_SQL = """
@@ -303,7 +329,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_sum",
         )
     )
-    _run_to_memory(agg, "mem_stream_tumbling", "complete", src_bytes=_dir_bytes(src))
+    _drain(agg, "mem_stream_tumbling", "complete", src_bytes=_dir_bytes(src))
     return spark.table("mem_stream_tumbling")
 
 
@@ -338,7 +364,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_sum",
         )
     )
-    _run_to_memory(agg, "mem_stream_sliding", "complete", src_bytes=_dir_bytes(src))
+    _drain(agg, "mem_stream_sliding", "complete", src_bytes=_dir_bytes(src))
     return spark.table("mem_stream_sliding")
 
 
@@ -389,7 +415,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    _run_to_memory(agg, "mem_stream_session", "append", src_bytes=_dir_bytes(src))
+    _drain(agg, "mem_stream_session", "append", src_bytes=_dir_bytes(src))
     return spark.table("mem_stream_session")
 
 
@@ -441,7 +467,7 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    _run_to_memory(agg, "mem_stream_watermark", "append", src_bytes=_dir_bytes(src))
+    _drain(agg, "mem_stream_watermark", "append", src_bytes=_dir_bytes(src))
     return spark.table("mem_stream_watermark")
 
 
@@ -464,8 +490,8 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["event_id"])
         .select("event_id", "event_type", "ts")
     )
-    _run_to_memory(dedup, "mem_stream_dedup", "append", final_no_data_batch=False,
-                   src_bytes=_dir_bytes(src))
+    _drain(dedup, "mem_stream_dedup", "append", final_no_data_batch=False,
+           src_bytes=_dir_bytes(src))
     return spark.table("mem_stream_dedup")
 
 
@@ -543,8 +569,8 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    _run_to_memory(stateful, "mem_stream_stateful", "update",
-                   src_bytes=_dir_bytes(src), python_state=True)
+    _drain(stateful, "mem_stream_stateful", "update",
+           src_bytes=_dir_bytes(src), python_state=True)
     return spark.table("mem_stream_stateful")
 
 
@@ -609,8 +635,8 @@ def stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("delay_ms"),
         )
     )
-    _run_to_memory(joined, "mem_stream_join", "append", final_no_data_batch=False,
-                   src_bytes=2 * _dir_bytes(src))
+    _drain(joined, "mem_stream_join", "append", final_no_data_batch=False,
+           src_bytes=2 * _dir_bytes(src))
     return spark.table("mem_stream_join")
 
 
@@ -634,7 +660,7 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     src = _stream_src(spark, sf_dir)
-    out = os.path.join(_run_scratch(), f"stream_sink_parquet_{_sf_tag(sf_dir)}")
+    out = os.path.join(_run_scratch(), "stream_sink_parquet")
     shutil.rmtree(out, ignore_errors=True)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -644,16 +670,7 @@ def stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    chk = os.path.join(_run_scratch(), "checkpoints", f"stream_sink_parquet_{_sf_tag(sf_dir)}")
-    shutil.rmtree(chk, ignore_errors=True)
-    q = (
-        _read_stream(spark, src)
-        .writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(_read_stream(spark, src), "stream_sink_parquet", "append", sink=write_batch)
     return spark.read.parquet(out)
 
 
@@ -686,19 +703,15 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     a full oracle, which only works because rate-micro-batch (unlike
     ``rate``) is wall-clock-free.
 
-    foreachBatch keeps the FIRST {_RATE_BATCHES} batches and the query is
-    stopped once batch {_RATE_BATCHES} is reached — an unbounded source
-    needs an explicit drain bound (there is no availableNow for a
-    generator); the batch_id guard makes the kept set exact regardless of
-    how many extra batches race in before stop() lands.
+    The source is unbounded, so the drain bound comes from the trigger:
+    under ``availableNow`` rate-micro-batch serves exactly one batch per
+    run, and ``_RATE_BATCHES`` drains resuming one checkpoint land
+    batches 0 .. ``_RATE_BATCHES`` - 1 — no wall clock, no stop() race.
     """
     import shutil
-    import time as _time
 
-    out = os.path.join(_run_scratch(), f"stream_rate_{_sf_tag(sf_dir)}")
-    chk = os.path.join(_run_scratch(), "checkpoints", f"stream_rate_{_sf_tag(sf_dir)}")
+    out = os.path.join(_run_scratch(), "stream_rate_source")
     shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(chk, ignore_errors=True)
 
     src = (
         spark.readStream.format("rate-micro-batch")
@@ -710,25 +723,12 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id < _RATE_BATCHES:
-            batch_df.select(
-                F.col("value").alias("v"), F.unix_millis("timestamp").alias("ts_ms")
-            ).write.mode("append").parquet(out)
+        batch_df.select(
+            F.col("value").alias("v"), F.unix_millis("timestamp").alias("ts_ms")
+        ).write.mode("append").parquet(out)
 
-    q = (
-        src.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", chk)
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    deadline = _time.time() + 120
-    while _time.time() < deadline:
-        p = q.lastProgress
-        if p is not None and p["batchId"] >= _RATE_BATCHES:
-            break
-        _time.sleep(0.05)
-    q.stop()
-    q.awaitTermination()
+    for run in range(_RATE_BATCHES):
+        _drain(src, "stream_rate_source", "append", sink=write_batch, resume=run > 0)
 
     back = spark.read.parquet(out)
     return back.groupBy((F.col("v") % 10).alias("bucket")).agg(
@@ -762,45 +762,30 @@ def stream_restart_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def write_halves(p: str) -> None:
         e = load(spark, sf_dir, "events")
-        halves = (
-            e.filter(F.col("event_id") % 2 == 0),
-            e.filter(F.col("event_id") % 2 == 1),
-        )
         os.makedirs(p)
-        for idx, part in enumerate(halves):
-            sub = os.path.join(p, f"w{idx}")
-            part.coalesce(1).write.mode("overwrite").parquet(sub)
-            fname = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
-            shutil.move(os.path.join(sub, fname), os.path.join(p, f"half{idx}.parquet"))
-            shutil.rmtree(sub)
+        for idx in (0, 1):
+            _write_one_file(
+                e.filter(F.col("event_id") % 2 == idx), os.path.join(p, f"half{idx}.parquet")
+            )
 
-    tag = _sf_tag(sf_dir)
     stage = _materialize(write_halves, _fixture_dir("stream_restart_stage", sf_dir))
 
-    src = os.path.join(_run_scratch(), f"stream_restart_src_{tag}")
-    out = os.path.join(_run_scratch(), f"stream_restart_out_{tag}")
-    chk = os.path.join(_run_scratch(), "checkpoints", f"stream_restart_{tag}")
-    for d in (src, out, chk):
+    src = os.path.join(_run_scratch(), "stream_restart_src")
+    out = os.path.join(_run_scratch(), "stream_restart_out")
+    for d in (src, out):
         shutil.rmtree(d, ignore_errors=True)
     os.makedirs(src)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.select("event_id", "user_id", "value").write.mode("append").parquet(out)
 
-    def run_once() -> None:
-        q = (
-            _read_stream(spark, src)
-            .writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    shutil.copy(os.path.join(stage, "half0.parquet"), os.path.join(src, "half0.parquet"))
-    run_once()  # first run: sees only half0
-    shutil.copy(os.path.join(stage, "half1.parquet"), os.path.join(src, "half1.parquet"))
-    run_once()  # restart: offset log skips half0, processes only half1
+    # first run sees only half0; the restart's offset log skips half0
+    # and processes only half1
+    for idx in (0, 1):
+        name = f"half{idx}.parquet"
+        shutil.copy(os.path.join(stage, name), os.path.join(src, name))
+        _drain(_read_stream(spark, src), "stream_restart_checkpoint", "append",
+               sink=write_batch, resume=idx > 0)
     return spark.read.parquet(out)
 
 
@@ -838,12 +823,9 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
-    tag = _sf_tag(sf_dir)
     src = _stream_src(spark, sf_dir)
-    state = os.path.join(_run_scratch(), f"upsert_state_{tag}")
-    chk = os.path.join(_run_scratch(), "checkpoints", f"upsert_{tag}")
-    for d in (state, chk):
-        shutil.rmtree(d, ignore_errors=True)
+    state = os.path.join(_run_scratch(), "upsert_state")
+    shutil.rmtree(state, ignore_errors=True)
 
     from pyspark.sql import Window
 
@@ -869,21 +851,13 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(state)
         os.replace(tmp, state)
 
-    q = (
-        # Half the wide source per trigger -> exactly TWO micro-batches,
-        # so the union-with-existing-state merge path actually executes
-        # (the old single-file stage ran one batch and never exercised
-        # it) without paying a per-file batch cascade.
-        _read_stream(
-            spark, src, maxFilesPerTrigger=max(1, (_src_width(spark) + 1) // 2)
-        )
-        .select("user_id", "event_id", "ts", "event_type", "value")
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # Half the wide source per trigger -> exactly TWO micro-batches, so
+    # the union-with-existing-state merge path executes without paying a
+    # per-file batch cascade.
+    changes = _read_stream(
+        spark, src, maxFilesPerTrigger=max(1, (_src_width(spark) + 1) // 2)
+    ).select("user_id", "event_id", "ts", "event_type", "value")
+    _drain(changes, "stream_foreach_upsert", "append", sink=merge)
     s = spark.read.parquet(state)
     return s.select(
         "user_id",
@@ -926,14 +900,12 @@ def stream_state_introspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning skip the rest.
     """
     src = _stream_src(spark, sf_dir)
-    name = "mem_stream_state_introspect"
-    chk = os.path.join(_run_scratch(), "checkpoints", name)
     agg = (
         _read_stream(spark, src)
         .groupBy(F.window("ts", "10 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    _run_to_memory(agg, name, "complete", src_bytes=_dir_bytes(src))
+    chk = _drain(agg, "mem_stream_state_introspect", "complete", src_bytes=_dir_bytes(src))
     state = spark.read.format("statestore").option("path", chk).load()
     return state.select(
         F.col("key.window.start").alias("window_start"),
@@ -986,7 +958,7 @@ def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "value_sum",
             )
         )
-        _run_to_memory(agg, "mem_stream_rocksdb", "complete", src_bytes=_dir_bytes(src))
+        _drain(agg, "mem_stream_rocksdb", "complete", src_bytes=_dir_bytes(src))
     return spark.table("mem_stream_rocksdb")
 
 
@@ -1016,7 +988,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "event_type", "ts")
     )
-    _run_to_memory(
+    _drain(
         dedup, "mem_stream_dedup_wm", "append", final_no_data_batch=False,
         src_bytes=_dir_bytes(src),
     )
@@ -1176,6 +1148,6 @@ def stream_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    _run_to_memory(scored, "mem_stream_zscore", "update",
-                   src_bytes=_dir_bytes(src), python_state=True)
+    _drain(scored, "mem_stream_zscore", "update",
+           src_bytes=_dir_bytes(src), python_state=True)
     return spark.table("mem_stream_zscore")

@@ -22,9 +22,6 @@ SF0001 = "/root/testdata/sf0.001"
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    from yc_data_proc_metadata_import_spark.session import ensure_session_defaults
-
-    ensure_session_defaults(spark)
     return engine.queries()["flagship_pricing_summary"](spark, SF0001)
 
 

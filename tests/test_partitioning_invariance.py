@@ -23,6 +23,7 @@ from __future__ import annotations
 import pytest
 
 import yc_data_proc_metadata_import_spark as engine
+from yc_data_proc_metadata_import_spark.session import conf_scope
 
 from .compare import _norm
 
@@ -56,15 +57,13 @@ def _rows(df):
 def test_shape_invariant(key, spark, sf_dir):
     if key not in QUERIES:
         pytest.skip(f"{key} not registered")
-    base = spark.conf.get("spark.sql.shuffle.partitions")
     df_a = QUERIES[key](spark, sf_dir)
     rows_a = _rows(df_a)
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        df_b = QUERIES[key](spark, sf_dir)
-        rows_b = _rows(df_b)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", base)
+    # The frame executes in the session it was built in, not the caller's.
+    session = df_a.sparkSession
+    assert session.conf.get("spark.sql.shuffle.partitions") != "7"
+    with conf_scope(session, {"spark.sql.shuffle.partitions": "7"}):
+        rows_b = _rows(QUERIES[key](spark, sf_dir))
     assert rows_a == rows_b, (
         f"{key}: result depends on shuffle partitioning "
         f"({len(rows_a)} vs {len(rows_b)} rows; first diff: "

@@ -151,22 +151,11 @@ def test_pruning_frames_survive_sink_partitioned(spark, sf_dir, oracle):
 
 
 def test_bloom_filter_reaches_probe_side(spark, sf_dir):
-    """join_bloom_filtered's reason to exist: under the key's conf window
-    the optimized plan must carry a bloom filter (might_contain) applied
-    to the lineitem probe side, built from the filtered orders side."""
-    from yc_data_proc_metadata_import_spark.operators.joins import (
-        _BLOOM_CONFS,
-        bloom_join_frame,
-    )
-    from yc_data_proc_metadata_import_spark.session import conf_scope
-
-    with conf_scope(spark, _BLOOM_CONFS):
-        plan = (
-            bloom_join_frame(spark, sf_dir)
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .toString()
-        )
+    """join_bloom_filtered's reason to exist: the executed plan of the
+    key's frame must carry a bloom filter (might_contain) applied to the
+    lineitem probe side, built from the filtered orders side."""
+    df = QUERIES["join_bloom_filtered"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "bloom" in plan.lower(), f"no runtime bloom filter:\n{plan}"
 
 

@@ -477,26 +477,20 @@ def test_stream_state_partitions_sizing():
     assert _state_partitions(sp, 100 * 1024**3, python_state=True) == 128
 
 
-def test_keys_leave_caller_conf_unchanged(spark, sf_dir):
-    """Keys that hold a conf while they run must hand the caller's session
-    back as they found it: ``SET`` lists the same keys with the same
-    values afterwards, including keys that were unset before."""
+def test_batch_keys_ignore_caller_conf_and_keep_views_private(spark, sf_dir, oracle):
+    """A caller with ANSI on and a non-UTC time zone still gets the oracle
+    rows from a timestamp-returning batch key, its conf is untouched, and
+    a temp view a key creates stays in the key's own session."""
+    from yc_data_proc_metadata_import_spark.session import conf_scope
 
-    def conf_rows():
-        return {r.key: r.value for r in spark.sql("SET").collect()}
+    from .compare import assert_match
 
-    before = conf_rows()
-    queries = engine.queries()
-    for key in (
-        "sink_dynamic_overwrite",
-        "sql_scripting",
-        "stream_dedup",
-        "stream_foreach_upsert",  # the four foreachBatch drains
-        "stream_rate_source",
-        "stream_restart_checkpoint",
-        "stream_rocksdb_state",
-        "stream_sink_parquet",
-        "win_lag_lead",  # reads events through load()
-    ):
-        queries[key](spark, sf_dir).collect()
-    assert conf_rows() == before
+    queries, oracles = engine.queries(), engine.oracle_sql()
+    caller = {"spark.sql.ansi.enabled": "true", "spark.sql.session.timeZone": "America/Los_Angeles"}
+    with conf_scope(spark, caller):
+        before = {r.key: r.value for r in spark.sql("SET").collect()}
+        key = "scan_typed_columns"  # to_timestamp + interval, surfaced as a timestamp
+        assert_match(queries[key](spark, sf_dir), oracle, oracles[key], key)
+        queries["sql_scripting"](spark, sf_dir).collect()
+        assert {r.key: r.value for r in spark.sql("SET").collect()} == before
+        assert not spark.catalog.tableExists("script_orders")

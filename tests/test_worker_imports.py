@@ -77,3 +77,35 @@ def test_pyfiles_shipped_once_per_application(monkeypatch):
     spark.sparkContext.applicationId = "app-2"
     registry._ensure_worker_imports(spark)
     assert len(spark.sparkContext.shipped) == 2
+
+
+_SHIP = """
+from yc_data_proc_metadata_import_spark import registry
+
+class _Context:
+    applicationId = "app"
+
+    def addPyFile(self, path):
+        print("SHIPPED", path)
+
+class _Spark:
+    sparkContext = _Context()
+
+registry._ensure_worker_imports(_Spark())
+"""
+
+
+def test_processes_share_one_package_zip(tmp_path):
+    """The zip is named by the package's contents, so two processes on
+    one code version ship the same file and leave one zip behind."""
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    shipped = []
+    for _ in range(2):
+        out = subprocess.run(
+            [sys.executable, "-c", _SHIP], capture_output=True, text=True, cwd=_REPO, env=env, timeout=300
+        )
+        lines = [l for l in out.stdout.splitlines() if l.startswith("SHIPPED ")]
+        assert len(lines) == 1, f"stdout:\n{out.stdout[-2000:]}\nstderr:\n{out.stderr[-2000:]}"
+        shipped.append(lines[0].split(" ", 1)[1])
+    assert shipped[0] == shipped[1]
+    assert os.listdir(tmp_path) == [os.path.basename(shipped[0])]

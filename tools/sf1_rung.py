@@ -509,7 +509,7 @@ def main() -> int:
     import duckdb
 
     from tests.compare import _norm, assert_match
-    from yc_data_proc_metadata_import_spark.session import get_spark
+    from yc_data_proc_metadata_import_spark.session import conf_scope, get_spark
     from yc_data_proc_metadata_import_spark.sources.io import TABLES, table_path
 
     spark = get_spark(app_name=f"{preset}-rung")
@@ -1046,18 +1046,16 @@ def main() -> int:
         _dedup.simhash_labels_cached.cache_clear()
         _dedup.dedup_clusters_cached.cache_clear()
 
-    base = spark.conf.get("spark.sql.shuffle.partitions")
     for key in inv_keys:
         row = {}
         try:
             clear_result_caches()
-            a = rows_of(queries[key](spark, SF1))
-            spark.conf.set("spark.sql.shuffle.partitions", "7")
-            try:
+            df = queries[key](spark, SF1)
+            a = rows_of(df)
+            # A key's frame executes in the session it was built in.
+            with conf_scope(df.sparkSession, {"spark.sql.shuffle.partitions": "7"}):
                 clear_result_caches()
                 b = rows_of(queries[key](spark, SF1))
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", base)
             row["invariant"] = a == b
             row["n_rows"] = len(a)
             if a != b:

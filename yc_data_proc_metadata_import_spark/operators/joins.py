@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..session import conf_scope
 from ..sources.io import load
 from ..utils import dsum, sql_dsum
 
@@ -492,18 +491,6 @@ _BLOOM_CONFS = {
 }
 
 
-def bloom_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LAZY joined frame — callers must hold _BLOOM_CONFS while
-    planning/executing it (tests assert the bloomfilter lands)."""
-    l = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000.0)
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_li"), dsum("l_extendedprice", "revenue"))
-    )
-
-
 @query(
     "join_bloom_filtered",
     oracle=f"""
@@ -512,6 +499,7 @@ def bloom_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o.o_totalprice > 400000.0
     GROUP BY o_orderpriority
     """,
+    conf=_BLOOM_CONFS,
 )
 def join_bloom_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RUNTIME BLOOM FILTER on a selective fact-to-fact join: the filtered
@@ -520,13 +508,17 @@ def join_bloom_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this cuts the dominant cost (shuffling the probe side) by the
     join's selectivity, without any manual pre-aggregation.
 
-    SQLConf is captured at EXECUTION, not DataFrame creation, so the
-    frame is materialized in-key (eager localCheckpoint) while the bloom
-    confs are held, then the originals are restored so later keys keep
-    their broadcast plans.
+    SQLConf is read at EXECUTION, so the bloom thresholds are declared on
+    the key: the frame executes in the key's own session, which holds
+    them, and every other key keeps its broadcast plans.
     """
-    with conf_scope(spark, _BLOOM_CONFS):
-        return bloom_join_frame(spark, sf_dir).localCheckpoint(eager=True)
+    l = load(spark, sf_dir, "lineitem")
+    o = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 400000.0)
+    return (
+        l.join(o, l.l_orderkey == o.o_orderkey)
+        .groupBy("o_orderpriority")
+        .agg(F.count(F.lit(1)).alias("n_li"), dsum("l_extendedprice", "revenue"))
+    )
 
 
 @query(

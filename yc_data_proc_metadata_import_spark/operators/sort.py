@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..session import conf_scope
 from ..sources.io import load
 
 
@@ -134,6 +133,7 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS n_above_quarter
     FROM orders, m GROUP BY o_orderpriority
     """,
+    conf={"spark.sql.scripting.enabled": "true"},
 )
 def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL SCRIPTING + SESSION VARIABLES (Spark 4 public surface): a
@@ -153,34 +153,31 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst plans normally.
     """
     load(spark, sf_dir, "orders").createOrReplaceTempView("script_orders")
-    with conf_scope(spark, {"spark.sql.scripting.enabled": "true"}):
-        spark.sql(
-            "DECLARE OR REPLACE VARIABLE eng_script_factor BIGINT DEFAULT 2"
-        )
-        spark.sql("SET VARIABLE eng_script_factor = 4")
-        return spark.sql(
-            """
-            BEGIN
-              DECLARE thr DOUBLE DEFAULT 0;
-              DECLARE i INT DEFAULT 0;
-              SET thr = (SELECT MAX(o_totalprice) FROM script_orders);
-              WHILE i < 3 DO
-                SET thr = thr / 2;
-                SET i = i + 1;
-              END WHILE;
-              SELECT o_orderpriority,
-                     COUNT(*) AS n_orders,
-                     CAST(SUM(CASE WHEN o_totalprice > thr
-                                   THEN 1 ELSE 0 END) AS BIGINT)
-                         AS n_above_eighth,
-                     CAST(SUM(CASE WHEN o_totalprice * eng_script_factor
-                                        > thr * 8
-                                   THEN 1 ELSE 0 END) AS BIGINT)
-                         AS n_above_quarter
-              FROM script_orders GROUP BY o_orderpriority;
-            END
-            """
-        )
+    spark.sql("DECLARE OR REPLACE VARIABLE eng_script_factor BIGINT DEFAULT 2")
+    spark.sql("SET VARIABLE eng_script_factor = 4")
+    return spark.sql(
+        """
+        BEGIN
+          DECLARE thr DOUBLE DEFAULT 0;
+          DECLARE i INT DEFAULT 0;
+          SET thr = (SELECT MAX(o_totalprice) FROM script_orders);
+          WHILE i < 3 DO
+            SET thr = thr / 2;
+            SET i = i + 1;
+          END WHILE;
+          SELECT o_orderpriority,
+                 COUNT(*) AS n_orders,
+                 CAST(SUM(CASE WHEN o_totalprice > thr
+                               THEN 1 ELSE 0 END) AS BIGINT)
+                     AS n_above_eighth,
+                 CAST(SUM(CASE WHEN o_totalprice * eng_script_factor
+                                    > thr * 8
+                               THEN 1 ELSE 0 END) AS BIGINT)
+                     AS n_above_quarter
+          FROM script_orders GROUP BY o_orderpriority;
+        END
+        """
+    )
 
 
 @query(

@@ -5,17 +5,39 @@ Every operator module registers its ``queries()`` keys here via the
 DataFrame``; when an ANSI-SQL oracle exists it is registered alongside so
 the driver can hash-compare against DuckDB at sf0.01 (SURVEY.md SS5).
 
-Convention enforced here: every registered callable first pins the session
-timezone to UTC (timestamps in pyspark render in session TZ; DuckDB's are
-UTC-naive — without this, any timestamp column hash-mismatches).
+Session contract: a batch key builds its frame in the engine's own
+session, never in the caller's.  That session is one ``newSession()``
+child per Spark application and declared conf (``_key_session``): it
+carries ``session.DEFAULT_CONF``'s runtime-modifiable entries (UTC
+session time zone, ANSI off, AQE on) plus the conf the key declares with
+``@query(..., conf={...})``.  The frame executes as built: its actions
+run under the child's conf, temp views and session variables it creates
+stay in the child, and the caller's ``SET`` output and temp views are
+left as they were.  A frame derived from a caller frame and a key's
+frame (``caller_df.join(key_df)``) belongs to the session of the frame
+its first operation was called on, here the caller's, and executes
+under that session's conf.
+
+The 15 stream keys (``streaming/stream_queries.py``) stay on the
+caller's session, because streaming listeners are per session (a drain
+in a child is invisible to the caller's ``spark.streams`` listeners).
+Their wrapper pins the caller's time zone to UTC and ANSI off, and
+their drains hold the rest of their conf with ``session.conf_scope``.
+
+Every result-surface timestamp leaves as TIMESTAMP_NTZ
+(``_normalize_result_types``): DuckDB's timestamps are UTC-naive.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import DEFAULT_CONF
+from .utils import session_cached
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -23,6 +45,10 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 # Keys registered with prewarm=True, in registration order.
 PREWARM: list[str] = []
+
+# The module every stream key registers from; its keys stay on the
+# caller's session.
+_STREAM_MODULE = f"{__package__}.streaming.stream_queries"
 
 # applicationIds whose context has the package zip (see session_cached
 # for why never id(sc)).
@@ -41,6 +67,11 @@ def _ensure_worker_imports(spark: SparkSession) -> None:
     package zip is the canonical fix and also exactly how this library
     deploys to a real cluster (``spark-submit --py-files``).
 
+    The zip is named by a digest of the package's ``.py`` contents, so
+    every process on one code version ships the same file and leaves no
+    copy of its own.  It is staged under a per-process name and renamed
+    into place, so no reader sees a partial zip.
+
     Keyed on ``applicationId``, the rule ``utils.session_cached`` states:
     CPython reuses object ids after GC, so a new context allocated at a
     stopped one's address would otherwise never get the zip.
@@ -49,26 +80,48 @@ def _ensure_worker_imports(spark: SparkSession) -> None:
     app_id = sc.applicationId
     if app_id in _PYFILES_SENT:
         return
+    import hashlib
     import os
+    import pathlib
     import tempfile
     import zipfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"yc_dp_engine_pyfiles_{os.getpid()}.zip"
-    )
+    pkg = pathlib.Path(__file__).resolve().parent
+    files = sorted(p.relative_to(pkg.parent) for p in pkg.rglob("*.py"))
+    h = hashlib.sha256()
+    for rel in files:
+        h.update(f"{rel}\0".encode() + (pkg.parent / rel).read_bytes() + b"\0")
+    zpath = os.path.join(tempfile.gettempdir(), f"yc_dp_engine_pyfiles_{h.hexdigest()[:16]}.zip")
     if not os.path.exists(zpath):
-        tmp = zpath + ".tmp"
+        tmp = f"{zpath}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as z:
-            for root, _, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                        z.write(full, rel)
+            for rel in files:
+                z.write(pkg.parent / rel, str(rel))
         os.replace(tmp, zpath)
     sc.addPyFile(zpath)
     _PYFILES_SENT.add(app_id)
+
+
+def _key_session(spark: SparkSession, conf: tuple[tuple[str, str], ...]) -> SparkSession:
+    """The session batch keys declaring ``conf`` build and run in: one
+    ``spark.newSession()`` child per Spark application and ``conf``.
+
+    The child shares the caller's SparkContext, catalog and cached data
+    and starts from the application's SparkConf (so it keeps the
+    builder's ``shuffle.partitions``).  On top it gets the
+    runtime-modifiable entries of ``DEFAULT_CONF``, then ``conf``.  The
+    static entries (``codegen.cache.maxEntries``) are fixed when the JVM
+    starts, so under a session the engine did not build they keep the
+    builder's values."""
+
+    def build() -> SparkSession:
+        child = spark.newSession()
+        for k, v in (*DEFAULT_CONF.items(), *conf):
+            if child.conf.isModifiable(k):
+                child.conf.set(k, v)
+        return child
+
+    return session_cached(_key_session, spark, conf, build)
 
 
 def _ntz_type(dt):
@@ -80,9 +133,9 @@ def _ntz_type(dt):
     identical collect() values but Spark TIMESTAMP_LTZ arrives as
     ``timestamp[us, tz=UTC]`` while DuckDB's naive TIMESTAMP arrives as
     ``timestamp[us]``).  DuckDB timestamps are NTZ semantically, so every
-    result-surface timestamp must leave Spark as TIMESTAMP_NTZ.  Session
-    timezone is pinned to UTC, so the LTZ->NTZ cast preserves wall-clock
-    values exactly.
+    result-surface timestamp must leave Spark as TIMESTAMP_NTZ.  Every key
+    runs under a UTC session time zone, so the LTZ->NTZ cast preserves
+    wall-clock values exactly.
     """
     from pyspark.sql import types as T
 
@@ -121,9 +174,15 @@ def _normalize_result_types(df: DataFrame) -> DataFrame:
 
 
 def query(
-    name: str, oracle: str | None = None, prewarm: bool = False
+    name: str, oracle: str | None = None, prewarm: bool = False, conf: dict[str, str] | None = None
 ) -> Callable[[QueryFn], QueryFn]:
     """Register ``fn`` under ``name``; optionally attach a DuckDB oracle.
+
+    A batch key's frame is built in ``_key_session(spark, conf)`` and
+    executes as built: under ``DEFAULT_CONF`` plus ``conf``, whatever the
+    caller's session has set.  ``conf`` is the SQL conf the key needs at
+    build or execution time.  Stream keys run on the caller's session, and
+    their drains hold their conf with ``session.conf_scope``.
 
     ``prewarm=True`` declares that the key's first call builds a one-time
     derived fixture under ``.scratch/`` (through ``sources.io._materialize``,
@@ -133,21 +192,25 @@ def query(
     That build is input preparation, not the operator under test, so
     ``bench.py`` runs these keys once, unmeasured, before its timed loop.
     """
+    key_conf = tuple(sorted((conf or {}).items()))
 
     def deco(fn: QueryFn) -> QueryFn:
+        stream = fn.__module__ == _STREAM_MODULE
+
+        @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str, *args: Any, **kwargs: Any) -> DataFrame:
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            # The driver hands us a session we didn't build; Spark 4
-            # defaults ANSI ON while this engine (and the reference's
-            # Hive-era clusters, metastore-import.tf:193) assume
-            # permissive casts/arithmetic.
-            spark.conf.set("spark.sql.ansi.enabled", "false")
+            if stream:
+                spark.conf.set("spark.sql.session.timeZone", "UTC")
+                # A caller's session may not be ours; Spark 4
+                # defaults ANSI ON while this engine (and the reference's
+                # Hive-era clusters, metastore-import.tf:193) assume
+                # permissive casts/arithmetic.
+                spark.conf.set("spark.sql.ansi.enabled", "false")
+            else:
+                spark = _key_session(spark, key_conf)
             _ensure_worker_imports(spark)
             return _normalize_result_types(fn(spark, sf_dir, *args, **kwargs))
 
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
-        wrapped.__wrapped__ = fn
         if name in QUERIES:
             raise ValueError(f"duplicate queries() key: {name}")
         QUERIES[name] = wrapped
@@ -159,10 +222,3 @@ def query(
 
     return deco
 
-
-def get(name: str) -> QueryFn:
-    return QUERIES[name]
-
-
-def run(spark: SparkSession, sf_dir: str, name: str, **kwargs: Any) -> DataFrame:
-    return QUERIES[name](spark, sf_dir, **kwargs)

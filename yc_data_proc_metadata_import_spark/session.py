@@ -9,6 +9,14 @@ any config dict through ``extra_conf`` and the defaults mirror a sane
 100 TB-era cluster setup (AQE on, skew-join handling on, Arrow on) scaled
 down to local mode.
 
+A session handed in from outside keeps its own conf: the registry builds
+and runs every batch key in a ``newSession()`` child that carries
+``DEFAULT_CONF``'s runtime-modifiable entries plus the key's declared conf
+(``registry._key_session``), so no key writes the caller's ``SET``
+output.  Stream keys run on the caller's session; the registry pins its
+time zone and ANSI mode, and ``conf_scope`` holds a drain's conf for the
+drain only.
+
 Scale notes (local[32] today, 1000-executor cluster tomorrow):
 - ``spark.sql.adaptive.enabled`` + coalescePartitions + skewJoin: runtime
   re-planning is how a fixed shuffle-partition count survives a 100x data
@@ -103,30 +111,10 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def ensure_session_defaults(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable defaults to a session we didn't build.
-
-    The driver contract hands us an externally built session; timestamps
-    must render in UTC for oracle parity (pyspark timestamps are
-    session-TZ, DuckDB's are UTC-naive) and AQE should be on.
-
-    Static confs cannot be applied here: ``spark.sql.codegen.cache.maxEntries``
-    and ``spark.driver.memory`` are fixed when the JVM starts, so a session
-    the engine did not build keeps whatever its builder chose.
-    """
-    for k in (
-        "spark.sql.session.timeZone",
-        "spark.sql.adaptive.enabled",
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        "spark.sql.adaptive.skewJoin.enabled",
-    ):
-        spark.conf.set(k, DEFAULT_CONF.get(k, "true"))
-    return spark
-
-
 @contextmanager
 def conf_scope(spark: SparkSession, conf: dict[str, str]):
-    """Hold ``conf`` on the session for the ``with`` block.
+    """Hold ``conf`` on the session for the ``with`` block (the stream
+    drains' conf; a batch key declares its conf on ``@query`` instead).
 
     On exit each key gets its previous value back, or is unset if it was not
     set before, so the caller's ``SET`` output is what it was. SQL conf is

@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..session import conf_scope
 from .io import _fixture_dir, _materialize, _run_scratch, load, table_path
 
 
@@ -486,6 +485,7 @@ def sink_codec_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE o_totalprice END AS o_totalprice
     FROM orders
     """,
+    conf={"spark.sql.sources.partitionOverwriteMode": "dynamic"},
 )
 def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DYNAMIC partition overwrite — the no-lakehouse backfill: rewrite
@@ -506,22 +506,21 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
-        (
-            orders.repartition("o_orderstatus", "o_orderkey")
-            .write.mode("overwrite")
-            .partitionBy("o_orderstatus")
-            .parquet(out)
-        )
-        backfill = orders.filter(F.col("o_orderstatus") == "F").withColumn(
-            "o_totalprice", F.col("o_totalprice") * 2
-        )
-        (
-            backfill.repartition("o_orderstatus", "o_orderkey")
-            .write.mode("overwrite")
-            .partitionBy("o_orderstatus")
-            .parquet(out)
-        )
+    (
+        orders.repartition("o_orderstatus", "o_orderkey")
+        .write.mode("overwrite")
+        .partitionBy("o_orderstatus")
+        .parquet(out)
+    )
+    backfill = orders.filter(F.col("o_orderstatus") == "F").withColumn(
+        "o_totalprice", F.col("o_totalprice") * 2
+    )
+    (
+        backfill.repartition("o_orderstatus", "o_orderkey")
+        .write.mode("overwrite")
+        .partitionBy("o_orderstatus")
+        .parquet(out)
+    )
     return spark.read.parquet(out).select(
         "o_orderkey",
         F.col("o_orderstatus").cast("string").alias("o_orderstatus"),

@@ -104,8 +104,9 @@ def session_cached(owner, spark, suffix, build):
     stopped context (round-5 ADVICE).  ``newSession()`` children share
     the application id, so they share the entries.  Entries from other
     application ids are evicted on insert — they reference dead contexts
-    and would otherwise leak.  ``session_artifact`` builders and
-    ``sources.io.parquet_schema`` are the owners.
+    and would otherwise leak.  ``session_artifact`` builders,
+    ``sources.io.parquet_schema`` and ``registry._key_session`` (the
+    sessions batch keys run in) are the owners.
     """
     app_id = spark.sparkContext.applicationId
     key = (owner, app_id, suffix)
@@ -155,8 +156,8 @@ def session_artifact(builder):
 
 
 def clear_session_caches() -> int:
-    """Drop every session artifact and cached Parquet schema; returns
-    the entry count dropped. The caller should follow with gc.collect()
+    """Drop every session artifact, cached Parquet schema and key session;
+    returns the entry count dropped. The caller should follow with gc.collect()
     (and a JVM GC) so the ContextCleaner actually releases the pinned
     blocks."""
     return _drop_entries()

@@ -33,14 +33,23 @@ def test_warm_build_starts_no_job(key, spark, sf_dir, count_jobs):
 
 def test_mad_warm_build_job_count(spark, sf_dir, count_jobs):
     """A warm build of the MAD key starts exactly its four materializing
-    jobs: the price histogram's and the median's ``localCheckpoint`` (two
-    jobs each, the shuffle-map stage and the result).  The histogram's row
-    count comes from an ``Observation`` on its checkpoint job; a separate
+    jobs: the price histogram's and the median's ``utils.materialize``
+    (two jobs each, the shuffle-map stage and the result).  The
+    histogram's row count comes from that same job; a separate
     ``count()`` for the selection dispatch would add two more."""
     key = "agg_median_absolute_deviation"
     QUERIES[key](spark, sf_dir)
     _, jobs = count_jobs(lambda: QUERIES[key](spark, sf_dir))
     assert jobs == 4, f"{key}: a warm build started {jobs} Spark job(s), want 4"
+
+
+def test_hard_corpus_sizing_starts_no_job(spark, sf_dir, count_jobs):
+    """The hard-topology corpus is sized from the documents table's
+    Parquet footers, so building its frame starts no Spark job."""
+    from yc_data_proc_metadata_import_spark.llm.dedup import _hard_docs_df
+
+    _, jobs = count_jobs(lambda: _hard_docs_df(spark, sf_dir))
+    assert jobs == 0, f"_hard_docs_df started {jobs} Spark job(s)"
 
 
 # Warm-build job counts of the metastore migration keys.  Export and

@@ -262,8 +262,11 @@ def test_propagate_min_labels_raises_on_nonconvergence(spark, monkeypatch):
     path_edges = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
     )
+    spark.catalog.clearCache()
     with pytest.raises(RuntimeError, match="did not.*converge|converge"):
         dedup._propagate_min_labels(path_edges)
+    # the rounds' label caches are released on the way out, raise or not
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_propagate_min_labels_converges_on_shallow_graph(spark):

@@ -12,8 +12,10 @@ from __future__ import annotations
 from itertools import combinations
 
 import numpy as np
+import pytest
 
 from yc_data_proc_metadata_import_spark.operators.analytics import (
+    _TRI_BROADCAST_MAX_EDGES,
     _tri_triangles,
 )
 
@@ -51,9 +53,20 @@ def test_degree_oriented_enumeration_matches_brute_force(spark):
         )
         got = {
             tuple(sorted((r["u"], r["v1"], r["v2"])))
-            for r in _tri_triangles(und).collect()
+            for r in _tri_triangles(und, len(edges)).collect()
         }
         want = _brute_triangles(edges)
         assert got == want, (n_nodes, p, got ^ want)
         # exactly-once: the collected row count equals the set size
-        assert _tri_triangles(und).count() == len(want)
+        assert _tri_triangles(und, len(edges)).count() == len(want)
+
+
+def test_edge_count_beyond_the_broadcast_bound_raises(spark):
+    """The kernel broadcasts every relation it joins, so a graph larger
+    than the bound those broadcasts rely on must raise, not broadcast.
+    The row count is what the caller's materialization observed; here a
+    tiny frame carries an overstated one."""
+    und = spark.createDataFrame([(0, 1), (1, 2), (0, 2)], "a long, b long")
+    assert _tri_triangles(und, _TRI_BROADCAST_MAX_EDGES).count() == 1
+    with pytest.raises(ValueError, match="_TRI_BROADCAST_MAX_EDGES"):
+        _tri_triangles(und, _TRI_BROADCAST_MAX_EDGES + 1)

@@ -196,7 +196,7 @@ def test_kcore_matches_bruteforce_fixpoint(spark, sf_dir):
     the fixture's peel depth — the docstring's fixpoint claim."""
     from yc_data_proc_metadata_import_spark.operators import analytics as A
 
-    und = A._tri_und(spark, sf_dir).collect()
+    und = A._tri_und(spark, sf_dir)[0].collect()
     adj: dict[int, set[int]] = {}
     for r in und:
         adj.setdefault(r.a, set()).add(r.b)

@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.io import load, load_documents_wide
-from ..utils import session_artifact
+from ..sources.io import load_documents_wide, table_path
+from ..utils import materialize, session_artifact
 
 # Shingle width (tokens per shingle) and near-dup Jaccard threshold.
 _SHINGLE = 3
@@ -102,13 +102,13 @@ def shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Six keys (ngram/near/cluster/recall-audit/curation and their verify
 # stages) consume the shingle table; like llm/text.py's token cache, one
-# eager localCheckpoint per (session, scale) replaces per-key rebuilds —
+# materialization per (session, scale) replaces per-key rebuilds —
 # the "build the index once, fan out consumers" split a real pipeline
 # uses. tests/test_plans.py keeps calling the UNCACHED shingled() so the
 # tokenizer-hoisting plan guards still exercise the real pipeline.
 @session_artifact
 def shingled_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return shingled(spark, sf_dir).localCheckpoint(eager=True)
+    return materialize(shingled(spark, sf_dir))[0]
 
 
 # The hashed inverted index (doc_id, n_sh, xxhash64(shingle)) is the
@@ -121,11 +121,13 @@ def shingled_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 @session_artifact
 def hashed_index_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingled_cached(spark, sf_dir)
-    return sh.select(
-        "doc_id",
-        F.size("shingles").alias("n_sh"),
-        F.explode(F.expr("transform(shingles, s -> xxhash64(s))")).alias("sh_h"),
-    ).localCheckpoint(eager=True)
+    return materialize(
+        sh.select(
+            "doc_id",
+            F.size("shingles").alias("n_sh"),
+            F.explode(F.expr("transform(shingles, s -> xxhash64(s))")).alias("sh_h"),
+        )
+    )[0]
 
 
 # Oracle pair generation mirrors the Spark inverted-index shape (unnest
@@ -301,11 +303,8 @@ def lsh_candidates(sh: DataFrame) -> DataFrame:
 # build-once discipline as hashed_index_cached.
 @session_artifact
 def minhash_signed_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        shingled_cached(spark, sf_dir)
-        .withColumn("sig", _minhash_sig())
-        .localCheckpoint(eager=True)
-    )
+    sh = shingled_cached(spark, sf_dir)
+    return materialize(sh.withColumn("sig", _minhash_sig()))[0]
 
 
 @query(
@@ -512,7 +511,7 @@ def simhash_fingerprints_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scan; a filter on size(hashes) would be substituted below
     # the repartition and re-run tokenize+hash per row inside the
     # predicate (measured 3x cost of the whole stage).
-    return _simhash_fp_plan(spark, sf_dir).localCheckpoint(eager=True)
+    return materialize(_simhash_fp_plan(spark, sf_dir))[0]
 
 
 # tok/fp/blocks CTE chain shared by the simhash PAIR oracle and the
@@ -906,17 +905,13 @@ def _labels_from_fps(spark: SparkSession, fps: DataFrame) -> DataFrame:
     # optimized" item 3): the star-edge pipeline and the final doc->label
     # mapping join both read the distinct-fp relation, and the two
     # references meet in a join, so the lazy groupBy executed twice per
-    # labels key. Eager localCheckpoint materializes it once — it is
-    # |distinct fp|-bounded (<= one row per doc; 216 k at sf10), the
-    # same linear artifact the pipeline shuffles anyway.
-    dfp = (
-        fps.groupBy("simhash")
-        .agg(F.min("doc_id").alias("min_doc"))
-        .localCheckpoint(eager=True)
-    )
+    # labels key. Materializing it once costs one |distinct fp|-bounded
+    # table (<= one row per doc; 216 k at sf10), the same linear
+    # artifact the pipeline shuffles anyway.
+    dfp, _ = materialize(fps.groupBy("simhash").agg(F.min("doc_id").alias("min_doc")))
     labels = _propagate_min_labels(_star_edges_from_dfp(spark, dfp))
     lab = F.coalesce(F.col("label"), F.col("min_doc"))
-    return (
+    return materialize(
         fps.join(dfp, "simhash")
         .join(labels, F.col("min_doc") == labels.node, "left")
         .select(
@@ -924,8 +919,7 @@ def _labels_from_fps(spark: SparkSession, fps: DataFrame) -> DataFrame:
             lab.alias("cluster_id"),
             (lab == F.col("doc_id")).alias("keep"),
         )
-        .localCheckpoint(eager=True)
-    )
+    )[0]
 
 
 # Converged (doc_id, cluster_id, keep) labels, one materialization per
@@ -1067,9 +1061,12 @@ def _hard_tok_case() -> str:
 
 def _hard_docs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, text) fragmenting corpus, sized from the tier's document
-    count (one metadata-scale count job). spark.range is a parallel
-    leaf, the text expression is codegen'd per row — no driver rows."""
-    n_docs = load(spark, sf_dir, "documents").count()
+    count, which the Parquet footers carry, so sizing starts no Spark
+    job. spark.range is a parallel leaf, the text expression is
+    codegen'd per row — no driver rows."""
+    import pyarrow.dataset as ds
+
+    n_docs = ds.dataset(table_path(sf_dir, "documents"), format="parquet").count_rows()
     nf = max(4, n_docs // _HARD_FAM_DIV)
     ids = spark.range(nf * (_HARD_M + 1)).select(
         F.col("id").alias("d"), F.lit(nf * _HARD_M).alias("fm")
@@ -1113,11 +1110,8 @@ def llm_dedup_simhash_labels_hard(spark: SparkSession, sf_dir: str) -> DataFrame
     shape as the main key; the corpus generator is a parallel range +
     codegen expression, so the key adds no driver-side or quadratic
     work."""
-    return _labels_from_fps(
-        spark,
-        _fp_plan_from_docs(spark, _hard_docs_df(spark, sf_dir))
-        .localCheckpoint(eager=True),
-    )
+    fps, _ = materialize(_fp_plan_from_docs(spark, _hard_docs_df(spark, sf_dir)))
+    return _labels_from_fps(spark, fps)
 
 
 @query(
@@ -1195,10 +1189,11 @@ def llm_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself; each round takes the min label over neighbors; stops when no
     label changes (dup-cluster diameters are tiny, so 2-3 rounds). Each
     round is one shuffle join + aggregate — no driver-side graph, and
-    ``localCheckpoint`` truncates the growing plan lineage so iteration
-    cost stays flat. At billions of edges the same loop holds (this is
-    large-star/small-star's core step); the oracle is DuckDB's recursive
-    reachability CTE over the identical exact pair set.
+    materializing each round's labels (``utils.materialize``) truncates
+    the growing plan lineage so iteration cost stays flat. At billions
+    of edges the same loop holds (this is large-star/small-star's core
+    step); the oracle is DuckDB's recursive reachability CTE over the
+    identical exact pair set.
     """
     return dedup_clusters_cached(spark, sf_dir)
 
@@ -1211,7 +1206,7 @@ def dedup_clusters_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact — llm_dedup_cluster surfaces it and llm_curation_pipeline
     consumes it, the same share-the-derived-input pattern as
     hashed_index_cached."""
-    return _cluster_labels(spark, sf_dir).localCheckpoint(eager=True)
+    return materialize(_cluster_labels(spark, sf_dir))[0]
 
 
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1240,43 +1235,28 @@ def _propagate_min_labels(pairs: DataFrame) -> DataFrame:
     """Distributed min-label propagation over an undirected pair graph:
     (doc_a, doc_b) pairs in, converged (node, label) out, label = the
     component's minimum node id. Only nodes appearing in >=1 pair are
-    emitted — callers decide how to label singletons. Each round is one
-    shuffle join + aggregate with localCheckpoint truncating lineage
-    (large-star/small-star's core step); shared by llm_dedup_cluster
-    (ngram-Jaccard graph) and llm_dedup_simhash_labels (Hamming graph).
+    emitted — callers decide how to label singletons. Shared by
+    llm_dedup_cluster (ngram-Jaccard graph) and llm_dedup_simhash_labels
+    (star edges over the Hamming graph).
 
-    Memory shape (round-13 sf1 finding): the Hamming graph on the
-    homogeneous rung corpus carries 544M pairs, and localCheckpointing
-    the SYMMETRIZED edge list OOM'd an 8 GB local-mode heap twice — the
-    checkpoint's unroll path stores DESERIALIZED rows, so even 4x-wider
-    partitions blew the heap inside LocalRDDCheckpointData.doCheckpoint.
-    So: materialize ONE pair direction only (reverse derived lazily per
-    round — a free map that halves stored bytes), repartitioned 4x wider
-    than session parallelism, persisted DISK_ONLY (serialized, streamed
-    reads, heap-bounded at any pair count) and materialized by a single
-    count. The small per-round LABEL table keeps using localCheckpoint —
-    that is where lineage truncation matters. On a real cluster the same
-    blocks spread over executors; DISK_ONLY is the local-mode analogue
-    of "bigger than one node's memory"."""
-    from pyspark import StorageLevel
-
-    n = pairs.sparkSession.sparkContext.defaultParallelism
+    One pair direction is materialized (the reverse is a free map
+    derived per round), and the job that stores it also counts it. A
+    graph of at most _DRIVER_UF_MAX_EDGES edges is labelled by the
+    driver's union-find; a larger one runs the distributed loop, one
+    shuffle join + aggregate + pointer-doubling chase per round
+    (large-star/small-star's core step), each round's label table
+    materialized so the lineage stays flat."""
     # Cast ids to long up front so BOTH exit paths (driver union-find
     # below hardcodes "node long, label long"; the distributed loop
     # preserves input types) are schema-identical by construction — a
     # caller passing int32 doc ids gets long either way (round-15
-    # ADVICE). Persist the UN-repartitioned single direction first: the
-    # edge count decides the path, and the wide n*4 shuffle layout is
-    # wasted work for graphs the union-find immediately collects.
-    src = pairs.select(
-        F.col("doc_a").cast("long").alias("doc_a"),
-        F.col("doc_b").cast("long").alias("doc_b"),
-    ).persist(StorageLevel.DISK_ONLY)
-    try:
-        n_edges = src.count()
-    except Exception:
-        src.unpersist()
-        raise
+    # ADVICE).
+    half, n_edges = materialize(
+        pairs.select(
+            F.col("doc_a").cast("long").alias("doc_a"),
+            F.col("doc_b").cast("long").alias("doc_b"),
+        )
+    )
     if n_edges <= _DRIVER_UF_MAX_EDGES:
         # TINY graph: a driver-side union-find. The distributed loop's
         # per-round floor (join + aggregate + chase + checkpoint +
@@ -1285,10 +1265,7 @@ def _propagate_min_labels(pairs: DataFrame) -> DataFrame:
         # orders of magnitude under driver limits and the same
         # bounded-state license the k-means centroid collect documents.
         # Result is bit-identical (component minimum is unique).
-        try:
-            tbl = src.toArrow()
-        finally:
-            src.unpersist()
+        tbl = half.toArrow()
         labels = _component_min(
             tbl.column("doc_a").to_numpy(zero_copy_only=False).tolist(),
             tbl.column("doc_b").to_numpy(zero_copy_only=False).tolist(),
@@ -1305,102 +1282,83 @@ def _propagate_min_labels(pairs: DataFrame) -> DataFrame:
         return F.broadcast(
             pairs.sparkSession.createDataFrame(rows, "node long, label long")
         )
-    if n_edges < 1_000_000:
-        # Tiny graph (e.g. the star-edge relation — <=4 x distinct
-        # fingerprints): the wide DISK_ONLY layout sized for 544M-pair
-        # graphs is pure scheduling overhead here — measured 11.9 s for
-        # a 12k-edge propagation at 128+ partitions vs sub-second at 8.
-        # localCheckpoint is safe again at this size (the r13 OOM was
-        # the 544M-row deserialized unroll, not the mechanism).
-        half = src.coalesce(8).localCheckpoint(eager=True)
-        src.unpersist()
-    else:
-        # BIG graph: rebuild the persisted layout 4x wider than session
-        # parallelism (streamed DISK_ONLY reads, heap-bounded — see the
-        # docstring's r13 finding). Built FROM the persisted src blocks
-        # so the pair pipeline runs once; src releases after the wide
-        # copy materializes.
-        half = src.repartition(n * 4, "doc_a").persist(StorageLevel.DISK_ONLY)
-        half.count()
-        src.unpersist()
     edges = half.union(
         half.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).withColumnsRenamed({"doc_a": "u", "doc_b": "v"})
-    # Each round's label table is localCheckpoint'd (lineage truncation)
-    # AND persisted (stats truncation): Spark 4's LogicalRDD INHERITS the
+    # Each round's label table is materialized (lineage truncation) AND
+    # persisted (stats truncation): a materialized frame INHERITS the
     # origin plan's size estimate, so checkpointing alone lets the
     # chase's self-join SQUARE the estimate every round — measured on
     # the hard-mode docs fixture, the optimizer ground minutes of
     # BigInteger multiplications per round and died at round ~23 with
     # "BigInteger would overflow supported range". A materialized
     # InMemoryRelation carries REAL (small, constant) stats, so the
-    # per-round estimate stays flat; the superseded round unpersists,
-    # which also stops checkpoint blocks accumulating across rounds.
-    labels = (
-        edges.select(F.col("u").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-        .persist()
-    )
-    changed = 0
-    for _ in range(_PROPAGATE_MAX_ROUNDS):
-        nbr = (
-            edges.join(labels, edges.v == labels.node)
-            .groupBy("u")
-            .agg(F.min("label").alias("nbr_min"))
+    # per-round estimate stays flat. The cache layers release together
+    # on the way out; the returned labels stay materialized by their
+    # checkpoint blocks, so nothing leaks into long shared sessions.
+    rounds: list[DataFrame] = []
+
+    def stored(df: DataFrame) -> DataFrame:
+        rounds.append(materialize(df)[0].persist())
+        return rounds[-1]
+
+    try:
+        labels = stored(
+            edges.select(F.col("u").alias("node")).distinct()
+            .withColumn("label", F.col("node"))
         )
-        stepped = labels.join(nbr, labels.node == nbr.u, "left").select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
-            ).alias("label"),
-        )
-        # POINTER-DOUBLING chase (round-15, found by the hard-mode docs
-        # fixture): plain neighbor-min advances a label ONE edge per
-        # round, so a long thin component (the hard corpus has
-        # accidental-collision chains with diameter > 20) needs
-        # diameter-many rounds. Chasing label -> label-of-label each
-        # round squares the effective propagation distance (the
-        # pointer-jumping half of large-star/small-star), turning
-        # diameter-D convergence into O(log D) rounds. Every label
-        # value is a node id present in the labels table, so the
-        # self-join always matches; coalesce keeps the row if not.
-        new_labels = (
-            stepped.alias("a")
-            .join(
-                stepped.select(
-                    F.col("node").alias("pnode"), F.col("label").alias("plabel")
-                ),
-                F.col("a.label") == F.col("pnode"),
-                "left",
+        changed = 0
+        for _ in range(_PROPAGATE_MAX_ROUNDS):
+            nbr = (
+                edges.join(labels, edges.v == labels.node)
+                .groupBy("u")
+                .agg(F.min("label").alias("nbr_min"))
             )
-            .select(
-                F.col("a.node").alias("node"),
+            stepped = labels.join(nbr, labels.node == nbr.u, "left").select(
+                "node",
                 F.least(
-                    F.col("a.label"), F.coalesce(F.col("plabel"), F.col("a.label"))
+                    F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
                 ).alias("label"),
             )
-            .localCheckpoint(eager=True)
-            .persist()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
+            # POINTER-DOUBLING chase (round-15, found by the hard-mode
+            # docs fixture): plain neighbor-min advances a label ONE edge
+            # per round, so a long thin component (the hard corpus has
+            # accidental-collision chains with diameter > 20) needs
+            # diameter-many rounds. Chasing label -> label-of-label each
+            # round squares the effective propagation distance (the
+            # pointer-jumping half of large-star/small-star), turning
+            # diameter-D convergence into O(log D) rounds. Every label
+            # value is a node id present in the labels table, so the
+            # self-join always matches; coalesce keeps the row if not.
+            new_labels = stored(
+                stepped.alias("a")
+                .join(
+                    stepped.select(
+                        F.col("node").alias("pnode"), F.col("label").alias("plabel")
+                    ),
+                    F.col("a.label") == F.col("pnode"),
+                    "left",
+                )
+                .select(
+                    F.col("a.node").alias("node"),
+                    F.least(
+                        F.col("a.label"), F.coalesce(F.col("plabel"), F.col("a.label"))
+                    ).alias("label"),
+                )
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
+                .filter(F.col("n.label") != F.col("o.label"))
+                .count()
+            )
+            labels = new_labels
+            if changed == 0:
+                return labels
         # With the chase step convergence needs ~log2(diameter) rounds,
         # so 40 covers any graph that fits on hardware — but if a future
         # edit breaks that, fail loudly, never ship almost-converged
-        # labels as cluster ids (round-14 ADVICE). The last round's
-        # label cache is leaked too without this unpersist (r15 ADVICE).
-        labels.unpersist()
-        half.unpersist()
+        # labels as cluster ids (round-14 ADVICE).
         raise RuntimeError(
             "_propagate_min_labels: min-label propagation did not "
             f"converge within {_PROPAGATE_MAX_ROUNDS} pointer-doubling "
@@ -1408,16 +1366,9 @@ def _propagate_min_labels(pairs: DataFrame) -> DataFrame:
             "be impossible for any graph that fits on hardware; "
             "investigate."
         )
-    # converged labels are checkpointed; the disk-persisted edge blocks
-    # have no further consumer — release the executor storage. The
-    # labels' persist() cache layer also releases here: the eager
-    # localCheckpoint blocks keep the result materialized (and its
-    # LogicalRDD stats flat), so returning an unpersisted DF leaks
-    # nothing into long shared sessions that call this per key
-    # (round-15 ADVICE).
-    half.unpersist()
-    labels.unpersist()
-    return labels
+    finally:
+        for df in rounds:
+            df.unpersist()
 
 
 @query(

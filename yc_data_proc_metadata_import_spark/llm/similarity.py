@@ -43,7 +43,7 @@ from pyspark.sql.window import Window
 
 from ..registry import query
 from ..sources.io import load
-from ..utils import session_artifact
+from ..utils import materialize, session_artifact
 
 # Queries for top-k keys; bucket count for the block join; thresholds.
 _N_QUERIES = 10
@@ -371,7 +371,7 @@ def _srp_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors). Same "build the index, then join the index" split as
     llm_dedup_ngram's hashed_index_cached."""
     v = _vecs(spark, sf_dir)
-    return (
+    return materialize(
         v.select(
             "vec_id",
             F.explode(
@@ -385,10 +385,8 @@ def _srp_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ]
                 )
             ).alias("s"),
-        )
-        .select("vec_id", "s.table_id", "s.sig")
-        .localCheckpoint(eager=True)
-    )
+        ).select("vec_id", "s.table_id", "s.sig")
+    )[0]
 
 
 @query(
@@ -1114,7 +1112,7 @@ def _km_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # llm_ann_ivfpq (inverted lists + probe ranking each), and the lazy
     # plan re-ran the interpreted argmin expression per consumer
     # execution (~0.35 s each at sf0.1, ~7 executions per suite run).
-    return assigned.localCheckpoint(eager=True)
+    return materialize(assigned)[0]
 
 
 # IVF codebook = ONE more centroid-update step over the final Lloyd
@@ -1652,9 +1650,8 @@ def _pq_train_encode(spark: SparkSession, sf_dir: str):
     AND counts.  The naive per-subspace loop was {_PQ_M} x 3 driver
     jobs (~32 s); lockstep is 3 jobs total (~5 s), and the collect
     sizes stay K*d-bounded (corpus-independent) either way."""
-    qv = (
-        load(spark, sf_dir, "embeddings")
-        .select(
+    qv, _ = materialize(
+        load(spark, sf_dir, "embeddings").select(
             "vec_id",
             F.transform(
                 F.col("embedding"),
@@ -1663,7 +1660,6 @@ def _pq_train_encode(spark: SparkSession, sf_dir: str):
                 ),
             ).alias("qv"),
         )
-        .localCheckpoint(eager=True)
     )
     head = qv.agg(
         *[
@@ -1801,7 +1797,7 @@ def _pq_train_encode(spark: SparkSession, sf_dir: str):
     # and llm_ann_ivfpq again — measured 1.7 s per execution at sf0.1).
     # This is the index-build/query split a PQ index has by definition;
     # the materialized rows are the compressed codes, never the vectors.
-    return codes.drop("qv").localCheckpoint(eager=True), books
+    return materialize(codes.drop("qv"))[0], books
 
 
 def _pq_query_luts(spark: SparkSession, sf_dir: str, books: list) -> DataFrame:

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load_documents_wide
-from ..utils import davg, session_artifact, sql_davg
+from ..utils import davg, materialize, session_artifact, sql_davg
 
 # Whitespace tokenizer used by every operator in this module (regex split,
 # empty tokens dropped so leading/trailing whitespace can't skew counts).
@@ -61,8 +61,7 @@ _LEXICON = [
 # subplans no ReusedExchange, so without materialization each reference
 # re-runs the scan+tokenize pipeline. This is the standard "build the
 # shared intermediate once, fan out consumers" pattern a real curation
-# pipeline uses (persist or write the token table, then run the whole
-# metric battery over it); localCheckpoint keeps it executor-local.
+# pipeline uses; utils.materialize states how the table is held.
 @session_artifact
 def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, token) rows: lowercase whitespace tokenization, exploded.
@@ -73,7 +72,7 @@ def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see the note above).
     """
     n = spark.sparkContext.defaultParallelism
-    return (
+    return materialize(
         load_documents_wide(spark, sf_dir)
         .repartition(n, "doc_id")  # single-file fixture scans as 1 partition
         .select(
@@ -81,8 +80,7 @@ def tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.split(F.lower(F.col("text")), _WS)).alias("token"),
         )
         .filter(F.col("token") != "")
-        .localCheckpoint(eager=True)
-    )
+    )[0]
 
 
 _TOKENS_SQL = (

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load
-from ..utils import davg, dsum, sql_davg, sql_dsum
+from ..utils import davg, dsum, materialize, sql_davg, sql_dsum
 
 
 @query(
@@ -1203,9 +1203,8 @@ def agg_median_absolute_deviation(spark: SparkSession, sf_dir: str) -> DataFrame
     price histogram by |price - median| and summing its counts IS the
     deviation histogram (identical multiset of (group, d, weight) rows
     the old second scan produced, therefore identical medians).  The
-    price histogram materializes once (localCheckpoint — it is the
-    artifact both medians select from) and lineitem is scanned exactly
-    once.
+    price histogram materializes once (it is the artifact both medians
+    select from) and lineitem is scanned exactly once.
 
     SELECTION DISPATCH (round-19, guide §2.5): the cumulative window is
     a per-group SINGLE-TASK sort of the whole histogram.  Below
@@ -1269,24 +1268,17 @@ def agg_median_absolute_deviation(spark: SparkSession, sf_dir: str) -> DataFrame
     # The ONLY fact scan: per-group value histogram, materialized once
     # (domain-bounded — never the table) because both the median
     # selection and the deviation re-key consume it.  The histogram's row
-    # count, which drives the selection dispatch above, is observed by the
+    # count, which drives the selection dispatch above, comes from the
     # materializing job itself — no separate count() job.
-    from pyspark.sql import Observation
-
-    rows = Observation()
-    hist = (
-        li.groupBy("l_returnflag", "l_extendedprice")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .observe(rows, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+    hist, n_hist = materialize(
+        li.groupBy("l_returnflag", "l_extendedprice").agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
     )
-    n_hist = rows.get["n"]
     # The 3-row med relation is referenced twice (deviation re-key +
-    # result join); localCheckpoint materializes it once so the
-    # histogram+window subtree isn't re-executed per reference.
-    med = hist_median(
-        hist, "l_extendedprice", "median_price", n_hist
-    ).localCheckpoint()
+    # result join); materializing it once keeps the histogram+window
+    # subtree from re-executing per reference.
+    med, _ = materialize(hist_median(hist, "l_extendedprice", "median_price", n_hist))
     # Deviation histogram = the price histogram re-keyed by |v - median|
     # with counts summed: exactly the (group, d) multiset of the old
     # per-row pass (same IEEE subtraction, applied once per distinct

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.io import load
-from ..utils import dec_n, sql_dsum_prod
+from ..utils import dec_n, materialize, sql_dsum_prod
 
 
 def _revenue(alias: str) -> F.Column:
@@ -462,7 +462,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the expensive step is the ONE edge-derivation pipeline (fact
     joins + DISTINCT, all key-partitioned); it materializes ONCE
-    (localCheckpoint — lineage truncation, the iterative-Spark idiom) and
+    (lineage truncation, the iterative-Spark idiom) and
     the iterations then run on the aggregated edge list — nodes^2 at
     most, here <= 625 rows — with the rank side broadcast.  At 100 TB the
     same split holds: derive once, iterate on the small aggregate; for
@@ -483,9 +483,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 16 scans / 2 SortMergeJoins in one build, 2.85 s vs 1.45 + 0.36 s
     # split at sf0.1). The oracle spells the same split: edges
     # MATERIALIZED, deg derived from it.
-    edges = _trade_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges, _ = materialize(_trade_edges(spark, sf_dir))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    edges_deg = edges.join(deg, "src").localCheckpoint(eager=True)
+    edges_deg, _ = materialize(edges.join(deg, "src"))
     nodes = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("node")
     )
@@ -661,7 +661,7 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance profile is genuinely multi-hop (depths 0..3).
 
     Same iterative discipline as graph_pagerank: the edge derivation
-    materializes once (localCheckpoint), iterations are broadcast joins
+    materializes once, iterations are broadcast joins
     + a MIN aggregate on the nodes^2-bounded edge list, distances are
     pure integers so every engine agrees exactly, and LEAST's
     NULL-ignoring semantics (identical in Spark and DuckDB) encode
@@ -669,9 +669,7 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop runs with the broadcasts dropped and per-round frontier
     filtering — the standard Pregel-style BFS — but the operator shape
     (join frontier to edges, MIN-aggregate, LEAST-merge) is unchanged."""
-    edges = _trade_edges(spark, sf_dir, _BFS_MIN_PRICE).localCheckpoint(
-        eager=True
-    )
+    edges, _ = materialize(_trade_edges(spark, sf_dir, _BFS_MIN_PRICE))
     nodes = load(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("node")
     )
@@ -694,10 +692,10 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (112-operator plan at 3 rounds). The checkpointed table is
         # nodes-bounded; materializing the per-round frontier state is
         # what a Pregel BFS does between supersteps anyway.
-        d = (
-            d.join(F.broadcast(nbr), d.node == nbr.dst, "left")
-            .select("node", F.least("dist", "nd").cast("int").alias("dist"))
-            .localCheckpoint(eager=True)
+        d, _ = materialize(
+            d.join(F.broadcast(nbr), d.node == nbr.dst, "left").select(
+                "node", F.least("dist", "nd").cast("int").alias("dist")
+            )
         )
     return d.select(F.col("node").alias("n_nationkey"), "dist")
 
@@ -827,10 +825,10 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline collapsed by DISTINCT before anything quadratic; the wedge
     and closing steps are plain equi-joins on node keys (shuffle-
     partitioned, no broadcast needed at billion-edge scale); the
-    oriented edge list materializes once (localCheckpoint) because the
-    plan reads it three times."""
-    und = _tri_und(spark, sf_dir)
-    tri = _tri_triangles(und)
+    oriented edge list materializes once because the plan reads it
+    three times."""
+    und, rows = _tri_und(spark, sf_dir)
+    tri = _tri_triangles(und, rows)
     lo = F.least("u", "v1", "v2")
     hi = F.greatest("u", "v1", "v2")
     return tri.select(
@@ -840,10 +838,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _tri_und(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected canonical (a < b) edge list of the sparsified trade
-    graph, materialized once (the triangle plans read it 3x)."""
-    return (
+def _tri_und(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """(edges, rows): the undirected canonical (a < b) edge list of the
+    sparsified trade graph, materialized once (the triangle plans read
+    it 3x), and its row count."""
+    return materialize(
         _trade_edges(spark, sf_dir, _TRI_MIN_PRICE)
         .where(F.col("src") != F.col("dst"))
         .select(
@@ -851,23 +850,36 @@ def _tri_und(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest("src", "dst").cast("bigint").alias("b"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
 
-def _tri_triangles(und: DataFrame) -> DataFrame:
+# The most undirected edges _tri_triangles broadcasts. Each of its four
+# broadcast relations (und, the oriented edges, two degree tables) holds
+# at most 2x this many rows of two bigints, so every broadcast stays
+# under 32 MB, collected on the driver and copied to each executor; a
+# larger graph needs the same joins without the hints, which shuffle.
+_TRI_BROADCAST_MAX_EDGES = 1_000_000
+
+
+def _tri_triangles(und: DataFrame, rows: int) -> DataFrame:
     """Degree-oriented triangle enumeration (see graph_triangle_count):
     one (u, v1, v2) row per triangle, wedge endpoints ordered v1 < v2 by
-    id, u the orientation-minimal vertex.
+    id, u the orientation-minimal vertex. ``rows`` is und's row count.
 
     Every relation here is nodes- or nodes^2-bounded BY CONSTRUCTION
     (nation-level graph: deg <= 25 rows, und <= 625) — but und is a
-    checkpointed LogicalRDD whose stats the planner doesn't know, so
+    materialized frame that keeps its origin plan's size estimate, so
     it planned 6-7 SortMergeJoins (12-14 exchanges) of <=625-row
     relations (round-19 census). Explicit broadcasts carry the same
-    group-cardinality-bounded license as pagerank's broadcast(ranks);
-    on a billion-node graph the hints come off and the same equi-joins
-    shard (the documented family exemption)."""
+    group-cardinality-bounded license as pagerank's broadcast(ranks),
+    and a graph beyond _TRI_BROADCAST_MAX_EDGES raises instead of
+    broadcasting it."""
+    if rows > _TRI_BROADCAST_MAX_EDGES:
+        raise ValueError(
+            f"_tri_triangles: {rows} undirected edges exceed "
+            f"_TRI_BROADCAST_MAX_EDGES={_TRI_BROADCAST_MAX_EDGES}, the bound "
+            "its four broadcast joins rely on"
+        )
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))
@@ -942,8 +954,8 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: inherits the triangle plan's properties (O(m^1.5)
     wedge bound, equi-joins only); the explode adds one hash aggregate
     on node keys and the coefficient is a map-side projection."""
-    und = _tri_und(spark, sf_dir)
-    tri = _tri_triangles(und)
+    und, rows = _tri_und(spark, sf_dir)
+    tri = _tri_triangles(und, rows)
     tn = (
         tri.select(
             F.explode(F.array("u", "v1", "v2")).alias("node")
@@ -1042,7 +1054,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the same joins shard on node keys (drop the broadcast hints).
     Peel-round count for a full decomposition is O(graph degeneracy),
     not O(nodes)."""
-    sym_can = _tri_und(spark, sf_dir)
+    sym_can, _ = _tri_und(spark, sf_dir)
     sym = sym_can.select(
         F.col("a").alias("u"), F.col("b").alias("v")
     ).unionAll(sym_can.select(F.col("b").alias("u"), F.col("a").alias("v")))
@@ -1056,12 +1068,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # subtrees). Materializing the nodes-bounded survivor set keeps
         # each round ONE semi-join pass, which is also the only shape
         # that scales: at billion-edge scale this list is exactly what a
-        # k-core peel materializes between rounds. (localCheckpoint
-        # stores blocks on executors with NO lineage fallback — r18
-        # ADVICE: acceptable for this harness's single-process sessions;
-        # a long-lived multi-tenant deployment would use reliable
-        # checkpoint/persist for the per-round frontier instead.)
-        survivors = (
+        # k-core peel materializes between rounds (how the blocks are
+        # held, and why that is safe here: utils.materialize).
+        survivors, _ = materialize(
             sym.join(F.broadcast(survivors), sym.u == survivors.node)
             .drop("node")
             .join(
@@ -1072,7 +1081,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
             .where(F.col("d") >= _KCORE_K)
             .select(F.col("u").alias("node"))
-            .localCheckpoint(eager=True)
         )
     return (
         sym.join(F.broadcast(survivors), sym.u == survivors.node)

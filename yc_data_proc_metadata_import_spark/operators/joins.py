@@ -826,6 +826,9 @@ def merge_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.filter(F.col("c_custkey") % 7 == 0)
         .select("c_custkey", (F.col("c_acctbal") + F.lit(100.0)).alias("new_bal"))
     )
+    # A lazy checkpoint, not utils.materialize: the join is reused INSIDE
+    # this key's one plan, and is filled by the job that executes it
+    # (eager, the build would start two jobs of its own).
     joined = c.join(
         batch.select(F.col("c_custkey").alias("b_key"), "new_bal"),
         c.c_custkey == F.col("b_key"),

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import query
 from ..sources.io import _fixture_dir, _materialize, _run_scratch, load, table_path
+from ..utils import materialize
 
 
 def _reset_db(spark: SparkSession, db: str) -> None:
@@ -488,7 +489,7 @@ def catalog_partition_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish single landed partitions to the metastore the reference
     migrates. Only registered partitions are visible (two after ADD, one
     after DROP); both snapshots are hash-checked, and the first is
-    forced eagerly (localCheckpoint) BEFORE the DROP runs — partition
+    materialized BEFORE the DROP runs — partition
     listings resolve at execution time, so a lazy first snapshot would
     silently observe the post-drop catalog. Metadata-plane only: ADD and
     DROP touch the catalog, never the files."""
@@ -512,7 +513,7 @@ def catalog_partition_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
             "FROM eng_pd_db.orders_parts GROUP BY o_orderpriority"
         )
 
-    after_add = snap("after_add").localCheckpoint(eager=True)
+    after_add, _ = materialize(snap("after_add"))
     # DROP PARTITION must be metadata-only here: that holds ONLY for
     # EXTERNAL tables (Spark treats explicit-LOCATION tables as external,
     # but assert rather than assume — a managed-table default or a purge

@@ -18,12 +18,16 @@ import sys
 import duckdb
 import pytest
 
-from yc_data_proc_metadata_import_spark.plans.catalog import describe, parts_orders_fixture
+from yc_data_proc_metadata_import_spark.plans.catalog import (
+    describe,
+    parts_orders_fixture,
+    table_dir,
+)
 from yc_data_proc_metadata_import_spark.plans.metadata import (
     _DST_DB,
     _SRC_DB,
     _build_source,
-    _requalify_view_text,
+    _diff_manifests,
     export_manifest,
     import_manifest,
     meta_export,
@@ -87,7 +91,7 @@ assert got_props.get("quality_tier") == "gold", got_props
 # alterTableStats: Spark's own DESCRIBE reads back the manifest's values.
 from yc_data_proc_metadata_import_spark.plans.catalog import describe
 from yc_data_proc_metadata_import_spark.plans.metadata import (
-    _requalify_view_text,
+    _diff_manifests,
     export_manifest,
 )
 exported = export_manifest(spark, "eng_meta_dst")
@@ -107,11 +111,19 @@ assert (col["distinct_count"], col["num_nulls"], col["min"], col["max"]) == tupl
 ), col
 # Re-exporting this catalog gives the source's manifest, up to the
 # namespace name: partitions, their locations and statistics included.
-canon = lambda m, db: [
-    dict(e, database="", view_text=_requalify_view_text(e["view_text"], db, "<db>"))
-    for e in m
-]
-assert canon(exported, "eng_meta_dst") == canon(manifest, manifest[0]["database"])
+assert _diff_manifests(manifest, exported, manifest[0]["database"], "eng_meta_dst") == []
+if catalog == "hive":
+    # Importing the same manifest again finds nothing to do: it costs one
+    # export of the target plus CREATE DATABASE IF NOT EXISTS in Hive
+    # client calls. Pinned, so a change that adds calls changes them here.
+    metrics = spark._jvm.org.apache.spark.metrics.source.HiveCatalogMetrics
+    calls = metrics.METRIC_HIVE_CLIENT_CALLS()
+    start = calls.getCount()
+    export_manifest(spark, "eng_meta_dst")
+    export_calls = calls.getCount() - start
+    assert import_manifest(spark, manifest, "eng_meta_dst") == []
+    import_calls = calls.getCount() - start - export_calls
+    assert (export_calls, import_calls) == (10, 11), (export_calls, import_calls)
 
 from tests.test_metadata_migration import _partition_facts
 with open(out_path, "w") as f:
@@ -505,13 +517,6 @@ def roundtrip(spark, sf_dir, tmp_path_factory):
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
-def _canon(manifest: list, db: str) -> list:
-    return [
-        dict(e, database="", view_text=_requalify_view_text(e["view_text"], db, "<db>"))
-        for e in manifest
-    ]
-
-
 def test_manifest_roundtrips_views_properties_and_nested_types(spark, roundtrip):
     """Export -> import -> export is the identity up to the namespace
     name: the multi-line view text arrives whole and resolves, property
@@ -523,7 +528,7 @@ def test_manifest_roundtrips_views_properties_and_nested_types(spark, roundtrip)
     manifest, _ = roundtrip
     view = {e["table"]: e for e in manifest}["by_region"]
     assert view["view_text"] == _RT_VIEW.format(db=_RT_SRC)
-    assert _canon(export_manifest(spark, _RT_DST), _RT_DST) == _canon(manifest, _RT_SRC)
+    assert _diff_manifests(manifest, export_manifest(spark, _RT_DST), _RT_SRC, _RT_DST) == []
     n_src = spark.table(f"{_RT_SRC}.by_region").count()
     assert n_src > 0 and spark.table(f"{_RT_DST}.by_region").count() == n_src
     props = {
@@ -718,3 +723,153 @@ def test_meta_diff_reports_partition_location_drift(spark, sf_dir, tmp_path):
         )
     ]
     assert len(rows) == 5
+
+
+def _one_table(db: str) -> list:
+    """A manifest of one analyzed table with two analyzed partitions."""
+    stats = {"row_count": 3, "size_in_bytes": 30, "columns": {}}
+    return [
+        {
+            "database": db,
+            "table": "t",
+            "type": "table",
+            "comment": "",
+            "format": "parquet",
+            "options": {},
+            "location": "file:/shared/t",
+            "columns": [
+                {"name": "a", "type": "int", "ordinal": 0, "comment": ""},
+                {"name": "p", "type": "string", "ordinal": 1, "comment": ""},
+            ],
+            "partition_columns": ["p"],
+            "partitions": [
+                {"spec": {"p": v}, "statistics": dict(stats)} for v in ("x", "y")
+            ],
+            "properties": {},
+            "view_text": "",
+            "statistics": dict(stats, row_count=6),
+        }
+    ]
+
+
+_ENTRY_DRIFTS = {
+    "location": lambda e: e.update(location="file:/elsewhere/t"),
+    "partition_row_count": lambda e: e["partitions"][0]["statistics"].update(row_count=4),
+    "partition_spec": lambda e: e["partitions"][1].update(spec={"p": "z"}),
+}
+
+
+@pytest.mark.parametrize("drift", sorted(_ENTRY_DRIFTS))
+def test_diff_reports_drift_outside_its_aspects(drift):
+    """A table location, one partition's statistics or one partition's
+    spec at an unchanged partition count has no aspect of its own: the
+    diff reports it as exactly one ``entry`` row naming the field, and
+    nothing for the undrifted copy in another namespace."""
+    src, dst = _one_table("a"), _one_table("b")
+    assert _diff_manifests(src, dst, "a", "b") == []
+    _ENTRY_DRIFTS[drift](dst[0])
+    rows = _diff_manifests(src, dst, "a", "b")
+    assert [r[:2] for r in rows] == [("t", "entry")], rows
+    field = "location" if drift == "location" else "partitions"
+    assert [set(json.loads(v)) for v in rows[0][2:]] == [{field}, {field}]
+
+
+_POLICY_DB = "eng_meta_policy"
+
+
+@pytest.fixture
+def reimport(spark, sf_dir, monkeypatch):
+    """(source manifest, target session, the statements that session sends
+    from now on) after one import of the source namespace into
+    ``_POLICY_DB``."""
+    from yc_data_proc_metadata_import_spark.plans import metadata as M
+
+    M._ensure_source(spark, sf_dir)
+    manifest = export_manifest(spark, _SRC_DB)
+    target, sent = spark.newSession(), []
+    spark.sql(f"DROP DATABASE IF EXISTS {_POLICY_DB} CASCADE")
+    import_manifest(target, manifest, _POLICY_DB)
+    real_sql = target.sql
+
+    def sql(query, *args, **kwargs):
+        sent.append(query)
+        return real_sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(target, "sql", sql)
+    yield manifest, target, sent
+    spark.sql(f"DROP DATABASE IF EXISTS {_POLICY_DB} CASCADE")
+
+
+_CREATE_DB = f"CREATE DATABASE IF NOT EXISTS {_POLICY_DB}"
+
+
+def test_import_keeps_and_reports_target_only_table(spark, sf_dir, reimport):
+    """A table that only the target holds survives the import, which
+    returns its ``presence`` row."""
+    manifest, target, sent = reimport
+    spark.sql(
+        f"CREATE TABLE {_POLICY_DB}.extra USING parquet "
+        f"LOCATION '{table_dir(sf_dir, 'region')}'"
+    )
+    got = import_manifest(target, manifest, _POLICY_DB)
+    assert got == [("extra", "presence", "absent", "present")]
+    assert sent == [_CREATE_DB]
+    assert spark.table(f"{_POLICY_DB}.extra").count() > 0
+
+
+def test_unchanged_reimport_sends_no_ddl(reimport, monkeypatch):
+    """Re-importing into a target that equals the manifest sends only
+    CREATE DATABASE IF NOT EXISTS and writes no statistics."""
+    from yc_data_proc_metadata_import_spark.plans import metadata as M
+
+    manifest, target, sent = reimport
+    stats = []
+    monkeypatch.setattr(M, "write_stats", lambda *args: stats.append(args))
+    assert import_manifest(target, manifest, _POLICY_DB) == []
+    assert (sent, stats) == ([_CREATE_DB], [])
+
+
+def test_changed_property_is_restored_by_one_replace(spark, sf_dir, reimport):
+    """A table property changed on the target comes back through one
+    DROP TABLE and one CREATE TABLE of that table (its partitions added
+    again), and the shared partitioned data tree stays as it was."""
+    manifest, target, sent = reimport
+    tbl = f"{_POLICY_DB}.orders_part"
+    spark.sql(f"ALTER TABLE {tbl} SET TBLPROPERTIES ('owner_team'='other')")
+    shared = parts_orders_fixture(spark, sf_dir)
+    before = _tree(shared)
+    assert import_manifest(target, manifest, _POLICY_DB) == []
+    assert [q for q in sent if q.startswith("DROP ")] == [f"DROP TABLE {tbl}"]
+    assert [q.split(" (")[0] for q in sent if q.startswith("CREATE TABLE")] == [
+        f"CREATE TABLE {tbl}"
+    ]
+    assert all(q.startswith(f"ALTER TABLE {tbl} ADD PARTITION ") for q in sent[3:]), sent
+    assert _diff_manifests(manifest, export_manifest(spark, _POLICY_DB), _SRC_DB, _POLICY_DB) == []
+    assert _tree(shared) == before
+
+
+def test_managed_table_in_the_way_is_refused(spark, reimport):
+    """A MANAGED table under a manifest name would lose its data to the
+    replacing DROP: the import raises before any object statement, and
+    the table still reads its rows."""
+    manifest, target, sent = reimport
+    tbl = f"{_POLICY_DB}.region_ext"
+    spark.sql(f"DROP TABLE {tbl}")
+    spark.sql(f"CREATE TABLE {tbl} USING parquet AS SELECT 7 AS r_regionkey")
+    with pytest.raises(ValueError, match="region_ext"):
+        import_manifest(target, manifest, _POLICY_DB)
+    assert sent == [_CREATE_DB]
+    assert [r.r_regionkey for r in spark.table(tbl).collect()] == [7]
+
+
+def test_view_in_place_of_a_table_is_replaced(spark, reimport):
+    """A view on the target under the name of a manifest table is dropped
+    as a view and the table created in its place."""
+    manifest, target, sent = reimport
+    tbl = f"{_POLICY_DB}.nation_ext"
+    spark.sql(f"DROP TABLE {tbl}")
+    spark.sql(f"CREATE VIEW {tbl} AS SELECT 1 AS n_nationkey")
+    assert import_manifest(target, manifest, _POLICY_DB) == []
+    assert [q for q in sent if q.startswith("DROP ")] == [f"DROP VIEW {tbl}"]
+    assert spark.catalog.getTable(tbl).tableType == "EXTERNAL"
+    assert _diff_manifests(manifest, export_manifest(spark, _POLICY_DB), _SRC_DB, _POLICY_DB) == []

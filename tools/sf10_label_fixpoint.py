@@ -201,23 +201,15 @@ def main() -> int:
 
     # 4. engine output (Spark starts only after the fork pool is done)
     t0 = time.perf_counter()
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as contract
+    from yc_data_proc_metadata_import_spark.session import get_spark
 
-    # rung-scale session: 8 GB driver heap like every rung tool — the
-    # 500k-doc hard fixture's label graph (~2x the fp count of the
-    # replicated sf10 corpus, ~10 pointer-doubling rounds of
-    # localCheckpoint label blocks) OOMs the 1 GB default heap
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
-        .getOrCreate()
-    )
+    # the engine's one session builder: every core, and an 8 GB driver
+    # heap (SPARK_GRAFT_DRIVER_MEM) like every rung tool — the 500k-doc
+    # hard fixture's label graph (~2x the fp count of the replicated sf10
+    # corpus, ~10 pointer-doubling rounds of localCheckpoint label blocks)
+    # OOMs the 1 GB default heap
+    spark = get_spark(app_name="sf10-label-fixpoint")
     got = contract.queries()["llm_dedup_simhash_labels"](spark, sf_dir).toArrow()
     report["engine_sec"] = round(time.perf_counter() - t0, 1)
     con.register("lab_spark", got)

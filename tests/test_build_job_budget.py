@@ -70,15 +70,16 @@ def test_meta_warm_build_job_count(key, spark, sf_dir, count_jobs):
 
 def test_bucketed_fresh_session_job_count(spark, sf_dir, count_jobs):
     """With its bucketed fixtures on disk, bucketed_join_noshuffle in a
-    fresh session (no cached table schema) starts only the two footer
-    reads that type its tables' DDL, and a warm call starts none: it
-    registers its tables over the fixtures and writes nothing."""
-    from yc_data_proc_metadata_import_spark.sources.io import parquet_schema
+    fresh session (no cached table schema or scan frame) starts only the
+    two footer reads that type its tables' DDL, and a warm call starts
+    none: it registers its tables over the fixtures and writes nothing."""
+    from yc_data_proc_metadata_import_spark.sources.io import load, parquet_schema
     from yc_data_proc_metadata_import_spark.utils import _drop_entries
 
     key = "bucketed_join_noshuffle"
     QUERIES[key](spark, sf_dir)
     _drop_entries(parquet_schema)
+    _drop_entries(load)
     _, jobs = count_jobs(lambda: QUERIES[key](spark, sf_dir))
     assert jobs == 2, f"{key}: a fresh-session build started {jobs} Spark job(s), want 2"
     _, jobs = count_jobs(lambda: QUERIES[key](spark, sf_dir))

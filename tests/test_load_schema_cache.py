@@ -1,12 +1,16 @@
-"""``sources.io.load`` resolves each base table's Parquet schema once per
-session and table-file version, then scans with that schema.
+"""``sources.io.load`` returns one resolved scan per session and
+table-file version, built with the table's Parquet schema, which is
+inferred once per application and file version.
 
-Inference starts one footer-reading Spark job per read; these tests pin
-that the cached schema is the one inference gives, that a repeated load
-starts no job, that a rewritten table file or a replaced staged directory
-re-infers (a stale schema is never served), and that
-``clear_session_caches`` drops the entries, which share one thread-safe
-cache with the ``session_artifact`` builders.
+Inference starts one footer-reading Spark job per read, and resolving a
+scan (data source lookup, file listing) costs py4j round trips on every
+call; these tests pin that the cached schema is the one inference gives,
+that a repeated load returns the same frame and starts no job, that each
+session gets a frame of its own, that a rewritten table file or a
+replaced staged directory re-infers and re-scans (a stale schema or file
+listing is never served), that a self-join of one cached frame is
+correct, and that ``clear_session_caches`` drops the entries, which
+share one thread-safe cache with the ``session_artifact`` builders.
 """
 
 from __future__ import annotations
@@ -59,10 +63,31 @@ def test_documents_wide_schema_matches_its_files(spark, sf_dir):
 
 def test_second_load_starts_no_job(spark, sf_dir, count_jobs):
     for name in TABLES:
-        load(spark, sf_dir, name)
+        first = load(spark, sf_dir, name)
         # Resolving the given schema (events' ts dispatch does) starts none either.
         _, jobs = count_jobs(lambda: load(spark, sf_dir, name).schema)
         assert jobs == 0, f"{name}: second load started {jobs} job(s)"
+        assert load(spark, sf_dir, name) is first, f"{name}: second load built a new frame"
+
+
+def test_key_session_gets_its_own_frame(spark, sf_dir):
+    """A frame executes under the conf of the session that built it, so a
+    batch key's ``newSession()`` child never gets the caller's frame."""
+    from yc_data_proc_metadata_import_spark import queries
+    from yc_data_proc_metadata_import_spark.registry import _key_session
+
+    def uuid(session):
+        return session._jsparkSession.sessionUUID()
+
+    caller = load(spark, sf_dir, "nation")
+    child = _key_session(spark, ())
+    assert uuid(child) != uuid(spark)
+    own = load(child, sf_dir, "nation")
+    assert own is not caller
+    assert uuid(own.sparkSession) == uuid(child)
+    assert load(child, sf_dir, "nation") is own
+    built = queries()["scan_parquet"](spark, sf_dir)
+    assert uuid(built.sparkSession) == uuid(child)
 
 
 def test_rewritten_table_reinfers(spark, sf_dir, tmp_path, count_jobs):
@@ -79,12 +104,16 @@ def test_rewritten_table_reinfers(spark, sf_dir, tmp_path, count_jobs):
     assert df.columns == before.names + ["r_extra"]
     assert df.agg(F.sum("r_extra")).first()[0] == sum(range(table.num_rows))
 
-    # Same schema, different size: re-inferred as well.
-    pq.write_table(pa.concat_tables([table, table]), path)
+    # Same schema, different size: re-inferred as well, and the rows are
+    # the new file's, not the old frame's file listing.
+    doubled = pa.concat_tables([table, table])
+    pq.write_table(doubled, path)
     df, jobs = count_jobs(lambda: load(spark, str(tmp_path), "region"))
     assert jobs >= 1
     assert df.schema == before
-    assert df.count() == 2 * table.num_rows
+    assert sorted(tuple(r) for r in df.collect()) == sorted(
+        tuple(r.values()) for r in doubled.to_pylist()
+    )
 
 
 def test_replaced_directory_reinfers(spark, tmp_path):
@@ -101,6 +130,18 @@ def test_replaced_directory_reinfers(spark, tmp_path):
     shutil.rmtree(staged)
     os.rename(rebuilt, staged)
     assert io.parquet_schema(spark, str(staged)).names == ["k", "v"]
+
+
+def test_self_join_of_one_cached_frame(spark, sf_dir, oracle):
+    """Two loads of one table in one session are one frame, which a
+    self-join must tell apart by alias, as ``tpch_q7`` does."""
+    a = load(spark, sf_dir, "nation").alias("a")
+    b = load(spark, sf_dir, "nation").alias("b")
+    got = a.join(b, F.col("a.n_regionkey") == F.col("b.n_regionkey")).count()
+    want = oracle.execute(
+        "SELECT count(*) FROM nation a JOIN nation b ON a.n_regionkey = b.n_regionkey"
+    ).fetchone()[0]
+    assert got == want
 
 
 def test_clear_session_caches_drops_schemas(spark, sf_dir, count_jobs):

@@ -446,11 +446,11 @@ def test_bench_result_line_survives_hung_stop(monkeypatch, capsys):
 
 def test_stream_state_partitions_sizing():
     """_state_partitions (r19): JVM stateful operators take the
-    commit-cost floor max(8, cores/4) plus a source-volume term
-    (bytes / 256 MB target); Python arbitrary-state operators size to
-    full parallelism (compute-bound — SF1_STREAM_STATE_r19.json). The
-    local tiers must keep their measured-best counts so bench rows stay
-    comparable."""
+    commit-cost floor max(8, cores/4), capped at cores, plus a
+    source-volume term (bytes / 256 MB target); Python arbitrary-state
+    operators size to full parallelism (compute-bound —
+    SF1_STREAM_STATE_r19.json). The local tiers must keep their
+    measured-best counts so bench rows stay comparable."""
     from yc_data_proc_metadata_import_spark.streaming.stream_queries import (
         _STATE_TARGET_BYTES,
         _state_partitions,
@@ -475,6 +475,18 @@ def test_stream_state_partitions_sizing():
     assert _state_partitions(sp, 2 * 1024**2, python_state=True) == 8
     assert _state_partitions(sp, 20 * 1024**2, python_state=True) == 20
     assert _state_partitions(sp, 100 * 1024**3, python_state=True) == 128
+
+    # Below 8 cores the floor is capped at the session's parallelism, so
+    # the state tasks run in one wave; the python-state volume term keeps
+    # its 4x-parallelism cap.
+    class _Small:
+        class sparkContext:
+            defaultParallelism = 4
+
+    small = _Small()
+    assert _state_partitions(small, 2 * 1024**2) == 4
+    assert _state_partitions(small, 2 * 1024**2, python_state=True) == 4
+    assert _state_partitions(small, 20 * 1024**2, python_state=True) == 16
 
 
 def test_batch_keys_ignore_caller_conf_and_keep_views_private(spark, sf_dir, oracle):

@@ -15,7 +15,9 @@ extra pass over 100 TB.  Base-table Parquet scans pass a schema too: it is
 inferred once per session and table-file version, then reused, so each
 table costs one footer-reading Spark job per session instead of one per
 ``load()`` call (the reference's readers likewise take table schemas from
-the metastore, never from the bucket files).
+the metastore, never from the bucket files).  ``load()`` goes one step
+further and returns one resolved scan frame per session and table-file
+version, so a repeated load resolves no data source and lists no files.
 """
 
 from __future__ import annotations
@@ -90,6 +92,14 @@ def sf_tag(sf_dir: str) -> str:
     return f"{base}_{_sf_fingerprint(sf_dir)}"
 
 
+def _file_version(path: str) -> tuple[str, int, int]:
+    """``(realpath, size, mtime_ns)`` of ``path``: what the per-file
+    session caches key on, so a rewritten file or a replaced directory
+    misses."""
+    st = os.stat(path)
+    return os.path.realpath(path), st.st_size, st.st_mtime_ns
+
+
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """Schema of the Parquet file or directory at ``path``, inferred once
     per session and file version.
@@ -100,31 +110,42 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     or a staged directory replaced by a rebuilt one, re-infers, so a stale
     schema is never served.  ``clear_session_caches()`` drops the entries.
     """
-    st = os.stat(path)
     return session_cached(
-        parquet_schema,
-        spark,
-        (os.path.realpath(path), st.st_size, st.st_mtime_ns),
-        lambda: spark.read.parquet(path).schema,
+        parquet_schema, spark, _file_version(path), lambda: spark.read.parquet(path).schema
     )
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar Parquet scan — the engine's universal source.
 
-    The scan passes the table's schema from ``parquet_schema``: inferred
-    once per session and table-file version, so a table costs one
-    footer-reading Spark job per session, not one per ``load()`` call.
+    One resolved scan frame per session and table-file version: every
+    call with the same table in the same session returns the same frame,
+    so the data source, its file listing and the schema are resolved once,
+    not on every call (9-10 ms a call, 0.3 ms cached; building the 22
+    TPC-H keys calls it 70 times).  The key is
+    the session's UUID, because a frame executes under the conf of the
+    session that built it and a key's ``newSession()`` child must never
+    be handed the caller's frame, plus the file's (realpath, size,
+    mtime_ns), so a rewritten table file gets a fresh frame.  The scan
+    passes the table's schema from ``parquet_schema``, so a table costs
+    one footer-reading Spark job per application.
+    ``clear_session_caches()`` drops the entries.
 
     ``events.ts`` is a microsecond TIMESTAMP without a time zone on every
     testdata tier; a session that infers it as the zoned TIMESTAMP (LTZ)
     gets it cast back, so the column is TIMESTAMP_NTZ in UTC either way.
     """
     path = table_path(sf_dir, name)
-    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
-    if name == "events" and df.schema["ts"].dataType.simpleString() == "timestamp":
-        return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    return df
+
+    def scan() -> DataFrame:
+        df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+        if name == "events" and df.schema["ts"].dataType.simpleString() == "timestamp":
+            return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+        return df
+
+    return session_cached(
+        load, spark, (spark._jsparkSession.sessionUUID(), *_file_version(path)), scan
+    )
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -8,8 +8,8 @@
   then cast to double; AVG is exact-sum / count, and variance, stddev
   and corr derive from exact moment sums the same way.
 - ``session_cached``/``session_artifact`` hold one value per Spark
-  application (the shared derived tables, fitted models, key sessions),
-  and ``clear_session_caches`` drops them all.
+  application (the shared derived tables, fitted models, key sessions,
+  base-table scans), and ``clear_session_caches`` drops them all.
 - ``driver_map`` runs independent catalog round trips on driver threads.
 - ``materialize`` is the one way an intermediate is held in memory, and
   its docstring is the one statement of that policy.
@@ -109,8 +109,10 @@ def session_cached(owner, spark, suffix, build):
     the application id, so they share the entries.  Entries from other
     application ids are evicted on insert — they reference dead contexts
     and would otherwise leak.  ``session_artifact`` builders,
-    ``sources.io.parquet_schema`` and ``registry._key_session`` (the
-    sessions batch keys run in) are the owners.
+    ``sources.io.parquet_schema``, ``sources.io.load`` (whose suffix
+    carries the session's UUID, so each session gets its own scan
+    frames) and ``registry._key_session`` (the sessions batch keys run
+    in) are the owners.
     """
     app_id = spark.sparkContext.applicationId
     key = (owner, app_id, suffix)
@@ -160,10 +162,10 @@ def session_artifact(builder):
 
 
 def clear_session_caches() -> int:
-    """Drop every session artifact, cached Parquet schema and key session;
-    returns the entry count dropped. The caller should follow with gc.collect()
-    (and a JVM GC) so the ContextCleaner actually releases the pinned
-    blocks."""
+    """Drop every session artifact, cached Parquet schema, cached scan
+    frame and key session; returns the entry count dropped. The caller
+    should follow with gc.collect() (and a JVM GC) so the ContextCleaner
+    actually releases the pinned blocks."""
     return _drop_entries()
 
 
